@@ -261,13 +261,9 @@ class PointTable:
             # state emptied (e.g. CDC deletes removed every key): no parquet
             # to infer from — rebuild the empty frame from the schema the
             # version's commit recorded in meta.json
-            from pyspark.sql.types import StructType
-
-            meta = self._meta(vdir) if vdir is not None else {}
-            if meta.get("schema"):
-                return self.spark.createDataFrame(
-                    [], StructType.fromJson(json.loads(meta["schema"]))
-                )
+            schema = self._recorded_schema(vdir) if vdir is not None else None
+            if schema is not None:
+                return self.spark.createDataFrame([], schema)
         return self.spark.read.parquet(str(data)).drop(_BUCKET_COL)
 
     def applied_batches(self) -> set[str]:
@@ -293,6 +289,16 @@ class PointTable:
         if p.exists():
             return json.loads(p.read_text())
         return {"num_buckets": self.num_buckets, "mode": self.mode}
+
+    def _recorded_schema(self, cur: Path):
+        """The row schema ``cur``'s commit recorded in meta.json, or None
+        for a version written before meta.json carried one."""
+        schema = self._meta(cur).get("schema")
+        if not schema:
+            return None
+        from pyspark.sql.types import StructType
+
+        return StructType.fromJson(json.loads(schema))
 
     # -- merge --------------------------------------------------------------
 
@@ -366,13 +372,26 @@ class PointTable:
                     if (cur / "data" / f"{_BUCKET_COL}={b}").exists()
                 ]
                 if existing:
-                    tgt = self.spark.read.parquet(*[str(p) for p in existing])
+                    tgt = self._read_buckets(cur, existing)
                     merged = self._merge_frames(tgt, delta)
                 else:
                     merged = delta
 
         self._commit(cur, merged, affected, batch_id)
         return True
+
+    def _read_buckets(self, cur: Path, buckets: list[Path]) -> DataFrame:
+        """The rows of some of ``cur``'s buckets, read with the row schema
+        its commit recorded in meta.json: a pinned schema skips Spark's
+        schema-inference job (one job per merge). A version whose meta
+        has no schema (written before the key existed) falls back to
+        inference. Merged buckets are cast back to the stored dtypes
+        (:meth:`_merge_frames`), so the recorded schema stays the files'."""
+        reader = self.spark.read
+        schema = self._recorded_schema(cur)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(*[str(p) for p in buckets])
 
     def _merge_frames(
         self,
@@ -652,13 +671,9 @@ class PointTable:
 
     def _read_lsm(self, data: Path, vdir: Path) -> DataFrame:
         if not any(data.rglob("*.parquet")):
-            from pyspark.sql.types import StructType
-
-            meta = self._meta(vdir)
-            if meta.get("schema"):
-                return self.spark.createDataFrame(
-                    [], StructType.fromJson(json.loads(meta["schema"]))
-                )
+            schema = self._recorded_schema(vdir)
+            if schema is not None:
+                return self.spark.createDataFrame([], schema)
         df = self.spark.read.option("basePath", str(data)).parquet(str(data))
         runs = [d for d in data.glob("run=*") if any(d.rglob("*.parquet"))]
         if len(runs) == 1:
@@ -732,7 +747,7 @@ class PointTable:
                     else []
                 )
                 if existing:
-                    tgt = self.spark.read.parquet(*[str(p) for p in existing])
+                    tgt = self._read_buckets(cur, existing)
                     kept = tgt.join(dels, self.key, "left_anti")
                     merged = self._merge_frames(
                         kept, ups, policy_override=MergePolicy.OVERWRITE

@@ -25,6 +25,18 @@ multiplies the stream 16x *before* the aggregate. Here:
 
 At 100 TB the only shuffles are the final aggregates (and the hero-vs-hero
 self-join on match key); every dimension access is a broadcast.
+
+Per-batch cost model (global, player, hero_vs_hero). The reference serves
+each batch with one ``INSERT … SELECT … WHERE p.api_id IN (:ids)`` through
+index lookups, O(batch) (crunch_global.sql:63). Here every fact table
+(participant, participant_stats, participant_items) is restricted to the
+batch and joined once, in :func:`_fact_base`, which returns an eager
+``localCheckpoint``: the facts are read once per batch, and every fan-out
+arm reads the small checkpointed base, not the fact tables. The dimension
+tables and the ``global_point_filters`` bridge are still broadcast per
+batch (they are not batch-restricted), and hero_vs_hero still joins the
+base to the whole ``participant`` table for the pair side. The phases and
+bans views key on ``participant_phases`` and do not use the fact base.
 """
 
 from __future__ import annotations
@@ -289,18 +301,7 @@ def crunch_global_delta(
     build_all_id = _dim_ids(tables, "build", F.col("dimension_on") == "global").get("all")
     casual_ranked = [mode_ids[n] for n in ("casual", "ranked") if n in mode_ids]
 
-    p = _batch_join(tables["participant"], "api_id", batch_ids)
-    p_s = tables["participant_stats"].withColumnRenamed("created_at", "stats_created_at")
-    base = (
-        p.join(p_s, p_s["participant_api_id"] == p["api_id"])
-        .drop("participant_api_id")
-        .join(
-            tables["participant_items"].withColumnRenamed("participant_api_id", "pi_api_id"),
-            F.col("pi_api_id") == F.col("api_id"),
-            "left",
-        )
-        .drop("pi_api_id")
-    )
+    base = _fact_base(tables, batch_ids)
     base = _series_join(base, tables, "global", "stats_created_at")
     base = _filter_candidates(base, tables, "global")
     base = _tier_arms(base, tables, tier_ids["all"], require_web=True)
@@ -438,23 +439,24 @@ def _stats_measures(item_ids: Sequence[int], *, round_impact: bool,
 
 def _fact_base(tables: Tables, batch_ids) -> DataFrame:
     """participant ⋈ stats ⟕ items for a batch (J1/J2,
-    crunch_global.sql:36-38)."""
+    crunch_global.sql:36-38), checkpointed so the fan-out arms downstream
+    read it instead of re-planning the fact joins (module docstring).
+    Restricting stats and items to the batch too keeps the same rows:
+    both joins are on ``api_id`` equality."""
     p = _batch_join(tables["participant"], "api_id", batch_ids)
-    p_s = tables["participant_stats"].withColumnRenamed(
-        "created_at", "stats_created_at"
-    )
-    return (
+    p_s = _batch_join(
+        tables["participant_stats"], "participant_api_id", batch_ids
+    ).withColumnRenamed("created_at", "stats_created_at")
+    items = _batch_join(
+        tables["participant_items"], "participant_api_id", batch_ids
+    ).withColumnRenamed("participant_api_id", "pi_api_id")
+    base = (
         p.join(p_s, p_s["participant_api_id"] == p["api_id"])
         .drop("participant_api_id")
-        .join(
-            tables["participant_items"].withColumnRenamed(
-                "participant_api_id", "pi_api_id"
-            ),
-            F.col("pi_api_id") == F.col("api_id"),
-            "left",
-        )
+        .join(items, F.col("pi_api_id") == F.col("api_id"), "left")
         .drop("pi_api_id")
     )
+    return base.localCheckpoint()
 
 
 def crunch_player_delta(

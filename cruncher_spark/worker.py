@@ -236,11 +236,15 @@ def build_worker(
             drop=("id", "updated_at"),
         )
 
+    # retain two versions: a point.read() planned before a merge lists the
+    # version it saw, and that version must survive the next commit so the
+    # read still collects (web-tier reads race the worker's merges)
     point = PointTable(
         spark,
         str(state_dir / "points" / queue),
         key=list(key),
         policies=policies,
+        retain_versions=2,
     )
     return CrunchWorker(
         spark,

@@ -250,6 +250,69 @@ def test_rebucket_rescales_layout_preserving_state(spark, tmp_path):
     assert reopened.applied_batches() == {"seed", "b2"}
 
 
+def test_merge_without_recorded_schema_falls_back_to_inference(spark, tmp_path):
+    """A version whose meta.json has no ``schema`` key (written before the
+    key existed) is read by schema inference; the merge still folds."""
+    point = PointTable(spark, str(tmp_path / "pt"), key=["k"], num_buckets=4)
+    point.merge(
+        spark.createDataFrame([(i, i) for i in range(16)], "k int, n long"),
+        batch_id="seed",
+    )
+    meta_path = point._current_version() / "meta.json"
+    meta = json.loads(meta_path.read_text())
+    del meta["schema"]
+    meta_path.write_text(json.dumps(meta))
+
+    point.merge(
+        spark.createDataFrame([(3, 10), (99, 5)], "k int, n long"), batch_id="b1"
+    )
+    assert {r.k: r.n for r in point.read().collect()} == {
+        **{i: i for i in range(16)}, 3: 13, 99: 5,
+    }
+    # the new version records the schema again
+    assert json.loads((point._current_version() / "meta.json").read_text())["schema"]
+
+
+def test_merge_keeps_stored_decimal_precision(spark, tmp_path):
+    """ADD on DECIMAL widens the sum (decimal(18,6) + decimal(18,6) is
+    decimal(19,6)); the merge casts it back, so every file keeps the
+    precision meta.json records, which is the schema the next merge's
+    bucket read is pinned to."""
+    from decimal import Decimal
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import DecimalType, StructType
+
+    schema = "k int, d decimal(18,6)"
+    point = PointTable(spark, str(tmp_path / "pt"), key=["k"], num_buckets=4)
+    point.merge(
+        spark.createDataFrame([(i, Decimal("1.000001")) for i in range(16)], schema),
+        batch_id="seed",
+    )
+    for b in range(3):
+        point.merge(
+            spark.createDataFrame(
+                [(3, Decimal("0.5")), (100 + b, Decimal("2"))], schema
+            ),
+            batch_id=f"b{b}",
+        )
+
+    cur = point._current_version()
+    recorded = StructType.fromJson(
+        json.loads(json.loads((cur / "meta.json").read_text())["schema"])
+    )
+    assert recorded["d"].dataType == DecimalType(18, 6)
+    for f in (cur / "data").rglob("*.parquet"):
+        assert str(pq.read_schema(f).field("d").type) == "decimal128(18, 6)", f
+    state = point.read()
+    assert dict(state.dtypes)["d"] == "decimal(18,6)"
+    assert {r.k: r.d for r in state.collect()} == {
+        **{i: Decimal("1.000001") for i in range(16)},
+        3: Decimal("2.500001"),
+        100: Decimal("2"), 101: Decimal("2"), 102: Decimal("2"),
+    }
+
+
 # --- streaming ------------------------------------------------------------
 
 

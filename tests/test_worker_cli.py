@@ -147,6 +147,29 @@ def test_unknown_script_fails_loudly(spark, crunch_dir):
         build_worker(spark, tables, {"SCRIPT": "no_such_thing.sql"})
 
 
+def test_read_planned_before_a_merge_collects_after_it(spark, crunch_dir, tmp_path):
+    """A web-tier ``point.read()`` that the worker's next merge overtakes
+    still collects: the built worker retains the version the read listed
+    through one more commit."""
+    tables = load_tables(spark, crunch_dir)
+    ids = _ids(tables, 40)
+    worker = build_worker(
+        spark, tables,
+        {"QUEUE": "race", "SCRIPT": "global", "STATE_DIR": str(tmp_path)},
+    )
+
+    def batch(part):
+        return spark.createDataFrame([(i,) for i in part], "value string")
+
+    worker.process_batch(batch(ids[:20]), 0)
+    before = _rounded(worker.point.read())
+    read = worker.point.read()  # lists version 1's files now
+    worker.process_batch(batch(ids[20:]), 1)
+    assert worker.batches_failed == 0
+    assert _rounded(read) == before
+    assert _rounded(worker.point.read()) != before
+
+
 def test_two_workers_shared_session_concurrent(spark, crunch_dir, tmp_path):
     """VERDICT r5 next #6 (in-process half): the reference deploys one
     worker per view; two CrunchWorkers over DIFFERENT views share one
