@@ -145,13 +145,6 @@ def _pack_bits(vals: list[int], nbits: list[int]) -> bytes:
     return packed.tobytes()
 
 
-def _receive_extend(v: int, s: int) -> int:
-    """Category-coded value → signed coefficient (T.81 RECEIVE/EXTEND)."""
-    if s == 0:
-        return 0
-    return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-
-
 def _category(v: int) -> int:
     return int(v).bit_length() if v > 0 else int(-v).bit_length()
 

@@ -9,7 +9,6 @@ cent-valued doubles and the POSIX→Java regex dialect translation
 from __future__ import annotations
 
 import math
-import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -64,13 +63,6 @@ def dsum(col: str | Column, alias: str, scale: int = 2) -> Column:
 def oracle_dsum(expr: str, alias: str, scale: int = 2) -> str:
     """DuckDB SQL fragment mirroring :func:`dsum`."""
     return f"CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS DOUBLE) AS {alias}"
-
-
-def ident(name: str) -> str:
-    """Validate a SQL identifier before splicing into generated SQL."""
-    if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
-        raise ValueError(f"not a plain identifier: {name!r}")
-    return name
 
 
 def sql_double(v: float) -> str:

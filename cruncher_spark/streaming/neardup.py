@@ -1,40 +1,63 @@
-"""Streaming near-duplicate ingest filter: continuous MinHash/LSH dedup
-of an incoming document stream against the accumulated historical corpus.
+"""Streaming dedup ingests: continuous filtering of an incoming item
+stream against everything already retained — text MinHash/LSH
+(:class:`NearDupIngest`), embeddings (:class:`EmbeddingDedupIngest`),
+image/audio dHash bit vectors (:class:`PerceptualDedupIngest`,
+:class:`AudioDedupIngest`), video frame hashes (:class:`VideoDedupIngest`)
+and text containment (:class:`TextContainmentIngest`).
 
-The batch dedup operators (operators/dedup.py) answer "which documents in
-THIS corpus are near-dups"; a 100 TB training-data pipeline also needs the
-ONLINE form — every newly crawled micro-batch checked against everything
-already retained, survivors folded into the index, duplicates tagged with
-what they duplicate. This module is that operator, built on the repo's
-existing primitives:
+The batch dedup operators (operators/dedup.py) answer "which items in
+THIS corpus are near-dups"; a 100 TB training-data pipeline also needs
+the ONLINE form — every micro-batch checked against everything already
+retained, survivors folded into the index, duplicates tagged with what
+they duplicate.
 
-- **signatures**: the same ``shingle_arrays`` → ``minhash_signatures``
-  pipeline as the batch path (identical hash family, so offline and
-  online decisions agree).
-- **index**: a band-key index directory, hash-partitioned by
-  ``band_bucket = hash(band_key) % B`` with each row carrying the full
-  signature (denormalized so candidate verification needs NO second
-  lookup join). The batch side of the candidate join is micro-batch-sized
-  — Spark broadcasts it, and dynamic partition pruning skips index
-  buckets no batch band hashes into; the per-batch cost is
-  O(batch x matching buckets), never a full-index shuffle.
-- **durability / exactly-once**: survivors land in a ``PointTable``
-  (KEEP policy — signatures are immutable) whose batch-id ledger makes
-  replayed micro-batches no-ops. Derived state (index + decisions)
-  writes FIRST as idempotent per-batch-scope overwrites and the ledger
-  merge commits LAST (outbox ordering), so every crash window replays
-  into convergence: recomputation against an index already holding the
-  batch is idempotent because self-matches are excluded.
+Every ingest runs ONE protocol, owned by :class:`DedupIngest` (the
+reference deploys one worker protocol N times the same way). A modality
+supplies only the hook ``_dedup(batch) -> (dropped, index_rows, kept)``
+plus its signature / banding / verification code. The protocol:
 
-Duplicate semantics (pinned by tests/test_streaming_neardup.py): a doc is
-DROPPED iff it shares an LSH band AND agrees on >= ``min_agree`` of the
-minhashes with (a) any RETAINED historical doc, or (b) any smaller-id doc
-of its own micro-batch (chains within a batch collapse to their minimum —
-the batch operators' min-id-survivor convention; a dropped batch peer can
-still absorb its larger neighbors, matching pair-rule rather than greedy
-sequencing, which keeps the in-batch step one distributed self-join).
-Documents too short to shingle have no signature and PASS THROUGH
-unindexed — a length/quality filter owns those, as in the batch path.
+- **ledger id and scope**: micro-batch ``n`` of stream ``sid`` (minted in
+  the checkpoint dir by ``checkpoint_stream_id``; ``local`` for batches
+  fed directly) has ledger id ``<sid>:<n>``. That id is the survivor
+  table's batch-id ledger entry and the decisions' ``batch_id`` column;
+  made filesystem-safe by :func:`_scope_dirname`, it names the
+  ``batch=<scope>`` dir of the batch's index and decision writes.
+  ``CrunchWorker`` spells its ledger ids ``stream-<sid>-<n>``. The two
+  formats differ only because both are already on disk: a resumed
+  stream whose ids changed spelling would re-apply its last epoch under
+  a new id.
+- **index**: ``band_index/batch=<scope>/band_bucket=<b>/`` parquet,
+  hash-partitioned by ``band_bucket = pmod(…, INDEX_BUCKETS)``, each row
+  carrying what candidate verification needs (no second lookup join;
+  the schema is the class's ``INDEX_SCHEMA``). The batch side of the
+  candidate join is micro-batch-sized and broadcast, and the join keys
+  include the partition column, so dynamic partition pruning skips
+  untouched buckets: per-batch cost is O(batch x matching buckets),
+  never a full-index shuffle.
+- **verdicts**: an item is DROPPED when it matches a retained item
+  (``via='history'``) or a smaller-id item of its own batch
+  (``via='batch'``; chains collapse to their minimum id — the batch
+  operators' min-id-survivor convention). When both hit, history wins
+  the decision record. The history side never matches the batch's own
+  ids. Items with no signature pass through unindexed — a length or
+  quality filter owns those.
+- **outbox order and replay convergence**: index rows and decisions
+  land FIRST, as idempotent overwrites of the batch's scope dir; the
+  ledger-gated survivor merge (a KEEP-policy LSM ``PointTable``)
+  commits LAST. A crash in between replays the batch against an index
+  that already holds its survivors; because history excludes the
+  batch's own ids, the replay reaches the same verdicts and lands the
+  survivors once. Structured Streaming replays only the last
+  uncommitted epoch, so the index is at most one batch ahead of the
+  survivor table. A replay after the commit is a survivor-ledger no-op.
+- **locking**: ``process_batch`` holds the survivor table's re-entrant
+  writer lock over the whole batch, so a second process's compaction
+  cannot delete index files a candidate join is still reading.
+- **tiered compaction**: once ``auto_compact_batches`` scope dirs
+  accumulate, :meth:`DedupIngest.compact_index` folds the fresh dirs —
+  plus each ``batch=compact-*`` rung holding fewer than twice the rows
+  being folded — into one new compact dir: a geometric ladder with
+  O(log) write amplification and a bounded live dir count.
 """
 
 from __future__ import annotations
@@ -60,114 +83,70 @@ def _scope_dirname(scope: str) -> str:
     return "".join(c if c.isalnum() or c in "._-" else "-" for c in scope)
 
 
-class NearDupIngest:
-    """Stateful streaming near-dup filter (see module docstring)."""
+class DedupIngest:
+    """The shared ingest protocol (see module docstring). Subclasses set
+    the class constants below and implement :meth:`_dedup`."""
+
+    #: item id column: survivor key, decisions key, index id column
+    ID: str
+    #: schema of the parquet files :meth:`start_file_stream` consumes
+    INPUT_SCHEMA: str
+    #: band index schema; ``batch``/``band_bucket`` are partition dirs
+    INDEX_SCHEMA: str
+    #: survivor value columns (KEEP policy — fingerprints are immutable)
+    KEEP: tuple[str, ...]
+
+    INDEX_BUCKETS = 16
+    #: survivors merge as LSM append+compact runs: the bucketed rewrite's
+    #: per-batch cost tracked TOTAL survivor-table size once uniform keys
+    #: touched every bucket (STREAMSCALE measured x3.39 shuffle growth
+    #: over a x4 index growth); appending each batch as an immutable run
+    #: is O(batch) forever, and KEEP-policy folding is a first-by-run
+    SURVIVOR_BUCKETS = 8
+    SURVIVOR_MODE = "lsm"
 
     def __init__(
         self,
         spark: SparkSession,
         state_dir: str,
         *,
-        num_hashes: int = 8,
-        band_size: int = 2,
-        min_agree: float = 0.75,
-        shingle_n: int = 3,
-        index_buckets: int = 16,
-        num_buckets: int = 8,
-        exactly_once: bool = True,
         auto_compact_batches: int | None = 32,
-        merge_mode: str = "lsm",
     ):
         self.spark = spark
         self.state = Path(state_dir)
-        self.num_hashes = num_hashes
-        self.band_size = band_size
-        self.n_bands = num_hashes // band_size
-        self.min_agree_hashes = int(round(min_agree * num_hashes))
-        self.shingle_n = shingle_n
-        self.index_buckets = index_buckets
-        self.exactly_once = exactly_once
-        #: auto-compaction policy (r7 VERDICT #5): fold the per-batch
-        #: index dirs once their count reaches this threshold, from
-        #: INSIDE process_batch (the re-entrant writer lock is already
-        #: held, so the fold is race-free); None disables. Keeps file
-        #: listings bounded (sawtooth) on a long-lived ingest without
-        #: an external housekeeping scheduler.
+        #: auto-compaction policy: fold the per-batch index dirs once
+        #: their count reaches this threshold, from INSIDE process_batch
+        #: (the re-entrant writer lock is already held, so the fold is
+        #: race-free); None disables. Keeps file listings bounded
+        #: (sawtooth) on a long-lived ingest without an external
+        #: housekeeping scheduler.
         self.auto_compact_batches = auto_compact_batches
         self.stream_id: str | None = None
-        mh_cols = [f"mh_{i}" for i in range(num_hashes)]
-        #: survivors default to LSM append+compact merge (r8, r7 VERDICT
-        #: #1): the bucketed rewrite's per-batch cost tracked TOTAL
-        #: survivor-table size once uniform keys touched every bucket
-        #: (STREAMSCALE r7 measured x3.39 shuffle growth over a x4 index
-        #: growth); appending each batch as an immutable run is O(batch)
-        #: forever, and KEEP-policy folding is a trivial first-by-run.
         self.survivors = PointTable(
             spark,
             str(self.state / "survivors"),
-            key=["doc_id"],
-            policies={c: MergePolicy.KEEP for c in mh_cols},
-            num_buckets=num_buckets,
-            mode=merge_mode,
+            key=[self.ID],
+            policies={c: MergePolicy.KEEP for c in self.KEEP},
+            num_buckets=self.SURVIVOR_BUCKETS,
+            mode=self.SURVIVOR_MODE,
         )
         self.index_dir = self.state / "band_index"
         self.decisions_dir = self.state / "decisions"
 
-    # -- signature / band construction --------------------------------------
+    # -- the modality hook ----------------------------------------------------
 
-    def _signatures(self, docs: DataFrame) -> DataFrame:
-        sh = shingle_arrays(docs, "doc_id", "text", self.shingle_n)
-        return minhash_signatures(sh, "doc_id", num_hashes=self.num_hashes)
+    def _dedup(self, batch: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+        """One micro-batch → (dropped, index_rows, kept).
 
-    def _bands(self, sigs: DataFrame) -> DataFrame:
-        """(doc_id, mh_*, band_idx, band_key, band_bucket) — one row per
-        (doc, band), signature denormalized onto every band row."""
-        bands = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band_idx"),
-                    F.concat_ws(
-                        ":",
-                        *[
-                            F.col(f"mh_{b * self.band_size + j}")
-                            for j in range(self.band_size)
-                        ],
-                    ).alias("band_key"),
-                )
-                for b in range(self.n_bands)
-            ]
-        )
-        return (
-            sigs.select("*", F.explode(bands).alias("band"))
-            .select("*", "band.band_idx", "band.band_key")
-            .drop("band")
-            .withColumn(
-                "band_bucket",
-                F.pmod(F.xxhash64("band_key"), F.lit(self.index_buckets)),
-            )
-        )
+        ``dropped`` comes from :meth:`_verdicts`; ``index_rows`` are the
+        kept items' index rows (partitioned by ``band_bucket``); ``kept``
+        are the survivor rows (``ID`` + ``KEEP`` columns)."""
+        raise NotImplementedError
 
-    def _agreement(self, left_prefix: str, right_prefix: str) -> F.Column:
-        return sum(
-            F.when(
-                F.col(f"{left_prefix}mh_{i}") == F.col(f"{right_prefix}mh_{i}"), 1
-            ).otherwise(0)
-            for i in range(self.num_hashes)
-        )
-
-    # -- batch body ----------------------------------------------------------
+    # -- shared pieces of the batch body --------------------------------------
 
     def _ledger_id(self, batch_id: int) -> str:
-        sid = self.stream_id or "local"
-        return f"{sid}:{batch_id}"
-
-    def _index_schema(self) -> str:
-        mh = ", ".join(f"mh_{i} long" for i in range(self.num_hashes))
-        # batch/band_bucket are the partition directory columns
-        return (
-            f"doc_id long, {mh}, band_idx int, band_key string,"
-            " band_bucket long, batch string"
-        )
+        return f"{self.stream_id or 'local'}:{batch_id}"
 
     def _read_index(self) -> DataFrame | None:
         # explicit schema: inference would fail on a survivor-less first
@@ -177,139 +156,120 @@ class NearDupIngest:
         ):
             return None
         return (
-            self.spark.read.schema(self._index_schema())
+            self.spark.read.schema(self.INDEX_SCHEMA)
             .option("basePath", str(self.index_dir))
             .parquet(str(self.index_dir))
         )
 
-    def process_batch(self, docs: DataFrame, batch_id: int) -> None:
-        # The writer lock spans the WHOLE batch body (ADVICE r7): the
-        # candidate join below reads index files lazily, and a second
-        # process's compact_index rmtree must not delete them mid-plan.
-        # Re-entrant, so the survivor merge and any auto-compaction
-        # nest without deadlocking.
+    def _drop_own(self, rows: DataFrame, batch: DataFrame, col: str) -> DataFrame:
+        """``rows`` minus those whose ``col`` is one of ``batch``'s
+        (unique) ids. Every hook's history side goes through this: on a
+        replay the index already holds the batch's survivors, and
+        matching them would turn an in-batch verdict into a history
+        one."""
+        own = batch.select(F.col(self.ID).alias(col))
+        return rows.join(F.broadcast(own), col, "left_anti")
+
+    def _verdicts(self, hist: DataFrame | None, peers: DataFrame) -> DataFrame:
+        """(ID, dup_of, via) per dropped item, from verified match pairs
+        (ID, dup_of) against history and against smaller-id batch peers:
+        the min matching id wins within each side, and history wins the
+        decision record when both hit.
+
+        Eagerly checkpointed. This severs every downstream plan's lineage
+        to the lazy index read — required on a ledger REPLAY, where the
+        index write overwrites the very ``batch=<scope>`` dir the
+        candidate join's stale file listing still points at
+        (FAILED_READ_FILE otherwise) — and computes the candidate join
+        once instead of once per consumer (index write, decisions write,
+        survivor merge)."""
+
+        def first(pairs: DataFrame, via: str) -> DataFrame:
+            return (
+                pairs.groupBy(self.ID)
+                .agg(F.min("dup_of").alias("dup_of"))
+                .withColumn("via", F.lit(via))
+            )
+
+        dropped = first(peers, "batch")
+        if hist is not None:
+            pri = F.when(F.col("via") == "history", 0).otherwise(1)
+            dropped = (
+                first(hist, "history")
+                .unionByName(dropped)
+                .groupBy(self.ID)
+                .agg(F.min_by(F.struct("dup_of", "via"), pri).alias("d"))
+                .select(self.ID, "d.dup_of", "d.via")
+            )
+        return dropped.localCheckpoint(eager=True)
+
+    def process_batch(self, batch: DataFrame, batch_id: int) -> None:
+        # The writer lock spans the WHOLE batch body: the candidate join
+        # reads index files lazily, and a second process's compact_index
+        # rmtree must not delete them mid-plan. Re-entrant, so the
+        # survivor merge and any auto-compaction nest without deadlocking.
         with self.survivors.writer_lock():
-            self._process_batch_locked(docs, batch_id)
-
-    def _process_batch_locked(self, docs: DataFrame, batch_id: int) -> None:
-        sigs = self._signatures(
-            docs.select("doc_id", "text").dropDuplicates(["doc_id"])
-        ).persist()
-        try:
-            bands = self._bands(sigs)
-
-            # (a) history matches: batch side is micro-batch-sized ->
-            # broadcast; join keys include the index's PARTITION column so
-            # dynamic partition pruning skips untouched index buckets.
-            index = self._read_index()
-            if index is not None:
-                h = index
-                hist_sel = [F.col("doc_id").alias("h_id")] + [
-                    F.col(f"mh_{i}").alias(f"h_mh_{i}")
-                    for i in range(self.num_hashes)
-                ]
-                cand = h.select(
-                    "band_bucket", "band_idx", "band_key", *hist_sel
-                ).join(
-                    F.broadcast(bands),
-                    ["band_bucket", "band_idx", "band_key"],
-                )
-                hist_dups = (
-                    cand.where(F.col("h_id") != F.col("doc_id"))
-                    .where(
-                        self._agreement("", "h_") >= self.min_agree_hashes
-                    )
-                    .groupBy("doc_id")
-                    .agg(F.min("h_id").alias("dup_of"))
-                    .withColumn("via", F.lit("history"))
-                )
-            else:
-                hist_dups = None
-
-            # (b) in-batch matches: pair rule, min-id survivor
-            a = bands.select(
-                F.col("doc_id").alias("id_a"),
-                "band_idx",
-                "band_key",
-                *[F.col(f"mh_{i}").alias(f"a_mh_{i}") for i in range(self.num_hashes)],
-            )
-            b = bands.select(
-                F.col("doc_id").alias("id_b"),
-                "band_idx",
-                "band_key",
-                *[F.col(f"mh_{i}").alias(f"b_mh_{i}") for i in range(self.num_hashes)],
-            )
-            batch_dups = (
-                a.join(b, ["band_idx", "band_key"])
-                .where(F.col("id_a") < F.col("id_b"))
-                .where(self._agreement("a_", "b_") >= self.min_agree_hashes)
-                .groupBy(F.col("id_b").alias("doc_id"))
-                .agg(F.min("id_a").alias("dup_of"))
-                .withColumn("via", F.lit("batch"))
-            )
-
-            if hist_dups is None:
-                dropped = batch_dups
-            else:
-                # history verdict wins the decision record when both hit
-                pri = F.when(F.col("via") == "history", 0).otherwise(1)
-                dropped = (
-                    hist_dups.unionByName(batch_dups)
-                    .groupBy("doc_id")
-                    .agg(F.min_by(F.struct("dup_of", "via"), pri).alias("d"))
-                    .select("doc_id", "d.dup_of", "d.via")
-                )
-            # Eagerly materialize the (micro-batch-sized) verdicts. This
-            # severs every downstream plan's lineage to the lazy index
-            # read — required on a ledger REPLAY, where the index write
-            # below overwrites the very ``batch=<scope>`` dir the
-            # candidate join's stale file listing still points at
-            # (FAILED_READ_FILE otherwise) — and computes the candidate
-            # join once instead of re-running it for each of the three
-            # consumers (index write, decisions write, survivor merge).
-            dropped = dropped.localCheckpoint(eager=True)
-            kept = sigs.join(dropped.select("doc_id"), "doc_id", "left_anti")
-
-            # outbox ordering: derived state (index + decisions) lands
-            # FIRST, the ledger-gated survivor merge commits LAST — a
-            # crash in between replays the batch, and recomputation
-            # against an index that already contains this batch's docs is
-            # idempotent because self-matches are excluded above (kept
-            # set identical; a kept doc's in-batch absorber may re-label
-            # via='history', same dup_of). The old order had a permanent
-            # landing hole: merge committed, index write crashed, replay
-            # saw the ledger hit and skipped the index forever. Recovery
-            # contract: Structured Streaming replays only the last
-            # uncommitted epoch, so the index is at most ONE batch ahead
-            # of the retained table and converges on replay.
-            lid = self._ledger_id(batch_id) if self.exactly_once else None
-            scope = lid or f"noledger:{batch_id}"
-            sdir = _scope_dirname(scope)
-            # coalesce(1): the write is micro-batch-sized (bounded by
-            # BATCHSIZE) but inherits the session's shuffle partition
-            # count — without the coalesce each batch sprays
-            # partitions x index_buckets near-empty files (measured
-            # 512/batch at ~7 rows each, tools/stream_scale.py) and the
-            # candidate join's file listing grows 30x faster than the
-            # data; one task per batch writes one file per touched
-            # bucket dir instead
+            dropped, index_rows, kept = self._dedup(batch)
+            # outbox ordering: index + decisions land FIRST, the
+            # ledger-gated survivor merge commits LAST (module docstring).
+            # The reverse order had a permanent landing hole: merge
+            # committed, index write crashed, the replay saw the ledger
+            # hit and skipped the index forever.
+            lid = self._ledger_id(batch_id)
+            sdir = _scope_dirname(lid)
+            # coalesce(1): the write is micro-batch-sized but inherits the
+            # session's shuffle partition count — without the coalesce
+            # each batch sprays partitions x INDEX_BUCKETS near-empty
+            # files (measured 512/batch at ~7 rows each,
+            # tools/stream_scale.py) and the candidate join's file listing
+            # grows 30x faster than the data; one task per batch writes
+            # one file per touched bucket dir instead
             (
-                self._bands(kept)
-                .coalesce(1)
+                index_rows.coalesce(1)
                 .write.mode("overwrite")
                 .partitionBy("band_bucket")
                 .parquet(str(self.index_dir / f"batch={sdir}"))
             )
             (
-                dropped.withColumn("batch_id", F.lit(scope))
+                dropped.withColumn("batch_id", F.lit(lid))
                 .coalesce(1)
                 .write.mode("overwrite")
                 .parquet(str(self.decisions_dir / f"batch={sdir}"))
             )
             self.survivors.merge(kept, batch_id=lid)
             self._maybe_auto_compact()
-        finally:
-            sigs.unpersist()
+
+    def _stream_batch(self, batch: DataFrame, batch_id: int) -> None:
+        """The foreachBatch handler for rows of ``INPUT_SCHEMA``."""
+        self.process_batch(batch, batch_id)
+
+    # -- stream wiring -------------------------------------------------------
+
+    def start_file_stream(
+        self,
+        src_dir: str,
+        checkpoint_dir: str,
+        *,
+        max_files_per_trigger: int | None = None,
+        available_now: bool = False,
+    ):
+        """Consume parquet files of ``INPUT_SCHEMA`` rows from ``src_dir``."""
+        Path(checkpoint_dir).mkdir(parents=True, exist_ok=True)
+        if self.stream_id is None:
+            self.stream_id = checkpoint_stream_id(checkpoint_dir)
+        reader = self.spark.readStream.schema(self.INPUT_SCHEMA).format("parquet")
+        if max_files_per_trigger is not None:
+            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+        writer = (
+            reader.load(src_dir)
+            .writeStream.foreachBatch(self._stream_batch)
+            .option("checkpointLocation", checkpoint_dir)
+        )
+        if available_now:
+            writer = writer.trigger(availableNow=True)
+        return writer.start()
+
+    # -- housekeeping --------------------------------------------------------
 
     def _maybe_auto_compact(self) -> None:
         """Fire compact_index from inside the batch body once the
@@ -325,36 +285,6 @@ class NearDupIngest:
         if n >= self.auto_compact_batches:
             self.compact_index()
 
-    # -- stream wiring -------------------------------------------------------
-
-    def start_file_stream(
-        self,
-        docs_dir: str,
-        checkpoint_dir: str,
-        *,
-        max_files_per_trigger: int | None = None,
-        available_now: bool = False,
-    ):
-        """Consume document parquet files (doc_id long, text string)."""
-        Path(checkpoint_dir).mkdir(parents=True, exist_ok=True)
-        if self.stream_id is None:
-            self.stream_id = checkpoint_stream_id(checkpoint_dir)
-        reader = self.spark.readStream.schema("doc_id long, text string").format(
-            "parquet"
-        )
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        writer = (
-            reader.load(docs_dir)
-            .writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
-    # -- housekeeping --------------------------------------------------------
-
     #: tiered-fold growth factor (the LSM binary-counter invariant —
     #: merge/upsert.py): a compact dir joins a fold while it is smaller
     #: than this multiple of everything newer being folded
@@ -367,7 +297,7 @@ class NearDupIngest:
         to dominate the candidate join). Returns the number of dirs
         folded, 0 if there was nothing to do.
 
-        Fold selection (r8, the same binary-counter invariant as the
+        Fold selection (the same binary-counter invariant as the
         survivor table's LSM mode): every FRESH per-batch dir folds,
         plus each existing ``batch=compact-`` dir — newest first —
         while it holds fewer than ``_COMPACT_FACTOR`` x the ROWS being
@@ -377,26 +307,24 @@ class NearDupIngest:
         successive fold costs before the switch). Compact dirs form a
         geometric size ladder: a fold usually costs ~threshold batches
         of data (constant), occasionally cascades into a bigger rung,
-        and amortizes to O(log) write amplification instead of the
-        pre-r8 all-dirs-into-one whose cost grew linearly with the
+        and amortizes to O(log) write amplification instead of an
+        all-dirs-into-one fold whose cost grows linearly with the
         index. Live dir count stays <= threshold +
         O(log(index/batch)).
 
-        Concurrency (ADVICE r6 neardup.py:341, tightened per ADVICE r7):
-        serializes on the survivor table's re-entrant writer lock
-        (merge/upsert.py ``writer_lock``). Since r8 every
+        Concurrency: serializes on the survivor table's re-entrant
+        writer lock (merge/upsert.py ``writer_lock``). Every
         ``process_batch`` holds that lock across its WHOLE body —
-        candidate join, index/decision writes, survivor merge — not
-        just the merge, so a second ingest instance on the same
-        ``state_dir`` can never run its candidate join against a file
-        listing this compaction's ``rmtree`` is deleting out from under
-        it (FAILED_READ_FILE). Within one process the re-entrant lock
-        lets an auto-compaction fire from inside ``process_batch``
-        without deadlocking.
+        candidate join, index/decision writes, survivor merge — so a
+        second ingest instance on the same ``state_dir`` can never run
+        its candidate join against a file listing this compaction's
+        ``rmtree`` is deleting out from under it (FAILED_READ_FILE).
+        Within one process the re-entrant lock lets an auto-compaction
+        fire from inside ``process_batch`` without deadlocking.
         Crash-safe by idempotence rather than atomicity: a crash after
         the consolidated write but before the old dirs are removed
         leaves duplicate band rows, which only produce duplicate
-        CANDIDATES — the per-doc ``min`` aggregates absorb them, and
+        CANDIDATES — the per-item ``min`` aggregates absorb them, and
         the next fold's ``dropDuplicates`` removes the redundancy (the
         crash leaves the duplicate rows in the NEWEST compact dir +
         the fresh dirs, and the size rule pulls that compact dir into
@@ -442,8 +370,8 @@ class NearDupIngest:
                 return 0
             if size == 0:
                 # >=2 dirs whose partition dirs hold only _SUCCESS
-                # (survivor-less / all-dropped batches — ADVICE r7): no
-                # rows to consolidate; just fold the empty dirs away
+                # (survivor-less / all-dropped batches): no rows to
+                # consolidate; just fold the empty dirs away
                 for d in fold:
                     shutil.rmtree(d)
                 return len(fold)
@@ -453,7 +381,7 @@ class NearDupIngest:
                 / f"batch=compact-{next_seq:06d}-{uuid.uuid4().hex[:8]}"
             )
             (
-                self.spark.read.schema(self._index_schema())
+                self.spark.read.schema(self.INDEX_SCHEMA)
                 .option("basePath", str(self.index_dir))
                 .parquet(*[str(d) for d in fold])
                 .drop("batch")
@@ -466,7 +394,7 @@ class NearDupIngest:
                 # bucket (the point of compacting; without this the
                 # distinct's shuffle fans the fold into partitions x
                 # buckets small files and the listing creep returns)
-                .repartition(self.index_buckets, F.col("band_bucket"))
+                .repartition(self.INDEX_BUCKETS, F.col("band_bucket"))
                 .write.mode("overwrite")
                 .partitionBy("band_bucket")
                 .parquet(str(target))
@@ -481,12 +409,132 @@ class NearDupIngest:
         return self.survivors.read()
 
     def decisions(self) -> DataFrame:
-        return self.spark.read.schema(
-            "doc_id long, dup_of long, via string, batch_id string"
-        ).parquet(str(self.decisions_dir))
+        schema = f"{self.ID} long, dup_of long, via string, batch_id string"
+        if not self.decisions_dir.exists():
+            # no batch has landed yet
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(str(self.decisions_dir))
 
 
-class EmbeddingDedupIngest:
+class NearDupIngest(DedupIngest):
+    """Streaming MinHash/LSH near-dup filter over ``(doc_id, text)``.
+
+    Signatures are the batch path's ``shingle_arrays`` →
+    ``minhash_signatures`` pipeline (identical hash family, so offline
+    and online decisions agree). Index rows are one per (doc, band),
+    ``band_bucket = pmod(xxhash64(band_key), 16)``, each carrying the
+    full signature. A doc matches when it shares an LSH band AND agrees
+    on >= ``MIN_AGREE_HASHES`` of the minhashes (pinned by
+    tests/test_streaming_neardup.py). A dropped batch peer can still
+    absorb its larger neighbors, matching the pair rule rather than
+    greedy sequencing, which keeps the in-batch step one distributed
+    self-join.
+    """
+
+    NUM_HASHES = 8
+    BAND_SIZE = 2
+    N_BANDS = NUM_HASHES // BAND_SIZE
+    #: 0.75 of the minhashes
+    MIN_AGREE_HASHES = 6
+    SHINGLE_N = 3
+
+    ID = "doc_id"
+    INPUT_SCHEMA = "doc_id long, text string"
+    KEEP = tuple(f"mh_{i}" for i in range(NUM_HASHES))
+    INDEX_SCHEMA = (
+        "doc_id long, "
+        + "".join(f"mh_{i} long, " for i in range(NUM_HASHES))
+        + "band_idx int, band_key string, band_bucket long, batch string"
+    )
+
+    def _signatures(self, docs: DataFrame) -> DataFrame:
+        sh = shingle_arrays(docs, "doc_id", "text", self.SHINGLE_N)
+        return minhash_signatures(sh, "doc_id", num_hashes=self.NUM_HASHES)
+
+    def _bands(self, sigs: DataFrame) -> DataFrame:
+        """(doc_id, mh_*, band_idx, band_key, band_bucket) — one row per
+        (doc, band), signature denormalized onto every band row."""
+        bands = F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band_idx"),
+                    F.concat_ws(
+                        ":",
+                        *[
+                            F.col(f"mh_{b * self.BAND_SIZE + j}")
+                            for j in range(self.BAND_SIZE)
+                        ],
+                    ).alias("band_key"),
+                )
+                for b in range(self.N_BANDS)
+            ]
+        )
+        return (
+            sigs.select("*", F.explode(bands).alias("band"))
+            .select("*", "band.band_idx", "band.band_key")
+            .drop("band")
+            .withColumn(
+                "band_bucket",
+                F.pmod(F.xxhash64("band_key"), F.lit(self.INDEX_BUCKETS)),
+            )
+        )
+
+    def _agreement(self, left_prefix: str, right_prefix: str) -> F.Column:
+        return sum(
+            F.when(
+                F.col(f"{left_prefix}mh_{i}") == F.col(f"{right_prefix}mh_{i}"), 1
+            ).otherwise(0)
+            for i in range(self.NUM_HASHES)
+        )
+
+    def _dedup(self, docs: DataFrame):
+        # one signature pass: the candidate join, the index write and the
+        # survivor merge all read the checkpointed signatures
+        sigs = self._signatures(
+            docs.select("doc_id", "text").dropDuplicates(["doc_id"])
+        ).localCheckpoint(eager=True)
+        bands = self._bands(sigs)
+
+        hist = None
+        index = self._read_index()
+        if index is not None:
+            cand = index.select(
+                "band_bucket",
+                "band_idx",
+                "band_key",
+                F.col("doc_id").alias("h_id"),
+                *[F.col(f"mh_{i}").alias(f"h_mh_{i}") for i in range(self.NUM_HASHES)],
+            ).join(F.broadcast(bands), ["band_bucket", "band_idx", "band_key"])
+            hist = (
+                self._drop_own(cand, sigs, "h_id")
+                .where(self._agreement("", "h_") >= self.MIN_AGREE_HASHES)
+                .select("doc_id", F.col("h_id").alias("dup_of"))
+            )
+
+        def side(p: str) -> DataFrame:
+            return bands.select(
+                F.col("doc_id").alias(f"id_{p}"),
+                "band_idx",
+                "band_key",
+                *[
+                    F.col(f"mh_{i}").alias(f"{p}_mh_{i}")
+                    for i in range(self.NUM_HASHES)
+                ],
+            )
+
+        peers = (
+            side("a")
+            .join(side("b"), ["band_idx", "band_key"])
+            .where(F.col("id_a") < F.col("id_b"))
+            .where(self._agreement("a_", "b_") >= self.MIN_AGREE_HASHES)
+            .select(F.col("id_b").alias("doc_id"), F.col("id_a").alias("dup_of"))
+        )
+        dropped = self._verdicts(hist, peers)
+        kept = sigs.join(dropped.select("doc_id"), "doc_id", "left_anti")
+        return dropped, self._bands(kept), kept
+
+
+class EmbeddingDedupIngest(DedupIngest):
     """Streaming near-dup filter over an EMBEDDING stream — the vector
     counterpart of :class:`NearDupIngest` for multimodal/semantic
     pipelines: each micro-batch of ``(vec_id, embedding array<float>)``
@@ -494,21 +542,13 @@ class EmbeddingDedupIngest:
     signatures of ``band_planes`` planes — deterministic md5 planes, the
     same family as operators/similarity.py), candidates against the
     retained index are verified by EXACT cosine on the vectors stored
-    alongside the bucket rows (no second lookup join), and survivors
-    fold into a KEEP-policy PointTable under the batch-id ledger.
+    alongside the bucket rows, and a match is cosine >= ``min_cos``.
 
-    Same retention semantics as the text filter (pinned by tests): drop
-    iff a shared band bucket AND cosine >= ``min_cos`` against a retained
-    doc or a smaller-id batch peer; in-batch chains collapse to their
-    minimum id. Index layout, idempotent decision writes, and
-    :func:`compact_index` small-files housekeeping mirror NearDupIngest.
-
-    CORPUS-ADAPTIVE BANDING (r12, closing r11 VERDICT #1): by default
-    (``n_bands=None, band_planes=None``) the ingest derives (p, r) from
-    the RETAINED count via the batch family's ``_sdd_params_for``
-    policy (min_cos-aware) and RE-KEYS the band index when the policy
-    steps — the fix for the r9-era cost class the r11 verdict named:
-    construction-pinned bands hold cell count constant FOREVER, so
+    CORPUS-ADAPTIVE BANDING: by default (``n_bands=None,
+    band_planes=None``) the ingest derives (p, r) from the RETAINED
+    count via the batch family's ``_sdd_params_for`` policy
+    (min_cos-aware) and RE-KEYS the band index when the policy steps.
+    Construction-pinned bands hold cell count constant FOREVER, so
     expected per-cell population grows ∝ retained count and each
     batch's candidate join against history grows linearly with
     everything ever ingested (quadratic total over the stream's life).
@@ -530,9 +570,17 @@ class EmbeddingDedupIngest:
       verification still gates every drop) and converges at the next
       policy check — the compactor's convergence story;
     - passing EXPLICIT ``n_bands``/``band_planes`` pins the banding
-      forever (the pre-r12 behavior; :class:`PerceptualDedupIngest`
-      pins its hamming-complete 8×7 one-hot layout this way).
+      forever (:class:`PerceptualDedupIngest` pins its hamming-complete
+      8×7 one-hot layout this way).
     """
+
+    ID = "vec_id"
+    INPUT_SCHEMA = "vec_id long, embedding array<float>"
+    KEEP = ("embedding",)
+    INDEX_SCHEMA = (
+        "vec_id long, embedding array<float>, band_idx int,"
+        " band_key int, band_bucket long, batch string"
+    )
 
     def __init__(
         self,
@@ -543,72 +591,42 @@ class EmbeddingDedupIngest:
         n_bands: int | None = None,
         band_planes: int | None = None,
         min_cos: float = 0.98,
-        index_buckets: int = 16,
-        num_buckets: int = 8,
-        exactly_once: bool = True,
         auto_compact_batches: int | None = 32,
-        merge_mode: str = "lsm",
         ivf_monitor=None,
         ivf_check_every: int = 8,
-        target_recall: float | None = None,
         reband_check_every: int = 8,
     ):
-        from cruncher_spark.operators.similarity import (
-            _SDD_TARGET_RECALL,
-            _sdd_params_for,
-        )
+        from cruncher_spark.operators.similarity import _sdd_params_for
 
-        self.spark = spark
-        self.state = Path(state_dir)
+        super().__init__(
+            spark, state_dir, auto_compact_batches=auto_compact_batches
+        )
         self.dim = dim
+        self.min_cos = min_cos
         # adaptive iff the banding is NOT construction-pinned: explicit
         # values (either one) pin it, the None default tracks the policy
         self.adaptive_bands = n_bands is None and band_planes is None
-        self.target_recall = (
-            _SDD_TARGET_RECALL if target_recall is None else target_recall
-        )
         self.reband_check_every = reband_check_every
         if self.adaptive_bands:
-            saved = self._load_policy()
-            if saved is not None:
-                band_planes, n_bands = saved
-            else:
-                band_planes, n_bands = _sdd_params_for(
-                    0, min_cos, self.target_recall
-                )
+            band_planes, n_bands = self._load_policy() or _sdd_params_for(
+                0, min_cos
+            )
         self.n_bands = n_bands if n_bands is not None else 4
         self.band_planes = band_planes if band_planes is not None else 8
-        self.min_cos = min_cos
-        self.index_buckets = index_buckets
-        self.exactly_once = exactly_once
         #: diagnostics for the scale harness (tools/stream_scale.py):
         #: when count_candidates is set, each batch records the history
         #: candidate-join row count — the density signal the adaptive
         #: policy holds flat
         self.count_candidates = False
         self.last_history_candidates: int | None = None
-        # optional served-IVF staleness monitor (r9 VERDICT #4: the
-        # drift-based refit trigger as code, not prose): every
-        # ivf_check_every batches the monitor measures cell-population
-        # drift of the RETAINED corpus against its fit-time baseline
-        # and refits the quantizer when it trips. Advisory/in-memory —
-        # a replayed batch re-measures, never corrupts state.
+        # optional served-IVF staleness monitor (the drift-based refit
+        # trigger): every ivf_check_every batches the monitor measures
+        # cell-population drift of the RETAINED corpus against its
+        # fit-time baseline and refits the quantizer when it trips.
+        # Advisory/in-memory — a replayed batch re-measures, never
+        # corrupts state.
         self.ivf_monitor = ivf_monitor
         self.ivf_check_every = ivf_check_every
-        # see NearDupIngest.auto_compact_batches
-        self.auto_compact_batches = auto_compact_batches
-        self.stream_id: str | None = None
-        # LSM survivor merge by default — see NearDupIngest
-        self.survivors = PointTable(
-            spark,
-            str(self.state / "survivors"),
-            key=["vec_id"],
-            policies={"embedding": MergePolicy.KEEP},
-            num_buckets=num_buckets,
-            mode=merge_mode,
-        )
-        self.index_dir = self.state / "band_index"
-        self.decisions_dir = self.state / "decisions"
 
     # -- adaptive banding policy ----------------------------------------------
 
@@ -644,13 +662,13 @@ class EmbeddingDedupIngest:
 
     def _maybe_reband(self, batch_id: int) -> None:
         """Re-derive (p, r) from the retained count and re-key the band
-        index when the policy steps (r12, closing r11 VERDICT #1).
+        index when the policy steps.
 
         Runs at the START of every ``reband_check_every``-th batch body
         (lock already held), so the batch that triggers a step is
         banded with the NEW keys against the freshly re-keyed index.
         Also fires when the policy file is missing but an index exists
-        — the pre-r12 upgrade path, where the on-disk keys may come
+        — state written by a pinned ingest, whose on-disk keys may come
         from ANY banding and only a re-key makes probe and index
         keyspaces agree. Idempotent: same retained count → same
         (p, r) → no-op, so a ledger replay never re-keys twice."""
@@ -664,7 +682,7 @@ class EmbeddingDedupIngest:
         # versions() is [] until the first merge commits — a fresh
         # table has a directory but nothing to read
         n = self.survivors.read().count() if self.survivors.versions() else 0
-        p_new, r_new = _sdd_params_for(n, self.min_cos, self.target_recall)
+        p_new, r_new = _sdd_params_for(n, self.min_cos)
         stale_index = missing and self._read_index() is not None
         if (p_new, r_new) == (self.band_planes, self.n_bands) and (
             not stale_index
@@ -699,7 +717,7 @@ class EmbeddingDedupIngest:
         target = self.index_dir / f"batch=reband-{uuid.uuid4().hex[:8]}"
         (
             self._bands(retained)
-            .repartition(self.index_buckets, F.col("band_bucket"))
+            .repartition(self.INDEX_BUCKETS, F.col("band_bucket"))
             .write.mode("overwrite")
             .partitionBy("band_bucket")
             .parquet(str(target))
@@ -712,16 +730,15 @@ class EmbeddingDedupIngest:
     def _explode_bands(self, vecs: DataFrame) -> DataFrame:
         """(vec_id, embedding, band_idx, band_key) — the random-
         hyperplane family via the shared-projections single-tree form
-        (r12, same as the batch operators): ONE 2-D plane-matrix
-        literal and one pass compute all p·r projections, and each
-        band's key reads its slice — bit-identical arithmetic to the
-        old per-band fold loop (same zip_with cast-double multiply,
-        same 0.0-seeded left fold, same >0 sign rule), but the plan is
-        one expression tree instead of p·r per-element-literal trees
-        (the adaptive policy can push p·r to dozens of planes, where
-        per-element F.lit construction alone took seconds per batch).
-        :class:`PerceptualDedupIngest` overrides with its one-hot
-        chunk keys."""
+        (same as the batch operators): ONE 2-D plane-matrix literal and
+        one pass compute all p·r projections, and each band's key reads
+        its slice — bit-identical arithmetic to a per-band fold loop
+        (same zip_with cast-double multiply, same 0.0-seeded left fold,
+        same >0 sign rule), but the plan is one expression tree instead
+        of p·r per-element-literal trees (the adaptive policy can push
+        p·r to dozens of planes, where per-element F.lit construction
+        alone took seconds per batch). :class:`PerceptualDedupIngest`
+        overrides with its one-hot chunk keys."""
         from cruncher_spark.operators.similarity import (
             _cell_from_projs,
             _hyperplane_signs,
@@ -754,46 +771,39 @@ class EmbeddingDedupIngest:
     def _bands(self, vecs: DataFrame) -> DataFrame:
         return self._explode_bands(vecs).withColumn(
             "band_bucket",
-            F.pmod(F.col("band_key"), F.lit(self.index_buckets)),
+            F.pmod(F.col("band_key"), F.lit(self.INDEX_BUCKETS)),
         )
 
     # -- batch body ----------------------------------------------------------
 
-    def _ledger_id(self, batch_id: int) -> str:
-        sid = self.stream_id or "local"
-        return f"{sid}:{batch_id}"
-
-    def _index_schema(self) -> str:
-        return (
-            "vec_id long, embedding array<float>, band_idx int,"
-            " band_key int, band_bucket long, batch string"
-        )
-
-    def _read_index(self) -> DataFrame | None:
-        if not self.index_dir.exists() or not any(
-            self.index_dir.rglob("*.parquet")
-        ):
-            return None
-        return (
-            self.spark.read.schema(self._index_schema())
-            .option("basePath", str(self.index_dir))
-            .parquet(str(self.index_dir))
-        )
-
     def process_batch(self, vecs: DataFrame, batch_id: int) -> None:
-        # lock spans the whole body — see NearDupIngest.process_batch
+        # the re-entrant lock covers the policy check and the monitor
+        # too; the shared body nests inside it
         with self.survivors.writer_lock():
-            self._process_batch_locked(vecs, batch_id)
+            # policy check BEFORE banding the batch: a step re-keys the
+            # index first, so this batch probes with the new keys
+            self._maybe_reband(batch_id)
+            super().process_batch(vecs, batch_id)
+            if (
+                self.ivf_monitor is not None
+                and batch_id % self.ivf_check_every == 0
+            ):
+                retained = self.retained().select("vec_id", "embedding")
+                # self-initialize: a monitor attached without a fit-time
+                # baseline takes the first checked batch AS the baseline
+                # (drift 0 by construction) instead of crashing the
+                # ingest inside maybe_refit's drift()
+                if self.ivf_monitor.baseline is None:
+                    self.ivf_monitor.set_baseline(retained)
+                self.ivf_monitor.maybe_refit(retained, tag=batch_id)
 
-    def _process_batch_locked(self, vecs: DataFrame, batch_id: int) -> None:
+    def _dedup(self, vecs: DataFrame):
         from cruncher_spark.operators.similarity import cosine
 
-        # policy check BEFORE banding the batch: a step re-keys the
-        # index first, so this batch probes with the new keys (r12)
-        self._maybe_reband(batch_id)
         batch = vecs.select("vec_id", "embedding").dropDuplicates(["vec_id"])
         bands = self._bands(batch)
 
+        hist = None
         index = self._read_index()
         if index is not None:
             cand = index.select(
@@ -807,133 +817,36 @@ class EmbeddingDedupIngest:
             # count job, opt-in only
             if self.count_candidates:
                 self.last_history_candidates = cand.count()
-            hist_dups = (
-                cand.where(F.col("h_id") != F.col("vec_id"))
-                .where(
-                    cosine("embedding", "h_emb") >= self.min_cos
-                )
-                .groupBy("vec_id")
-                .agg(F.min("h_id").alias("dup_of"))
-                .withColumn("via", F.lit("history"))
+            hist = (
+                self._drop_own(cand, batch, "h_id")
+                .where(cosine("embedding", "h_emb") >= self.min_cos)
+                .select("vec_id", F.col("h_id").alias("dup_of"))
             )
-        else:
-            if self.count_candidates:
-                self.last_history_candidates = 0
-            hist_dups = None
+        elif self.count_candidates:
+            self.last_history_candidates = 0
 
-        a = bands.select(
-            F.col("vec_id").alias("id_a"),
-            F.col("embedding").alias("emb_a"),
-            "band_idx",
-            "band_key",
-        )
-        b = bands.select(
-            F.col("vec_id").alias("id_b"),
-            F.col("embedding").alias("emb_b"),
-            "band_idx",
-            "band_key",
-        )
-        batch_dups = (
-            a.join(b, ["band_idx", "band_key"])
+        def side(p: str) -> DataFrame:
+            return bands.select(
+                F.col("vec_id").alias(f"id_{p}"),
+                F.col("embedding").alias(f"emb_{p}"),
+                "band_idx",
+                "band_key",
+            )
+
+        peers = (
+            side("a")
+            .join(side("b"), ["band_idx", "band_key"])
             .where(F.col("id_a") < F.col("id_b"))
             .where(cosine("emb_a", "emb_b") >= self.min_cos)
-            .groupBy(F.col("id_b").alias("vec_id"))
-            .agg(F.min("id_a").alias("dup_of"))
-            .withColumn("via", F.lit("batch"))
+            .select(F.col("id_b").alias("vec_id"), F.col("id_a").alias("dup_of"))
         )
-
-        if hist_dups is None:
-            dropped = batch_dups
-        else:
-            pri = F.when(F.col("via") == "history", 0).otherwise(1)
-            dropped = (
-                hist_dups.unionByName(batch_dups)
-                .groupBy("vec_id")
-                .agg(F.min_by(F.struct("dup_of", "via"), pri).alias("d"))
-                .select("vec_id", "d.dup_of", "d.via")
-            )
-        # eager checkpoint: severs lineage to the lazy index read so the
-        # replay-time self-overwrite below is safe, and computes the
-        # candidate join once — see NearDupIngest.process_batch
-        dropped = dropped.localCheckpoint(eager=True)
+        dropped = self._verdicts(hist, peers)
         kept = batch.join(dropped.select("vec_id"), "vec_id", "left_anti")
-
-        # outbox ordering + self-match guard + coalesce(1) small-files
-        # rationale: see NearDupIngest.process_batch
-        lid = self._ledger_id(batch_id) if self.exactly_once else None
-        scope = lid or f"noledger:{batch_id}"
-        sdir = _scope_dirname(scope)
-        (
-            self._bands(kept)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("band_bucket")
-            .parquet(str(self.index_dir / f"batch={sdir}"))
-        )
-        (
-            dropped.withColumn("batch_id", F.lit(scope))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(str(self.decisions_dir / f"batch={sdir}"))
-        )
-        self.survivors.merge(kept, batch_id=lid)
-        self._maybe_auto_compact()
-        if (
-            self.ivf_monitor is not None
-            and batch_id % self.ivf_check_every == 0
-        ):
-            retained = self.retained().select("vec_id", "embedding")
-            # self-initialize: a monitor attached without a fit-time
-            # baseline takes the first checked batch AS the baseline
-            # (drift 0 by construction) instead of crashing the ingest
-            # inside maybe_refit's drift() (r10 ADVICE)
-            if self.ivf_monitor.baseline is None:
-                self.ivf_monitor.set_baseline(retained)
-            self.ivf_monitor.maybe_refit(retained, tag=batch_id)
-
-    # -- housekeeping / readers ---------------------------------------------
-
-    compact_index = NearDupIngest.compact_index
-    _maybe_auto_compact = NearDupIngest._maybe_auto_compact
-
-    def start_file_stream(
-        self,
-        vecs_dir: str,
-        checkpoint_dir: str,
-        *,
-        max_files_per_trigger: int | None = None,
-        available_now: bool = False,
-    ):
-        Path(checkpoint_dir).mkdir(parents=True, exist_ok=True)
-        if self.stream_id is None:
-            self.stream_id = checkpoint_stream_id(checkpoint_dir)
-        reader = self.spark.readStream.schema(
-            "vec_id long, embedding array<float>"
-        ).format("parquet")
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        writer = (
-            reader.load(vecs_dir)
-            .writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
-    def retained(self) -> DataFrame:
-        return self.survivors.read()
-
-    def decisions(self) -> DataFrame:
-        return self.spark.read.schema(
-            "vec_id long, dup_of long, via string, batch_id string"
-        ).parquet(str(self.decisions_dir))
+        return dropped, self._bands(kept), kept
 
 
 class PerceptualDedupIngest(EmbeddingDedupIngest):
-    """Streaming perceptual IMAGE dedup: a continuous dHash filter, the
-    third modality of the ingest family (text MinHash, embeddings,
-    now pixels).
+    """Streaming perceptual IMAGE dedup: a continuous dHash filter.
 
     Each micro-batch of ``(media_id, payload)`` PNG rows is
     fingerprinted with the integer-exact 56-bit dHash
@@ -950,25 +863,19 @@ class PerceptualDedupIngest(EmbeddingDedupIngest):
       planes selecting 7 consecutive bits per band — the same 8x7
       chunk banding as the batch ``image_dhash_dedup`` gate, so recall
       is pigeonhole-COMPLETE through hamming 7 (random hyperplanes
-      would only be probabilistically complete);
-    - index layout, broadcast candidate join, outbox ordering,
-      batch-id ledger, crash-replay convergence, and
-      ``compact_index()`` inherit unchanged.
+      would only be probabilistically complete).
     """
 
     #: 8 bands x 7 bits, hamming bound = n_bands - 1 (pigeonhole)
     _BITS = 56
+    INPUT_SCHEMA = "media_id long, payload binary"
 
     def __init__(
         self,
         spark: SparkSession,
         state_dir: str,
         *,
-        index_buckets: int = 16,
-        num_buckets: int = 8,
-        exactly_once: bool = True,
         auto_compact_batches: int | None = 32,
-        merge_mode: str = "lsm",
     ):
         super().__init__(
             spark,
@@ -977,11 +884,7 @@ class PerceptualDedupIngest(EmbeddingDedupIngest):
             n_bands=8,
             band_planes=7,
             min_cos=0.74,
-            index_buckets=index_buckets,
-            num_buckets=num_buckets,
-            exactly_once=exactly_once,
             auto_compact_batches=auto_compact_batches,
-            merge_mode=merge_mode,
         )
 
     def _band_key(self, vec: F.Column, band: int) -> F.Column:
@@ -1045,55 +948,25 @@ class PerceptualDedupIngest(EmbeddingDedupIngest):
     def process_image_batch(self, media: DataFrame, batch_id: int) -> None:
         self.process_batch(self.fingerprint(media), batch_id)
 
-    def start_file_stream(
-        self,
-        media_dir: str,
-        checkpoint_dir: str,
-        *,
-        max_files_per_trigger: int | None = None,
-        available_now: bool = False,
-    ):
-        Path(checkpoint_dir).mkdir(parents=True, exist_ok=True)
-        if self.stream_id is None:
-            self.stream_id = checkpoint_stream_id(checkpoint_dir)
-        reader = self.spark.readStream.schema(
-            "media_id long, payload binary"
-        ).format("parquet")
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        writer = (
-            reader.load(media_dir)
-            .writeStream.foreachBatch(self.process_image_batch)
-            .option("checkpointLocation", checkpoint_dir)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+    _stream_batch = process_image_batch
 
 
-class VideoDedupIngest:
-    """Streaming VIDEO dedup: frame-level containment filtering, the
-    fourth modality of the ingest family (text MinHash, embeddings,
-    image/audio dHash — the reference's streaming posture,
-    worker.js:128-149, says new modalities land in the online path too).
+class VideoDedupIngest(DedupIngest):
+    """Streaming VIDEO dedup: frame-level containment filtering (the
+    reference's streaming posture, worker.js:128-149, says new
+    modalities land in the online path too).
 
     Video dedup is NOT a single-fingerprint problem: a re-encode, clip,
     or concatenation shares exact FRAME hashes with its source (the
     batch ``video_frame_dedup`` gate's containment skeleton,
     `operators/imagehash.py video_overlap_report`), so the unit of
-    state is the (video, frame-hash) pair and the inherited
-    one-vector-per-item embedding machinery doesn't apply. This class
-    mirrors :class:`NearDupIngest`'s architecture on that multi-hash
-    shape:
+    state is the (video, frame-hash) pair:
 
     - **fingerprints**: every micro-batch AVI is frame-hashed with the
       batch path's `video_frame_hashes` (same dHash grid as stills),
       collapsed to DISTINCT (media_id, fhash);
     - **index**: retained (media_id, fhash) rows partitioned by
-      ``band_bucket = pmod(fhash, index_buckets)`` — the batch side of
-      the candidate join is micro-batch-sized and broadcasts, and the
-      join keys include the partition column so pruning skips
-      untouched buckets (per-batch cost O(batch x matching buckets));
+      ``band_bucket = pmod(fhash, 16)``;
     - **df-cap, before ANY pair expansion**: history matching never
       builds video pairs at all — matching index rows aggregate to
       per-hash (count, min retained id) FIRST, a frame hash shared by
@@ -1101,36 +974,30 @@ class VideoDedupIngest:
       logo/intro frame) is discarded as boilerplate exactly like the
       batch gate, and only then do per-hash representatives join back
       to batch videos. The in-batch pair join runs on the capped hash
-      set, bounding it at df_cap² per hash;
-    - **retention rule** (pinned by tests): a video is DROPPED iff it
-      shares >= ``min_shared`` un-capped frame hashes with a retained
-      video (dup_of = min such id, via='history') or with a smaller-id
-      batch peer (min-id chains, via='batch'); history wins the
-      decision record. At the default ``min_shared=1`` (the batch
-      gate's any-shared-frame signal) history semantics are EXACT;
-      with ``min_shared > 1`` history sharing is counted against each
-      hash's min-id retained representative — the per-hash aggregation
-      that keeps the path pair-free cannot attribute a hash to every
-      retained video holding it (in-batch counts are per-pair and stay
-      exact). Videos whose frames decode empty pass through unindexed
-      (a length filter owns those, as in the text path). Passing
-      ``tau=(num, den)`` switches to FRACTIONAL containment: drop when
-      >= tau of the item's OWN distinct hashes are shared — clip
+      set, bounding it at df_cap² per hash. Excluding the batch's own
+      videos from the history side also makes the df-cap count
+      replay-stable;
+    - **match rule** (pinned by tests): a video matches when it shares
+      an un-capped frame hash with a retained video or a smaller-id
+      batch peer — the batch gate's any-shared-frame signal. Videos
+      whose frames decode empty pass through unindexed. Passing
+      ``tau=(num, den)`` switches to FRACTIONAL containment: a match
+      needs >= tau of the item's OWN distinct hashes shared — clip
       detection proper, and the streaming form of the batch
       ``dedup_containment`` gate (integer-compared rational, never a
-      float ceil). The per-representative attribution caveat applies,
-      mitigated structurally: retained items are mutually
+      float ceil). History sharing is then counted against each hash's
+      min-id retained representative: the per-hash aggregation that
+      keeps the path pair-free cannot attribute a hash to every
+      retained video holding it. Retained items are mutually
       non-contained BY the filter itself, so a contained item's hashes
-      rarely split across representatives;
-    - **durability**: outbox ordering + batch-id ledger + crash-replay
-      convergence as NearDupIngest — index/decisions land first as
-      idempotent per-batch-scope overwrites, the KEEP-policy survivor
-      merge commits last. Replay correctness requires excluding the
-      batch's OWN videos from the history side (they are already in
-      the index on replay); that exclusion is a broadcast anti-join on
-      the micro-batch id set, which also makes the df-cap count
-      replay-stable.
+      rarely split across representatives (in-batch counts are
+      per-pair and exact).
     """
+
+    ID = "media_id"
+    INPUT_SCHEMA = "media_id long, payload binary"
+    KEEP = ("n_frames", "n_distinct_hashes")
+    INDEX_SCHEMA = "media_id long, fhash long, band_bucket long, batch string"
 
     def __init__(
         self,
@@ -1138,78 +1005,26 @@ class VideoDedupIngest:
         state_dir: str,
         *,
         df_cap: int = 1000,
-        min_shared: int = 1,
         tau: tuple[int, int] | None = None,
-        index_buckets: int = 16,
-        num_buckets: int = 8,
-        exactly_once: bool = True,
         auto_compact_batches: int | None = 32,
-        merge_mode: str = "lsm",
     ):
-        self.spark = spark
-        self.state = Path(state_dir)
+        super().__init__(
+            spark, state_dir, auto_compact_batches=auto_compact_batches
+        )
         self.df_cap = df_cap
-        self.min_shared = min_shared
-        # see NearDupIngest.auto_compact_batches
-        self.auto_compact_batches = auto_compact_batches
         #: optional FRACTIONAL threshold (num, den): drop when the item
         #: shares >= tau of ITS OWN distinct hashes with one retained /
         #: smaller-id item — asymmetric containment (dedup_containment's
-        #: semantics made streaming; rational, integer-compared). When
-        #: set, ``min_shared`` is ignored.
+        #: semantics made streaming; rational, integer-compared)
         self.tau = tau
-        self.index_buckets = index_buckets
-        self.exactly_once = exactly_once
-        self.stream_id: str | None = None
-        # LSM survivor merge by default — see NearDupIngest
-        self.survivors = PointTable(
-            spark,
-            str(self.state / "survivors"),
-            key=["media_id"],
-            policies={
-                "n_frames": MergePolicy.KEEP,
-                "n_distinct_hashes": MergePolicy.KEEP,
-            },
-            num_buckets=num_buckets,
-            mode=merge_mode,
-        )
-        self.index_dir = self.state / "band_index"
-        self.decisions_dir = self.state / "decisions"
-
-    # -- fingerprints ----------------------------------------------------------
 
     def _frame_rows(self, media: DataFrame) -> DataFrame:
-        """DISTINCT (media_id, fhash, band_bucket) + per-video counts."""
+        """(media_id, fhash, …) per frame — the modality hook."""
         from cruncher_spark.operators.imagehash import video_frame_hashes
 
         return video_frame_hashes(media, "media_id", "payload")
 
-    # -- batch body ------------------------------------------------------------
-
-    def _ledger_id(self, batch_id: int) -> str:
-        sid = self.stream_id or "local"
-        return f"{sid}:{batch_id}"
-
-    def _index_schema(self) -> str:
-        return "media_id long, fhash long, band_bucket long, batch string"
-
-    def _read_index(self) -> DataFrame | None:
-        if not self.index_dir.exists() or not any(
-            self.index_dir.rglob("*.parquet")
-        ):
-            return None
-        return (
-            self.spark.read.schema(self._index_schema())
-            .option("basePath", str(self.index_dir))
-            .parquet(str(self.index_dir))
-        )
-
-    def process_batch(self, media: DataFrame, batch_id: int) -> None:
-        # lock spans the whole body — see NearDupIngest.process_batch
-        with self.survivors.writer_lock():
-            self._process_batch_locked(media, batch_id)
-
-    def _process_batch_locked(self, media: DataFrame, batch_id: int) -> None:
+    def _dedup(self, media: DataFrame):
         media = media.select("media_id", "payload").dropDuplicates(
             ["media_id"]
         )
@@ -1228,7 +1043,7 @@ class VideoDedupIngest:
             .distinct()
             .withColumn(
                 "band_bucket",
-                F.pmod(F.col("fhash"), F.lit(self.index_buckets)),
+                F.pmod(F.col("fhash"), F.lit(self.INDEX_BUCKETS)),
             )
         )
         batch_ids = vf.select("media_id").distinct()
@@ -1242,15 +1057,14 @@ class VideoDedupIngest:
         if index is not None:
             # index rows whose hash appears in the batch: broadcast the
             # batch hash set (join includes the partition column ->
-            # pruning), then EXCLUDE the batch's own videos so a ledger
-            # replay recomputes against exactly the pre-batch history.
-            match = index.join(
-                F.broadcast(bstat.select("band_bucket", "fhash")),
-                ["band_bucket", "fhash"],
-            ).join(
-                F.broadcast(batch_ids),
+            # pruning), minus the batch's own videos
+            match = self._drop_own(
+                index.join(
+                    F.broadcast(bstat.select("band_bucket", "fhash")),
+                    ["band_bucket", "fhash"],
+                ),
+                batch_ids,
                 "media_id",
-                "left_anti",
             )
             # aggregate BEFORE any pairing: per-hash retained count +
             # min retained id — a hot hash never expands to pairs
@@ -1280,7 +1094,7 @@ class VideoDedupIngest:
 
         def passes(counts, id_col):
             if self.tau is None:
-                return counts.where(F.col("n_shared") >= self.min_shared)
+                return counts
             tn, td = self.tau
             return counts.join(
                 F.broadcast(nd.withColumnRenamed("media_id", id_col)),
@@ -1290,114 +1104,40 @@ class VideoDedupIngest:
                 >= F.col("n_distinct") * F.lit(tn)
             )
 
-        hist_dups = (
-            passes(
-                vf.join(
-                    ok.where(F.col("h_rep").isNotNull()).select(
-                        "band_bucket", "fhash", "h_rep"
-                    ),
-                    ["band_bucket", "fhash"],
-                )
-                .groupBy("media_id", "h_rep")
-                .agg(F.count(F.lit(1)).alias("n_shared")),
-                "media_id",
+        hist = passes(
+            vf.join(
+                ok.where(F.col("h_rep").isNotNull()).select(
+                    "band_bucket", "fhash", "h_rep"
+                ),
+                ["band_bucket", "fhash"],
             )
-            .groupBy("media_id")
-            .agg(F.min("h_rep").alias("dup_of"))
-            .withColumn("via", F.lit("history"))
-        )
+            .groupBy("media_id", "h_rep")
+            .agg(F.count(F.lit(1)).alias("n_shared")),
+            "media_id",
+        ).select("media_id", F.col("h_rep").alias("dup_of"))
 
         okb = vf.join(
             ok.select("band_bucket", "fhash"), ["band_bucket", "fhash"]
         )
         a = okb.select(F.col("media_id").alias("id_a"), "fhash")
         b = okb.select(F.col("media_id").alias("id_b"), "fhash")
-        batch_dups = (
-            passes(
-                a.join(b, "fhash")
-                .where(F.col("id_a") < F.col("id_b"))
-                .groupBy("id_b", "id_a")
-                .agg(F.count(F.lit(1)).alias("n_shared")),
-                "id_b",
-            )
-            .groupBy(F.col("id_b").alias("media_id"))
-            .agg(F.min("id_a").alias("dup_of"))
-            .withColumn("via", F.lit("batch"))
-        )
+        peers = passes(
+            a.join(b, "fhash")
+            .where(F.col("id_a") < F.col("id_b"))
+            .groupBy("id_b", "id_a")
+            .agg(F.count(F.lit(1)).alias("n_shared")),
+            "id_b",
+        ).select(F.col("id_b").alias("media_id"), F.col("id_a").alias("dup_of"))
 
-        pri = F.when(F.col("via") == "history", 0).otherwise(1)
-        dropped = (
-            hist_dups.unionByName(batch_dups)
-            .groupBy("media_id")
-            .agg(F.min_by(F.struct("dup_of", "via"), pri).alias("d"))
-            .select("media_id", "d.dup_of", "d.via")
-        )
-        # eager checkpoint: severs lineage to the lazy index read so the
-        # replay-time self-overwrite below is safe, and computes the
-        # candidate join once — see NearDupIngest.process_batch
-        dropped = dropped.localCheckpoint(eager=True)
-        kept_ids = vf.select("media_id").distinct().join(
+        dropped = self._verdicts(hist, peers)
+        kept_ids = batch_ids.join(
             dropped.select("media_id"), "media_id", "left_anti"
         )
-
-        # outbox ordering + coalesce(1) small-files rationale: see
-        # NearDupIngest.process_batch
-        lid = self._ledger_id(batch_id) if self.exactly_once else None
-        scope = lid or f"noledger:{batch_id}"
-        sdir = _scope_dirname(scope)
-        (
-            vf.join(kept_ids, "media_id")
-            .coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("band_bucket")
-            .parquet(str(self.index_dir / f"batch={sdir}"))
+        return (
+            dropped,
+            vf.join(kept_ids, "media_id"),
+            stats.join(kept_ids, "media_id"),
         )
-        (
-            dropped.withColumn("batch_id", F.lit(scope))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(str(self.decisions_dir / f"batch={sdir}"))
-        )
-        self.survivors.merge(stats.join(kept_ids, "media_id"), batch_id=lid)
-        self._maybe_auto_compact()
-
-    # -- housekeeping / stream wiring / readers --------------------------------
-
-    compact_index = NearDupIngest.compact_index
-    _maybe_auto_compact = NearDupIngest._maybe_auto_compact
-
-    def start_file_stream(
-        self,
-        media_dir: str,
-        checkpoint_dir: str,
-        *,
-        max_files_per_trigger: int | None = None,
-        available_now: bool = False,
-    ):
-        Path(checkpoint_dir).mkdir(parents=True, exist_ok=True)
-        if self.stream_id is None:
-            self.stream_id = checkpoint_stream_id(checkpoint_dir)
-        reader = self.spark.readStream.schema(
-            "media_id long, payload binary"
-        ).format("parquet")
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        writer = (
-            reader.load(media_dir)
-            .writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
-    def retained(self) -> DataFrame:
-        return self.survivors.read()
-
-    def decisions(self) -> DataFrame:
-        return self.spark.read.schema(
-            "media_id long, dup_of long, via string, batch_id string"
-        ).parquet(str(self.decisions_dir))
 
 
 class AudioDedupIngest(PerceptualDedupIngest):
@@ -1421,48 +1161,38 @@ class TextContainmentIngest(VideoDedupIngest):
     the online form of the batch ``dedup_containment`` gate
     (`operators/dedup.py containment_pairs`), riding the
     :class:`VideoDedupIngest` machinery: a document is a SET of shingle
-    hashes exactly as a video is a set of frame hashes, so the
-    multi-hash index, pair-free history matching, combined df-cap
-    (boilerplate shingles excluded before any pairing), outbox ordering
-    and ledger replay all inherit — only the fingerprint hook differs.
+    hashes exactly as a video is a set of frame hashes, so only the
+    fingerprint hook differs.
 
-    Retention rule: a doc whose distinct shingles are >= ``tau``
-    (default 9/10) contained in one retained doc — or one smaller-id
-    batch peer — is DROPPED with a (dup_of, via) decision; quote/clip
-    ingestion dedup that MinHash-jaccard ingest structurally misses
-    (a paragraph quoted in a 100x longer retained doc has J ~ 0.01 at
-    containment 1.0, so :class:`NearDupIngest` keeps it).
+    Retention rule: a doc whose distinct shingles are >= 9/10
+    contained in one retained doc — or one smaller-id batch peer — is
+    DROPPED with a (dup_of, via) decision; quote/clip ingestion dedup
+    that MinHash-jaccard ingest structurally misses (a paragraph quoted
+    in a 100x longer retained doc has J ~ 0.01 at containment 1.0, so
+    :class:`NearDupIngest` keeps it).
 
-    Input streams/batches carry ``(doc_id long, text string)``; docs
-    too short to shingle pass through unindexed, as in every text path.
+    Input streams carry ``(doc_id long, text string)``
+    (:meth:`process_doc_batch`); :meth:`process_batch` takes
+    ``(media_id, payload)`` rows. Docs too short to shingle pass through
+    unindexed, as in every text path.
     """
+
+    INPUT_SCHEMA = "doc_id long, text string"
+    SHINGLE_N = 3
 
     def __init__(
         self,
         spark: SparkSession,
         state_dir: str,
         *,
-        tau: tuple[int, int] = (9, 10),
-        shingle_n: int = 3,
-        df_cap: int = 1000,
-        index_buckets: int = 16,
-        num_buckets: int = 8,
-        exactly_once: bool = True,
         auto_compact_batches: int | None = 32,
-        merge_mode: str = "lsm",
     ):
         super().__init__(
             spark,
             state_dir,
-            df_cap=df_cap,
-            tau=tau,
-            index_buckets=index_buckets,
-            num_buckets=num_buckets,
-            exactly_once=exactly_once,
+            tau=(9, 10),
             auto_compact_batches=auto_compact_batches,
-            merge_mode=merge_mode,
         )
-        self.shingle_n = shingle_n
 
     def _frame_rows(self, media: DataFrame) -> DataFrame:
         """(media_id, fhash): one row per distinct shingle hash — the
@@ -1470,7 +1200,7 @@ class TextContainmentIngest(VideoDedupIngest):
         from cruncher_spark.functions.text import portable_hash64
         from cruncher_spark.operators.dedup import shingle_table
 
-        sh = shingle_table(media, "media_id", "payload", self.shingle_n)
+        sh = shingle_table(media, "media_id", "payload", self.SHINGLE_N)
         return sh.select(
             "media_id", portable_hash64("shingle").alias("fhash")
         )
@@ -1485,27 +1215,4 @@ class TextContainmentIngest(VideoDedupIngest):
             batch_id,
         )
 
-    def start_file_stream(
-        self,
-        docs_dir: str,
-        checkpoint_dir: str,
-        *,
-        max_files_per_trigger: int | None = None,
-        available_now: bool = False,
-    ):
-        Path(checkpoint_dir).mkdir(parents=True, exist_ok=True)
-        if self.stream_id is None:
-            self.stream_id = checkpoint_stream_id(checkpoint_dir)
-        reader = self.spark.readStream.schema(
-            "doc_id long, text string"
-        ).format("parquet")
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        writer = (
-            reader.load(docs_dir)
-            .writeStream.foreachBatch(self.process_doc_batch)
-            .option("checkpointLocation", checkpoint_dir)
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+    _stream_batch = process_doc_batch

@@ -187,48 +187,6 @@ def windowed_distinct_sketch(
     )
 
 
-def attribution_join(
-    impressions: DataFrame,
-    clicks: DataFrame,
-    max_delay: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Stream-stream interval join: each click attributed to the same
-    user's preceding impression within ``max_delay`` — the canonical
-    ad-attribution / request-response correlation shape.
-
-    Both sides carry an event-time watermark and the join predicate
-    carries the time-range bound, which is what lets Spark EVICT buffered
-    state: an impression can only match clicks in
-    ``[imp_ts, imp_ts + max_delay]``, so once the click watermark passes
-    that horizon the impression's buffered row is dropped. Without the
-    range bound the state store grows forever — the bound is the
-    streaming analog of a partition-pruned join. State is hash-
-    partitioned on user_id on both sides (co-partitioned shuffle, same
-    key both streams), so matching is local per task.
-    """
-    imp = impressions.withWatermark("ts", watermark).select(
-        F.col("user_id").alias("imp_user"),
-        F.col("ts").alias("imp_ts"),
-        F.col("value").alias("imp_value"),
-    )
-    clk = clicks.withWatermark("ts", watermark).select(
-        F.col("user_id").alias("click_user"),
-        F.col("ts").alias("click_ts"),
-    )
-    return imp.join(
-        clk,
-        F.expr(
-            "imp_user = click_user"
-            " AND click_ts >= imp_ts"
-            f" AND click_ts <= imp_ts + interval {max_delay}"
-        ),
-        "inner",
-    ).select(
-        F.col("imp_user").alias("user_id"), "imp_ts", "click_ts", "imp_value"
-    )
-
-
 def dedup_within_watermark(
     events: DataFrame,
     keys: list[str] | None = None,
@@ -534,99 +492,4 @@ def quantile_probe(
             q_est(q).alias(f"p{int(q * 100)}_est")
             for q in qs
         ],
-    )
-
-
-TOPK_OUT_SCHEMA = "shard long, key long, est long, err long, n_seen long"
-
-
-def streaming_topk_tracker(
-    events: DataFrame,
-    key_col: str = "user_id",
-    k: int = 8,
-    n_shards: int = 4,
-) -> DataFrame:
-    """Sharded Misra-Gries top-k candidate tracker — the candidate-
-    enumeration half of streaming heavy hitters that
-    :func:`windowed_cms_sketch` deliberately leaves out (the sketch
-    answers "how often is THIS key"; this answers "WHICH keys could be
-    frequent").
-
-    Each shard (hash(key) % n_shards) folds its key stream through a
-    Misra-Gries summary of at most ``k`` counters: increment a tracked
-    key, adopt an untracked key into a free slot, else decrement ALL
-    counters by the min count (the classic k-1 guarantee: any key with
-    true shard frequency > N_shard/(k) survives). State per shard is k
-    (key, count) pairs plus the total decrement — constant-size,
-    cross-batch, never evicted. Sharding removes the single-group
-    bottleneck AND preserves the guarantee per shard, because a key's
-    occurrences all land in one shard: the union of shard candidates is
-    a SUPERSET of the global heavy hitters (test-pinned). Every batch
-    emits each shard's current summary: (shard, key, est, err) where
-    ``est`` is the summary count (an UNDERestimate of true frequency)
-    and ``err`` bounds the undercount (total decrements) — downstream,
-    exact frequencies come from :func:`cms_probe` over the candidates.
-
-    Same API notes as :func:`velocity_alerts` (applyInPandasWithState;
-    the transformWithStateInPandas successor needs protobuf, absent
-    here). Rows are folded in event-time order within each batch so
-    replays are deterministic.
-    """
-    from cruncher_spark.functions.text import portable_hash64
-
-    def fold(key, pdf_iter, state: GroupState):
-        import pandas as pd
-
-        (shard,) = key
-        if state.exists:
-            keys, counts, err, n_seen = state.get
-            summary = dict(zip(keys, counts))
-        else:
-            summary, err, n_seen = {}, 0, 0
-        chunks = [pdf for pdf in pdf_iter if len(pdf)]
-        if chunks:
-            # one concat + one stable sort across ALL chunks — per-chunk
-            # sorting is chunk-order dependent and Misra-Gries folds are
-            # arrival-order sensitive (r6 review)
-            pdf = pd.concat(chunks).sort_values(
-                ["ts", "key"], kind="mergesort"
-            )
-            n_seen += len(pdf)
-            for kk in pdf["key"]:
-                kk = int(kk)
-                if kk in summary:
-                    summary[kk] += 1
-                elif len(summary) < k:
-                    summary[kk] = 1
-                else:
-                    dec = min(summary.values())
-                    err += dec
-                    summary = {
-                        s: c - dec for s, c in summary.items() if c > dec
-                    }
-                    if len(summary) < k:
-                        summary[kk] = 1
-        state.update(
-            (list(summary), [summary[s] for s in summary], err, n_seen)
-        )
-        # n_seen is a monotone per-shard emission clock: every batch
-        # re-emits the full summary, and consumers keep each shard's
-        # rows at max(n_seen) — the latest snapshot
-        yield pd.DataFrame(
-            [(shard, s, c, err, n_seen) for s, c in summary.items()],
-            columns=["shard", "key", "est", "err", "n_seen"],
-        )
-
-    keyed = events.select(
-        (portable_hash64(F.col(key_col).cast("string"), salt="mg")
-         % n_shards).alias("shard"),
-        F.col(key_col).alias("key"),
-        F.col("ts"),
-    )
-    return keyed.groupBy("shard").applyInPandasWithState(
-        fold,
-        TOPK_OUT_SCHEMA,
-        "keys array<long>, counts array<long>, err long, n_seen long",
-        "update",
-        GroupStateTimeout.NoTimeout,
     )

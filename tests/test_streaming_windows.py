@@ -148,55 +148,6 @@ def test_windowed_distinct_sketch_matches_batch_hll(spark, tmp_path):
         assert k in want and abs(v - want[k]) < 1e-9, k
 
 
-def test_attribution_join_matches_across_batches(spark, tmp_path):
-    """Stream-stream interval join buffers state across micro-batches: a
-    click arriving in batch 2 joins an impression from batch 1, and
-    out-of-window clicks never match."""
-    from cruncher_spark.streaming.windows import attribution_join
-
-    imp_rows = [
-        [(1, _ts(0), "view", 10.0), (2, _ts(0), "view", 20.0)],   # batch 1
-        [(3, _ts(60), "view", 30.0)],                              # batch 2
-    ]
-    clk_rows = [
-        [(2, _ts(5), "click", 0.0)],                               # batch 1
-        # user 1's click lands in batch 2 but attributes to the batch-1
-        # impression (20 min <= 30 min window); user 3's second click at
-        # +45 min exceeds the window and must NOT match
-        [(1, _ts(20), "click", 0.0), (3, _ts(70), "click", 0.0),
-         (3, _ts(105), "click", 0.0)],
-    ]
-    dirs = {}
-    for name, batches in [("imp", imp_rows), ("clk", clk_rows)]:
-        d = tmp_path / f"{name}_in"
-        d.mkdir()
-        for i, rs in enumerate(batches):
-            spark.createDataFrame(rs, EVENTS_SCHEMA).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(str(d / f"batch_{i}.parquet"))
-        dirs[name] = d
-
-    def read(d):
-        return (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{d}/*.parquet")
-        )
-
-    out = _run_stream(
-        spark,
-        attribution_join(read(dirs["imp"]), read(dirs["clk"])),
-        "attributed",
-        tmp_path / "ck_attr",
-    )
-    got = {(r.user_id, r.click_ts): (r.imp_ts, r.imp_value) for r in out.collect()}
-    assert got == {
-        (2, _ts(5)): (_ts(0), 20.0),
-        (1, _ts(20)): (_ts(0), 10.0),
-        (3, _ts(70)): (_ts(60), 30.0),
-    }
-
-
 def test_dedup_within_watermark_drops_cross_batch_replay(spark, tmp_path):
     """A row redelivered in a LATER micro-batch (at-least-once queue
     semantics) is dropped by watermark-bounded streaming dedup — the case
@@ -466,89 +417,6 @@ def test_windowed_cms_sketch_matches_batch_estimates(spark, tmp_path):
     }
     for (uid, ws), est in got.items():
         assert est >= exact.get((uid, ws), 0), (uid, ws)
-
-
-def test_streaming_topk_tracker_never_misses_heavy_keys(spark, tmp_path):
-    """Sharded Misra-Gries: after folding two micro-batches, the union
-    of shard candidates must contain EVERY key whose true shard
-    frequency exceeds the summary bound (N_shard / k); est never
-    overcounts the true frequency and est+err never undercounts it —
-    the two-sided sandwich that makes the tracker composable with
-    cms_probe for exact-ish frequencies."""
-    from collections import Counter
-
-    import pyspark.sql.functions as F  # noqa: F811
-
-    from cruncher_spark.functions.text import portable_hash64
-    from cruncher_spark.streaming.windows import streaming_topk_tracker
-
-    rows = []
-    for i in range(600):
-        # three heavy keys (7, 13, 21) + a long tail
-        uid = (
-            7 if i % 4 == 0 else
-            13 if i % 5 == 0 else
-            21 if i % 6 == 0 else
-            100 + (i % 80)
-        )
-        rows.append((uid, _ts(i % 120), "click", 1.0))
-    b1, b2 = rows[:350], rows[350:]
-    d = tmp_path / "mg_in"
-    d.mkdir()
-    for i, rs in enumerate([b1, b2]):
-        spark.createDataFrame(rs, EVENTS_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(d / f"batch_{i}.parquet"))
-
-    stream = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{d}/*.parquet")
-    )
-    q = (
-        streaming_topk_tracker(stream, k=8, n_shards=4)
-        .writeStream.format("memory")
-        .queryName("mg_sink")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt_mg"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    all_rows = spark.sql("SELECT * FROM mg_sink").collect()
-    # latest snapshot per shard = rows at that shard's max emission clock
-    clock = {}
-    for r in all_rows:
-        clock[r.shard] = max(clock.get(r.shard, -1), r.n_seen)
-    cands = {
-        (r.shard, r.key): (r.est, r.err)
-        for r in all_rows
-        if r.n_seen == clock[r.shard]
-    }
-    assert cands
-
-    # ground truth per shard (same hash/salt as the operator)
-    shard_of = {
-        r.key: r.shard
-        for r in spark.createDataFrame(
-            [(u,) for u in {u for u, *_ in rows}], "key long"
-        ).select(
-            "key",
-            (portable_hash64(F.col("key").cast("string"), salt="mg") % 4)
-            .alias("shard"),
-        ).collect()
-    }
-    freq = Counter(u for u, *_ in rows)
-    shard_n = Counter()
-    for u, c in freq.items():
-        shard_n[shard_of[u]] += c
-
-    for u, c in freq.items():
-        sh = shard_of[u]
-        if c > shard_n[sh] / 8:  # the k-counter guarantee bound
-            assert (sh, u) in cands, (u, c, shard_n[sh])
-    for (sh, u), (est, err) in cands.items():
-        assert est <= freq[u] <= est + err, (u, est, err, freq[u])
 
 
 def test_windowed_quantile_sketch_matches_batch_estimates(spark, tmp_path):
