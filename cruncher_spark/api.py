@@ -32,6 +32,7 @@ from pyspark.sql import SparkSession
 from cruncher_spark.merge import MergePolicy, PointTable
 from cruncher_spark.plans import crunch as crunch_plans
 from cruncher_spark.plans.registry import QUERIES, query_map
+from cruncher_spark.streaming.worker import served_point_table
 
 #: view name → (delta builder, merge key, policies, batch table/key)
 CRUNCH_VIEWS = {
@@ -244,11 +245,8 @@ class CruncherAPI:
         with self._lock:  # merges are read-modify-swap; serialize them
             point = self._points.setdefault(
                 view,
-                PointTable(
-                    self.spark,
-                    f"{self.state_dir}/{view}",
-                    key=key,
-                    policies=policies,
+                served_point_table(
+                    self.spark, f"{self.state_dir}/{view}", key, policies
                 ),
             )
             self._batch_seq += 1

@@ -195,19 +195,13 @@ def start_stream_refresh(
     the recreated stream, so its restarted epochs re-apply instead of
     being silently dropped as duplicates of the previous run's.
     """
-    from pathlib import Path
+    from cruncher_spark.streaming.worker import start_foreach_batch
 
-    from cruncher_spark.streaming.worker import checkpoint_stream_id
-
-    Path(checkpoint_dir).mkdir(parents=True, exist_ok=True)
-    sid = stream_id or checkpoint_stream_id(checkpoint_dir)
-    writer = (
-        rows.writeStream.foreachBatch(
-            lambda df, bid: view.refresh(df, batch_id=f"stream-{sid}-{bid}")
-        ).option("checkpointLocation", checkpoint_dir)
+    return start_foreach_batch(
+        rows,
+        checkpoint_dir,
+        lambda sid: lambda df, bid: view.refresh(df, batch_id=f"stream-{sid}-{bid}"),
+        stream_id=stream_id,
+        trigger_seconds=trigger_seconds,
+        available_now=available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

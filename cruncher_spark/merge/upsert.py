@@ -32,19 +32,25 @@ read/compaction time with policy aggregates that reproduce the pairwise
 merge semantics exactly; see the "LSM (append + compact) merge mode"
 section below.
 
-Commit protocol — one atomic step: each merge writes a complete new
-version directory ``v_NNNNNN/`` holding data buckets *and* the
-``_applied_batches`` ledger, then atomically renames ``CURRENT.tmp`` over
-the ``CURRENT`` pointer file. A crash anywhere before that rename leaves
-the previous version fully intact (orphan version dirs are garbage-
-collected on the next merge); there is no window where the batch is
-applied but unrecorded.
+Commit protocol — every writer (bucketed merge, LSM run append, LSM
+run fold, whole-state rewrite for LSM CDC and ``rebucket``) goes through
+one method, :meth:`PointTable._commit_version`. It builds a complete new
+version directory ``v_NNNNNN/`` — the written frame, hard links to the
+kept bucket/run dirs of the previous version, the ``ledger/`` of applied
+batch ids and ``meta.json`` — then atomically renames ``CURRENT.tmp``
+over the ``CURRENT`` pointer file. That rename is the lone commit point
+for data + ledger together: a crash anywhere before it leaves the
+previous version fully intact (the orphan dir is removed by the next
+commit), and there is no window where a batch is applied but
+unrecorded. Versions older than ``retain_versions`` are garbage-
+collected right after the flip.
 
 Exactly-once: the reference ACKs after commit and therefore double-counts
 replayed batches (worker.js:167-182, at-least-once). Here every applied
 ``batch_id`` is recorded in the ledger committed by the same pointer
-flip, so replays are idempotent (T4's deliberate upgrade; the reference's
-at-least-once behavior is available by passing ``batch_id=None``).
+flip, and the ledger check runs under the writer lock, so replays are
+idempotent (T4's deliberate upgrade; the reference's at-least-once
+behavior is available by passing ``batch_id=None``).
 """
 
 from __future__ import annotations
@@ -96,6 +102,12 @@ class PointTable:
     mapping stays stable for the table's lifetime.
     """
 
+    #: LSM size-tiered compaction: fold the newest two runs while the
+    #: older is < LSM_FOLD_FACTOR x the newer; LSM_MAX_RUNS is a hard
+    #: ceiling for pathological size distributions
+    LSM_FOLD_FACTOR = 2.0
+    LSM_MAX_RUNS = 32
+
     def __init__(
         self,
         spark: SparkSession,
@@ -105,8 +117,6 @@ class PointTable:
         num_buckets: int = 32,
         retain_versions: int = 1,
         mode: str = "bucketed",
-        lsm_fold_factor: float = 2.0,
-        lsm_max_runs: int = 32,
     ):
         self.spark = spark
         self.path = Path(path)
@@ -126,15 +136,13 @@ class PointTable:
         #: per batch regardless of state size — and reads fold the runs
         #: through per-column policy aggregates; a size-tiered
         #: compaction (fold the newest two adjacent runs while the
-        #: older is < ``lsm_fold_factor`` x the newer — the binary-
+        #: older is < ``LSM_FOLD_FACTOR`` x the newer — the binary-
         #: counter invariant) keeps run counts logarithmic with O(log)
         #: amortized write amplification. The same trade every LSM
         #: store makes (RocksDB/Cassandra); the reference's MySQL
         #: B-tree upsert is the bucketed analog. An existing table's
         #: persisted mode always wins, like num_buckets.
         self.mode = mode
-        self.lsm_fold_factor = lsm_fold_factor
-        self.lsm_max_runs = lsm_max_runs
         #: how many committed versions survive GC (>=1). Retention is
         #: nearly free: untouched buckets are hard links, so N retained
         #: versions share file storage and only rewritten buckets differ —
@@ -208,12 +216,6 @@ class PointTable:
     def exists(self) -> bool:
         return self._current_version() is not None
 
-    def _data_dir(self) -> Path:
-        cur = self._current_version()
-        if cur is None:
-            raise FileNotFoundError(f"point table not initialized: {self.path}")
-        return cur / "data"
-
     def versions(self) -> list[int]:
         """Committed, readable version numbers (ascending). Only versions
         at or before CURRENT count — a later orphan dir from a crashed
@@ -245,26 +247,33 @@ class PointTable:
         table with ``retain_versions >= 2`` so the read's pinned version
         survives one subsequent commit.
         """
-        if version is not None:
+        if version is None:
+            vdir = self._current_version()
+            if vdir is None:
+                raise FileNotFoundError(f"point table not initialized: {self.path}")
+        elif version in self.versions():
             vdir = self.path / f"v_{version:06d}"
-            if version not in self.versions():
-                raise FileNotFoundError(
-                    f"version {version} not retained (have {self.versions()})"
-                )
-            return self._read_data(vdir / "data", vdir)
-        return self._read_data(self._data_dir(), self._current_version())
-
-    def _read_data(self, data: Path, vdir: Path | None) -> DataFrame:
-        if vdir is not None and self._meta(vdir).get("mode") == "lsm":
-            return self._read_lsm(data, vdir)
-        if not any(data.glob(f"{_BUCKET_COL}=*")):
-            # state emptied (e.g. CDC deletes removed every key): no parquet
-            # to infer from — rebuild the empty frame from the schema the
-            # version's commit recorded in meta.json
-            schema = self._recorded_schema(vdir) if vdir is not None else None
+        else:
+            raise FileNotFoundError(
+                f"version {version} not retained (have {self.versions()})"
+            )
+        data = vdir / "data"
+        if not any(data.rglob("*.parquet")):
+            # state emptied (CDC deletes removed every key, or only
+            # zero-survivor batches so far): no parquet to infer from —
+            # rebuild the empty frame from the schema the version's
+            # commit recorded in meta.json
+            schema = self._recorded_schema(vdir)
             if schema is not None:
                 return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(str(data)).drop(_BUCKET_COL)
+        if self._meta(vdir).get("mode") != "lsm":
+            return self.spark.read.parquet(str(data)).drop(_BUCKET_COL)
+        df = self.spark.read.option("basePath", str(data)).parquet(str(data))
+        runs = [d for d in self._run_dirs(vdir) if any(d.rglob("*.parquet"))]
+        if len(runs) == 1:
+            # a single run is key-unique by construction — no fold needed
+            return df.drop("run", _BUCKET_COL)
+        return self._fold_runs(df)
 
     def applied_batches(self) -> set[str]:
         """Ledger reads/writes are DRIVER-side pyarrow, not Spark jobs: the
@@ -329,56 +338,82 @@ class PointTable:
         so a caller already holding it for a larger critical section can
         merge without deadlocking.
         """
+        return self._apply(delta, batch_id, op_col=None)
+
+    def _apply(
+        self, delta: DataFrame, batch_id: str | None, op_col: str | None
+    ) -> bool:
+        """The locked path shared by :meth:`merge` and :meth:`apply_cdc`
+        (``op_col`` set): ledger check, persisted-meta adoption, then the
+        mode's writer."""
         with self.writer_lock():
             if batch_id is not None and batch_id in self.applied_batches():
                 return False
-
             cur = self._current_version()
             if cur is not None:
                 meta = self._meta(cur)
                 self.num_buckets = int(meta["num_buckets"])
                 self.mode = meta.get("mode", "bucketed")
 
-            if self.mode == "lsm":
+            if self.mode == "lsm" and op_col is None:
                 # append-only: the delta is consumed exactly once (the
                 # run write) — no bucket-discovery job, no persist
-                return self._merge_lsm(delta, cur, batch_id)
+                self._append_run(cur, delta, batch_id)
+                return True
 
-            # The delta is consumed twice (bucket discovery + merge write);
-            # persist so the upstream crunch plan runs once per batch.
+            # The delta is consumed twice (bucket discovery + merge write,
+            # or the upsert and delete halves of a CDC batch); persist so
+            # the upstream plan runs once per batch.
             delta = delta.persist()
             try:
-                return self._merge_persisted(delta, cur, batch_id)
+                if self.mode == "bucketed":
+                    self._merge_buckets(cur, delta, batch_id, op_col)
+                else:
+                    # LSM CDC: deletes and whole-row upserts need a key-
+                    # unique view of state — fold the runs, apply, rewrite
+                    stored = cur is not None and any((cur / "data").rglob("*.parquet"))
+                    merged = self._apply_changes(
+                        self.read() if stored else None, delta, op_col
+                    )
+                    self._rewrite(cur, merged, batch_id)
             finally:
                 delta.unpersist()
+            return True
 
-    def _merge_persisted(
-        self, delta: DataFrame, cur: Path | None, batch_id: str | None
-    ) -> bool:
+    def _merge_buckets(
+        self,
+        cur: Path | None,
+        delta: DataFrame,
+        batch_id: str | None,
+        op_col: str | None,
+    ) -> None:
         # which buckets does this delta touch?
         affected = sorted(
             r[0]
             for r in delta.select(self._bucket_expr().alias("b")).distinct().collect()
         )
-
-        merged = None
-        if affected:
-            if cur is None:
-                merged = delta
-            else:
-                existing = [
-                    cur / "data" / f"{_BUCKET_COL}={b}"
-                    for b in affected
-                    if (cur / "data" / f"{_BUCKET_COL}={b}").exists()
-                ]
-                if existing:
-                    tgt = self._read_buckets(cur, existing)
-                    merged = self._merge_frames(tgt, delta)
-                else:
-                    merged = delta
-
-        self._commit(cur, merged, affected, batch_id)
-        return True
+        touched = [f"{_BUCKET_COL}={b}" for b in affected]
+        stored = {} if cur is None else {
+            d.name: d for d in (cur / "data").glob(f"{_BUCKET_COL}=*")
+        }
+        existing = [stored[b] for b in touched if b in stored]
+        tgt = self._read_buckets(cur, existing) if existing else None
+        if not affected:
+            merged = None
+        elif op_col is not None:
+            merged = self._apply_changes(tgt, delta, op_col)
+        else:
+            merged = delta if tgt is None else self._merge_frames(tgt, delta)
+        self._commit_version(
+            cur,
+            merged,
+            schema=merged.schema.json() if merged is not None else None,
+            # one shuffle partition per affected bucket → one coherent
+            # file per bucket dir (at cluster scale raise this factor)
+            parts=max(len(affected), 1),
+            keep=[b for b in stored if b not in touched],
+            batch_id=batch_id,
+        )
 
     def _read_buckets(self, cur: Path, buckets: list[Path]) -> DataFrame:
         """The rows of some of ``cur``'s buckets, read with the row schema
@@ -484,12 +519,12 @@ class PointTable:
     # run is one immutable, key-unique delta (or a fold of adjacent
     # deltas), bucket-partitioned like the bucketed layout. A version is
     # the SET of its runs; append = write one new run dir + hard-link
-    # every prior run (zero data movement) + the same ledger/meta/flip
-    # commit protocol. Reads fold runs through per-column POLICY
+    # every prior run (zero data movement) through the one commit path
+    # (_commit_version). Reads fold runs through per-column POLICY
     # AGGREGATES ordered by run seq, reproducing the pairwise merge
     # semantics exactly (incl. MySQL NULL quirks — see _fold_expr).
     # Compaction folds the newest two ADJACENT runs while the older is
-    # < lsm_fold_factor x the newer (the binary-counter invariant):
+    # < LSM_FOLD_FACTOR x the newer (the binary-counter invariant):
     # adjacency preserves order-sensitive policies (KEEP/OVERWRITE/MAX),
     # the geometric size ladder bounds live runs at O(log(state/delta))
     # and amortized write amplification at O(log) — per-batch merge cost
@@ -506,31 +541,9 @@ class PointTable:
     def _run_bytes(d: Path) -> int:
         return sum(f.stat().st_size for f in d.rglob("*.parquet"))
 
-    def _link_runs(
-        self, cur: Path | None, new: Path, exclude: frozenset | set = frozenset()
+    def _append_run(
+        self, cur: Path | None, delta: DataFrame, batch_id: str | None
     ) -> None:
-        """Hard-link every (non-excluded) run of ``cur`` into ``new``."""
-        if cur is None:
-            return
-        for rdir in self._run_dirs(cur):
-            if rdir.name in exclude:
-                continue
-            for f_ in rdir.rglob("*"):
-                if f_.is_file():
-                    dst = new / "data" / f_.relative_to(cur / "data")
-                    dst.parent.mkdir(parents=True, exist_ok=True)
-                    os.link(f_, dst)
-
-    def _link_ledger(self, cur: Path | None, new: Path) -> None:
-        if cur is not None and (cur / "ledger").exists():
-            (new / "ledger").mkdir(exist_ok=True)
-            for f_ in (cur / "ledger").iterdir():
-                if f_.is_file():
-                    os.link(f_, new / "ledger" / f_.name)
-
-    def _merge_lsm(
-        self, delta: DataFrame, cur: Path | None, batch_id: str | None
-    ) -> bool:
         """Append the delta as a new run: O(delta) regardless of state
         size — the delta is shuffled once into its bucket layout and
         written; no existing bucket is read or rewritten. Then run the
@@ -538,36 +551,23 @@ class PointTable:
         version, so a crash at any point leaves consistent state)."""
         runs = self._run_dirs(cur) if cur is not None else []
         seq = self._run_seq(runs[-1]) + 1 if runs else 0
-        new = self._fresh_version_dir(cur)
-        run_dir = new / "data" / f"run={seq:06d}"
-        (
-            delta.withColumn(_BUCKET_COL, self._bucket_expr())
-            .repartition(self.num_buckets, F.col(_BUCKET_COL))
-            .write.mode("append")
-            .partitionBy(_BUCKET_COL)
-            .parquet(str(run_dir))
+        self._commit_version(
+            cur,
+            delta,
+            schema=delta.schema.json(),
+            run=f"run={seq:06d}",
+            keep=[r.name for r in runs],
+            batch_id=batch_id,
         )
-        if not any(run_dir.rglob("*.parquet")):
-            # empty delta (e.g. an ingest batch with zero survivors):
-            # record the batch in the ledger but do not keep a
-            # parquet-less run dir — they would pile past the fold
-            # invariant (0-byte runs never trigger it)
-            shutil.rmtree(run_dir)
-        self._link_runs(cur, new)
-        self._write_ledger(new, cur, batch_id)
-        self._write_meta(new, delta.schema.json(), mode="lsm")
-        self._flip(new)
         self._lsm_auto_compact()
-        return True
 
     def _lsm_auto_compact(self) -> None:
         """Restore the run-size invariant: newest-first, every run must
-        be >= ``lsm_fold_factor`` x the run after it (sizes in bytes).
+        be >= ``LSM_FOLD_FACTOR`` x the run after it (sizes in bytes).
         Violations fold the newest two adjacent runs and cascade — the
         same amortization as a binary counter (run sizes ~ delta x
         factor^i), so a 50-batch ingest folds mostly batch-sized runs
-        and only occasionally a larger prefix. ``lsm_max_runs`` is a
-        hard ceiling safeguard for pathological size distributions."""
+        and only occasionally a larger prefix."""
         while True:
             cur = self._current_version()
             runs = self._run_dirs(cur)
@@ -575,8 +575,8 @@ class PointTable:
                 return
             need = (
                 self._run_bytes(runs[-2])
-                < self.lsm_fold_factor * self._run_bytes(runs[-1])
-                or len(runs) > self.lsm_max_runs
+                < self.LSM_FOLD_FACTOR * self._run_bytes(runs[-1])
+                or len(runs) > self.LSM_MAX_RUNS
             )
             if not need:
                 return
@@ -587,22 +587,15 @@ class PointTable:
         df = self.spark.read.option("basePath", str(cur / "data")).parquet(
             *[str(d) for d in (a, b) if any(d.rglob("*.parquet"))]
         )
-        folded = self._fold_runs(df)
-        new = self._fresh_version_dir(cur)
-        (
-            folded.withColumn(_BUCKET_COL, self._bucket_expr())
-            .repartition(self.num_buckets, F.col(_BUCKET_COL))
-            .write.mode("append")
-            .partitionBy(_BUCKET_COL)
+        self._commit_version(
+            cur,
+            self._fold_runs(df),
             # the folded run takes the OLDER seq so it stays ordered
             # before any still-live older runs and after nothing it
             # absorbed — adjacency is what makes this legal
-            .parquet(str(new / "data" / a.name))
+            run=a.name,
+            keep=[r.name for r in runs[:-2]],
         )
-        self._link_runs(cur, new, exclude={a.name, b.name})
-        self._link_ledger(cur, new)
-        self._write_meta(new, self._meta(cur).get("schema"), mode="lsm")
-        self._flip(new)
 
     def _fold_runs(self, df: DataFrame) -> DataFrame:
         """Collapse a multi-run frame (data cols + ``run``/bucket
@@ -669,18 +662,6 @@ class PointTable:
             expr = last_v
         return expr.cast(dtype).alias(c)
 
-    def _read_lsm(self, data: Path, vdir: Path) -> DataFrame:
-        if not any(data.rglob("*.parquet")):
-            schema = self._recorded_schema(vdir)
-            if schema is not None:
-                return self.spark.createDataFrame([], schema)
-        df = self.spark.read.option("basePath", str(data)).parquet(str(data))
-        runs = [d for d in data.glob("run=*") if any(d.rglob("*.parquet"))]
-        if len(runs) == 1:
-            # a single run is key-unique by construction — no fold needed
-            return df.drop("run", _BUCKET_COL)
-        return self._fold_runs(df)
-
     # -- CDC apply -----------------------------------------------------------
 
     def apply_cdc(
@@ -698,199 +679,127 @@ class PointTable:
         compact upstream with ``row_number() over (partition by key order
         by source offset desc) = 1``).
 
-        Same cost model and commit protocol as :meth:`merge`: only the
-        buckets containing changed keys are read/rewritten (a bucket
-        emptied by deletes simply disappears from the new version), every
-        untouched bucket hard-links forward, and the batch-id ledger makes
-        replays idempotent under the same atomic pointer flip.
-
-        Serializes on the same re-entrant writer lock as :meth:`merge`
-        (r8: previously unlocked — a CDC batch racing a merge could build
-        from the same base version and the last pointer flip silently
-        discarded the other writer's work).
+        Same locked path, ledger and commit as :meth:`merge`. Bucketed:
+        the same bucket merge — only the buckets containing changed keys
+        are read/rewritten (a bucket emptied by deletes simply disappears
+        from the new version), every untouched bucket hard-links forward.
+        LSM: fold-then-rewrite into ONE run — O(state), not O(delta). CDC
+        is a correctness surface there, not the ingest hot path; a
+        deployment mixing high-rate CDC with LSM accumulation should keep
+        CDC-heavy tables in bucketed mode (the mode exists per table for
+        exactly this trade).
         """
-        with self.writer_lock():
-            return self._apply_cdc_locked(changes, op_col, batch_id)
+        return self._apply(changes, batch_id, op_col=op_col)
 
-    def _apply_cdc_locked(
-        self, changes: DataFrame, op_col: str, batch_id: str | None
-    ) -> bool:
-        if batch_id is not None and batch_id in self.applied_batches():
-            return False
-        cur = self._current_version()
-        if cur is not None:
-            meta = self._meta(cur)
-            self.num_buckets = int(meta["num_buckets"])
-            self.mode = meta.get("mode", "bucketed")
-        if self.mode == "lsm":
-            return self._apply_cdc_lsm(changes, op_col, batch_id, cur)
-
-        changes = changes.persist()
-        try:
-            ups = changes.where(F.col(op_col) == "upsert").drop(op_col)
-            dels = changes.where(F.col(op_col) == "delete").select(*self.key)
-            affected = sorted(
-                r[0]
-                for r in changes.select(self._bucket_expr().alias("b"))
-                .distinct()
-                .collect()
-            )
-            merged = None
-            if affected:
-                existing = (
-                    [
-                        cur / "data" / f"{_BUCKET_COL}={b}"
-                        for b in affected
-                        if (cur / "data" / f"{_BUCKET_COL}={b}").exists()
-                    ]
-                    if cur is not None
-                    else []
-                )
-                if existing:
-                    tgt = self._read_buckets(cur, existing)
-                    kept = tgt.join(dels, self.key, "left_anti")
-                    merged = self._merge_frames(
-                        kept, ups, policy_override=MergePolicy.OVERWRITE
-                    )
-                else:
-                    merged = ups
-            self._commit(cur, merged, affected, batch_id)
-            return True
-        finally:
-            changes.unpersist()
-
-    def _apply_cdc_lsm(
-        self,
-        changes: DataFrame,
-        op_col: str,
-        batch_id: str | None,
-        cur: Path | None,
-    ) -> bool:
-        """CDC in LSM mode: fold-then-rewrite. Deletes and whole-row
-        upserts need a key-unique view of state, so this path folds the
-        runs, applies the change batch, and commits the result as ONE
-        run — O(state), not O(delta). CDC is a correctness surface here,
-        not the ingest hot path (the hot path is :meth:`merge`); a
-        deployment mixing high-rate CDC with LSM accumulation should
-        keep CDC-heavy tables in bucketed mode (the mode exists per
-        table for exactly this trade)."""
-        changes = changes.persist()
-        try:
-            ups = changes.where(F.col(op_col) == "upsert").drop(op_col)
-            dels = changes.where(F.col(op_col) == "delete").select(*self.key)
-            if cur is not None and any((cur / "data").rglob("*.parquet")):
-                kept = self.read().join(dels, self.key, "left_anti")
-                merged = self._merge_frames(
-                    kept, ups, policy_override=MergePolicy.OVERWRITE
-                )
-            else:
-                merged = ups
-            new = self._fresh_version_dir(cur)
-            (
-                merged.withColumn(_BUCKET_COL, self._bucket_expr())
-                .repartition(self.num_buckets, F.col(_BUCKET_COL))
-                .write.mode("append")
-                .partitionBy(_BUCKET_COL)
-                .parquet(str(new / "data" / "run=000000"))
-            )
-            self._write_ledger(new, cur, batch_id)
-            self._write_meta(new, merged.schema.json(), mode="lsm")
-            self._flip(new)
-            return True
-        finally:
-            changes.unpersist()
+    def _apply_changes(
+        self, tgt: DataFrame | None, changes: DataFrame, op_col: str
+    ) -> DataFrame:
+        """``tgt``'s rows (None: nothing stored) after a CDC batch: deleted
+        keys anti-joined away, upserted row images replacing whole rows."""
+        ups = changes.where(F.col(op_col) == "upsert").drop(op_col)
+        if tgt is None:
+            return ups
+        dels = changes.where(F.col(op_col) == "delete").select(*self.key)
+        kept = tgt.join(dels, self.key, "left_anti")
+        return self._merge_frames(kept, ups, policy_override=MergePolicy.OVERWRITE)
 
     # -- commit -------------------------------------------------------------
 
-    def _commit(
+    def _rewrite(
+        self, cur: Path, state: DataFrame, batch_id: str | None = None
+    ) -> None:
+        """Commit ``state`` as the table's whole content in the current
+        layout, keeping nothing of ``cur`` (LSM: one consolidated run)."""
+        self._commit_version(
+            cur,
+            state,
+            schema=state.schema.json(),
+            run="run=000000" if self.mode == "lsm" else None,
+            batch_id=batch_id,
+        )
+
+    def _commit_version(
         self,
         cur: Path | None,
-        merged: DataFrame | None,
-        affected: list[int],
-        batch_id: str | None,
+        frame: DataFrame | None,
+        *,
+        schema: str | None = None,
+        run: str | None = None,
+        parts: int | None = None,
+        keep: Sequence[str] = (),
+        batch_id: str | None = None,
     ) -> None:
-        """Write a complete new version dir, then flip CURRENT atomically.
+        """Write version ``cur + 1`` complete, then flip CURRENT to it.
 
-        The new version holds rewritten affected buckets, hard links to
-        every untouched bucket file of the previous version, and the
-        updated batch ledger. The single ``os.replace`` of the pointer
-        file is the lone commit point for data + ledger together.
+        ``frame`` (if any) is written bucket-partitioned into ``data/``
+        or, for an LSM run, ``data/<run>`` over ``parts`` shuffle
+        partitions (default: one per bucket); ``keep`` names the dirs of
+        ``cur/data`` (buckets or runs) hard-linked in unchanged; the
+        ledger is ``cur``'s plus ``batch_id``; ``meta.json`` records the
+        layout and the row ``schema`` (None: ``cur``'s, carried forward),
+        which keeps an emptied table readable. Any leftover dir of a
+        crashed earlier attempt at the same version number is replaced.
         """
-        new = self._fresh_version_dir(cur)
+        self.path.mkdir(parents=True, exist_ok=True)
+        cur_n = int(cur.name.split("_")[1]) if cur is not None else 0
+        new = self.path / f"v_{cur_n + 1:06d}"
+        if new.exists():
+            shutil.rmtree(new)
+        (new / "data").mkdir(parents=True)
+        if schema is None and cur is not None:
+            schema = self._meta(cur).get("schema")
 
-        if merged is not None:
+        if frame is not None:
+            out = new / "data" / run if run else new / "data"
             (
-                merged.withColumn(_BUCKET_COL, self._bucket_expr())
-                # one shuffle partition per affected bucket → one coherent
-                # file per bucket dir (at cluster scale raise this factor)
-                .repartition(max(len(affected), 1), F.col(_BUCKET_COL))
+                frame.withColumn(_BUCKET_COL, self._bucket_expr())
+                .repartition(parts or self.num_buckets, F.col(_BUCKET_COL))
                 .write.mode("append")
                 .partitionBy(_BUCKET_COL)
-                .parquet(str(new / "data"))
+                .parquet(str(out))
             )
-        if cur is not None:  # hard-link untouched buckets: zero data movement
-            touched = {f"{_BUCKET_COL}={b}" for b in affected}
-            for bdir in sorted((cur / "data").glob(f"{_BUCKET_COL}=*")):
-                if bdir.name in touched:
-                    continue
-                dst = new / "data" / bdir.name
-                dst.mkdir(parents=True, exist_ok=True)
-                for f_ in bdir.iterdir():
-                    if f_.is_file():
-                        os.link(f_, dst / f_.name)
+            if run and not any(out.rglob("*.parquet")):
+                # empty frame (e.g. an ingest batch with zero survivors):
+                # no parquet-less run dirs — they would pile past the fold
+                # invariant (0-byte runs never trigger it)
+                shutil.rmtree(out)
+        for name in keep:  # zero data movement
+            for f_ in (cur / "data" / name).rglob("*"):
+                if f_.is_file():
+                    dst = new / "data" / f_.relative_to(cur / "data")
+                    dst.parent.mkdir(parents=True, exist_ok=True)
+                    os.link(f_, dst)
 
-        self._write_ledger(new, cur, batch_id)
+        if batch_id is not None:
+            # driver-side pyarrow write (see applied_batches: a Spark job
+            # for a few driver-local strings costs seconds of fixed
+            # overhead per merge); same parquet format either way
+            import pyarrow as pa
+            import pyarrow.parquet as pq
 
-        # record the row schema so an emptied table stays readable (the
-        # delta's schema when we have one, else carried forward)
-        schema_json = (
-            merged.drop(_BUCKET_COL).schema.json()
-            if merged is not None
-            else (self._meta(cur).get("schema") if cur is not None else None)
-        )
-        self._write_meta(new, schema_json, mode="bucketed")
-        self._flip(new)
+            ledger = sorted(self.applied_batches() | {batch_id})
+            (new / "ledger").mkdir()
+            pq.write_table(
+                pa.table({"batch_id": pa.array(ledger, pa.string())}),
+                new / "ledger" / "ledger.parquet",
+            )
+        elif cur is not None and (cur / "ledger").exists():
+            (new / "ledger").mkdir()
+            for f_ in (cur / "ledger").iterdir():
+                if f_.is_file():
+                    os.link(f_, new / "ledger" / f_.name)
 
-    def _write_ledger(
-        self, new: Path, cur: Path | None, batch_id: str | None
-    ) -> None:
-        if batch_id is None and not (
-            cur is not None and (cur / "ledger").exists()
-        ):
-            return
-        ledger = self.applied_batches() | ({batch_id} if batch_id else set())
-        # driver-side pyarrow write (see applied_batches: a Spark job
-        # for a few driver-local strings costs seconds of fixed
-        # overhead per merge); same parquet format either way
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        (new / "ledger").mkdir(parents=True, exist_ok=True)
-        pq.write_table(
-            pa.table({"batch_id": pa.array(sorted(ledger), pa.string())}),
-            new / "ledger" / "ledger.parquet",
-        )
-
-    def _write_meta(self, new: Path, schema_json, mode: str) -> None:
         (new / "meta.json").write_text(
             json.dumps(
                 {
                     "num_buckets": self.num_buckets,
                     "key": self.key,
-                    "schema": schema_json,
-                    "mode": mode,
+                    "schema": schema,
+                    "mode": self.mode,
                 }
             )
         )
-
-    def _fresh_version_dir(self, cur: Path | None) -> Path:
-        self.path.mkdir(parents=True, exist_ok=True)
-        cur_n = int(cur.name.split("_")[1]) if cur is not None else 0
-        new = self.path / f"v_{cur_n + 1:06d}"
-        if new.exists():  # leftover from a crashed earlier attempt
-            shutil.rmtree(new)
-        (new / "data").mkdir(parents=True)
-        return new
+        self._flip(new)
 
     def _flip(self, new: Path) -> None:
         tmp_ptr = self.path / f"CURRENT.tmp.{new.name}"
@@ -957,30 +866,13 @@ class PointTable:
         for the duration of the rewrite.
         """
         with self.writer_lock():
-            self._rebucket_locked(num_buckets)
-
-    def _rebucket_locked(self, num_buckets: int) -> None:
-        cur = self._current_version()
-        if cur is None:
-            raise FileNotFoundError(f"point table not initialized: {self.path}")
-        mode = self._meta(cur).get("mode", "bucketed")
-        state = self.read().persist()
-        try:
-            self.num_buckets = num_buckets
-            self.mode = mode
-            new = self._fresh_version_dir(cur)
-            # in LSM mode the rewrite lands as the single consolidated
-            # run (a full compaction under the new layout)
-            out = new / "data" if mode == "bucketed" else new / "data" / "run=000000"
-            (
-                state.withColumn(_BUCKET_COL, self._bucket_expr())
-                .repartition(num_buckets, F.col(_BUCKET_COL))
-                .write.mode("append")
-                .partitionBy(_BUCKET_COL)
-                .parquet(str(out))
-            )
-            self._link_ledger(cur, new)
-            self._write_meta(new, state.schema.json(), mode=mode)
-            self._flip(new)
-        finally:
-            state.unpersist()
+            cur = self._current_version()
+            if cur is None:
+                raise FileNotFoundError(f"point table not initialized: {self.path}")
+            self.mode = self._meta(cur).get("mode", "bucketed")
+            state = self.read().persist()
+            try:
+                self.num_buckets = num_buckets
+                self._rewrite(cur, state)
+            finally:
+                state.unpersist()

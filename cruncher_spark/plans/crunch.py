@@ -213,6 +213,20 @@ def _axis_id(
     return out, valid
 
 
+def _region_axis(region_ids: dict) -> tuple[Column, Column]:
+    """(output region id, validity predicate) for the rolled ``shard_id``
+    axis: facts carry the region NAME, so a specific cell maps it through
+    the region dim; names missing from the dim produce no specific cell."""
+    region_map = F.create_map(
+        *[x for n, i in region_ids.items() if n != "all" for x in (F.lit(n), F.lit(i))]
+    )
+    region_specific = F.element_at(region_map, F.col("shard_id"))
+    region_out = F.when(
+        F.col("_g_shard_id"), F.lit(region_ids["all"])
+    ).otherwise(region_specific)
+    return region_out, F.col("_g_shard_id") | region_specific.isNotNull()
+
+
 def _filter_candidates(
     base: DataFrame, tables: Tables, dimension_on: str
 ) -> DataFrame:
@@ -326,24 +340,10 @@ def crunch_global_delta(
     )
     fanned = arm_all.unionByName(arm_build)
 
-    measures = [
-        F.count("id").alias("played"),
-        F.sum(F.col("winner").cast("int")).alias("wins"),
-        # A6: single-arg coalesce — a plain sum (crunch_global.sql:19).
-        # Double measures sum via DECIMAL(18,2) for order/engine-exact
-        # results (scalars.dsum) — semantics identical at 2-dec inputs.
-        dsum("trueskill_delta", "trueskill_delta"),
-        F.sum("duration").alias("time_spent"),
-        *[
-            dsum(c, c) if c == "farm" else F.sum(c).alias(c)
-            for c in STATS_SUMS[1:]
-        ],
-        F.round(F.sum(F.col("impact_score").cast("decimal(18,2)")))
-        .cast("double")
-        .alias("impact_score"),
-        F.sum(F.coalesce(F.col("surrender"), F.lit(0))).alias("surrender"),
-        *item_use_aggs(item_ids),
-    ]
+    measures = _stats_measures(
+        item_ids, round_impact=True, with_trueskill=True,
+        duration_alias="time_spent",
+    )
 
     fixed = ["series_id", "filter_id", "skill_tier_id", "build_id"]
     axes = ["hero_id", "role_id", "shard_id", "game_mode_id"]
@@ -375,12 +375,7 @@ def crunch_global_delta(
     hero_out, hero_ok = _axis_id("hero_id", hero_ids["all"], list(hero_ids.values()))
     role_out, role_ok = _axis_id("role_id", role_ids["all"], list(role_ids.values()))
     mode_out, mode_ok = _axis_id("game_mode_id", mode_ids["all"], list(mode_ids.values()))
-    region_map = F.create_map(
-        *[x for n, i in region_ids.items() if n != "all" for x in (F.lit(n), F.lit(i))]
-    )
-    region_specific = F.element_at(region_map, F.col("shard_id"))
-    region_out = F.when(F.col("_g_shard_id"), F.lit(region_ids["all"])).otherwise(region_specific)
-    region_ok = F.col("_g_shard_id") | region_specific.isNotNull()
+    region_out, region_ok = _region_axis(region_ids)
 
     measure_names = [
         "played", "wins", "trueskill_delta", "time_spent", *STATS_SUMS[1:],
@@ -425,6 +420,7 @@ def _stats_measures(item_ids: Sequence[int], *, round_impact: bool,
     return [
         F.count("id").alias("played"),
         F.sum(F.col("winner").cast("int")).alias("wins"),
+        # A6: single-arg coalesce — a plain sum (crunch_global.sql:19)
         *([dsum("trueskill_delta", "trueskill_delta")] if with_trueskill else []),
         F.sum("duration").alias(duration_alias),
         *[
@@ -590,14 +586,7 @@ def crunch_hero_vs_hero_delta(
     agg = _grouping_sets_agg(base, fixed, axes, sets, measures)
 
     mode_out, mode_ok = _axis_id("game_mode_id", mode_ids["all"], list(mode_ids.values()))
-    region_map = F.create_map(
-        *[x for n, i in region_ids.items() if n != "all" for x in (F.lit(n), F.lit(i))]
-    )
-    region_specific = F.element_at(region_map, F.col("shard_id"))
-    region_out = F.when(
-        F.col("_g_shard_id"), F.lit(region_ids["all"])
-    ).otherwise(region_specific)
-    region_ok = F.col("_g_shard_id") | region_specific.isNotNull()
+    region_out, region_ok = _region_axis(region_ids)
 
     agg_names = [
         c for c in agg.columns
@@ -691,14 +680,7 @@ def crunch_phases_delta(
     hero_out, hero_ok = _axis_id("hero_id", hero_ids["all"], list(hero_ids.values()))
     role_out, role_ok = _axis_id("role_id", role_ids["all"], list(role_ids.values()))
     mode_out, mode_ok = _axis_id("game_mode_id", mode_ids["all"], list(mode_ids.values()))
-    region_map = F.create_map(
-        *[x for n, i in region_ids.items() if n != "all" for x in (F.lit(n), F.lit(i))]
-    )
-    region_specific = F.element_at(region_map, F.col("shard_id"))
-    region_out = F.when(
-        F.col("_g_shard_id"), F.lit(region_ids["all"])
-    ).otherwise(region_specific)
-    region_ok = F.col("_g_shard_id") | region_specific.isNotNull()
+    region_out, region_ok = _region_axis(region_ids)
 
     agg_names = [
         c for c in agg.columns
@@ -778,14 +760,7 @@ def crunch_phases_bans_delta(
     mode_out, mode_ok = _axis_id(
         "game_mode_id", mode_ids["all"], list(mode_ids.values())
     )
-    region_map = F.create_map(
-        *[x for n, i in region_ids.items() if n != "all" for x in (F.lit(n), F.lit(i))]
-    )
-    region_specific = F.element_at(region_map, F.col("shard_id"))
-    region_out = F.when(
-        F.col("_g_shard_id"), F.lit(region_ids["all"])
-    ).otherwise(region_specific)
-    region_ok = F.col("_g_shard_id") | region_specific.isNotNull()
+    region_out, region_ok = _region_axis(region_ids)
 
     return agg.where(hero_ok & mode_ok & region_ok).select(
         now.alias("updated_at"),

@@ -69,7 +69,7 @@ from pyspark.sql import functions as F
 
 from cruncher_spark.merge.upsert import MergePolicy, PointTable
 from cruncher_spark.operators.dedup import minhash_signatures, shingle_arrays
-from cruncher_spark.streaming.worker import checkpoint_stream_id
+from cruncher_spark.streaming.worker import start_foreach_batch
 
 
 def _scope_dirname(scope: str) -> str:
@@ -254,20 +254,21 @@ class DedupIngest:
         available_now: bool = False,
     ):
         """Consume parquet files of ``INPUT_SCHEMA`` rows from ``src_dir``."""
-        Path(checkpoint_dir).mkdir(parents=True, exist_ok=True)
-        if self.stream_id is None:
-            self.stream_id = checkpoint_stream_id(checkpoint_dir)
         reader = self.spark.readStream.schema(self.INPUT_SCHEMA).format("parquet")
         if max_files_per_trigger is not None:
             reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        writer = (
-            reader.load(src_dir)
-            .writeStream.foreachBatch(self._stream_batch)
-            .option("checkpointLocation", checkpoint_dir)
+
+        def bind(sid: str):
+            self.stream_id = sid
+            return self._stream_batch
+
+        return start_foreach_batch(
+            reader.load(src_dir),
+            checkpoint_dir,
+            bind,
+            stream_id=self.stream_id,
+            available_now=available_now,
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
 
     # -- housekeeping --------------------------------------------------------
 

@@ -54,15 +54,19 @@ changes between file, Kafka, or bridged-AMQP deployments.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Mapping
+from collections.abc import Callable, Mapping, Sequence
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cruncher_spark.merge.upsert import PointTable
+from cruncher_spark.merge.upsert import MergePolicy, PointTable
 
 PlanFn = Callable[[Mapping[str, DataFrame], DataFrame], DataFrame]
+
+#: poison-message bound: longer ids are quarantined, never crunched
+#: (worker.js:129-137 NACKs messages over 1 KiB)
+MAX_MESSAGE_BYTES = 1024
 
 
 def checkpoint_stream_id(checkpoint_dir: str) -> str:
@@ -111,6 +115,49 @@ def checkpoint_stream_id(checkpoint_dir: str) -> str:
     return sid
 
 
+def start_foreach_batch(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    bind: Callable[[str], Callable[[DataFrame, int], None]],
+    *,
+    stream_id: str | None = None,
+    trigger_seconds: float | None = None,
+    available_now: bool = False,
+):
+    """Start ``stream`` into a checkpointed ``foreachBatch`` sink.
+
+    ``bind(sid)`` returns the batch handler for the stream's ledger scope
+    ``sid`` — ``stream_id`` if given, else the checkpoint's own
+    (:func:`checkpoint_stream_id`); each caller keeps its own ledger id
+    format over it. ``available_now`` drains pending input and stops;
+    otherwise ``trigger_seconds`` sets a processing-time trigger (None:
+    Spark's default, next batch as soon as the last one ends).
+    """
+    Path(checkpoint_dir).mkdir(parents=True, exist_ok=True)
+    sid = stream_id or checkpoint_stream_id(checkpoint_dir)
+    writer = stream.writeStream.foreachBatch(bind(sid)).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_seconds is not None:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()
+
+
+def served_point_table(
+    spark: SparkSession,
+    path: str,
+    key: Sequence[str],
+    policies: Mapping[str, MergePolicy],
+) -> PointTable:
+    """A crunch view's point table, as both the worker and the API build
+    it. It retains two versions: a ``read()`` planned before a merge lists
+    the version it saw, and that version must survive the next commit so
+    the read still collects (web-tier reads race the worker's merges)."""
+    return PointTable(spark, path, key=key, policies=policies, retain_versions=2)
+
+
 class CrunchWorker:
     def __init__(
         self,
@@ -120,11 +167,9 @@ class CrunchWorker:
         point: PointTable,
         *,
         reliability: float = 1.0,
-        max_message_bytes: int = 1024,
         quarantine_dir: str | None = None,
         notify_dir: str | None = None,
         notify_routing_key: str | None = None,
-        exactly_once: bool = True,
         slowmode_seconds: float = 0.0,
         stream_id: str | None = None,
     ):
@@ -133,11 +178,9 @@ class CrunchWorker:
         self.plan_fn = plan_fn
         self.point = point
         self.reliability = reliability
-        self.max_message_bytes = max_message_bytes
         self.quarantine_dir = quarantine_dir
         self.notify_dir = notify_dir
         self.notify_routing_key = notify_routing_key
-        self.exactly_once = exactly_once
         self.slowmode_seconds = slowmode_seconds
         #: ledger scope for batch ids (same contract as
         #: materialize.start_stream_refresh): defaults to a marker minted
@@ -171,8 +214,8 @@ class CrunchWorker:
         ids = ids_df.select(F.col(ids_df.columns[0]).alias("value"))
 
         # S7 poison-message guard (worker.js:129-137)
-        poisoned = ids.where(F.length("value") > self.max_message_bytes)
-        ids = ids.where(F.length("value") <= self.max_message_bytes)
+        poisoned = ids.where(F.length("value") > MAX_MESSAGE_BYTES)
+        ids = ids.where(F.length("value") <= MAX_MESSAGE_BYTES)
         if self.quarantine_dir is not None:
             self._append_quarantine(poisoned, batch_id, reason="poison")
 
@@ -185,10 +228,7 @@ class CrunchWorker:
 
         try:
             delta = self.plan_fn(self.tables, ids.select("value"))
-            applied = self.point.merge(
-                delta,
-                batch_id=self._ledger_id(batch_id) if self.exactly_once else None,
-            )
+            applied = self.point.merge(delta, batch_id=self._ledger_id(batch_id))
             self.batches_processed += 1
             if applied and self.notify_dir is not None:
                 self._append_notify(batch_id)
@@ -246,18 +286,19 @@ class CrunchWorker:
     ):
         """Source-agnostic tail of the pipeline: any single-value-column
         stream → guarded/sampled/deduped foreachBatch merge."""
-        Path(checkpoint_dir).mkdir(parents=True, exist_ok=True)
-        if self.stream_id is None:
-            self.stream_id = checkpoint_stream_id(checkpoint_dir)
-        writer = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
+
+        def bind(sid: str):
+            self.stream_id = sid
+            return self.process_batch
+
+        return start_foreach_batch(
+            stream,
+            checkpoint_dir,
+            bind,
+            stream_id=self.stream_id,
+            trigger_seconds=trigger_seconds,
+            available_now=available_now,
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif trigger_seconds is not None:
-            writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-        return writer.start()
 
     def start_file_stream(
         self,

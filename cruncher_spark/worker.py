@@ -54,8 +54,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from cruncher_spark.merge.upsert import MergePolicy, PointTable
-from cruncher_spark.streaming.worker import CrunchWorker
+from cruncher_spark.merge.upsert import MergePolicy
+from cruncher_spark.streaming.worker import CrunchWorker, served_point_table
 
 #: the build-slot regex fragments worker.js:199-201 passes as sequelize
 #: replacements into every script's `b.item_N` conditions
@@ -236,15 +236,8 @@ def build_worker(
             drop=("id", "updated_at"),
         )
 
-    # retain two versions: a point.read() planned before a merge lists the
-    # version it saw, and that version must survive the next commit so the
-    # read still collects (web-tier reads race the worker's merges)
-    point = PointTable(
-        spark,
-        str(state_dir / "points" / queue),
-        key=list(key),
-        policies=policies,
-        retain_versions=2,
+    point = served_point_table(
+        spark, str(state_dir / "points" / queue), list(key), policies
     )
     return CrunchWorker(
         spark,

@@ -127,3 +127,29 @@ def test_crunch_replay_idempotent_values(api):
     s, after = _get(api, "/point/player?limit=10000")
     assert before["columns"] == after["columns"]
     assert sorted(map(str, before["rows"])) == sorted(map(str, after["rows"]))
+
+
+def test_point_read_planned_before_a_crunch_collects_after_it(
+    spark, crunch_tables, tmp_path
+):
+    """A ``GET /point/<view>`` whose read lists files before a concurrent
+    ``POST /crunch/<view>`` commits must still collect: the API's point
+    tables retain the version the read listed through one more commit,
+    exactly like the worker's."""
+    a = CruncherAPI(
+        spark, SF_DIR, tables=crunch_tables, state_dir=str(tmp_path)
+    ).start()
+    try:
+        ids1 = [f"p-{i}" for i in range(1, 11)]
+        ids2 = [f"p-{i}" for i in range(11, 21)]
+        s, _ = _post(a, "/crunch/global", {"ids": ids1, "batch_id": "b1"})
+        assert s == 200
+        point = a._points["global"]
+        before = sorted(map(str, point.read().collect()))
+        read = point.read()  # lists b1's version now
+        s, r2 = _post(a, "/crunch/global", {"ids": ids2, "batch_id": "b2"})
+        assert s == 200 and r2["applied"] is True
+        assert sorted(map(str, read.collect())) == before
+        assert sorted(map(str, point.read().collect())) != before
+    finally:
+        a.stop()

@@ -988,3 +988,123 @@ def test_lsm_exhaustive_policy_matrix(spark, tmp_path):
     rb, rl = _rows(b), _rows(l)
     assert len(rb) == len(keys)
     assert rb == rl
+
+
+def _layout(pt):
+    """The CURRENT version of ``pt`` as stored: version dir name, every
+    sub-dir with its parquet file count, meta.json, and the ledger."""
+    import pyarrow.parquet as pq
+
+    name = (pt.path / "CURRENT").read_text().strip()
+    vdir = pt.path / name
+    tree = {
+        str(d.relative_to(vdir)): len(list(d.glob("*.parquet")))
+        for d in sorted(vdir.rglob("*"))
+        if d.is_dir()
+    }
+    meta = json.loads((vdir / "meta.json").read_text())
+    ledger = pq.read_table(vdir / "ledger" / "ledger.parquet")
+    return name, tree, meta, ledger["batch_id"].to_pylist()
+
+
+def _meta(num_buckets, mode, nullable):
+    n = "true" if nullable else "false"
+    schema = (
+        '{"fields":['
+        f'{{"metadata":{{}},"name":"id","nullable":{n},"type":"long"}},'
+        f'{{"metadata":{{}},"name":"n","nullable":{n},"type":"long"}}'
+        '],"type":"struct"}'
+    )
+    return {"num_buckets": num_buckets, "key": ["id"], "schema": schema, "mode": mode}
+
+
+def test_on_disk_layout_is_pinned(spark, tmp_path):
+    """Every writer's on-disk output, literally: bucketed merge, CDC and
+    rebucket; LSM append, size-tiered fold and CDC rewrite. A state dir
+    written by one build of this module must be readable and resumable
+    by the next, so the version names, dir tree, meta.json (including
+    which schema each writer records) and ledger may not drift."""
+    s = "id long, n long"
+    ops = s + ", op string"
+
+    b = PointTable(
+        spark, str(tmp_path / "b"), key=["id"],
+        policies={"n": MergePolicy.ADD}, num_buckets=4,
+    )
+    b.merge(spark.range(1, 5).selectExpr("id", "id AS n"), batch_id="m1")
+    assert _layout(b) == (
+        "v_000001",
+        {"data": 0, "data/pt_bucket=0": 1, "data/pt_bucket=1": 1,
+         "data/pt_bucket=3": 1, "ledger": 1},
+        _meta(4, "bucketed", nullable=False),
+        ["m1"],
+    )
+    b.merge(spark.createDataFrame([(1, 10), (9, 9)], s), batch_id="m2")
+    assert _layout(b) == (
+        "v_000002",
+        {"data": 0, "data/pt_bucket=0": 1, "data/pt_bucket=1": 1,
+         "data/pt_bucket=3": 1, "ledger": 1},
+        _meta(4, "bucketed", nullable=True),
+        ["m1", "m2"],
+    )
+    b.apply_cdc(
+        spark.createDataFrame([(2, 20, "upsert"), (3, None, "delete")], ops),
+        batch_id="c1",
+    )
+    assert _layout(b) == (
+        "v_000003",
+        {"data": 0, "data/pt_bucket=0": 1, "data/pt_bucket=1": 1, "ledger": 1},
+        _meta(4, "bucketed", nullable=True),
+        ["c1", "m1", "m2"],
+    )
+    b.rebucket(2)
+    assert _layout(b) == (
+        "v_000004",
+        {"data": 0, "data/pt_bucket=0": 1, "data/pt_bucket=1": 1, "ledger": 1},
+        _meta(2, "bucketed", nullable=True),
+        ["c1", "m1", "m2"],
+    )
+
+    l = PointTable(
+        spark, str(tmp_path / "l"), key=["id"],
+        policies={"n": MergePolicy.ADD}, num_buckets=2, mode="lsm",
+    )
+    run0 = {"data/run=000000": 0, "data/run=000000/pt_bucket=0": 1,
+            "data/run=000000/pt_bucket=1": 1}
+    l.merge(spark.range(400).selectExpr("id", "id AS n"), batch_id="a1")
+    assert _layout(l) == (
+        "v_000001",
+        {"data": 0, **run0, "ledger": 1},
+        _meta(2, "lsm", nullable=False),
+        ["a1"],
+    )
+    # 400 rows vs 2: the size invariant holds, no fold
+    l.merge(spark.createDataFrame([(1, 1), (500, 5)], s), batch_id="a2")
+    assert _layout(l) == (
+        "v_000002",
+        {"data": 0, **run0, "data/run=000001": 0,
+         "data/run=000001/pt_bucket=1": 1, "ledger": 1},
+        _meta(2, "lsm", nullable=True),
+        ["a1", "a2"],
+    )
+    # two equal small runs: v_000003 appends, v_000004 folds them into
+    # the older seq and carries v_000003's recorded schema forward
+    l.merge(spark.range(501, 503).selectExpr("id", "id AS n"), batch_id="a3")
+    assert _layout(l) == (
+        "v_000004",
+        {"data": 0, **run0, "data/run=000001": 0,
+         "data/run=000001/pt_bucket=0": 1, "data/run=000001/pt_bucket=1": 1,
+         "ledger": 1},
+        _meta(2, "lsm", nullable=False),
+        ["a1", "a2", "a3"],
+    )
+    l.apply_cdc(
+        spark.createDataFrame([(1, 7, "upsert"), (501, None, "delete")], ops),
+        batch_id="c1",
+    )
+    assert _layout(l) == (
+        "v_000005",
+        {"data": 0, **run0, "ledger": 1},
+        _meta(2, "lsm", nullable=True),
+        ["a1", "a2", "a3", "c1"],
+    )
