@@ -39,6 +39,21 @@ def posix_to_java_regex(pattern: str) -> str:
     return out
 
 
+def sql_literal(v) -> str:
+    """A Python scalar as Spark SQL literal text: strings single-quoted,
+    anything else (numbers) bare. Spark SQL string literals process
+    backslash escapes, so backslashes are escaped along with quotes (a Java
+    regex's ``[\\d]`` would otherwise silently become ``[d]``)."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if not isinstance(v, str):
+        return str(v)
+    s = v.replace("\\", "\\\\").replace("'", "\\'")
+    return f"'{s}'"
+
+
 def dsum(col: str | Column, alias: str, scale: int = 2) -> Column:
     """Exactly-reproducible sum of a cent-valued double column.
 

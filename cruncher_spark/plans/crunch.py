@@ -14,9 +14,9 @@ multiplies the stream 16x *before* the aggregate. Here:
   fan-out happens inside the aggregate (map-side partial), nothing is
   multiplied before the shuffle;
 - genuinely multi-match dims (series intervals, the filter bridge, skill
-  bands, regex-matched builds) stay fan-out joins, but against broadcast
-  dims, in explicit specific/'all' union arms — multiplier ~8x instead of
-  the reference's 256x worst case;
+  bands, regex-matched builds) stay fan-outs, against literal snapshots
+  of the dims, in explicit specific/'all' union arms — multiplier ~8x
+  instead of the reference's 256x worst case;
 - conditional strata (game_mode/skill_tier specific only when
   s.show_in_web, crunch_global.sql:44-45; builds only for casual/ranked in
   gm='all' x region='all' cells, crunch_global.sql:46-50; player never
@@ -24,19 +24,26 @@ multiplies the stream 16x *before* the aggregate. Here:
   sets, unioned.
 
 At 100 TB the only shuffles are the final aggregates (and the hero-vs-hero
-self-join on match key); every dimension access is a broadcast.
+self-join on match key); no dimension table is read by a batch at all.
 
 Per-batch cost model (global, player, hero_vs_hero). The reference serves
 each batch with one ``INSERT … SELECT … WHERE p.api_id IN (:ids)`` through
-index lookups, O(batch) (crunch_global.sql:63). Here every fact table
-(participant, participant_stats, participant_items) is restricted to the
-batch and joined once, in :func:`_fact_base`, which returns an eager
-``localCheckpoint``: the facts are read once per batch, and every fan-out
-arm reads the small checkpointed base, not the fact tables. The dimension
-tables and the ``global_point_filters`` bridge are still broadcast per
-batch (they are not batch-restricted), and hero_vs_hero still joins the
-base to the whole ``participant`` table for the pair side. The phases and
-bans views key on ``participant_phases`` and do not use the fact base.
+index lookups, O(batch) (crunch_global.sql:63). Here the worker hands the
+builders the batch as a driver-side id list, and every fact table
+(participant, participant_stats, participant_items) is restricted by one
+parsed ``key IN (…)`` predicate and joined once, in :func:`_fact_base`,
+which returns an eager ``localCheckpoint``: the facts are read once per
+batch, and every fan-out arm reads the small checkpointed base, not the
+fact tables. The dimension tables are read once per worker, on the first
+batch (:func:`_dim_cached`), and enter every later plan as literal
+expressions: the multi-match dims (series intervals, skill bands, specific
+filters, builds) as an ``inline`` of a literal array, the 1:1 dims as
+``IN`` lists and maps. A dimension change therefore takes effect at worker
+restart (MIGRATION.md). What a batch still reads beyond its own facts is
+the ``global_point_filters`` bridge (broadcast, restricted to the view's
+specific filters, semi-joined on ``(match_api_id, filter_id)``), and for
+hero_vs_hero the whole ``participant`` table for the pair side. The phases
+and bans views key on ``participant_phases`` and do not use the fact base.
 """
 
 from __future__ import annotations
@@ -46,8 +53,13 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from cruncher_spark.functions.scalars import dsum, posix_to_java_regex
+from cruncher_spark.functions.scalars import (
+    dsum,
+    posix_to_java_regex,
+    sql_literal,
+)
 
 #: worker.js:199-201 — the build-slot match regex fragments, POSIX→Java.
 BUILD_REGEX_START = posix_to_java_regex("^([[:digit:]]+;[[:digit:]]+,)*(")
@@ -107,30 +119,67 @@ def _dim_cached(df: DataFrame, key: tuple, compute):
     return _DIM_CACHE[full]
 
 
+def _dim_rows(
+    tables: Tables, name: str, where: str, cols: Sequence[str]
+) -> tuple[T.StructType, list[tuple]]:
+    """The rows of dim ``name`` matching the SQL predicate ``where``,
+    projected to the SQL expressions ``cols``: collected once per process
+    per dim table, with the projection's schema."""
+
+    def compute():
+        df = tables[name].where(where).selectExpr(*cols)
+        return df.schema, [tuple(r) for r in df.collect()]
+
+    return _dim_cached(tables[name], ("rows", where, tuple(cols)), compute)
+
+
 def activable_item_ids(tables: Tables) -> list[int]:
     """worker.js:83-85 — item dim lookup at startup."""
-    return _dim_cached(
-        tables["item"],
-        ("items",),
-        lambda: sorted(
-            r.id
-            for r in tables["item"].where(F.col("is_activable")).select("id").collect()
-        ),
+    _, rows = _dim_rows(tables, "item", "is_activable", ["id"])
+    return sorted(r[0] for r in rows)
+
+
+def _in_expr(key: str, values: Sequence) -> str:
+    """``key IN (values)`` as SQL text; ``false`` for no values."""
+    if not values:
+        return "false"
+    return f"`{key}` IN ({', '.join(map(sql_literal, values))})"
+
+
+def _explode_rows(
+    df: DataFrame, schema: T.StructType, rows: Sequence[tuple]
+) -> DataFrame:
+    """``df`` crossed with a literal table: each input row once per entry of
+    ``rows``, with ``schema``'s columns appended. The rows enter the plan as
+    one ``inline`` of a literal array, so no table is read or broadcast."""
+    elems = ", ".join(
+        "struct("
+        + ", ".join(
+            f"CAST({sql_literal(v)} AS {f.dataType.simpleString()})"
+            for f, v in zip(schema.fields, r)
+        )
+        + ")"
+        for r in rows
+    )
+    table = f"CAST(array({elems}) AS array<{schema.simpleString()}>)"
+    return df.select("*", F.expr(f"inline({table})"))
+
+
+def _series_rows(
+    tables: Tables, dimension_on: str
+) -> tuple[T.StructType, list[tuple]]:
+    """(series_id, start, end, show_in_web) of the view's series, the
+    bounds as ``unix_micros``: compared as integers, the membership test
+    does not depend on the session time zone."""
+    return _dim_rows(
+        tables, "series", f"dimension_on = {sql_literal(dimension_on)}",
+        ["id AS series_id", "unix_micros(start) AS _lo",
+         "unix_micros(`end`) AS _hi", "show_in_web"],
     )
 
 
-def _series_ids(
-    tables: Tables, dimension_on: str, web_only: bool = False
-) -> list:
-    def compute():
-        df = tables["series"].where(F.col("dimension_on") == dimension_on)
-        if web_only:
-            df = df.where(F.col("show_in_web"))
-        return [r.id for r in df.select("id").collect()]
-
-    return _dim_cached(
-        tables["series"], ("series", dimension_on, web_only), compute
-    )
+def _web_series_ids(tables: Tables, dimension_on: str) -> list:
+    return [r[0] for r in _series_rows(tables, dimension_on)[1] if r[3]]
 
 
 def _subsets(names: Sequence[str]) -> list[tuple[str, ...]]:
@@ -140,28 +189,20 @@ def _subsets(names: Sequence[str]) -> list[tuple[str, ...]]:
     ]
 
 
-def _dim_ids(tables: Tables, name: str, where: Column | None = None) -> dict:
-    def compute():
-        df = tables[name]
-        if where is not None:
-            df = df.where(where)
-        return {r["name"]: r["id"] for r in df.select("name", "id").collect()}
-
-    return _dim_cached(
-        tables[name],
-        ("ids", name, None if where is None else str(where)),
-        compute,
-    )
+def _dim_ids(tables: Tables, name: str, where: str = "true") -> dict:
+    """name → id of dim ``name``'s rows matching the SQL predicate ``where``."""
+    return dict(_dim_rows(tables, name, where, ["name", "id"])[1])
 
 
 def _batch_join(df: DataFrame, key: str, batch_ids) -> DataFrame:
-    """P1 batch-key restriction (crunch_global.sql:63). Small Python lists
-    become an ``isin`` (pushed into the scan); DataFrames become a semi
-    join (the scale path)."""
+    """P1 batch-key restriction (crunch_global.sql:63). Python lists become
+    one parsed ``key IN (…)`` fragment (pushed into the scan; a
+    ``Column.isin`` builds one gateway node per id, ~0.5 s per 1000 ids);
+    DataFrames become a semi join (the scale path)."""
     if isinstance(batch_ids, DataFrame):
         other = batch_ids.toDF(key)
         return df.join(other, key, "left_semi")
-    return df.where(F.col(key).isin(list(batch_ids)))
+    return df.where(F.expr(_in_expr(key, list(batch_ids))))
 
 
 def _grouping_sets_agg(
@@ -232,22 +273,26 @@ def _filter_candidates(
 ) -> DataFrame:
     """J8: ``f.name='all' OR f.id IN (bridge filters of the match)``
     (crunch_global.sql:39) → union of the constant 'all' arm and the
-    deduped bridge join. Adds ``filter_id``."""
-    filters = tables["filter"].where(F.col("dimension_on") == dimension_on)
+    specific arm: the base crossed with the view's specific filter ids,
+    semi-joined on ``(match_api_id, filter_id)`` against the bridge — the
+    IN-subquery's set semantics, so duplicate bridge rows count once.
+    Adds ``filter_id``."""
     all_id = _dim_ids(
-        tables, "filter", F.col("dimension_on") == dimension_on
+        tables, "filter", f"dimension_on = {sql_literal(dimension_on)}"
     )["all"]
     arm_all = base.withColumn("filter_id", F.lit(all_id))
-    bridge = (
-        tables["global_point_filters"]
-        .dropDuplicates(["match_api_id", "filter_id"])  # IN-subquery set semantics
-        .join(
-            F.broadcast(filters.where(F.col("name") != "all").select(F.col("id").alias("filter_id"))),
-            "filter_id",
-            "left_semi",
-        )
+    schema, rows = _dim_rows(
+        tables, "filter",
+        f"dimension_on = {sql_literal(dimension_on)} AND name != 'all'",
+        ["id AS filter_id"],
     )
-    arm_specific = base.join(F.broadcast(bridge), "match_api_id")
+    rows = sorted(set(rows))  # ids are keys: a repeated row matches once
+    bridge = tables["global_point_filters"].where(
+        _in_expr("filter_id", [r[0] for r in rows])
+    )
+    arm_specific = _explode_rows(base, schema, rows).join(
+        F.broadcast(bridge), ["match_api_id", "filter_id"], "left_semi"
+    )
     return arm_all.unionByName(arm_specific)
 
 
@@ -256,12 +301,12 @@ def _series_join(
 ) -> DataFrame:
     """J5: interval membership ``time BETWEEN s.start AND s.end``
     (crunch_global.sql:40); overlapping series each match (intended
-    fan-out). Adds series_id, show_in_web."""
-    series = tables["series"].where(F.col("dimension_on") == dimension_on)
-    return base.join(
-        F.broadcast(series.select(F.col("id").alias("series_id"), "start", "end", "show_in_web")),
-        F.col(time_col).between(F.col("start"), F.col("end")),
-    ).drop("start", "end")
+    fan-out; a NULL bound matches nothing). Adds series_id, show_in_web."""
+    return (
+        _explode_rows(base, *_series_rows(tables, dimension_on))
+        .where(f"unix_micros(`{time_col}`) BETWEEN _lo AND _hi")
+        .drop("_lo", "_hi")
+    )
 
 
 def _tier_arms(
@@ -271,27 +316,50 @@ def _tier_arms(
     OR st.name='all'`` (crunch_global.sql:45) → 'all' arm union band-join
     arm. Adds skill_tier_id."""
     arm_all = base.withColumn("skill_tier_id", F.lit(all_tier_id))
-    tiers = tables["skill_tier"].where(F.col("name") != "all")
     specific_base = base.where(F.col("show_in_web")) if require_web else base
-    arm_specific = specific_base.join(
-        F.broadcast(
-            tiers.select(F.col("id").alias("skill_tier_id"), F.col("start").alias("_lo"), F.col("end").alias("_hi"))
-        ),
-        F.col("skill_tier").between(F.col("_lo"), F.col("_hi")),
-    ).drop("_lo", "_hi")
+    tiers = _dim_rows(
+        tables, "skill_tier", "name != 'all'",
+        ["id AS skill_tier_id", "start AS _lo", "`end` AS _hi"],
+    )
+    arm_specific = (
+        _explode_rows(specific_base, *tiers)
+        .where("skill_tier BETWEEN _lo AND _hi")
+        .drop("_lo", "_hi")
+    )
     return arm_all.unionByName(arm_specific)
 
 
-def _build_slot_cond(grants: Column, b: DataFrame, slot: int) -> Column:
-    """One slot of the J7 regex build match (crunch_global.sql:53-58)."""
-    pattern = F.concat(
-        F.lit(BUILD_REGEX_START),
-        b[f"item_{slot}"].cast("string"),
-        F.lit(";"),
-        b[f"item_{slot}_count"].cast("string"),
-        F.lit(BUILD_REGEX_END),
-    )
-    return b[f"item_{slot}"].isNull() | F.rlike(grants, pattern)
+def _build_matches(tables: Tables) -> tuple[T.StructType, list[tuple], str]:
+    """J7 regex build match (crunch_global.sql:53-58) with the regexes built
+    on the driver: (schema, rows) of the specific global build ids that can
+    match, and a SQL predicate over ``build_id`` and ``item_grants``.
+
+    A slot matches when its item is NULL or the grants match
+    ``START item;count END``; a slot with an item but a NULL count renders
+    a NULL pattern, which matches nothing, so such a build is left out."""
+
+    def compute():
+        schema, rows = _dim_rows(
+            tables, "build", "name != 'all' AND dimension_on = 'global'",
+            ["id AS build_id",
+             *[c for s in range(1, 7) for c in (f"item_{s}", f"item_{s}_count")]],
+        )
+        keep, arms = [], []
+        for r in rows:
+            pairs = [(r[1 + 2 * s], r[2 + 2 * s]) for s in range(6)]
+            if any(i is not None and n is None for i, n in pairs):
+                continue
+            conds = [
+                "item_grants RLIKE "
+                + sql_literal(f"{BUILD_REGEX_START}{i};{n}{BUILD_REGEX_END}")
+                for i, n in pairs if i is not None
+            ]
+            keep.append((r[0],))
+            arms.append(f"WHEN {r[0]} THEN {' AND '.join(conds) or 'true'}")
+        cond = f"CASE build_id {' '.join(arms)} ELSE false END" if arms else "false"
+        return T.StructType(schema.fields[:1]), keep, cond
+
+    return _dim_cached(tables["build"], ("build_matches",), compute)
 
 
 def crunch_global_delta(
@@ -312,7 +380,7 @@ def crunch_global_delta(
     region_ids = _dim_ids(tables, "region")
     mode_ids = _dim_ids(tables, "game_mode")
     tier_ids = _dim_ids(tables, "skill_tier")
-    build_all_id = _dim_ids(tables, "build", F.col("dimension_on") == "global").get("all")
+    build_all_id = _dim_ids(tables, "build", "dimension_on = 'global'").get("all")
     casual_ranked = [mode_ids[n] for n in ("casual", "ranked") if n in mode_ids]
 
     base = _fact_base(tables, batch_ids)
@@ -324,20 +392,11 @@ def crunch_global_delta(
     # casual/ranked (crunch_global.sql:46-50) — the gm='all' x reg='all'
     # restriction is a stratum constraint handled in the grouping sets below.
     arm_all = base.withColumn("build_id", F.lit(build_all_id))
-    builds = tables["build"].where(
-        (F.col("name") != "all") & (F.col("dimension_on") == "global")
-    )
-    slot_conds = None
-    for slot in range(1, 7):
-        c = _build_slot_cond(F.col("item_grants"), builds, slot)
-        slot_conds = c if slot_conds is None else (slot_conds & c)
-    arm_build = (
-        base.where(F.col("show_in_web") & F.col("game_mode_id").isin(casual_ranked))
-        .join(F.broadcast(builds.select(F.col("id").alias("build_id"), *[
-            c for s in range(1, 7) for c in (f"item_{s}", f"item_{s}_count")
-        ])), slot_conds)
-        .drop(*[c for s in range(1, 7) for c in (f"item_{s}", f"item_{s}_count")])
-    )
+    build_schema, build_rows, build_cond = _build_matches(tables)
+    arm_build = _explode_rows(
+        base.where(F.col("show_in_web") & F.col("game_mode_id").isin(casual_ranked)),
+        build_schema, build_rows,
+    ).where(build_cond)
     fanned = arm_all.unionByName(arm_build)
 
     measures = _stats_measures(
@@ -357,12 +416,8 @@ def crunch_global_delta(
         fanned.drop("show_in_web"), fixed, axes, _subsets(axes), measures
     )
 
-    web_series = _series_ids(tables, "global", web_only=True)
-    specific_builds = [
-        i for n, i in _dim_ids(
-            tables, "build", F.col("dimension_on") == "global"
-        ).items() if n != "all"
-    ]
+    web_series = _web_series_ids(tables, "global")
+    specific_builds = [r[0] for r in build_rows]
     # daily series: game_mode only 'all' (crunch_global.sql:44 gate)
     daily_ok = F.col("series_id").isin(web_series) | F.col("_g_game_mode_id")
     # specific builds live only in gm='all' x region='all' cells
@@ -623,7 +678,6 @@ def crunch_phases_delta(
     (crunch_phases.sql:10,20).
     """
     from cruncher_spark.schemas import PARTICIPANT_PHASES, PHASE_MEASURES
-    from pyspark.sql import types as T
 
     now = now if now is not None else F.current_timestamp()
     item_ids = activable_item_ids(tables)
@@ -672,7 +726,7 @@ def crunch_phases_delta(
     agg = _grouping_sets_agg(
         base.drop("show_in_web"), fixed, axes, _subsets(axes), measures
     )
-    web_series = _series_ids(tables, "global", web_only=True)
+    web_series = _web_series_ids(tables, "global")
     agg = agg.where(
         F.col("series_id").isin(web_series) | F.col("_g_game_mode_id")
     )
@@ -749,7 +803,7 @@ def crunch_phases_bans_delta(
     agg = _grouping_sets_agg(
         base.drop("show_in_web"), fixed, axes, _subsets(axes), measures
     )
-    web_series = _series_ids(tables, "global", web_only=True)
+    web_series = _web_series_ids(tables, "global")
     agg = agg.where(
         F.col("series_id").isin(web_series) | F.col("_g_game_mode_id")
     )

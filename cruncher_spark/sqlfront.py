@@ -50,7 +50,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from cruncher_spark.functions.scalars import posix_to_java_regex
+from cruncher_spark.functions.scalars import posix_to_java_regex, sql_literal
 from cruncher_spark.merge.upsert import MergePolicy
 
 # ---------------------------------------------------------------------------
@@ -220,21 +220,13 @@ def expand_stubs(sql: str, item_ids: list[int]) -> str:
 
 
 def _lit(v) -> str:
-    if isinstance(v, str):
-        # POSIX character classes only exist in the regex parameters
-        # (worker.js:199-201); DATA values (batch ids) inline verbatim —
-        # running them through the regex translation would silently
-        # rewrite any id that happened to contain '[[:'
-        s = posix_to_java_regex(v) if "[[:" in v else v
-        # Spark SQL string literals process backslash escapes (like MySQL
-        # with default sql_mode), so the Java-regex '\d' the POSIX
-        # translation introduces must be escaped or the parser eats the
-        # backslash and '[\d]' silently becomes '[d]'
-        s = s.replace("\\", "\\\\").replace("'", "\\'")
-        return f"'{s}'"
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    return str(v)
+    # POSIX character classes only exist in the regex parameters
+    # (worker.js:199-201); DATA values (batch ids) inline verbatim —
+    # running them through the regex translation would silently
+    # rewrite any id that happened to contain '[[:'
+    if isinstance(v, str) and "[[:" in v:
+        v = posix_to_java_regex(v)
+    return sql_literal(v)
 
 
 def substitute_params(sql: str, params: dict, allow_missing: bool = False) -> str:
@@ -634,17 +626,19 @@ def script_plan_fn(
     the full SCRIPT env-var deployment story (worker.js:24): point the
     worker at the unmodified .sql file and stream batches through it.
 
-    Per micro-batch the batch keys are collected to the driver and
-    inlined as the ``:participant_api_ids`` literal list — exactly the
-    reference's buffer-then-interpolate protocol (worker.js:121,145 +
-    sequelize replacements). The reference bounds this at BATCHSIZE=1000;
-    nothing used to enforce that bound here, so a caller handing a
-    10M-row keys_df got a 10M-literal SQL string on the driver (VERDICT
-    r4 "What's wrong" #3). Batches over ``max_inline_keys`` now skip the
-    collect entirely: the keys stay distributed in a temp view and the
-    ``IN (:param)`` clause becomes ``IN (SELECT …)`` — Spark plans it as
-    a left semi join, the same shape the native plans use at scale
-    (plans/crunch.py batch-key routing).
+    Per micro-batch the batch keys are inlined as the
+    ``:participant_api_ids`` literal list — exactly the reference's
+    buffer-then-interpolate protocol (worker.js:121,145 + sequelize
+    replacements). ``CrunchWorker`` hands the plan its batch as a list of
+    ids, which is inlined as is; a keys DataFrame is collected first. The
+    reference bounds the list at BATCHSIZE=1000; nothing used to enforce
+    that bound here, so a caller handing a 10M-row keys_df got a
+    10M-literal SQL string on the driver (VERDICT r4 "What's wrong" #3).
+    Batches over ``max_inline_keys`` are not inlined: the keys sit in a
+    temp view (a DataFrame's without a collect) and the ``IN (:param)``
+    clause becomes ``IN (SELECT …)`` — Spark plans it as a left semi join,
+    the same shape the native plans use at scale (plans/crunch.py
+    batch-key routing).
 
     Translation re-runs per batch (pure string work, microseconds against
     a multi-second micro-batch); the parsed policy spec is static, so
@@ -658,8 +652,9 @@ def script_plan_fn(
     # not clobber each other's keys view between plan build and execution
     keys_view = f"cruncher_batch_keys_{uuid.uuid4().hex[:8]}"
 
-    def plan(tables: dict, keys_df: DataFrame) -> DataFrame:
-        spark = keys_df.sparkSession
+    def plan(tables: dict, keys) -> DataFrame:
+        is_df = isinstance(keys, DataFrame)
+        spark = (keys if is_df else next(iter(tables.values()))).sparkSession
         if "stmt" not in state:
             # one-time: register views, run the schema-aware coercions,
             # and translate with the batch param DEFERRED — per batch only
@@ -675,13 +670,18 @@ def script_plan_fn(
                 defer_params=True,
             )
         stmt: CrunchStatement = state["stmt"]
-        # probe one row past the cap instead of count(): the common path
-        # (reference contract BATCHSIZE=1000) costs a single bounded job
-        probe = keys_df.limit(max_inline_keys + 1).collect()
-        if len(probe) <= max_inline_keys:
-            batch = [r[0] for r in probe]
+        # a DataFrame is probed one row past the cap instead of count():
+        # the common path (BATCHSIZE=1000) costs a single bounded job
+        batch = (
+            [r[0] for r in keys.limit(max_inline_keys + 1).collect()]
+            if is_df else list(keys)
+        )
+        if len(batch) <= max_inline_keys:
             sql = substitute_params(stmt.select_sql, {batch_param: batch})
         else:
+            keys_df = keys if is_df else spark.createDataFrame(
+                [(k,) for k in batch], ["value"]
+            )
             key_col = keys_df.columns[0]
             keys_df.select(key_col).createOrReplaceTempView(keys_view)
             # quote-aware, like substitute_params: a ':param' inside a

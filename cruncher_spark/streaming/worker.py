@@ -5,11 +5,17 @@ QUEUE/SCRIPT parameterization): a stream of fact keys, a plan builder, a
 point table. The reference's per-message guards and commit protocol map
 to (SURVEY.md §2.1, §2.7):
 
+- the batch's id column is collected to the driver once, and the three
+  per-message guards run there in Python, in the reference's order; the
+  plan builder gets the surviving ids as a list, inlined as one
+  ``IN (…)`` predicate (the reference's ``IN (:ids)``, crunch_global.sql:63)
 - poison filter (>1024-byte message NACKed, worker.js:129-137)
-  → length filter routing to the quarantine sink
-- RELIABILITY sampling (worker.js:139-143) → ``df.sample`` — and like the
+  → UTF-8 byte-length filter routing to the quarantine sink
+- RELIABILITY sampling (worker.js:139-143) → one ``random.Random(batch_id)``
+  draw per id, so a replayed batch keeps the same sample — and like the
   reference, sums are *not* scaled up (documented load-shed semantics)
-- in-batch dedup via Set (worker.js:121,145) → ``dropDuplicates``
+- in-batch dedup via Set (worker.js:121,145) → ``dict.fromkeys`` (first
+  occurrence order)
 - count-or-timeout micro-batch (1000 ids / 5 s, worker.js:29-30)
   → ``trigger(processingTime=...)`` + ``maxFilesPerTrigger`` rate cap;
   Spark itself has no exact count-OR-time trigger, but the AMQP bridge
@@ -18,9 +24,12 @@ to (SURVEY.md §2.1, §2.7):
   messages or the deadline, whichever first, and ``maxFilesPerTrigger=1``
   then makes one micro-batch == one reference batch
 - at-least-once + DLQ (worker.js:167-182) → try/except in foreachBatch
-  appending failed batch keys to the quarantine table
-- ACK→notify (worker.js:183-190) → appending (routing_key, event) rows to
-  the notify sink after a successful merge
+  appending failed batch keys to the quarantine table — only when the
+  merge ledger does not hold the batch: a failure after the commit (the
+  notify write) re-raises instead, so the source replays the batch
+- ACK→notify (worker.js:183-190) → one (routing_key, event) file per
+  ledger id in the notify sink, written after the merge when missing — a
+  replayed batch the ledger skips still gets its notify
 - replay double-count fixed: the merge ledger keys on batch_id
   (merge/upsert.py), so redelivered batches are idempotent.
 
@@ -54,6 +63,10 @@ changes between file, Kafka, or bridged-AMQP deployments.
 
 from __future__ import annotations
 
+import os
+import random
+import time
+import uuid
 from collections.abc import Callable, Mapping, Sequence
 from pathlib import Path
 
@@ -62,10 +75,12 @@ from pyspark.sql import functions as F
 
 from cruncher_spark.merge.upsert import MergePolicy, PointTable
 
-PlanFn = Callable[[Mapping[str, DataFrame], DataFrame], DataFrame]
+#: (tables, the batch's ids) → the delta. The worker passes a list of
+#: ids; the native builders also accept a one-column DataFrame of ids.
+PlanFn = Callable[[Mapping[str, DataFrame], list], DataFrame]
 
-#: poison-message bound: longer ids are quarantined, never crunched
-#: (worker.js:129-137 NACKs messages over 1 KiB)
+#: poison-message bound: ids longer than this in UTF-8 bytes are
+#: quarantined, never crunched (worker.js:129-137 NACKs messages over 1 KiB)
 MAX_MESSAGE_BYTES = 1024
 
 
@@ -80,9 +95,6 @@ def checkpoint_stream_id(checkpoint_dir: str) -> str:
     the same scope after recreation and silently dropped the first N
     replayed batches as duplicates.)
     """
-    import os
-    import uuid
-
     p = Path(checkpoint_dir) / ".cruncher-stream-id"
     p.parent.mkdir(parents=True, exist_ok=True)
     if p.exists():
@@ -208,31 +220,38 @@ class CrunchWorker:
     def process_batch(self, ids_df: DataFrame, batch_id: int) -> None:
         # T3 SLOWMODE throttle (worker.js:31-32,162-165)
         if self.slowmode_seconds > 0:
-            import time
-
             time.sleep(self.slowmode_seconds)
-        ids = ids_df.select(F.col(ids_df.columns[0]).alias("value"))
+        col = ids_df.columns[0]
+        values = [r[0] for r in ids_df.select(col).collect() if r[0] is not None]
 
-        # S7 poison-message guard (worker.js:129-137)
-        poisoned = ids.where(F.length("value") > MAX_MESSAGE_BYTES)
-        ids = ids.where(F.length("value") <= MAX_MESSAGE_BYTES)
-        if self.quarantine_dir is not None:
+        # S7 poison-message guard (worker.js:129-137), measured in bytes
+        sizes = [len(str(v).encode("utf-8")) for v in values]
+        poisoned = [v for v, n in zip(values, sizes) if n > MAX_MESSAGE_BYTES]
+        ids = [v for v, n in zip(values, sizes) if n <= MAX_MESSAGE_BYTES]
+        if poisoned and self.quarantine_dir is not None:
             self._append_quarantine(poisoned, batch_id, reason="poison")
 
         # P2 reliability sampling (worker.js:139-143; uncompensated)
         if self.reliability < 1.0:
-            ids = ids.sample(fraction=self.reliability, seed=batch_id)
+            rng = random.Random(batch_id)
+            ids = [v for v in ids if rng.random() < self.reliability]
 
         # P6 in-batch dedup (worker.js:121,145)
-        ids = ids.dropDuplicates(["value"])
+        ids = list(dict.fromkeys(ids))
 
+        lid = self._ledger_id(batch_id)
         try:
-            delta = self.plan_fn(self.tables, ids.select("value"))
-            applied = self.point.merge(delta, batch_id=self._ledger_id(batch_id))
+            delta = self.plan_fn(self.tables, ids)
+            self.point.merge(delta, batch_id=lid)
             self.batches_processed += 1
-            if applied and self.notify_dir is not None:
+            if self.notify_dir is not None:
                 self._append_notify(batch_id)
         except Exception:
+            if lid in self.point.applied_batches():
+                # committed: the ids are crunched, so they are not failed.
+                # Re-raise so the source replays the batch; the replay is a
+                # ledger no-op that writes the missing notify.
+                raise
             # T4/S5: failed batch → DLQ, stream continues (the reference
             # republishes to QUEUE+"_failed" and NACKs)
             self.batches_failed += 1
@@ -241,28 +260,48 @@ class CrunchWorker:
             self._append_quarantine(ids, batch_id, reason="crunch_failed")
 
     # -- sinks --------------------------------------------------------------
+    # Driver-side pyarrow, not Spark jobs: each write is a few driver-local
+    # rows, and a python-list createDataFrame write pays a Python-worker
+    # spawn per cold core (~3.5 s at local[32] — see merge/upsert.py
+    # applied_batches). The files stay Spark-readable parquet.
 
-    def _append_quarantine(self, ids: DataFrame, batch_id: int, reason: str) -> None:
-        (
-            ids.withColumn("batch_id", F.lit(str(batch_id)))
-            .withColumn("reason", F.lit(reason))
-            .withColumn("quarantined_at", F.current_timestamp())
-            .write.mode("append")
-            .parquet(self.quarantine_dir)
+    def _append_quarantine(self, ids: list, batch_id: int, reason: str) -> None:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        if not ids:
+            return
+        out = Path(self.quarantine_dir)
+        out.mkdir(parents=True, exist_ok=True)
+        n = len(ids)
+        table = pa.table(
+            {
+                "value": pa.array([str(v) for v in ids], pa.string()),
+                "batch_id": [str(batch_id)] * n,
+                "reason": [reason] * n,
+                "quarantined_at": pa.array(
+                    [time.time_ns() // 1000] * n, pa.timestamp("us", tz="UTC")
+                ),
+            }
         )
+        # a hidden temp name, then a rename: readers never list a partial file
+        name = f"{reason}-{self._ledger_id(batch_id)}-{uuid.uuid4().hex[:8]}.parquet"
+        tmp = out / f".{name}.tmp"
+        pq.write_table(table, tmp)
+        os.replace(tmp, out / name)
 
     def _append_notify(self, batch_id: int) -> None:
         # S6: "crunch_update" to the topic exchange (worker.js:184-190).
-        # Driver-side pyarrow, not a Spark job: the notification is one
-        # driver-local row, and a python-list createDataFrame write pays
-        # a Python-worker spawn per cold core (~3.5 s at local[32] —
-        # see merge/upsert.py applied_batches). Unique filename per batch
-        # keeps appends atomic; format stays Spark-readable parquet.
+        # One file per ledger id: a replay of a committed batch writes it
+        # only when it is missing, so the write is idempotent.
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         Path(self.notify_dir).mkdir(parents=True, exist_ok=True)
         lid = self._ledger_id(batch_id)
+        path = Path(self.notify_dir) / f"notify-{lid}.parquet"
+        if path.exists():
+            return
         pq.write_table(
             pa.table(
                 {
@@ -271,7 +310,7 @@ class CrunchWorker:
                     "batch_id": [lid],
                 }
             ),
-            Path(self.notify_dir) / f"notify-{lid}.parquet",
+            path,
         )
 
     # -- stream wiring ------------------------------------------------------

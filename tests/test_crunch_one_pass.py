@@ -75,3 +75,30 @@ def test_delta_reads_facts_once(spark, crunch_tables, view, plan, arms):
     bound = sum(rows.values()) + arms * len(ids)
     got = _input_records(spark, group)
     assert 0 < got <= bound, f"{view}: {got} input records > bound {bound} ({rows})"
+
+
+def test_delta_scans_no_dimension_table(spark, crunch_tables):
+    """The dims are snapshotted once per process and enter each later plan
+    as literals: a warm delta reads no dimension table, only its facts and
+    the ``global_point_filters`` bridge."""
+    ids = [
+        r.api_id
+        for r in crunch_tables["participant"].select("api_id").limit(60).collect()
+    ]
+    phase_ids = [
+        r.id
+        for r in crunch_tables["participant_phases"].select("id").limit(60).collect()
+    ]
+    views = {
+        "global": (C.crunch_global_delta, ids),
+        "player": (C.crunch_player_delta, ids),
+        "hero_vs_hero": (C.crunch_hero_vs_hero_delta, ids),
+        "phases": (C.crunch_phases_delta, phase_ids),
+        "phases_bans": (C.crunch_phases_bans_delta, phase_ids),
+    }
+    dims = [d for d in DIMS if d != "global_point_filters"]
+    for view, (plan, batch) in views.items():
+        plan(crunch_tables, batch)  # warm the dimension snapshots
+        files = plan(crunch_tables, batch).inputFiles()
+        scanned = [d for d in dims if any(f"/{d}.parquet/" in f for f in files)]
+        assert not scanned, f"{view} scans {scanned}"

@@ -433,7 +433,7 @@ def test_stream_poison_and_dlq(spark, crunch_tables, tmp_path, id_stream_dir):
         # equal-mtime ties nondeterministically, so a positional "2nd
         # batch" can land on the poison-only batch — whose post-filter id
         # set is empty, quarantining 0 crunch_failed rows (observed flake)
-        if batch.count() > 0:
+        if len(batch) > 0:
             boom["n"] += 1
             if boom["n"] == 2:  # fail exactly one micro-batch
                 raise RuntimeError("injected crunch failure")
@@ -459,6 +459,105 @@ def test_stream_poison_and_dlq(spark, crunch_tables, tmp_path, id_stream_dir):
     assert "poison" in reasons and "crunch_failed" in reasons
     # every poisoned message is quarantined, none crunched
     assert dlq.where(F.col("reason") == "poison").count() == 1
+
+
+def _global_worker(spark, crunch_tables, tmp_path, name, **kw):
+    return CrunchWorker(
+        spark,
+        crunch_tables,
+        lambda tables, batch: crunch_global_delta(tables, batch, now=_now()),
+        _global_point(spark, tmp_path, name),
+        notify_dir=str(tmp_path / "notify"),
+        **kw,
+    )
+
+
+def _ids_df(spark, ids):
+    return spark.createDataFrame([(i,) for i in ids], "value string")
+
+
+def _played(point):
+    return point.read().agg(F.sum("played")).collect()[0][0]
+
+
+def test_clean_batch_writes_no_dlq(spark, crunch_tables, tmp_path):
+    """A batch without poisoned ids or failures writes nothing to the DLQ."""
+    worker = _global_worker(
+        spark, crunch_tables, tmp_path, "gp_clean",
+        quarantine_dir=str(tmp_path / "dlq"),
+    )
+    worker.process_batch(_ids_df(spark, _ids(crunch_tables, 20)), 0)
+    assert worker.batches_processed == 1 and worker.batches_failed == 0
+    assert not (tmp_path / "dlq").exists()
+
+
+def test_poison_guard_counts_utf8_bytes(spark, crunch_tables, tmp_path):
+    """The 1 KiB bound is in bytes (worker.js:129-137): 600 two-byte
+    characters are 1,200 bytes, so the id is quarantined, not crunched."""
+    poison = "é" * 600
+    worker = _global_worker(
+        spark, crunch_tables, tmp_path, "gp_bytes",
+        quarantine_dir=str(tmp_path / "dlq"),
+    )
+    worker.process_batch(_ids_df(spark, _ids(crunch_tables, 20) + [poison]), 0)
+    assert worker.batches_processed == 1 and worker.batches_failed == 0
+    dlq = spark.read.parquet(str(tmp_path / "dlq")).collect()
+    assert [(r.value, r.reason, r.batch_id) for r in dlq] == [(poison, "poison", "0")]
+    assert dlq[0].quarantined_at is not None
+
+
+def test_notify_failure_after_commit_is_not_dead_lettered(
+    spark, crunch_tables, tmp_path, monkeypatch
+):
+    """The merge committed, so a failing notify write must not send the
+    batch's ids to the DLQ as crunch_failed: the worker re-raises for a
+    replay instead."""
+    worker = _global_worker(
+        spark, crunch_tables, tmp_path, "gp_notify",
+        quarantine_dir=str(tmp_path / "dlq"),
+    )
+    orig = worker._append_notify
+    calls = {"n": 0}
+
+    def flaky(batch_id):
+        calls["n"] += 1
+        if calls["n"] == 1:
+            raise OSError("injected notify failure")
+        orig(batch_id)
+
+    monkeypatch.setattr(worker, "_append_notify", flaky)
+    with pytest.raises(OSError):
+        worker.process_batch(_ids_df(spark, _ids(crunch_tables, 20)), 0)
+    assert worker.batches_failed == 0
+    assert not (tmp_path / "dlq").exists()  # no crunch_failed rows
+    assert worker._ledger_id(0) in worker.point.applied_batches()
+
+
+def test_replay_after_notify_failure_writes_notify(
+    spark, crunch_tables, tmp_path, monkeypatch
+):
+    """The replay of a batch whose notify was lost is a ledger no-op that
+    still writes its ``notify-<ledger id>`` file."""
+    worker = _global_worker(spark, crunch_tables, tmp_path, "gp_renotify")
+    orig = worker._append_notify
+
+    def boom(batch_id):
+        raise OSError("injected notify failure")
+
+    batch = _ids_df(spark, _ids(crunch_tables, 20))
+    monkeypatch.setattr(worker, "_append_notify", boom)
+    with pytest.raises(OSError):
+        worker.process_batch(batch, 3)
+    played = _played(worker.point)
+    notify = tmp_path / "notify" / f"notify-{worker._ledger_id(3)}.parquet"
+    assert not notify.exists()
+
+    monkeypatch.setattr(worker, "_append_notify", orig)
+    worker.process_batch(batch, 3)  # redelivery
+    assert notify.exists()
+    assert _played(worker.point) == played  # the replay applied nothing
+    rows = spark.read.parquet(str(notify)).collect()
+    assert [(r.event, r.batch_id) for r in rows] == [("crunch_update", worker._ledger_id(3))]
 
 
 def test_restart_from_checkpoint_is_exactly_once(spark, crunch_tables, tmp_path):
