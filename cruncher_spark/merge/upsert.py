@@ -14,15 +14,23 @@ merge policies seen in the reference:
                    insert wins (updated_at in crunch_global.sql:68-87;
                    wins in crunch_phases.sql:95-156)
 
-Cost model — O(delta), like the reference's ``ON DUPLICATE KEY UPDATE``:
-state is laid out in ``num_buckets`` hash buckets of the merge key
-(``__bucket=N`` parquet partitions). A merge reads and rewrites ONLY the
-buckets the delta's keys hash into; every untouched bucket is hard-linked
-into the new state version (zero data movement, byte-identical files).
-On a production deployment the same role is played by Delta/Iceberg
-``MERGE INTO`` with data skipping on the merge key; this module gives the
-same semantics and the same O(delta·state/num_buckets) merge cost
-dependency-free over plain parquet.
+Cost model: state is laid out in ``num_buckets`` hash buckets of the
+merge key (``pt_bucket=N`` parquet partitions). A merge reads and
+rewrites the buckets the delta's keys hash into; every untouched bucket
+is hard-linked into the new state version (zero data movement,
+byte-identical files). On a production deployment the same role is
+played by Delta/Iceberg ``MERGE INTO`` with data skipping on the merge
+key; this module gives the same semantics over plain parquet.
+
+The bucket count is sized to the state, not fixed: a table starts at
+``num_buckets`` (default 1) and every merge doubles it while the stored
+bytes exceed one read split (``spark.sql.files.maxPartitionBytes``) per
+bucket. A 1000-id crunch batch carries ~1e4 keys and lands in every
+bucket of a small layout, so for the served views the count only decides
+how many files, tasks and footers a merge pays for: the fewest buckets
+that keep each one within a single read task. Once state spans many
+splits, a delta narrower than the key space hard-links the buckets it
+misses and a merge costs O(delta·state/num_buckets).
 
 When a delta's keys are UNIFORM over the key space (streaming ingest
 survivors), every bucket is touched and the bucketed rewrite degrades to
@@ -97,9 +105,11 @@ class PointTable:
     contractually non-NULL — a NULL key row is treated as absent by the
     merge presence checks); ``policies`` maps measure column →
     MergePolicy, defaulting to ADD (the dominant reference policy).
-    ``num_buckets`` fixes the hash-bucket layout at table creation; an
-    existing table's persisted bucket count always wins so the key→bucket
-    mapping stays stable for the table's lifetime.
+    ``num_buckets`` is the hash-bucket count a new table starts at (a
+    floor: bucketed merges double it as the state grows, see
+    :meth:`_grow_layout`). An existing table's persisted count always
+    wins over the handle's, and only a merge that rewrites every bucket
+    (a growth step, or :meth:`rebucket`) changes the key→bucket mapping.
     """
 
     #: LSM size-tiered compaction: fold the newest two runs while the
@@ -114,7 +124,7 @@ class PointTable:
         path: str,
         key: Sequence[str],
         policies: Mapping[str, MergePolicy] | None = None,
-        num_buckets: int = 32,
+        num_buckets: int = 1,
         retain_versions: int = 1,
         mode: str = "bucketed",
     ):
@@ -323,7 +333,9 @@ class PointTable:
         which is the reference's at-least-once behavior.
 
         Cost: reads/rewrites only the hash buckets containing the delta's
-        keys; all other buckets are hard-linked into the new version.
+        keys; all other buckets are hard-linked into the new version. A
+        one-bucket table, or a merge that grows the layout, rewrites every
+        bucket without first asking which ones the delta touches.
 
         Concurrency: merges SERIALIZE on an advisory flock held from the
         ledger read to the pointer flip. Without it, two same-process or
@@ -344,8 +356,8 @@ class PointTable:
         self, delta: DataFrame, batch_id: str | None, op_col: str | None
     ) -> bool:
         """The locked path shared by :meth:`merge` and :meth:`apply_cdc`
-        (``op_col`` set): ledger check, persisted-meta adoption, then the
-        mode's writer."""
+        (``op_col`` set): ledger check, persisted-meta adoption, layout
+        sizing, then the mode's writer."""
         with self.writer_lock():
             if batch_id is not None and batch_id in self.applied_batches():
                 return False
@@ -361,13 +373,19 @@ class PointTable:
                 self._append_run(cur, delta, batch_id)
                 return True
 
-            # The delta is consumed twice (bucket discovery + merge write,
-            # or the upsert and delete halves of a CDC batch); persist so
+            grown = self.mode == "bucketed" and self._grow_layout(cur)
+            # bucket discovery only pays when the delta can miss a bucket:
+            # one bucket, or a layout that grows, rewrites all of them
+            discover = self.mode == "bucketed" and not grown and self.num_buckets > 1
+            # A delta consumed twice (bucket discovery + merge write, or
+            # the upsert and delete halves of a CDC batch) is persisted so
             # the upstream plan runs once per batch.
-            delta = delta.persist()
+            twice = discover or op_col is not None
+            if twice:
+                delta = delta.persist()
             try:
                 if self.mode == "bucketed":
-                    self._merge_buckets(cur, delta, batch_id, op_col)
+                    self._merge_buckets(cur, delta, batch_id, op_col, discover)
                 else:
                     # LSM CDC: deletes and whole-row upserts need a key-
                     # unique view of state — fold the runs, apply, rewrite
@@ -377,8 +395,25 @@ class PointTable:
                     )
                     self._rewrite(cur, merged, batch_id)
             finally:
-                delta.unpersist()
+                if twice:
+                    delta.unpersist()
             return True
+
+    def _grow_layout(self, cur: Path | None) -> bool:
+        """Double ``num_buckets`` while ``cur``'s stored bytes exceed one
+        read split (the session's ``spark.sql.files.maxPartitionBytes``)
+        per bucket; True if the count grew. The bytes are summed on the
+        driver from the file sizes, so sizing runs no Spark job. The
+        count never shrinks: a smaller layout needs :meth:`rebucket`."""
+        if cur is None:
+            return False
+        state_bytes = self._parquet_bytes(cur / "data")
+        split = self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        n = self.num_buckets
+        while state_bytes > n * split:
+            n *= 2
+        grew, self.num_buckets = n != self.num_buckets, n
+        return grew
 
     def _merge_buckets(
         self,
@@ -386,19 +421,31 @@ class PointTable:
         delta: DataFrame,
         batch_id: str | None,
         op_col: str | None,
+        discover: bool,
     ) -> None:
-        # which buckets does this delta touch?
-        affected = sorted(
-            r[0]
-            for r in delta.select(self._bucket_expr().alias("b")).distinct().collect()
-        )
-        touched = [f"{_BUCKET_COL}={b}" for b in affected]
         stored = {} if cur is None else {
             d.name: d for d in (cur / "data").glob(f"{_BUCKET_COL}=*")
         }
+        if discover:
+            # which buckets does this delta touch?
+            touched = [
+                f"{_BUCKET_COL}={r[0]}"
+                for r in delta.select(self._bucket_expr().alias("b"))
+                .distinct()
+                .collect()
+            ]
+            # one shuffle partition per affected bucket → one coherent
+            # file per bucket dir (at cluster scale raise this factor)
+            parts = max(len(touched), 1)
+        else:
+            # every stored bucket is rewritten: one bucket, or a grown
+            # layout whose key→bucket map no longer matches the stored one
+            touched, parts = list(stored), self.num_buckets
         existing = [stored[b] for b in touched if b in stored]
         tgt = self._read_buckets(cur, existing) if existing else None
-        if not affected:
+        if discover and not touched and cur is not None:
+            # an empty delta leaves stored state as it is (on a fresh
+            # table it is written below, so its schema is recorded)
             merged = None
         elif op_col is not None:
             merged = self._apply_changes(tgt, delta, op_col)
@@ -408,9 +455,7 @@ class PointTable:
             cur,
             merged,
             schema=merged.schema.json() if merged is not None else None,
-            # one shuffle partition per affected bucket → one coherent
-            # file per bucket dir (at cluster scale raise this factor)
-            parts=max(len(affected), 1),
+            parts=parts,
             keep=[b for b in stored if b not in touched],
             batch_id=batch_id,
         )
@@ -538,7 +583,7 @@ class PointTable:
         return sorted((vdir / "data").glob("run=*"), key=self._run_seq)
 
     @staticmethod
-    def _run_bytes(d: Path) -> int:
+    def _parquet_bytes(d: Path) -> int:
         return sum(f.stat().st_size for f in d.rglob("*.parquet"))
 
     def _append_run(
@@ -574,8 +619,8 @@ class PointTable:
             if len(runs) < 2:
                 return
             need = (
-                self._run_bytes(runs[-2])
-                < self.LSM_FOLD_FACTOR * self._run_bytes(runs[-1])
+                self._parquet_bytes(runs[-2])
+                < self.LSM_FOLD_FACTOR * self._parquet_bytes(runs[-1])
                 or len(runs) > self.LSM_MAX_RUNS
             )
             if not need:
@@ -841,15 +886,17 @@ class PointTable:
     def rebucket(self, num_buckets: int) -> None:
         """Rewrite the table into a new hash-bucket layout, atomically.
 
-        The bucket count is the knob that keeps merges O(delta): a merge
-        rewrites ``state/num_buckets`` bytes per affected bucket, and a
-        delta of K distinct keys touches ``min(K, num_buckets)`` buckets.
-        A table created small (32 buckets) therefore degrades as state
-        grows — at 100 TB every merge would rewrite 3 TB buckets. The
-        operational recipe is the same as HBase region splitting or
-        Delta/Iceberg ``OPTIMIZE``-with-repartition: periodically scale
-        the layout to keep buckets in the hundreds-of-MB range
-        (``num_buckets ≈ state_bytes / 256 MB``).
+        A merge rewrites ``state/num_buckets`` bytes per affected bucket,
+        and a delta of K distinct keys touches ``min(K, num_buckets)``
+        buckets. Bucketed merges already grow the count on their own
+        (doubling past one ``spark.sql.files.maxPartitionBytes`` split
+        per bucket, :meth:`_grow_layout`) and never shrink it, so this is
+        for an explicit re-layout: shrinking a table written with more
+        buckets than its state needs (``rebucket(1)`` on a table written
+        at the old fixed 32 lets growth take over from one bucket), or
+        jumping ahead of growth before a known bulk load — the same
+        operation as HBase region splitting or Delta/Iceberg
+        ``OPTIMIZE``-with-repartition.
 
         Cost: one full read + partitioned rewrite of the state (run it
         off the merge path). The ledger is carried forward unchanged, so

@@ -414,7 +414,13 @@ class DedupIngest:
         if not self.decisions_dir.exists():
             # no batch has landed yet
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.schema(schema).parquet(str(self.decisions_dir))
+        # the batch=<scope> dirs are storage layout: partition discovery
+        # would append them as a fifth column the empty frame lacks
+        return (
+            self.spark.read.schema(schema)
+            .parquet(str(self.decisions_dir))
+            .select(self.ID, "dup_of", "via", "batch_id")
+        )
 
 
 class NearDupIngest(DedupIngest):

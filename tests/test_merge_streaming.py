@@ -811,6 +811,145 @@ def test_rebucket_online_with_concurrent_merge(spark, tmp_path):
     ) is False
 
 
+def _fold(*deltas):
+    out = {}
+    for d in deltas:
+        for k, n in d:
+            out[k] = out.get(k, 0) + n
+    return out
+
+
+def test_bucket_layout_grows_with_state_in_one_commit(spark, tmp_path):
+    """A bucketed table doubles its bucket count while the stored bytes
+    exceed one read split (``spark.sql.files.maxPartitionBytes``) per
+    bucket. The growing merge is one version that rewrites every row into
+    the new layout and carries the ledger forward; the version before it
+    still reads, a reopened handle adopts the new count, and an explicit
+    floor above what the state needs is kept."""
+    from pyspark.sql import functions as SF
+
+    conf = "spark.sql.files.maxPartitionBytes"
+    old_split = spark.conf.get(conf)
+    schema = "k int, n long"
+    d0 = [(i, i) for i in range(2000)]
+    d1 = [(i, 1) for i in range(0, 4000, 2)]
+    d2 = [(i, 5) for i in range(0, 4000, 7)]
+    pt = PointTable(spark, str(tmp_path / "pt"), key=["k"], retain_versions=2)
+    pt.merge(spark.createDataFrame(d0, schema), batch_id="d0")
+    assert pt.num_buckets == 1
+    try:
+        # a split a third of the stored state: the next merge must grow
+        split = PointTable._parquet_bytes(pt._current_version() / "data") // 3
+        spark.conf.set(conf, str(split))
+        before = pt._current_version()
+        n_old = pt.num_buckets
+        pt.merge(spark.createDataFrame(d1, schema), batch_id="d1")
+        cur = pt._current_version()
+        n_new = json.loads((cur / "meta.json").read_text())["num_buckets"]
+        assert pt.versions() == [int(before.name[2:]), int(cur.name[2:])]
+        assert int(cur.name[2:]) == int(before.name[2:]) + 1
+        # three splits of state: the next power of two of the old count
+        assert (n_old, n_new) == (1, 4)
+
+        # every key sits in the dir its hash names under the new count
+        stored = spark.read.parquet(str(cur / "data"))
+        misplaced = stored.where(
+            SF.col("pt_bucket") != SF.pmod(SF.hash("k"), SF.lit(n_new))
+        )
+        assert misplaced.count() == 0
+        assert stored.select("pt_bucket").distinct().count() > 1
+
+        assert {r.k: r.n for r in pt.read().collect()} == _fold(d0, d1)
+        assert pt.applied_batches() == {"d0", "d1"}
+        # the retained pre-growth version still reads
+        old = pt.read(version=int(before.name[2:]))
+        assert {r.k: r.n for r in old.collect()} == _fold(d0)
+
+        # an explicit floor of 4 over tiny state stays 4
+        small = PointTable(spark, str(tmp_path / "small"), key=["k"], num_buckets=4)
+        small.merge(spark.createDataFrame([(1, 1), (2, 2)], schema), batch_id="s0")
+        small.merge(spark.createDataFrame([(1, 1), (3, 3)], schema), batch_id="s1")
+        assert small.num_buckets == 4
+        meta = json.loads((small._current_version() / "meta.json").read_text())
+        assert meta["num_buckets"] == 4
+    finally:
+        spark.conf.set(conf, old_split)
+
+    # a reopened handle (default count 1) adopts the grown layout
+    reopened = PointTable(spark, str(tmp_path / "pt"), key=["k"])
+    reopened.merge(spark.createDataFrame(d2, schema), batch_id="d2")
+    assert reopened.num_buckets == n_new
+    meta = json.loads((reopened._current_version() / "meta.json").read_text())
+    assert meta["num_buckets"] == n_new
+    assert {r.k: r.n for r in reopened.read().collect()} == _fold(d0, d1, d2)
+    assert reopened.applied_batches() == {"d0", "d1", "d2"}
+
+
+def _jobs_in_group(spark, group, fn):
+    """How many Spark jobs ``fn()`` submits, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_one_bucket_merge_skips_bucket_discovery(spark, tmp_path):
+    """With one bucket every stored bucket is rewritten anyway, so the
+    merge does not run the delta's bucket-discovery collect: the same
+    merge submits fewer jobs than on a two-bucket table."""
+    schema = "k int, n long"
+    seed = [(i, 1) for i in range(200)]
+    delta = [(i, 2) for i in range(0, 300, 3)]
+    jobs = {}
+    for n in (1, 2):
+        pt = PointTable(spark, str(tmp_path / f"pt{n}"), key=["k"], num_buckets=n)
+        pt.merge(spark.createDataFrame(seed, schema), batch_id="seed")
+        jobs[n] = _jobs_in_group(
+            spark, f"discovery-{n}-{tmp_path.name}",
+            lambda: pt.merge(spark.createDataFrame(delta, schema), batch_id="delta"),
+        )
+        assert {r.k: r.n for r in pt.read().collect()} == _fold(seed, delta)
+    assert 0 < jobs[1] < jobs[2], jobs
+
+
+@pytest.mark.parametrize("buckets", [1, 4])
+def test_empty_delta_into_fresh_or_populated_table(spark, tmp_path, buckets):
+    """An empty delta into a fresh or a populated table commits its
+    ledger id and leaves readable state (the recorded-schema empty frame,
+    or the unchanged rows); the next merge folds normally. One bucket
+    skips bucket discovery, four run it and find no bucket."""
+    schema = "k int, n long"
+    empty = spark.createDataFrame([], schema)
+
+    fresh = PointTable(
+        spark, str(tmp_path / "fresh"), key=["k"], num_buckets=buckets
+    )
+    assert fresh.merge(empty, batch_id="e0") is True
+    assert fresh.applied_batches() == {"e0"}
+    got = fresh.read()
+    assert got.dtypes == [("k", "int"), ("n", "bigint")]
+    assert got.count() == 0
+    fresh.merge(spark.createDataFrame([(1, 3), (2, 4)], schema), batch_id="d1")
+    assert {r.k: r.n for r in fresh.read().collect()} == {1: 3, 2: 4}
+    assert fresh.applied_batches() == {"e0", "d1"}
+
+    full = PointTable(
+        spark, str(tmp_path / "full"), key=["k"], num_buckets=buckets
+    )
+    full.merge(spark.createDataFrame([(1, 1), (2, 2)], schema), batch_id="d0")
+    assert full.merge(empty, batch_id="e1") is True
+    assert full.applied_batches() == {"d0", "e1"}
+    assert {r.k: r.n for r in full.read().collect()} == {1: 1, 2: 2}
+    full.merge(spark.createDataFrame([(2, 5), (3, 7)], schema), batch_id="d2")
+    assert {r.k: r.n for r in full.read().collect()} == {1: 1, 2: 7, 3: 7}
+    assert full.num_buckets == buckets
+    assert full.applied_batches() == {"d0", "e1", "d2"}
+
+
 # ---------------------------------------------------------------------------
 # LSM (append + compact) merge mode — r7 VERDICT #1
 # ---------------------------------------------------------------------------

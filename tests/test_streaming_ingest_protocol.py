@@ -136,3 +136,24 @@ def test_crash_before_ledger_commit_replays_to_uncrashed_state(
 
     feed(ingest, b1, 1)  # the replay Structured Streaming would run
     assert _state(ingest) == want
+
+
+@pytest.mark.parametrize(
+    "case",
+    [_embedding_case, _image_case, _containment_case],
+    ids=["embedding", "image", "containment"],
+)
+def test_decisions_keep_their_declared_columns_once_state_lands(
+    spark, tmp_path, case
+):
+    """decisions() has one shape: the ``batch=<scope>`` dirs the decision
+    files are written under are not read back as a column."""
+    cls, feed, b0, b1 = case(spark)
+    ingest = cls(spark, str(tmp_path / "state"))
+    declared = [cls.ID, "dup_of", "via", "batch_id"]
+    assert ingest.decisions().columns == declared
+    feed(ingest, b0, 0)
+    feed(ingest, b1, 1)
+    dec = ingest.decisions()
+    assert dec.columns == declared
+    assert dec.count() > 0

@@ -300,3 +300,55 @@ def test_two_worker_cli_processes_concurrent(spark, crunch_dir, tmp_path):
     assert {r.routing_key for r in notifies.collect()} == {
         "cli_global", "cli_player"
     }
+
+
+def test_literal_script_worker_folds_one_batch(spark, crunch_dir, tmp_path):
+    """The path the default ``SCRIPT=crunch_global.sql`` selects (literal
+    SQL through sqlfront, into the served point table), driven by a small
+    in-repo script in the reference's dialect: one batch's point table is
+    the script's SELECT run once over those ids, in one bucket file."""
+    import json
+
+    from cruncher_spark.plans.crunch import GLOBAL_POINT_KEY, activable_item_ids
+    from cruncher_spark.worker import _script_specs
+
+    script = Path(__file__).parent / "scripts" / "crunch_global.sql"
+    tables = load_tables(spark, crunch_dir)
+    ids = _ids(tables, 50)
+    worker = build_worker(
+        spark,
+        tables,
+        {"QUEUE": "crunch", "SCRIPT": str(script),
+         "STATE_DIR": str(tmp_path / "state")},
+    )
+    keys_df = spark.createDataFrame([(i,) for i in ids], "value string")
+    worker.process_batch(keys_df, 0)
+    assert worker.batches_processed == 1 and worker.batches_failed == 0
+
+    item_ids = sorted(activable_item_ids(tables))
+    stmt = sqlfront.translate_script(
+        script.read_text(),
+        params={"participant_api_ids": ids},
+        item_ids=item_ids,
+        spark=spark,
+    )
+    expected = stmt.delta(
+        spark,
+        target_columns=_script_specs()["crunch_global.sql"].columns(item_ids),
+        drop=("id", "updated_at"),
+    )
+    got = worker.point.read()
+    assert _rounded(got) == _rounded(expected)
+    # one played per batch id that has stats and item rows
+    joined = tables["participant"].where(F.col("api_id").isin(ids))
+    for fact in ("participant_stats", "participant_items"):
+        joined = joined.join(
+            tables[fact].withColumnRenamed("participant_api_id", "api_id"), "api_id"
+        )
+    assert got.agg(F.sum("played")).first()[0] == joined.count() > 0
+    assert worker.point.key == list(GLOBAL_POINT_KEY)
+
+    # the served table's sized layout: one bucket, one file
+    cur = worker.point._current_version()
+    assert json.loads((cur / "meta.json").read_text())["num_buckets"] == 1
+    assert len(list((cur / "data").rglob("*.parquet"))) == 1

@@ -158,7 +158,10 @@ def _snapshot(ing) -> dict:
     def rows(df):
         return sorted(json.dumps(list(r), sort_keys=True) for r in df.collect())
 
-    return {"retained": rows(ing.retained()), "decisions": rows(ing.decisions())}
+    # the declared decision columns: older builds also returned the
+    # discovered batch=<scope> partition column
+    decisions = ing.decisions().select(ing.ID, "dup_of", "via", "batch_id")
+    return {"retained": rows(ing.retained()), "decisions": rows(decisions)}
 
 
 def main(argv: list[str]) -> int:
