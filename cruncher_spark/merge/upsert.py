@@ -23,14 +23,18 @@ played by Delta/Iceberg ``MERGE INTO`` with data skipping on the merge
 key; this module gives the same semantics over plain parquet.
 
 The bucket count is sized to the state, not fixed: a table starts at
-``num_buckets`` (default 1) and every merge doubles it while the stored
-bytes exceed one read split (``spark.sql.files.maxPartitionBytes``) per
-bucket. A 1000-id crunch batch carries ~1e4 keys and lands in every
-bucket of a small layout, so for the served views the count only decides
-how many files, tasks and footers a merge pays for: the fewest buckets
-that keep each one within a single read task. Once state spans many
-splits, a delta narrower than the key space hard-links the buckets it
-misses and a merge costs O(delta·state/num_buckets).
+``num_buckets`` (default 1) and a merge doubles it while the stored
+bytes exceed ``spark.sql.files.openCostInBytes`` (4 MiB) per bucket
+(:meth:`PointTable._grow_layout`). A 1000-id crunch batch carries ~1e4
+keys and lands in every bucket, so for the worker's batches the count
+decides how many files and write tasks a merge pays for, not how many
+bytes it rewrites: state under 4 MiB is one file, larger state is
+written by one task per bucket, in parallel. A narrow delta (a
+``POST /crunch`` of a few ids) rewrites only the buckets its keys touch,
+at most ~4 MiB per key; under 4 MiB of state that is all of it.
+Against the old fixed 32 buckets (MIGRATION.md, "Point-table layout"),
+measured on four cores: worker batches merge faster up to ~15 MB of
+state and ~25% slower at ~140 MB; one-id deltas slower at ~15 MB.
 
 When a delta's keys are UNIFORM over the key space (streaming ingest
 survivors), every bucket is touched and the bucketed rewrite degrades to
@@ -335,7 +339,10 @@ class PointTable:
         Cost: reads/rewrites only the hash buckets containing the delta's
         keys; all other buckets are hard-linked into the new version. A
         one-bucket table, or a merge that grows the layout, rewrites every
-        bucket without first asking which ones the delta touches.
+        bucket without first asking which ones the delta touches. A
+        caller that knows on the driver that the delta is empty (an empty
+        id list) records the batch with :meth:`record_batch` instead,
+        which rewrites nothing.
 
         Concurrency: merges SERIALIZE on an advisory flock held from the
         ledger read to the pointer flip. Without it, two same-process or
@@ -361,11 +368,7 @@ class PointTable:
         with self.writer_lock():
             if batch_id is not None and batch_id in self.applied_batches():
                 return False
-            cur = self._current_version()
-            if cur is not None:
-                meta = self._meta(cur)
-                self.num_buckets = int(meta["num_buckets"])
-                self.mode = meta.get("mode", "bucketed")
+            cur = self._adopt_layout()
 
             if self.mode == "lsm" and op_col is None:
                 # append-only: the delta is consumed exactly once (the
@@ -399,18 +402,55 @@ class PointTable:
                     delta.unpersist()
             return True
 
+    def record_batch(self, batch_id: str) -> bool:
+        """Commit ``batch_id`` to the ledger without rows: the merge of a
+        delta the caller already knows is empty (a worker batch whose ids
+        were all poisoned or sampled out). Every stored bucket or run is
+        hard-linked forward, so no data is read or written and no Spark
+        job runs. Returns False if the id was already applied. The table
+        must exist: a fresh table takes its schema from a delta, so merge
+        the empty delta instead."""
+        with self.writer_lock():
+            if batch_id in self.applied_batches():
+                return False
+            cur = self._adopt_layout()
+            if cur is None:
+                raise FileNotFoundError(f"point table not initialized: {self.path}")
+            stored = [d.name for d in (cur / "data").iterdir() if d.is_dir()]
+            self._commit_version(cur, None, keep=stored, batch_id=batch_id)
+            return True
+
+    def _adopt_layout(self) -> Path | None:
+        """The current version, after taking its persisted bucket count
+        and mode over the handle's (None: the table is fresh)."""
+        cur = self._current_version()
+        if cur is not None:
+            meta = self._meta(cur)
+            self.num_buckets = int(meta["num_buckets"])
+            self.mode = meta.get("mode", "bucketed")
+        return cur
+
     def _grow_layout(self, cur: Path | None) -> bool:
-        """Double ``num_buckets`` while ``cur``'s stored bytes exceed one
-        read split (the session's ``spark.sql.files.maxPartitionBytes``)
-        per bucket; True if the count grew. The bytes are summed on the
-        driver from the file sizes, so sizing runs no Spark job. The
-        count never shrinks: a smaller layout needs :meth:`rebucket`."""
+        """Double ``num_buckets`` while ``cur``'s stored bytes exceed
+        ``spark.sql.files.openCostInBytes`` (4 MiB) per bucket; True if
+        the count grew.
+
+        That conf is Spark's estimate of a file's fixed cost in scanned
+        bytes, and the smallest split a file scan gives its own task. A
+        merge pays one write task and one file per bucket it rewrites,
+        so state under 4 MiB stays one file, and larger state is written
+        by one task per 2-4 MiB, in parallel. A delta of K keys touches at
+        most K buckets, so a narrow delta rewrites at most ~K x 4 MiB. The
+        bytes are summed on the driver from the file sizes, so sizing
+        runs no Spark job. The count never shrinks: a smaller layout
+        needs :meth:`rebucket`."""
         if cur is None:
             return False
         state_bytes = self._parquet_bytes(cur / "data")
-        split = self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        conf = self.spark._jsparkSession.sessionState().conf()
+        bucket_bytes = conf.filesOpenCostInBytes()
         n = self.num_buckets
-        while state_bytes > n * split:
+        while state_bytes > n * bucket_bytes:
             n *= 2
         grew, self.num_buckets = n != self.num_buckets, n
         return grew
@@ -434,13 +474,10 @@ class PointTable:
                 .distinct()
                 .collect()
             ]
-            # one shuffle partition per affected bucket → one coherent
-            # file per bucket dir (at cluster scale raise this factor)
-            parts = max(len(touched), 1)
         else:
             # every stored bucket is rewritten: one bucket, or a grown
             # layout whose key→bucket map no longer matches the stored one
-            touched, parts = list(stored), self.num_buckets
+            touched = list(stored)
         existing = [stored[b] for b in touched if b in stored]
         tgt = self._read_buckets(cur, existing) if existing else None
         if discover and not touched and cur is not None:
@@ -455,7 +492,6 @@ class PointTable:
             cur,
             merged,
             schema=merged.schema.json() if merged is not None else None,
-            parts=parts,
             keep=[b for b in stored if b not in touched],
             batch_id=batch_id,
         )
@@ -770,19 +806,18 @@ class PointTable:
         *,
         schema: str | None = None,
         run: str | None = None,
-        parts: int | None = None,
         keep: Sequence[str] = (),
         batch_id: str | None = None,
     ) -> None:
         """Write version ``cur + 1`` complete, then flip CURRENT to it.
 
         ``frame`` (if any) is written bucket-partitioned into ``data/``
-        or, for an LSM run, ``data/<run>`` over ``parts`` shuffle
-        partitions (default: one per bucket); ``keep`` names the dirs of
-        ``cur/data`` (buckets or runs) hard-linked in unchanged; the
-        ledger is ``cur``'s plus ``batch_id``; ``meta.json`` records the
-        layout and the row ``schema`` (None: ``cur``'s, carried forward),
-        which keeps an emptied table readable. Any leftover dir of a
+        or, for an LSM run, ``data/<run>``, one write task and one file
+        per bucket; ``keep`` names the dirs of ``cur/data`` (buckets or
+        runs) hard-linked in unchanged; the ledger is ``cur``'s plus
+        ``batch_id``; ``meta.json`` records the layout and the row
+        ``schema`` (None: ``cur``'s, carried forward), which keeps an
+        emptied table readable. Any leftover dir of a
         crashed earlier attempt at the same version number is replaced.
         """
         self.path.mkdir(parents=True, exist_ok=True)
@@ -796,9 +831,13 @@ class PointTable:
 
         if frame is not None:
             out = new / "data" / run if run else new / "data"
+            # hash-partitioning the key over num_buckets puts bucket b in
+            # partition b (both are pmod(murmur3(key), num_buckets)), so
+            # no two buckets share a write task; partitioning on the
+            # bucket column would hash bucket ids again and collide
             (
                 frame.withColumn(_BUCKET_COL, self._bucket_expr())
-                .repartition(parts or self.num_buckets, F.col(_BUCKET_COL))
+                .repartition(self.num_buckets, *[F.col(k) for k in self.key])
                 .write.mode("append")
                 .partitionBy(_BUCKET_COL)
                 .parquet(str(out))
@@ -889,8 +928,8 @@ class PointTable:
         A merge rewrites ``state/num_buckets`` bytes per affected bucket,
         and a delta of K distinct keys touches ``min(K, num_buckets)``
         buckets. Bucketed merges already grow the count on their own
-        (doubling past one ``spark.sql.files.maxPartitionBytes`` split
-        per bucket, :meth:`_grow_layout`) and never shrink it, so this is
+        (doubling past ``spark.sql.files.openCostInBytes`` of state per
+        bucket, :meth:`_grow_layout`) and never shrink it, so this is
         for an explicit re-layout: shrinking a table written with more
         buckets than its state needs (``rebucket(1)`` on a table written
         at the old fixed 32 lets growth take over from one bucket), or
@@ -913,10 +952,9 @@ class PointTable:
         for the duration of the rewrite.
         """
         with self.writer_lock():
-            cur = self._current_version()
+            cur = self._adopt_layout()
             if cur is None:
                 raise FileNotFoundError(f"point table not initialized: {self.path}")
-            self.mode = self._meta(cur).get("mode", "bucketed")
             state = self.read().persist()
             try:
                 self.num_buckets = num_buckets

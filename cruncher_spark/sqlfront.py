@@ -520,20 +520,22 @@ def translate_script(
     (reproducible backfills; frozen-fixture tests) — default is the
     live current_date(), matching the reference's MySQL behavior.
     """
-    sql = expand_stubs(sql_text, item_ids or [])
+    # comments go first: a quote inside a ``--`` comment would otherwise
+    # open a literal for the quote-aware parameter pass and hide every
+    # later ``:param`` from it
+    sql = _strip_line_comments(expand_stubs(sql_text, item_ids or []))
     sql = substitute_params(sql, params or {}, allow_missing=defer_params)
     sql = rewrite_dialect(sql, curdate=curdate)
     if spark is not None:
         sql = coerce_bool_sums(sql, spark)
-    stripped = _strip_line_comments(sql)
 
-    if re.match(r"\s*update\b", stripped, re.I):
-        return _translate_update_join(stripped)
+    if re.match(r"\s*update\b", sql, re.I):
+        return _translate_update_join(sql)
 
-    m = re.match(r"\s*insert\s+into\s+`?(\w+)`?\s*(?=select\b)", stripped, re.I)
+    m = re.match(r"\s*insert\s+into\s+`?(\w+)`?\s*(?=select\b)", sql, re.I)
     if not m:
         raise ValueError("expected INSERT INTO <tbl> SELECT or UPDATE..JOIN")
-    target, body = m.group(1), stripped[m.end():]
+    target, body = m.group(1), sql[m.end():]
     odku_ix = _find_top(body, r"\bon\s+duplicate\s+key\s+update\b")
     if odku_ix < 0:
         select_sql, policies = body, {}

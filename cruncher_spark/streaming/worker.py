@@ -241,8 +241,12 @@ class CrunchWorker:
 
         lid = self._ledger_id(batch_id)
         try:
-            delta = self.plan_fn(self.tables, ids)
-            self.point.merge(delta, batch_id=lid)
+            if ids or not self.point.exists():
+                self.point.merge(self.plan_fn(self.tables, ids), batch_id=lid)
+            else:
+                # no id survived the guard and the sample: nothing to
+                # fold, so record the batch without rewriting the state
+                self.point.record_batch(lid)
             self.batches_processed += 1
             if self.notify_dir is not None:
                 self._append_notify(batch_id)

@@ -3,9 +3,9 @@
 -- one batch (the :participant_api_ids list the worker inlines), the
 -- item-use stubs, and an additive ON DUPLICATE KEY UPDATE tail. It groups
 -- on the hero, game mode and role of each participant and fills the other
--- key columns with constants, so it needs no dimension table. Keep this
--- header free of quote characters: parameters are substituted before
--- comments are stripped.
+-- key columns with constants, so it needs no dimension table. The
+-- worker's id list is bound after comments are stripped, so a comment
+-- may hold quote characters: it's not a literal.
 insert low_priority into global_point
 select
   null,

@@ -821,15 +821,15 @@ def _fold(*deltas):
 
 def test_bucket_layout_grows_with_state_in_one_commit(spark, tmp_path):
     """A bucketed table doubles its bucket count while the stored bytes
-    exceed one read split (``spark.sql.files.maxPartitionBytes``) per
-    bucket. The growing merge is one version that rewrites every row into
-    the new layout and carries the ledger forward; the version before it
+    exceed ``spark.sql.files.openCostInBytes`` per bucket. The growing
+    merge is one version that rewrites every row into the new layout, one
+    file per bucket, and carries the ledger forward; the version before it
     still reads, a reopened handle adopts the new count, and an explicit
     floor above what the state needs is kept."""
     from pyspark.sql import functions as SF
 
-    conf = "spark.sql.files.maxPartitionBytes"
-    old_split = spark.conf.get(conf)
+    conf = "spark.sql.files.openCostInBytes"
+    old_cost = spark.conf.get(conf)
     schema = "k int, n long"
     d0 = [(i, i) for i in range(2000)]
     d1 = [(i, 1) for i in range(0, 4000, 2)]
@@ -838,9 +838,9 @@ def test_bucket_layout_grows_with_state_in_one_commit(spark, tmp_path):
     pt.merge(spark.createDataFrame(d0, schema), batch_id="d0")
     assert pt.num_buckets == 1
     try:
-        # a split a third of the stored state: the next merge must grow
-        split = PointTable._parquet_bytes(pt._current_version() / "data") // 3
-        spark.conf.set(conf, str(split))
+        # a bucket size a third of the stored state: the next merge grows
+        bucket = PointTable._parquet_bytes(pt._current_version() / "data") // 3
+        spark.conf.set(conf, str(bucket))
         before = pt._current_version()
         n_old = pt.num_buckets
         pt.merge(spark.createDataFrame(d1, schema), batch_id="d1")
@@ -848,16 +848,20 @@ def test_bucket_layout_grows_with_state_in_one_commit(spark, tmp_path):
         n_new = json.loads((cur / "meta.json").read_text())["num_buckets"]
         assert pt.versions() == [int(before.name[2:]), int(cur.name[2:])]
         assert int(cur.name[2:]) == int(before.name[2:]) + 1
-        # three splits of state: the next power of two of the old count
+        # three buckets' worth of state: the next power of two of 1
         assert (n_old, n_new) == (1, 4)
 
-        # every key sits in the dir its hash names under the new count
+        # every key sits in the dir its hash names under the new count,
+        # and each bucket dir holds one file, written by its own task
+        # (``part-<task partition>-…``): no two buckets share a task
         stored = spark.read.parquet(str(cur / "data"))
         misplaced = stored.where(
             SF.col("pt_bucket") != SF.pmod(SF.hash("k"), SF.lit(n_new))
         )
         assert misplaced.count() == 0
-        assert stored.select("pt_bucket").distinct().count() > 1
+        files = [list(d.glob("*.parquet")) for d in (cur / "data").glob("pt_bucket=*")]
+        assert len(files) == n_new and all(len(f) == 1 for f in files)
+        assert len({f[0].name.split("-")[1] for f in files}) == n_new
 
         assert {r.k: r.n for r in pt.read().collect()} == _fold(d0, d1)
         assert pt.applied_batches() == {"d0", "d1"}
@@ -873,7 +877,7 @@ def test_bucket_layout_grows_with_state_in_one_commit(spark, tmp_path):
         meta = json.loads((small._current_version() / "meta.json").read_text())
         assert meta["num_buckets"] == 4
     finally:
-        spark.conf.set(conf, old_split)
+        spark.conf.set(conf, old_cost)
 
     # a reopened handle (default count 1) adopts the grown layout
     reopened = PointTable(spark, str(tmp_path / "pt"), key=["k"])
@@ -948,6 +952,75 @@ def test_empty_delta_into_fresh_or_populated_table(spark, tmp_path, buckets):
     assert {r.k: r.n for r in full.read().collect()} == {1: 1, 2: 7, 3: 7}
     assert full.num_buckets == buckets
     assert full.applied_batches() == {"d0", "e1", "d2"}
+
+
+def _data_inodes(pt):
+    return {
+        str(f.relative_to(pt._current_version())): f.stat().st_ino
+        for f in (pt._current_version() / "data").rglob("*.parquet")
+    }
+
+
+@pytest.mark.parametrize("mode", ["bucketed", "lsm"])
+def test_record_batch_keeps_every_stored_file(spark, tmp_path, mode):
+    """Recording a batch known to carry no rows commits its ledger id and
+    hard-links every stored file forward: no Spark job, no rewrite, and
+    the persisted layout wins over the handle's."""
+    schema = "k int, n long"
+    path = str(tmp_path / "pt")
+    pt = PointTable(spark, path, key=["k"], num_buckets=4, mode=mode)
+    pt.merge(spark.createDataFrame([(i, i) for i in range(50)], schema), "d0")
+    before = _data_inodes(pt)
+    handle = PointTable(spark, path, key=["k"])  # default layout: 1 bucket
+    jobs = _jobs_in_group(
+        spark, f"record-{mode}-{tmp_path.name}",
+        lambda: handle.record_batch("e1"),
+    )
+    assert jobs == 0
+    assert _data_inodes(handle) == before
+    assert handle.applied_batches() == {"d0", "e1"}
+    assert handle.record_batch("e1") is False
+    meta = json.loads((handle._current_version() / "meta.json").read_text())
+    assert (meta["num_buckets"], meta["mode"]) == (4, mode)
+    assert {r.k: r.n for r in handle.read().collect()} == {i: i for i in range(50)}
+    handle.merge(spark.createDataFrame([(1, 5)], schema), "d2")
+    assert handle.read().where("k = 1").first().n == 6
+
+    with pytest.raises(FileNotFoundError):
+        PointTable(spark, str(tmp_path / "fresh"), key=["k"]).record_batch("e0")
+
+
+def test_worker_batch_without_ids_rewrites_nothing(spark, crunch_tables, tmp_path):
+    """A batch whose every id is poisoned merges nothing into the served
+    one-bucket table: the first such batch on a fresh table still records
+    the view's schema, and one into populated state keeps every stored
+    file (no O(state) rewrite) while the ledger and notify advance."""
+    from cruncher_spark.streaming.worker import served_point_table
+
+    poison = "x" * 2000
+    worker = CrunchWorker(
+        spark,
+        crunch_tables,
+        lambda tables, batch: crunch_global_delta(tables, batch, now=_now()),
+        served_point_table(
+            spark, str(tmp_path / "gp"), GLOBAL_POINT_KEY, GLOBAL_POLICIES
+        ),
+        notify_dir=str(tmp_path / "notify"),
+        quarantine_dir=str(tmp_path / "dlq"),
+    )
+    worker.process_batch(_ids_df(spark, [poison]), 0)
+    empty = worker.point.read()
+    assert empty.count() == 0 and "played" in empty.columns
+
+    worker.process_batch(_ids_df(spark, _ids(crunch_tables, 20)), 1)
+    played = _played(worker.point)
+    before = _data_inodes(worker.point)
+    worker.process_batch(_ids_df(spark, [poison]), 2)
+    assert _data_inodes(worker.point) == before
+    assert worker.point.applied_batches() == {"0", "1", "2"}
+    assert worker.batches_processed == 3 and worker.batches_failed == 0
+    assert len(list((tmp_path / "notify").iterdir())) == 3
+    assert _played(worker.point) == played
 
 
 # ---------------------------------------------------------------------------

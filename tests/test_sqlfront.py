@@ -124,6 +124,31 @@ def test_insert_parse_drops_dead_order_by():
     assert stmt.target == "t" and stmt.policies == {"n": MergePolicy.ADD}
 
 
+def test_quote_in_comment_does_not_hide_later_params():
+    """A quote character inside a ``--`` comment is not a literal: the
+    parameters after it are still bound, in the batch-deferred pass too."""
+    script = (
+        "-- the worker's id list, don't edit by hand\n"
+        "insert into `t` select p.k, count(*) as n from p\n"
+        "where p.api_id in (:participant_api_ids) -- ids' batch\n"
+        "and p.mode = :mode group by p.k\n"
+        "on duplicate key update n = n + values(n)"
+    )
+    stmt = sqlfront.translate_script(
+        script, params={"participant_api_ids": ["a", "b"], "mode": 3}
+    )
+    assert "in ('a', 'b')" in stmt.select_sql
+    assert "p.mode = 3" in stmt.select_sql
+    assert ":" not in stmt.select_sql
+    deferred = sqlfront.translate_script(
+        script, params={"mode": 3}, defer_params=True
+    )
+    bound = sqlfront.substitute_params(
+        deferred.select_sql, {"participant_api_ids": ["a"]}
+    )
+    assert "in ('a')" in bound and "p.mode = 3" in bound
+
+
 # ---------------------------------------------------------------------------
 # integration: the reference's own scripts (read-only; skipped if absent)
 # ---------------------------------------------------------------------------
