@@ -45,8 +45,8 @@ merge semantics exactly; see the "LSM (append + compact) merge mode"
 section below.
 
 Commit protocol — every writer (bucketed merge, LSM run append, LSM
-run fold, whole-state rewrite for LSM CDC and ``rebucket``) goes through
-one method, :meth:`PointTable._commit_version`. It builds a complete new
+run fold and ``rebucket``'s whole-state rewrite) goes through one
+method, :meth:`PointTable._commit_version`. It builds a complete new
 version directory ``v_NNNNNN/`` — the written frame, hard links to the
 kept bucket/run dirs of the previous version, the ``ledger/`` of applied
 batch ids and ``meta.json`` — then atomically renames ``CURRENT.tmp``
@@ -273,10 +273,10 @@ class PointTable:
             )
         data = vdir / "data"
         if not any(data.rglob("*.parquet")):
-            # state emptied (CDC deletes removed every key, or only
-            # zero-survivor batches so far): no parquet to infer from —
-            # rebuild the empty frame from the schema the version's
-            # commit recorded in meta.json
+            # no rows stored (only empty deltas, e.g. zero-survivor
+            # batches, so far): no parquet to infer from — rebuild the
+            # empty frame from the schema the version's commit recorded
+            # in meta.json
             schema = self._recorded_schema(vdir)
             if schema is not None:
                 return self.spark.createDataFrame([], schema)
@@ -357,48 +357,29 @@ class PointTable:
         so a caller already holding it for a larger critical section can
         merge without deadlocking.
         """
-        return self._apply(delta, batch_id, op_col=None)
-
-    def _apply(
-        self, delta: DataFrame, batch_id: str | None, op_col: str | None
-    ) -> bool:
-        """The locked path shared by :meth:`merge` and :meth:`apply_cdc`
-        (``op_col`` set): ledger check, persisted-meta adoption, layout
-        sizing, then the mode's writer."""
         with self.writer_lock():
             if batch_id is not None and batch_id in self.applied_batches():
                 return False
             cur = self._adopt_layout()
 
-            if self.mode == "lsm" and op_col is None:
+            if self.mode == "lsm":
                 # append-only: the delta is consumed exactly once (the
                 # run write) — no bucket-discovery job, no persist
                 self._append_run(cur, delta, batch_id)
                 return True
 
-            grown = self.mode == "bucketed" and self._grow_layout(cur)
+            grown = self._grow_layout(cur)
             # bucket discovery only pays when the delta can miss a bucket:
-            # one bucket, or a layout that grows, rewrites all of them
-            discover = self.mode == "bucketed" and not grown and self.num_buckets > 1
-            # A delta consumed twice (bucket discovery + merge write, or
-            # the upsert and delete halves of a CDC batch) is persisted so
-            # the upstream plan runs once per batch.
-            twice = discover or op_col is not None
-            if twice:
+            # one bucket, or a layout that grows, rewrites all of them.
+            # Discovery and the merge write both read the delta, so it is
+            # persisted and the upstream plan runs once per batch.
+            discover = not grown and self.num_buckets > 1
+            if discover:
                 delta = delta.persist()
             try:
-                if self.mode == "bucketed":
-                    self._merge_buckets(cur, delta, batch_id, op_col, discover)
-                else:
-                    # LSM CDC: deletes and whole-row upserts need a key-
-                    # unique view of state — fold the runs, apply, rewrite
-                    stored = cur is not None and any((cur / "data").rglob("*.parquet"))
-                    merged = self._apply_changes(
-                        self.read() if stored else None, delta, op_col
-                    )
-                    self._rewrite(cur, merged, batch_id)
+                self._merge_buckets(cur, delta, batch_id, discover)
             finally:
-                if twice:
+                if discover:
                     delta.unpersist()
             return True
 
@@ -460,7 +441,6 @@ class PointTable:
         cur: Path | None,
         delta: DataFrame,
         batch_id: str | None,
-        op_col: str | None,
         discover: bool,
     ) -> None:
         stored = {} if cur is None else {
@@ -484,8 +464,6 @@ class PointTable:
             # an empty delta leaves stored state as it is (on a fresh
             # table it is written below, so its schema is recorded)
             merged = None
-        elif op_col is not None:
-            merged = self._apply_changes(tgt, delta, op_col)
         else:
             merged = delta if tgt is None else self._merge_frames(tgt, delta)
         self._commit_version(
@@ -509,12 +487,7 @@ class PointTable:
             reader = reader.schema(schema)
         return reader.parquet(*[str(p) for p in buckets])
 
-    def _merge_frames(
-        self,
-        tgt: DataFrame,
-        src: DataFrame,
-        policy_override: MergePolicy | None = None,
-    ) -> DataFrame:
+    def _merge_frames(self, tgt: DataFrame, src: DataFrame) -> DataFrame:
         t = tgt.select([F.col(c).alias(f"_t_{c}") for c in tgt.columns])
         s = src.select([F.col(c).alias(f"_s_{c}") for c in src.columns])
         cond = None
@@ -532,7 +505,7 @@ class PointTable:
             if c in self.key:
                 out.append(F.coalesce(tc, sc).alias(c))
                 continue
-            policy = policy_override or self.policies.get(c, MergePolicy.ADD)
+            policy = self.policies.get(c, MergePolicy.ADD)
             if policy in (MergePolicy.ADD, MergePolicy.ADD_NULLSAFE):
                 # ADD: NULL + x = NULL, matching MySQL (crunch_global.sql:69).
                 # Doubles add through DECIMAL(28,6) so accumulated state is
@@ -743,61 +716,7 @@ class PointTable:
             expr = last_v
         return expr.cast(dtype).alias(c)
 
-    # -- CDC apply -----------------------------------------------------------
-
-    def apply_cdc(
-        self, changes: DataFrame, op_col: str = "op", batch_id: str | None = None
-    ) -> bool:
-        """Apply a change-data-capture batch: row images with an op column.
-
-        ``op`` per row: ``'upsert'`` — the row image replaces the stored
-        row entirely (insert if absent); ``'delete'`` — the key is removed
-        from state. This is the Debezium/Delta-CDF apply shape the
-        accumulator ``merge`` can't express (the reference's MySQL has
-        ``DELETE`` but its worker never deletes — this is the engine-
-        completeness upgrade). Changes must be key-unique, pre-compacted
-        to the LAST image per key (the standard CDC consumer contract —
-        compact upstream with ``row_number() over (partition by key order
-        by source offset desc) = 1``).
-
-        Same locked path, ledger and commit as :meth:`merge`. Bucketed:
-        the same bucket merge — only the buckets containing changed keys
-        are read/rewritten (a bucket emptied by deletes simply disappears
-        from the new version), every untouched bucket hard-links forward.
-        LSM: fold-then-rewrite into ONE run — O(state), not O(delta). CDC
-        is a correctness surface there, not the ingest hot path; a
-        deployment mixing high-rate CDC with LSM accumulation should keep
-        CDC-heavy tables in bucketed mode (the mode exists per table for
-        exactly this trade).
-        """
-        return self._apply(changes, batch_id, op_col=op_col)
-
-    def _apply_changes(
-        self, tgt: DataFrame | None, changes: DataFrame, op_col: str
-    ) -> DataFrame:
-        """``tgt``'s rows (None: nothing stored) after a CDC batch: deleted
-        keys anti-joined away, upserted row images replacing whole rows."""
-        ups = changes.where(F.col(op_col) == "upsert").drop(op_col)
-        if tgt is None:
-            return ups
-        dels = changes.where(F.col(op_col) == "delete").select(*self.key)
-        kept = tgt.join(dels, self.key, "left_anti")
-        return self._merge_frames(kept, ups, policy_override=MergePolicy.OVERWRITE)
-
     # -- commit -------------------------------------------------------------
-
-    def _rewrite(
-        self, cur: Path, state: DataFrame, batch_id: str | None = None
-    ) -> None:
-        """Commit ``state`` as the table's whole content in the current
-        layout, keeping nothing of ``cur`` (LSM: one consolidated run)."""
-        self._commit_version(
-            cur,
-            state,
-            schema=state.schema.json(),
-            run="run=000000" if self.mode == "lsm" else None,
-            batch_id=batch_id,
-        )
 
     def _commit_version(
         self,
@@ -816,9 +735,9 @@ class PointTable:
         per bucket; ``keep`` names the dirs of ``cur/data`` (buckets or
         runs) hard-linked in unchanged; the ledger is ``cur``'s plus
         ``batch_id``; ``meta.json`` records the layout and the row
-        ``schema`` (None: ``cur``'s, carried forward), which keeps an
-        emptied table readable. Any leftover dir of a
-        crashed earlier attempt at the same version number is replaced.
+        ``schema`` (None: ``cur``'s, carried forward), which keeps a
+        table with no rows readable. Any leftover dir of a crashed
+        earlier attempt at the same version number is replaced.
         """
         self.path.mkdir(parents=True, exist_ok=True)
         cur_n = int(cur.name.split("_")[1]) if cur is not None else 0
@@ -958,6 +877,13 @@ class PointTable:
             state = self.read().persist()
             try:
                 self.num_buckets = num_buckets
-                self._rewrite(cur, state)
+                # the whole state in the new layout, keeping nothing of
+                # cur (LSM: one consolidated run)
+                self._commit_version(
+                    cur,
+                    state,
+                    schema=state.schema.json(),
+                    run="run=000000" if self.mode == "lsm" else None,
+                )
             finally:
                 state.unpersist()

@@ -372,6 +372,12 @@ def score_topk_arrow(
     import numpy as np
 
     q_rows = queries.select(id_col, vec_col).collect()
+    if not q_rows:
+        # no query has a neighbor (numpy cannot shape a 0-row matrix
+        # from an empty list)
+        return vectors.sparkSession.createDataFrame(
+            [], "query_id long, neighbor_id long, rank int, cos double"
+        )
     q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
     q_mat = np.array([[float(x) for x in r[1]] for r in q_rows], dtype=np.float64)
     q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))

@@ -642,9 +642,7 @@ _CMS_H_PROBE = (
 
 
 def _cms_rc(key: F.Column, r: int) -> F.Column:
-    """(row, counter) struct for one CMS hash row — shared by the batch
-    gate and the streaming windowed sketch (streaming/windows.py) so
-    their sketches are bit-compatible."""
+    """(row, counter) struct for one CMS hash row of the batch gate."""
     return F.struct(
         F.lit(r).alias("r"),
         (portable_hash64(key.cast("string"), salt=f"cms{r}") % _CMS_W).alias(

@@ -2450,7 +2450,8 @@ def _domain_token_cap_oracle(sf_dir: str) -> str:
         "SELECT sum(len(string_split(text, ' '))) FROM read_parquet('"
         f"{sf_dir}/documents.parquet')"
     ).fetchone()[0]
-    cap = -(-int(total) * _DOMCAP_PCT // 100)  # ceil, integer-exact
+    # an empty corpus sums to NULL: no tokens, cap 0, no rows
+    cap = -(-int(total or 0) * _DOMCAP_PCT // 100)  # ceil, integer-exact
     h = _oracle_hash("CAST(doc_id AS VARCHAR)", _DOMCAP_SALT)
     return f"""
     WITH t AS (SELECT doc_id, source,
@@ -2489,7 +2490,8 @@ def domain_token_cap_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     total = docs.select(
         F.sum(F.size(F.split(F.col("text"), " "))).alias("t")
     ).collect()[0]["t"]
-    cap = -(-int(total) * _DOMCAP_PCT // 100)
+    # an empty corpus sums to NULL: no tokens, cap 0, no rows
+    cap = -(-int(total or 0) * _DOMCAP_PCT // 100)
     return domain_token_cap(docs, cap, salt=_DOMCAP_SALT)
 
 

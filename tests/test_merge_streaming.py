@@ -1182,25 +1182,36 @@ def test_lsm_crash_mid_compaction_recovers(spark, tmp_path, monkeypatch):
     assert len(l._run_dirs(l._current_version())) <= 2
 
 
-def test_lsm_cdc_fold_then_rewrite(spark, tmp_path):
-    from cruncher_spark.merge.upsert import PointTable
-
+def test_lsm_rebucket_consolidates_then_merge_folds(spark, tmp_path):
+    """rebucket on an LSM table rewrites the folded state as one run in
+    the new layout with the ledger carried forward; a later merge appends
+    onto that run and the size-tiered compaction folds the two."""
     l = PointTable(
         spark, str(tmp_path / "lsm"), key=["id"],
         policies={"n": MergePolicy.ADD}, num_buckets=2, mode="lsm",
     )
-    l.merge(spark.createDataFrame([(1, 1), (2, 2)], "id long, n long"), batch_id="m0")
-    l.merge(spark.createDataFrame([(1, 1), (3, 3)], "id long, n long"), batch_id="m1")
-    cdc = spark.createDataFrame(
-        [(1, 100, "upsert"), (2, None, "delete"), (4, 4, "upsert")],
-        "id long, n long, op string",
-    )
-    assert l.apply_cdc(cdc, batch_id="cdc1") is True
-    assert {r.id: r.n for r in l.read().collect()} == {1: 100, 3: 3, 4: 4}
-    assert l.apply_cdc(cdc, batch_id="cdc1") is False
-    # post-CDC merges keep working on the consolidated run
-    l.merge(spark.createDataFrame([(4, 1)], "id long, n long"), batch_id="m2")
-    assert {r.id: r.n for r in l.read().collect()} == {1: 100, 3: 3, 4: 5}
+    l.merge(spark.range(400).selectExpr("id", "id AS n"), batch_id="m0")
+    l.merge(spark.createDataFrame([(1, 1), (500, 5)], "id long, n long"), batch_id="m1")
+    assert [r.name for r in l._run_dirs(l._current_version())] == [
+        "run=000000", "run=000001",
+    ]
+    before = {r.id: r.n for r in l.read().collect()}
+
+    l.rebucket(1)
+    assert [r.name for r in l._run_dirs(l._current_version())] == ["run=000000"]
+    assert (l.mode, l.num_buckets) == ("lsm", 1)
+    assert {r.id: r.n for r in l.read().collect()} == before
+    assert l.applied_batches() == {"m0", "m1"}
+    assert l.merge(
+        spark.createDataFrame([(1, 1)], "id long, n long"), batch_id="m1"
+    ) is False
+
+    # a same-sized delta breaks the size invariant: the appended run is
+    # folded into the consolidated one
+    l.merge(spark.range(400).selectExpr("id", "1 AS n"), batch_id="m2")
+    assert [r.name for r in l._run_dirs(l._current_version())] == ["run=000000"]
+    after = {r.id: r.n for r in l.read().collect()}
+    assert after == {k: v + (1 if k < 400 else 0) for k, v in before.items()}
 
 
 def test_lsm_persisted_mode_wins(spark, tmp_path):
@@ -1330,13 +1341,12 @@ def _meta(num_buckets, mode, nullable):
 
 
 def test_on_disk_layout_is_pinned(spark, tmp_path):
-    """Every writer's on-disk output, literally: bucketed merge, CDC and
-    rebucket; LSM append, size-tiered fold and CDC rewrite. A state dir
+    """Every writer's on-disk output, literally: bucketed merge and
+    rebucket; LSM append, size-tiered fold and rebucket. A state dir
     written by one build of this module must be readable and resumable
     by the next, so the version names, dir tree, meta.json (including
     which schema each writer records) and ledger may not drift."""
     s = "id long, n long"
-    ops = s + ", op string"
 
     b = PointTable(
         spark, str(tmp_path / "b"), key=["id"],
@@ -1358,22 +1368,12 @@ def test_on_disk_layout_is_pinned(spark, tmp_path):
         _meta(4, "bucketed", nullable=True),
         ["m1", "m2"],
     )
-    b.apply_cdc(
-        spark.createDataFrame([(2, 20, "upsert"), (3, None, "delete")], ops),
-        batch_id="c1",
-    )
+    b.rebucket(2)
     assert _layout(b) == (
         "v_000003",
         {"data": 0, "data/pt_bucket=0": 1, "data/pt_bucket=1": 1, "ledger": 1},
-        _meta(4, "bucketed", nullable=True),
-        ["c1", "m1", "m2"],
-    )
-    b.rebucket(2)
-    assert _layout(b) == (
-        "v_000004",
-        {"data": 0, "data/pt_bucket=0": 1, "data/pt_bucket=1": 1, "ledger": 1},
         _meta(2, "bucketed", nullable=True),
-        ["c1", "m1", "m2"],
+        ["m1", "m2"],
     )
 
     l = PointTable(
@@ -1409,13 +1409,40 @@ def test_on_disk_layout_is_pinned(spark, tmp_path):
         _meta(2, "lsm", nullable=False),
         ["a1", "a2", "a3"],
     )
-    l.apply_cdc(
-        spark.createDataFrame([(1, 7, "upsert"), (501, None, "delete")], ops),
-        batch_id="c1",
-    )
+    # rebucket: the folded state rewritten as one run in the new layout,
+    # ledger carried forward unchanged
+    l.rebucket(1)
     assert _layout(l) == (
         "v_000005",
-        {"data": 0, **run0, "ledger": 1},
-        _meta(2, "lsm", nullable=True),
-        ["a1", "a2", "a3", "c1"],
+        {"data": 0, "data/run=000000": 0, "data/run=000000/pt_bucket=0": 1,
+         "ledger": 1},
+        _meta(1, "lsm", nullable=True),
+        ["a1", "a2", "a3"],
     )
+
+
+def _state(pt):
+    return {r.k: (r.n, r.tag) for r in pt.read().collect()}
+
+
+def test_time_travel_retention(spark, tmp_path):
+    """retain_versions keeps historical versions readable (hard-linked, so
+    shared bucket files cost no extra storage) and GCs past the window."""
+    pt = PointTable(
+        spark, str(tmp_path / "tt"), key=["k"],
+        policies={"n": MergePolicy.ADD, "tag": MergePolicy.OVERWRITE},
+        num_buckets=4, retain_versions=2,
+    )
+    pt.merge(spark.createDataFrame([(1, 10, "a")], "k long, n long, tag string"))
+    pt.merge(spark.createDataFrame([(1, 5, "a")], "k long, n long, tag string"))
+    pt.merge(spark.createDataFrame([(2, 7, "b")], "k long, n long, tag string"))
+
+    assert pt.versions() == [2, 3]  # v1 GC'd past the 2-version window
+    assert _state(pt) == {1: (15, "a"), 2: (7, "b")}
+    # time travel: version 2 predates key 2's arrival
+    old = {r.k: (r.n, r.tag) for r in pt.read(version=2).collect()}
+    assert old == {1: (15, "a")}
+    import pytest as _pytest
+
+    with _pytest.raises(FileNotFoundError):
+        pt.read(version=1)

@@ -54,6 +54,35 @@ def test_arrow_topk_matches_expression_topk(emb):
     assert len(expr) > 0
 
 
+def test_arrow_topk_empty_query_set_is_empty(emb):
+    from cruncher_spark.operators.similarity import score_topk_arrow
+
+    out = score_topk_arrow(emb, emb.filter(F.col("vec_id") < 0), k=3)
+    assert out.columns == ["query_id", "neighbor_id", "rank", "cos"]
+    assert out.collect() == []
+
+
+def test_domain_token_cap_empty_corpus(spark, tmp_path):
+    """A zero-row corpus sums its tokens to NULL: both engines read that
+    as a cap of 0 and return no rows instead of raising."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from cruncher_spark.plans import query_map
+    from cruncher_spark.plans.registry import QUERIES
+
+    docs = pq.read_table(f"{SF_DIR}/documents.parquet").slice(0, 0)
+    pq.write_table(docs, tmp_path / "documents.parquet")
+    assert query_map()["domain_token_cap"](spark, str(tmp_path)).collect() == []
+    sql = QUERIES["domain_token_cap"].oracle(str(tmp_path))
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/documents.parquet')"
+    )
+    assert con.execute(sql).fetchall() == []
+
+
 def test_prefix_filter_is_lossless(docs):
     from cruncher_spark.operators.dedup import (
         jaccard_pairs,
