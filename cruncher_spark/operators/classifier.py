@@ -48,15 +48,25 @@ def _round14(x: float) -> float:
     """Spark's ``round(double, 14)`` replicated exactly on the driver.
 
     Spark's Round over DoubleType evaluates
-    ``BigDecimal.valueOf(x).setScale(14, HALF_UP).toDouble``, and
-    ``BigDecimal.valueOf`` parses ``Double.toString``'s shortest
-    round-tripping decimal — the same decimal Python's ``repr`` emits —
-    so quantizing that decimal HALF_UP at 14 places reproduces the JVM
-    value bit-for-bit (verified over 5k random doubles plus tie values
-    at the 15th decimal in tests/test_classifier.py). Needed because the
-    per-round weight update moved driver-side (one collect per GD round,
-    no separate count job); weights must stay bit-identical to the lazy
-    unrolled form the oracle unrolls."""
+    ``BigDecimal(Double.toString(x)).setScale(14, HALF_UP).toDouble``;
+    this quantizes Python's ``repr`` decimal the same way. Needed because
+    the per-round weight update moved driver-side (one collect per GD
+    round, no separate count job); weights must stay bit-identical to the
+    lazy unrolled form the oracle unrolls.
+
+    The two decimals are not always the same: JDK 17's ``Double.toString``
+    is not always the shortest round-trip decimal. Measured on JDK
+    17.0.20, two sets of 30,006 random bit patterns had 97 and 84 values
+    whose decimal differs from ``repr``'s, every one with |x| > 2**53
+    (smallest 1.96e16) or subnormal; 60,000 doubles in the weight range
+    and 20,000 ties at the 15th decimal agreed. The rounded result agrees
+    even there (bit-for-bit against Spark over the second set): both
+    decimals round-trip to ``x``; above 2**53 they carry at most two
+    decimals, so ``setScale(14)`` is exact and gives ``x`` back; a
+    subnormal rounds to zero. ``BigDecimal`` has no negative zero, so a
+    negative ``x`` that rounds to zero comes back as ``0.0``, never
+    ``-0.0``; the ``+ 0.0`` below does the same. tests/test_classifier.py
+    compares the bits with Spark's."""
     if x != x or x in (float("inf"), float("-inf")):
         return x
     from decimal import ROUND_HALF_UP, Decimal, localcontext
@@ -67,7 +77,7 @@ def _round14(x: float) -> float:
             Decimal(repr(x)).quantize(
                 Decimal("1E-14"), rounding=ROUND_HALF_UP
             )
-        )
+        ) + 0.0
 
 
 def hashed_doc_features(
@@ -116,8 +126,8 @@ def train_logreg(
 
     ``checkpoint=False`` keeps the whole unrolled iteration lazy —
     value-identical (pinned by test) but with the real multi-round plan
-    visible to ``explain``; the audit form plan audits consume
-    (the pagerank lazy-form discipline, VERDICT r5 next #1).
+    visible to ``explain``; tests use it as the reference the execution
+    path must match.
 
     ``checkpoint=True`` (the execution path) holds the weight vector on
     the DRIVER instead — ``dim + 1`` doubles, bounded by model size, the
@@ -137,7 +147,7 @@ def train_logreg(
     spark = feats.sparkSession
     if checkpoint:
         return _train_logreg_driver_loop(feats, labels, dim, iters, lr, id_col)
-    cut = lambda df: df  # noqa: E731 - lazy audit form
+    cut = lambda df: df  # noqa: E731 - lazy form
     n = labels.agg(F.count(F.lit(1)).alias("n"))
     w = cut(
         spark.range(dim + 1).select(

@@ -238,12 +238,12 @@ def triangle_count_plan(
 ) -> DataFrame:
     """The LAZY single-row triangle plan — no persist, no execution.
 
-    Exists so plan audits (tests/test_plan_invariants.py, PLANS.md) can
-    inspect the real six-join shape: the executable wrapper
-    :func:`triangle_count` computes eagerly through persisted edge
-    caches and returns literals, which hides the plan. Running THIS form
-    re-evaluates the edge lineage per consumer — use the wrapper for
-    actual computation.
+    The registered ``triangle_count`` query runs this form, and
+    tests/test_plan_invariants.py inspects its six-join shape: the eager
+    wrapper :func:`triangle_count` computes through persisted edge caches
+    and returns literals. Running THIS form re-evaluates the edge lineage
+    per consumer, which AQE's ReuseExchange dedups; the wrapper serves
+    edge lists whose upstream is too expensive to recompute.
     """
     stats, _ = _triangle_stats_parts(edges, u, v, persist=False)
     return stats
@@ -253,7 +253,7 @@ def _triangle_stats_parts(
     edges: DataFrame, u: str, v: str, persist: bool
 ) -> tuple[DataFrame, DataFrame]:
     """(single-row stats plan, oriented-edge table) — shared by the lazy
-    audit form and the eager executable wrapper."""
+    plan and the eager executable wrapper."""
     deg = (
         edges.select(F.col(u).alias("x"))
         .unionAll(edges.select(F.col(v).alias("x")))
@@ -325,7 +325,7 @@ def triangle_count(edges: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
     unpersisted before returning (ADVICE r4: returning a lazy plan over
     the caches leaked them for the session lifetime). The returned
     DataFrame is rebuilt from JVM literals — no Python-worker spawn;
-    :func:`triangle_count_plan` exposes the lazy shape for plan audits.
+    :func:`triangle_count_plan` is the lazy form.
     """
     edges = edges.persist()
     stats, directed = _triangle_stats_parts(edges, u, v, persist=True)

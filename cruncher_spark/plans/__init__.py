@@ -1,17 +1,13 @@
 from cruncher_spark.plans.registry import (
     QUERIES,
-    audit_form_map,
     oracle_map,
     query_map,
     register,
-    register_audit_form,
 )
 
 __all__ = [
     "QUERIES",
-    "audit_form_map",
     "oracle_map",
     "query_map",
     "register",
-    "register_audit_form",
 ]

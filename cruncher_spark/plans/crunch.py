@@ -198,7 +198,8 @@ def _batch_join(df: DataFrame, key: str, batch_ids) -> DataFrame:
     """P1 batch-key restriction (crunch_global.sql:63). Python lists become
     one parsed ``key IN (…)`` fragment (pushed into the scan; a
     ``Column.isin`` builds one gateway node per id, ~0.5 s per 1000 ids);
-    DataFrames become a semi join (the scale path)."""
+    DataFrames become a semi join: the scale path, and how
+    ``perfbench/run.py`` seeds its bulk state (70k ids in one delta)."""
     if isinstance(batch_ids, DataFrame):
         other = batch_ids.toDF(key)
         return df.join(other, key, "left_semi")

@@ -33,7 +33,7 @@ from cruncher_spark.operators.similarity import (
     score_topk_arrow,
     threshold_neighbor_counts,
 )
-from cruncher_spark.plans.registry import QUERIES, register, register_audit_form
+from cruncher_spark.plans.registry import QUERIES, register
 from cruncher_spark.session import tune
 from cruncher_spark.sources import Star, fan_out
 
@@ -1345,6 +1345,21 @@ _CCOS = (
 )
 
 
+def _quantizer_sample(
+    sample: list[tuple[int, list[float]]],
+) -> list[tuple[int, list[float]]]:
+    """The sample the IVF centroids and PQ codebooks are fitted on, as the
+    Spark plans and the oracles both take it. An empty embeddings table
+    samples no vector; it gets the ``EMB_DIM`` unit vectors instead, so
+    the fits still seed their 16 centroids (codewords) and both engines'
+    SQL stays well-formed. With no row to assign, every IVF/PQ query over
+    an empty table is empty whatever the centroids are, which is DuckDB's
+    answer."""
+    if sample:
+        return sample
+    return [(i, [float(i == j) for j in range(EMB_DIM)]) for i in range(EMB_DIM)]
+
+
 def _ivf_fitted_centroids_duckdb(sf_dir: str) -> list[list[float]]:
     """The oracle's copy of the quantizer fit: same deterministic sample
     (every 4th vec_id, id-sorted), same numpy Lloyd iterations, therefore
@@ -1360,7 +1375,9 @@ def _ivf_fitted_centroids_duckdb(sf_dir: str) -> list[list[float]]:
         + f"{sf_dir}/embeddings.parquet') WHERE vec_id % {_IVF_SAMPLE_EVERY} = 0 "
         "ORDER BY vec_id"
     ).fetchall()
-    return fit_ivf_centroids([(r[0], list(r[1])) for r in rows], _IVF_K)
+    return fit_ivf_centroids(
+        _quantizer_sample([(r[0], list(r[1])) for r in rows]), _IVF_K
+    )
 
 
 def _ivf_oracle(sf_dir: str) -> str:
@@ -1593,7 +1610,9 @@ def _fitted_centroids(raw: DataFrame, sf_dir: str) -> list[list[float]]:
     cents = _IVF_FIT_CACHE.get(key)
     if cents is None:
         cents = fit_ivf_centroids(
-            centroid_sample(raw, "vec_id", "embedding", every=_IVF_SAMPLE_EVERY),
+            _quantizer_sample(
+                centroid_sample(raw, "vec_id", "embedding", every=_IVF_SAMPLE_EVERY)
+            ),
             _IVF_K,
         )
         while len(_IVF_FIT_CACHE) >= _FIT_CACHE_MAX:  # bounded; no unbounded growth
@@ -3297,7 +3316,7 @@ def _pq_codebooks(sf_dir: str) -> list:
             "ORDER BY vec_id"
         ).fetchall()
         books = fit_pq_codebooks(
-            [(r[0], list(r[1])) for r in rows], _PQ_M, _PQ_KW
+            _quantizer_sample([(r[0], list(r[1])) for r in rows]), _PQ_M, _PQ_KW
         )
         while len(_PQ_FIT_CACHE) >= _FIT_CACHE_MAX:
             _PQ_FIT_CACHE.pop(next(iter(_PQ_FIT_CACHE)))
@@ -4175,31 +4194,13 @@ def logreg_quality_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no feats checkpoint here (optimization r12): the driver-loop trainer
     # checkpoints the joined (id, bucket, x, y) table itself, so a second
     # materialization of the feature table would be pure overhead — feats
-    # has no consumer besides training in this gate. The AUDIT form stays
-    # lazy for plan audits.
+    # has no consumer besides training in this gate.
     feats = hashed_doc_features(docs, dim=_LR_DIM, salt="lrfeat")
     labels = docs.select(
         "doc_id", (F.col("lang") == "en").cast("long").alias("y")
     )
     return train_logreg(
         feats, labels, dim=_LR_DIM, iters=_LR_ITERS, lr=_LR_RATE
-    )
-
-
-@register_audit_form("logreg_quality")
-def logreg_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy unrolled-GD plan (checkpoint=False) — what plan audits
-    inspect instead of the eager form's checkpoint-scan plan; value-
-    identical by tests/test_classifier.py."""
-    tune(spark)
-    docs = fan_out(Star(spark, sf_dir).documents)
-    feats = hashed_doc_features(docs, dim=_LR_DIM, salt="lrfeat")
-    labels = docs.select(
-        "doc_id", (F.col("lang") == "en").cast("long").alias("y")
-    )
-    return train_logreg(
-        feats, labels, dim=_LR_DIM, iters=_LR_ITERS, lr=_LR_RATE,
-        checkpoint=False,
     )
 
 
@@ -4238,7 +4239,7 @@ _PR_ORACLE = _LOGREG_CTES + f""",
     doc="Classifier-quality measurement as a first-class query (the "
     "logreg sibling of ann_ivf_recall): train the hashed-feature "
     "logistic regression exactly as logreg_quality does, score the "
-    "corpus with score_logreg, and sweep "
+    "corpus over the trainer's checkpointed feature table, and sweep "
     f"{len(_PR_THRESHOLDS)} decision thresholds into a "
     "precision/recall/F1 table vs the training labels — the threshold-"
     "selection table a curation pipeline reads before gating on the "
@@ -4249,23 +4250,8 @@ _PR_ORACLE = _LOGREG_CTES + f""",
     "rounded to 6.",
 )
 def quality_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _pr_curve(spark, sf_dir, checkpoint=True)
-
-
-@register_audit_form("quality_pr_curve")
-def quality_pr_curve_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy form (no feature checkpoint, checkpoint=False training) for
-    plan audits — same convention as logreg_quality_audit; value-
-    identical (tests/test_plan_invariants.py audit-form equality)."""
-    return _pr_curve(spark, sf_dir, checkpoint=False)
-
-
-def _pr_curve(
-    spark: SparkSession, sf_dir: str, checkpoint: bool
-) -> DataFrame:
     from cruncher_spark.operators.classifier import (
         _margin_terms as _lr_margin_terms,
-        score_logreg,
         train_logreg_array,
     )
 
@@ -4275,36 +4261,27 @@ def _pr_curve(
     labels = docs.select(
         "doc_id", (F.col("lang") == "en").cast("long").alias("y")
     )
-    if checkpoint:
-        # execution path (optimization r12): driver-held weights — one
-        # action per GD round — and scoring aggregates over the trainer's
-        # checkpointed (id, bucket, x, y) table (margin sum + the label in
-        # the SAME groupBy: no weight join, no labels re-join, no second
-        # feature materialization); bit-identical to the lazy form below
-        # (audit-form equality test)
-        w_arr, fy = train_logreg_array(
-            feats, labels, dim=_LR_DIM, iters=_LR_ITERS, lr=_LR_RATE
+    # driver-held weights (one action per GD round), and scoring
+    # aggregates over the trainer's checkpointed (id, bucket, x, y) table:
+    # margin sum and label in the SAME groupBy, so no weight join, no
+    # labels re-join and no second feature materialization
+    w_arr, fy = train_logreg_array(
+        feats, labels, dim=_LR_DIM, iters=_LR_ITERS, lr=_LR_RATE
+    )
+    scored = (
+        fy.groupBy("doc_id")
+        .agg(
+            F.sum(_lr_margin_terms(w_arr)).cast("double").alias("margin"),
+            F.min("y").alias("y"),
         )
-        scored = (
-            fy.groupBy("doc_id")
-            .agg(
-                F.sum(_lr_margin_terms(w_arr)).cast("double").alias("margin"),
-                F.min("y").alias("y"),
-            )
-            .select(
-                "doc_id",
-                F.round(
-                    F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("margin"))), 9
-                ).alias("score"),
-                "y",
-            )
+        .select(
+            "doc_id",
+            F.round(
+                F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("margin"))), 9
+            ).alias("score"),
+            "y",
         )
-    else:
-        weights = train_logreg(
-            feats, labels, dim=_LR_DIM, iters=_LR_ITERS, lr=_LR_RATE,
-            checkpoint=False,
-        )
-        scored = score_logreg(feats, weights).join(labels, "doc_id")
+    )
     th = spark.createDataFrame(
         [(float(t),) for t in _PR_THRESHOLDS], "t double"
     )

@@ -34,32 +34,6 @@ class Query:
 
 QUERIES: dict[str, Query] = {}
 
-#: lazy plan-audit stand-ins for queries whose EXECUTABLE form is an
-#: eager wrapper (persisted caches + literal/checkpoint results, which
-#: hide the real plan from `df.explain`): same semantics, same registry
-#: name, but built from the operators' lazy `*_plan` forms. Consumed by
-#: tools/plan_audit.py; value-equivalence to the registered query is
-#: pinned by tests/test_plan_invariants.py. (VERDICT r5 next #1)
-AUDIT_FORMS: dict[str, SparkQuery] = {}
-
-
-def register_audit_form(name: str):
-    """Decorator: provide the lazy plan-audit form for query ``name``."""
-
-    def deco(fn: SparkQuery) -> SparkQuery:
-        AUDIT_FORMS[name] = fn
-        return fn
-
-    return deco
-
-
-def audit_form_map() -> dict[str, SparkQuery]:
-    _load_all()
-    missing = set(AUDIT_FORMS) - set(QUERIES)
-    if missing:
-        raise RuntimeError(f"audit forms without a registered query: {missing}")
-    return dict(AUDIT_FORMS)
-
 #: total registered queries across all plan modules. _load_all() asserts
 #: this after importing, so a silently-shrunken registry (a plan module
 #: failing to import for an environmental reason a bare `import` would

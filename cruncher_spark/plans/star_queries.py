@@ -22,7 +22,7 @@ from cruncher_spark.operators import (
     grouping_sets_sql,
     interval_join,
 )
-from cruncher_spark.plans.registry import register, register_audit_form
+from cruncher_spark.plans.registry import register
 from cruncher_spark.session import tune
 from cruncher_spark.sources import Star
 
@@ -723,7 +723,7 @@ def triangle_count_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _co_order_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical u<v parts-co-ordered-together edge set (shared by the
-    graph queries and their lazy plan-audit forms)."""
+    graph queries)."""
     star = _star(spark, sf_dir)
     li = star.lineitem.where(F.col("l_orderkey") % 10 == 0).select(
         "l_orderkey", "l_partkey"
@@ -736,16 +736,6 @@ def _co_order_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("pa").alias("u"), F.col("pb").alias("v"))
         .distinct()
     )
-
-
-@register_audit_form("triangle_count")
-def triangle_count_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy six-join wedge plan (operators/graph.py triangle_count_plan)
-    — what plan audits inspect instead of the eager wrapper's literal
-    result plan (VERDICT r5 next #1)."""
-    from cruncher_spark.operators.graph import triangle_count_plan
-
-    return triangle_count_plan(_co_order_edges(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -818,19 +808,6 @@ def _pagerank_top10(pr: DataFrame) -> DataFrame:
     top = pr.orderBy(F.desc("pr"), F.asc("id")).limit(10)
     w = Window.orderBy(F.desc("pr"), F.asc("id"))
     return top.withColumn("rk", F.row_number().over(w)).select("id", "rk", "pr")
-
-
-@register_audit_form("pagerank_topk")
-def pagerank_topk_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lazy unrolled 3-round iteration plan (operators/graph.py
-    pagerank_plan) — what plan audits inspect instead of the eager
-    wrapper's checkpoint-scan plan (VERDICT r5 next #1)."""
-    from cruncher_spark.operators.graph import pagerank_plan
-
-    pr = pagerank_plan(
-        _co_order_edges(spark, sf_dir), iters=_PR_ITERS, damping=0.85
-    )
-    return _pagerank_top10(pr)
 
 
 # ---------------------------------------------------------------------------

@@ -91,7 +91,7 @@ def test_round14_matches_spark_round(spark):
 
     vals = [
         2.5e-14, -2.5e-14, 7.5e-14, -7.5e-14, 1.5e-14, -1.5e-14,
-        5e-15, -5e-15, 0.0, -0.0, 0.1 + 0.2, 1 / 3, -1 / 3,
+        5e-15, -5e-15, 0.0, -0.0, -1e-16, -4e-15, 0.1 + 0.2, 1 / 3, -1 / 3,
         0.999999999999995, -0.999999999999995, 1.000000000000005,
         123.456789012345678, 2 ** -50, 1.0000000000000049e-1,
     ]
@@ -110,7 +110,10 @@ def test_round14_matches_spark_round(spark):
         for r in df.select("i", F.round("x", 14).alias("r")).collect()
     }
     for i, v in enumerate(vals):
-        assert got[i] == _round14(v), (v, got[i], _round14(v))
+        # bits, not ==: -0.0 == 0.0, but Spark never returns -0.0
+        assert struct.pack("d", got[i]) == struct.pack("d", _round14(v)), (
+            v, got[i], _round14(v)
+        )
 
 
 def test_trainer_runs_iters_actions_no_count_job(labeled_docs):

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import pytest
 
+from cruncher_spark import observe
 from cruncher_spark.plans import crunch as C
 
 FACTS = ("participant", "participant_stats", "participant_items")
@@ -19,30 +20,6 @@ DIMS = (
     "hero", "role", "region", "game_mode", "skill_tier", "series", "filter",
     "build", "item", "global_point_filters",
 )
-
-
-def _input_records(spark, group: str) -> int:
-    """Summed ``inputRecords`` of the completed stages of ``group``'s jobs."""
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    store = sc._jsc.sc().statusStore()
-    no_status = jvm.java.util.ArrayList()
-    no_quantiles = sc._gateway.new_array(jvm.double, 0)
-    jobs = store.jobsList(None)
-    total = 0
-    for i in range(jobs.size()):
-        job = jobs.apply(i)
-        g = job.jobGroup()
-        if not (g.isDefined() and g.get() == group):
-            continue
-        ids = job.stageIds()
-        for k in range(ids.size()):
-            attempts = store.stageData(ids.apply(k), False, no_status, False, no_quantiles)
-            for a in range(attempts.size()):
-                sd = attempts.apply(a)
-                if sd.status().toString() == "COMPLETE":
-                    total += sd.inputRecords()
-    return total
 
 
 @pytest.mark.parametrize(
@@ -58,22 +35,16 @@ def test_delta_reads_facts_once(spark, crunch_tables, view, plan, arms):
         r.api_id
         for r in crunch_tables["participant"].select("api_id").limit(120).collect()
     ]
-    batch = spark.createDataFrame([(i,) for i in ids], "value string")
-    plan(crunch_tables, batch).collect()  # warm the dimension-id cache
+    plan(crunch_tables, ids).collect()  # warm the dimension snapshots
     group = f"one-pass-{view}"
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        plan(crunch_tables, batch).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    with observe.job_group(spark, group):
+        plan(crunch_tables, ids).collect()
 
     rows = {t: crunch_tables[t].count() for t in FACTS + DIMS}
     # one stats row and at most one items row per participant: the
     # checkpointed base has at most one row per batch id
     bound = sum(rows.values()) + arms * len(ids)
-    got = _input_records(spark, group)
+    got = observe.group_totals(spark, group)["input_rows"]
     assert 0 < got <= bound, f"{view}: {got} input records > bound {bound} ({rows})"
 
 

@@ -891,14 +891,11 @@ def test_bucket_layout_grows_with_state_in_one_commit(spark, tmp_path):
 
 def _jobs_in_group(spark, group, fn):
     """How many Spark jobs ``fn()`` submits, counted by job group."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
+    from cruncher_spark import observe
+
+    with observe.job_group(spark, group):
         fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return observe.group_totals(spark, group)["jobs"]
 
 
 def test_one_bucket_merge_skips_bucket_discovery(spark, tmp_path):

@@ -2047,3 +2047,45 @@ def test_quality_pr_curve_invariants(spark):
             assert abs(r.prec - round(r.tp / r.n_pred, 6)) < 1e-12
     for a, b in zip(rows, rows[1:]):
         assert b.n_pred <= a.n_pred and b.tp <= a.tp
+
+
+@pytest.fixture(scope="module")
+def empty_emb_dir(tmp_path_factory):
+    """sf0.001's embeddings table with zero rows, schema kept."""
+    import pyarrow.parquet as pq
+
+    out = tmp_path_factory.mktemp("empty_emb")
+    empty = pq.read_table(f"{SF_DIR}/embeddings.parquet").slice(0, 0)
+    pq.write_table(empty, out / "embeddings.parquet")
+    return str(out)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "ann_ivf_topk",
+        "ann_ivf_multiprobe",
+        "ann_ivf_recall",
+        "pq_topk",
+        "ann_ivfpq",
+        "ann_ivfpq_refine",
+    ],
+)
+def test_ivf_pq_queries_answer_empty_embeddings(spark, empty_emb_dir, name):
+    """The IVF/PQ gates fit their centroids and codebooks on a sample of
+    the embeddings; on an empty table they return DuckDB's empty answer,
+    with the oracle's columns, instead of raising."""
+    import duckdb
+
+    from cruncher_spark.plans import QUERIES, query_map
+
+    got = query_map()[name](spark, empty_emb_dir)
+    assert got.collect() == []
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{empty_emb_dir}/embeddings.parquet')"
+    )
+    res = con.execute(QUERIES[name].oracle(empty_emb_dir))
+    assert res.fetchall() == []
+    assert sorted(got.columns) == sorted(d[0] for d in res.description)

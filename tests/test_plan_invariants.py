@@ -1,6 +1,6 @@
 """Plan-shape regression net over EVERY registered query.
 
-`tools/plan_audit.py` documents the physical plans; this test FREEZES the
+`tools/query_audit.py` documents the physical plans; this test FREEZES the
 two invariants that must never regress silently:
 
 - no `CartesianProduct` anywhere — an unkeyed cross join over fact-sized
@@ -98,10 +98,9 @@ def test_registry_load_is_fail_loud():
 
 
 def test_triangle_lazy_plan_shape_still_audited(spark):
-    """triangle_count executes eagerly (cache-cleanup contract), so the
-    registry audits a literal projection; the REAL six-join shape stays
-    checkable through triangle_count_plan — no cartesian product, no
-    Python nodes, and the wedge joins are present."""
+    """The registered triangle_count runs triangle_count_plan (the eager
+    wrapper returns literals): its six-join shape has no cartesian
+    product, no Python nodes, and the wedge joins are present."""
     import pyspark.sql.functions as F
 
     from cruncher_spark.operators.graph import triangle_count_plan
@@ -129,8 +128,8 @@ def test_triangle_lazy_plan_shape_still_audited(spark):
 
 
 def test_pagerank_lazy_plan_shape_and_equivalence(spark):
-    """VERDICT r5 next #1: pagerank's eager wrapper returns a
-    checkpoint-scan plan, so audits use pagerank_plan — which must (a)
+    """pagerank's eager wrapper returns a checkpoint-scan plan, so the
+    iteration shape is checked on pagerank_plan — which must (a)
     expose the real iteration shape (per-round join + aggregate, no
     cartesian, no Python nodes, bounded exchanges) and (b) produce
     BIT-IDENTICAL ranks to the eager executable (decimal contribution
@@ -173,43 +172,49 @@ def test_pagerank_lazy_plan_shape_and_equivalence(spark):
     assert got == eager and eager
 
 
-def test_audit_forms_match_registered_queries(spark):
-    """Every AUDIT_FORMS entry names a registered query and returns the
-    SAME rows (collected, order-insensitive) — the lazy stand-in is
-    evidence about the real query only if it computes the real query."""
-    from cruncher_spark.plans import audit_form_map, query_map
-
-    forms = audit_form_map()
-    assert set(forms) == {
-        "triangle_count",
-        "pagerank_topk",
-        "logreg_quality",
-        "quality_pr_curve",
-    }
-    qmap = query_map()
-    for name, fn in forms.items():
-        real = sorted(map(tuple, qmap[name](spark, SF_DIR).collect()))
-        lazy = sorted(map(tuple, fn(spark, SF_DIR).collect()))
-        assert lazy == real, name
-
-
-def test_metrics_audit_reads_executed_sqlmetrics(spark):
-    """tools/metrics_audit.py extracts real SQLMetric values: a grouped
-    aggregate must report nonzero shuffle bytes, zero spill at test
-    scale, and the true output row count."""
+def _query_audit():
     import sys
     from pathlib import Path
 
     sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    from metrics_audit import audit_one
+    import query_audit
 
-    from cruncher_spark.plans import query_map
+    return query_audit
 
-    got = audit_one(
-        "dedup_exact", query_map()["dedup_exact"], spark,
-        "/root/testdata/sf0.001",
-    )
-    assert got["rows"] > 0
-    assert got["shuffle_bytes"] > 0  # groupBy must have exchanged bytes
-    assert got["spill_bytes"] == 0
-    assert got["peak_mem_bytes"] > 0
+
+def test_query_audit_counts_build_time_work(spark):
+    """A query whose only shuffle runs in an eager ``localCheckpoint``
+    while it builds: its final plan is a checkpoint scan with no
+    exchange, so a walk of that plan's metrics sees 0 bytes. The record
+    reads every job of the query's group, build-time jobs included."""
+    import pyspark.sql.functions as F
+
+    def fn(spark, sf_dir):
+        counts = (
+            spark.range(10_000)
+            .groupBy((F.col("id") % 7).alias("k"))
+            .count()
+            .localCheckpoint()
+        )
+        return counts.where(F.col("k") > 2)
+
+    rec = _query_audit().audit_one(spark, "build_time_work", fn, SF_DIR)
+    assert rec["shuffles"] == 0  # the final plan has no exchange
+    assert rec["shuffle_bytes"] > 0
+    assert rec["jobs"] >= 2
+    assert rec["rows"] == 4
+
+
+@pytest.mark.parametrize("name", ["dedup_exact", "quality_pr_curve"])
+def test_query_audit_record(spark, name):
+    """The tool's per-query record on a registered query: plan-shape
+    counts, jobs, shuffle, spill and rows from one run."""
+    rec = _query_audit().audit_one(spark, name, query_map()[name], SF_DIR)
+    for key in ("shuffles", "bhj", "smj", "bnlj", "codegen", "python"):
+        assert rec[key] >= 0, key
+    assert rec["rows"] > 0
+    assert rec["jobs"] >= 1 and rec["stages"] >= 1
+    assert rec["shuffle_bytes"] > 0  # both aggregate through an exchange
+    assert rec["spill_bytes"] == 0
+    assert rec["peak_mem_bytes"] > 0
+    assert "isFinalPlan=true" in rec["plan"]

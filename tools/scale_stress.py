@@ -147,14 +147,9 @@ UNIQ_QUERIES = [
 ]
 
 #: measured explanations for rows whose numbers need context (the
-#: metrics_audit._NOTES convention: the flag is a screen, these are the
+#: query_audit._NOTES convention: the flag is a screen, these are the
 #: verdicts)
 _NOTES = {
-    "logreg_quality": (
-        "0-byte rows: the measured plan reads the eagerly-checkpointed "
-        "feature table, so training exchanges land at checkpoint time "
-        "outside the audited plan; wall clock is the signal here"
-    ),
     "multimodal_decode_real": (
         "codec-family row added r13 (VERDICT r12 next #2): the "
         "single-pipeline variant (fan_out measured SLOWER for its cheap "
@@ -584,16 +579,6 @@ def build_uniq(dst: Path, factor: int) -> None:
 # -- measurement ---------------------------------------------------------------
 
 
-def shuffle_bytes_of(df) -> int:
-    from tools.metrics_audit import _iter_nodes, _metrics_of
-
-    total = 0
-    root = df._jdf.queryExecution().executedPlan()
-    for node in _iter_nodes(root, set()):
-        total += _metrics_of(node).get("shuffleBytesWritten", 0)
-    return total
-
-
 def dedup_simhash32(spark, sf_dir: str):
     """simhash_dup_pairs at the RETIRED 32-bit width: kept as the
     physics-evidence row — the false-pair explosion that moved the
@@ -695,7 +680,11 @@ def dedup_recall_curve(spark) -> dict:
 
 
 def measure(spark, qmap, names, scales, extra=None):
-    """{name: {tag: (wall, shuffle_bytes, rows)}} over (tag, dir) scales."""
+    """{name: {tag: (wall, shuffle_bytes, rows)}} over (tag, dir) scales.
+    Shuffle bytes are the status store's for the run's job group, so the
+    eager jobs a query runs while it builds count too."""
+    from cruncher_spark import observe
+
     fns = {n: qmap[n] for n in names}
     if extra:
         fns.update(extra)
@@ -703,11 +692,12 @@ def measure(spark, qmap, names, scales, extra=None):
     for name, fn in fns.items():
         results[name] = {}
         for tag, sf_dir in scales:
-            t0 = time.monotonic()
-            df = fn(spark, sf_dir)
-            rows = len(df.collect())
-            wall = time.monotonic() - t0
-            sh = shuffle_bytes_of(df)
+            group = f"stress:{name}@{sf_dir}"
+            with observe.job_group(spark, group):
+                t0 = time.monotonic()
+                rows = len(fn(spark, sf_dir).collect())
+                wall = time.monotonic() - t0
+            sh = int(observe.group_totals(spark, group)["shuffle_bytes"])
             results[name][tag] = (wall, sh, rows)
             spark.catalog.clearCache()
             print(

@@ -11,8 +11,8 @@ claims: replay micro-batches of unique-content items through the
 ingest filters, recording per batch:
 
 - wall clock of ``process_batch``,
-- shuffle bytes written (delta of the Spark UI stage metrics — this
-  tool runs its own UI-enabled session for that),
+- shuffle bytes written, read from the status store for the batch's
+  own job group (``cruncher_spark/observe.py``),
 - accumulated band-index rows + parquet file count (driver-side
   pyarrow metadata, no Spark job),
 - live survivor LSM run count (the binary-counter invariant),
@@ -49,11 +49,10 @@ Writes STREAMSCALE.md. Usage:  python tools/stream_scale.py
 
 from __future__ import annotations
 
-import json
 import shutil
 import sys
 import time
-import urllib.request
+from itertools import count
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -67,6 +66,7 @@ N_BATCHES = 50
 BATCH_DOCS = 1000
 DUP_RATE = 0.05
 AUTO_COMPACT = 16  # index batch-dir threshold -> in-loop fold (sawtooth)
+_GROUPS = count()  # job-group serial: one group per measured batch
 
 
 # ---------------------------------------------------------------------------
@@ -277,27 +277,22 @@ def _emb_batches():
 
 
 def emb_replay(spark, ingest, batches) -> list[tuple]:
-    """[(bid, wall, shuffle_delta, cand_rows, p, r, rebanded)] — the
+    """[(bid, wall, shuffle_bytes, cand_rows, p, r, rebanded)] — the
     embedding section's row shape: history candidate-join rows are the
     density signal, (p, r) the policy state, rebanded marks batches
     whose body re-keyed the index."""
     ingest.count_candidates = True
     rows = []
-    prev_sh = _shuffle_total()
     for bid, batch in enumerate(batches):
         df = spark.createDataFrame(batch, "vec_id long, embedding array<float>")
         before = (ingest.band_planes, ingest.n_bands)
-        t0 = time.monotonic()
-        ingest.process_batch(df, bid)
-        wall = time.monotonic() - t0
-        sh = _shuffle_total()
+        wall, sh = _measured(spark, lambda: ingest.process_batch(df, bid))
         p, r = ingest.band_planes, ingest.n_bands
         rows.append(
-            (bid, wall, sh - prev_sh,
+            (bid, wall, sh,
              ingest.last_history_candidates or 0, p, r,
              (p, r) != before)
         )
-        prev_sh = sh
         print(
             f"batch {bid:3d} wall {wall:6.2f}s shuffle "
             f"{rows[-1][2]/1e6:7.2f} MB cand {rows[-1][3]:8d} "
@@ -326,37 +321,17 @@ def _emb_table(arows, prows) -> list[str]:
     return lines
 
 
-def _ui_session():
-    """A local session with the UI on so stage shuffle metrics are
-    readable over REST (the shared factory disables it)."""
-    import os
+def _measured(spark, step) -> tuple[float, int]:
+    """(wall seconds, shuffle bytes written) of ``step()``, whose Spark
+    jobs run in a job group of their own."""
+    from cruncher_spark import observe
 
-    from pyspark.sql import SparkSession
-
-    from cruncher_spark.session import RUNTIME_CONFS
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    b = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("stream-scale")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.ui.retainedStages", "100000")
-    )
-    for k, v in RUNTIME_CONFS.items():
-        b = b.config(k, v)
-    return b.getOrCreate()
-
-
-def _shuffle_total(port: int = 4040) -> int:
-    base = f"http://localhost:{port}/api/v1/applications"
-    apps = json.load(urllib.request.urlopen(base, timeout=10))
-    aid = apps[0]["id"]
-    stages = json.load(
-        urllib.request.urlopen(f"{base}/{aid}/stages", timeout=30)
-    )
-    return sum(s.get("shuffleWriteBytes", 0) for s in stages)
+    group = f"stream-scale-{next(_GROUPS)}"
+    with observe.job_group(spark, group):
+        t0 = time.monotonic()
+        step()
+        wall = time.monotonic() - t0
+    return wall, int(observe.group_totals(spark, group)["shuffle_bytes"])
 
 
 def _index_stats(index_dir: Path) -> tuple[int, int]:
@@ -372,24 +347,19 @@ def _survivor_runs(ingest) -> int:
     return len(ingest.survivors._run_dirs(cur)) if cur is not None else 0
 
 
-def replay(ingest, batches, to_df) -> list[tuple]:
-    """[(bid, wall, shuffle_delta, idx_rows, idx_files, runs, folded)]"""
+def replay(spark, ingest, batches, to_df) -> list[tuple]:
+    """[(bid, wall, shuffle_bytes, idx_rows, idx_files, runs, folded)]"""
     rows = []
-    prev_sh = _shuffle_total()
     prev_files = 0
     for bid, batch in enumerate(batches):
         df = to_df(batch)
-        t0 = time.monotonic()
-        ingest.process_batch(df, bid)
-        wall = time.monotonic() - t0
-        sh = _shuffle_total()
+        wall, sh = _measured(spark, lambda: ingest.process_batch(df, bid))
         irows, ifiles = _index_stats(ingest.index_dir)
         folded = ifiles < prev_files  # auto-compaction fired this batch
         rows.append(
-            (bid, wall, sh - prev_sh, irows, ifiles,
-             _survivor_runs(ingest), folded)
+            (bid, wall, sh, irows, ifiles, _survivor_runs(ingest), folded)
         )
-        prev_sh, prev_files = sh, ifiles
+        prev_files = ifiles
         print(
             f"batch {bid:3d} wall {wall:6.2f}s shuffle "
             f"{(rows[-1][2])/1e6:7.2f} MB index {irows} rows /"
@@ -419,24 +389,23 @@ def crawl_replay(spark, frontier, ingest, segments) -> list[tuple]:
     trailing columns: frontier state rows, frontier LSM runs."""
     from cruncher_spark.sources.warc import warc_documents
 
-    rows = []
-    prev_sh = _shuffle_total()
-    prev_files = 0
-    for bid, seg in enumerate(segments):
-        t0 = time.monotonic()
+    def step(bid, seg):
         docs = warc_documents(spark, seg)
         fresh = frontier.filter_fresh(docs, f"crawl-{bid}")
         ingest.process_batch(fresh.select("doc_id", "text"), bid)
-        wall = time.monotonic() - t0
-        sh = _shuffle_total()
+
+    rows = []
+    prev_files = 0
+    for bid, seg in enumerate(segments):
+        wall, sh = _measured(spark, lambda: step(bid, seg))
         irows, ifiles = _index_stats(ingest.index_dir)
         folded = ifiles < prev_files
         frows, fruns = _frontier_stats(frontier)
         rows.append(
-            (bid, wall, sh - prev_sh, irows, ifiles,
+            (bid, wall, sh, irows, ifiles,
              _survivor_runs(ingest), folded, frows, fruns)
         )
-        prev_sh, prev_files = sh, ifiles
+        prev_files = ifiles
         print(
             f"batch {bid:3d} wall {wall:6.2f}s shuffle "
             f"{rows[-1][2]/1e6:7.2f} MB index {irows} rows /"
@@ -527,13 +496,16 @@ def main() -> None:
 
     if STATE.exists():
         shutil.rmtree(STATE)
-    spark = _ui_session()
+    from cruncher_spark.session import get_spark
+
+    spark = get_spark("stream-scale")
     spark.sparkContext.setLogLevel("ERROR")
 
     lines = [
         "# STREAMSCALE — measured ingest state growth"
         " (tools/stream_scale.py)\n\n",
-        "Per-batch wall + shuffle-byte delta (UI stage metrics) + "
+        "Per-batch wall + shuffle bytes (status store, one job group "
+        "per batch) + "
         "accumulated band-index size + live survivor LSM run count, "
         "for three ingest filters replayed over unique-content "
         "micro-batches plus the end-to-end crawl path. Claims under "
@@ -552,6 +524,7 @@ def main() -> None:
         spark, str(STATE / "text"), auto_compact_batches=AUTO_COMPACT
     )
     rows = replay(
+        spark,
         nd,
         _text_batches(),
         lambda b: spark.createDataFrame(b, "doc_id long, text string"),
@@ -573,6 +546,7 @@ def main() -> None:
         spark, str(STATE / "video"), auto_compact_batches=AUTO_COMPACT
     )
     vrows = replay(
+        spark,
         vd,
         _video_batches(),
         lambda b: spark.createDataFrame(
@@ -595,6 +569,7 @@ def main() -> None:
         spark, str(STATE / "cont"), auto_compact_batches=AUTO_COMPACT
     )
     trows = replay(
+        spark,
         td,
         _containment_batches(),
         lambda b: spark.createDataFrame(
