@@ -28,19 +28,19 @@ Two renderings share one expression builder:
   expressions are equivalence-checked by execution, not by eye (the MERGE
   rendering is then string-tested over the same builder).
 
-Both match ``upsert._merge_frames`` exactly, including the
-NULL-propagating ``add`` (MySQL ``NULL + x = NULL``), the NULL-keeps-old
-``max`` comparison, and the DECIMAL(28,6) exact accumulation for
-double-typed ``add`` columns.
+Both match ``PointTable.merge`` exactly, including the NULL-propagating
+``add`` (MySQL ``NULL + x = NULL``), the NULL-keeps-old ``max``
+comparison, and the DECIMAL(28,6) exact accumulation for double-typed
+``add`` columns.
 
 Contract: **merge-key columns must be non-NULL**, exactly as in the
 reference (the point tables' PRIMARY KEY columns are implicitly NOT
 NULL). A NULL-valued key is outside the contract and the three forms
 intentionally do not promise agreement on it: ``MERGE``'s
 ``IS NOT DISTINCT FROM`` match would treat two NULL keys as the same
-row, while the SELECT form and ``_merge_frames`` detect row presence
-via ``key IS NOT NULL`` and would keep the target value. Filter or
-fail NULL keys upstream.
+row, while the SELECT form detects row presence via
+``key IS NOT NULL`` and ``PointTable.merge`` groups NULL keys as one.
+Filter or fail NULL keys upstream.
 """
 
 from __future__ import annotations
@@ -62,7 +62,7 @@ def _check_ident(name: str) -> str:
 def _matched_expr(c: str, policy: MergePolicy, dtype: str | None) -> str | None:
     """WHEN MATCHED value for measure column ``c``; None = leave untouched.
 
-    Mirrors ``upsert._merge_frames`` policy-by-policy.
+    Mirrors ``upsert.PointTable._fold_expr`` policy-by-policy.
     """
     _check_ident(c)
     if policy == MergePolicy.KEEP:

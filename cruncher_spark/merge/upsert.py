@@ -18,9 +18,15 @@ Cost model: state is laid out in ``num_buckets`` hash buckets of the
 merge key (``pt_bucket=N`` parquet partitions). A merge reads and
 rewrites the buckets the delta's keys hash into; every untouched bucket
 is hard-linked into the new state version (zero data movement,
-byte-identical files). On a production deployment the same role is
-played by Delta/Iceberg ``MERGE INTO`` with data skipping on the merge
-key; this module gives the same semantics over plain parquet.
+byte-identical files). The rewrite is one fold and one exchange: the
+stored rows of those buckets and the delta, tagged as runs 0 and 1, are
+unioned and hash-partitioned over the buckets, and each write task
+folds its keys with the per-column policy aggregates of the LSM mode
+below, sorts them by key and writes its bucket's file. On a one-bucket
+table a merge is two Spark jobs, that exchange and the write. On a
+production deployment the same role is played by Delta/Iceberg
+``MERGE INTO`` with data skipping on the merge key; this module gives
+the same semantics over plain parquet.
 
 The bucket count is sized to the state, not fixed: a table starts at
 ``num_buckets`` (default 1) and a merge doubles it while the stored
@@ -74,12 +80,15 @@ from collections.abc import Mapping, Sequence
 from enum import Enum
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # NB: must not start with "_" or "." — Hadoop file listing hides such paths,
 # which would make the partition dirs invisible to subsequent reads.
 _BUCKET_COL = "pt_bucket"
+
+#: the exact type double ADD columns accumulate through
+_EXACT = "decimal(28,6)"
 
 
 class MergePolicy(str, Enum):
@@ -325,7 +334,7 @@ class PointTable:
 
     # -- merge --------------------------------------------------------------
 
-    def _bucket_expr(self) -> F.Column:
+    def _bucket_expr(self) -> Column:
         # Murmur3 of the full key tuple; stable across sessions, null-safe.
         return F.pmod(F.hash(*[F.col(k) for k in self.key]), F.lit(self.num_buckets))
 
@@ -358,14 +367,20 @@ class PointTable:
         merge without deadlocking.
         """
         with self.writer_lock():
-            if batch_id is not None and batch_id in self.applied_batches():
-                return False
+            # the ledger is read once, under the lock, and handed to the
+            # commit: None carries the current one forward unchanged
+            ledger = None
+            if batch_id is not None:
+                applied = self.applied_batches()
+                if batch_id in applied:
+                    return False
+                ledger = applied | {batch_id}
             cur = self._adopt_layout()
 
             if self.mode == "lsm":
                 # append-only: the delta is consumed exactly once (the
                 # run write) — no bucket-discovery job, no persist
-                self._append_run(cur, delta, batch_id)
+                self._append_run(cur, delta, ledger)
                 return True
 
             grown = self._grow_layout(cur)
@@ -377,7 +392,7 @@ class PointTable:
             if discover:
                 delta = delta.persist()
             try:
-                self._merge_buckets(cur, delta, batch_id, discover)
+                self._merge_buckets(cur, delta, ledger, discover)
             finally:
                 if discover:
                     delta.unpersist()
@@ -392,13 +407,16 @@ class PointTable:
         must exist: a fresh table takes its schema from a delta, so merge
         the empty delta instead."""
         with self.writer_lock():
-            if batch_id in self.applied_batches():
+            applied = self.applied_batches()
+            if batch_id in applied:
                 return False
             cur = self._adopt_layout()
             if cur is None:
                 raise FileNotFoundError(f"point table not initialized: {self.path}")
             stored = [d.name for d in (cur / "data").iterdir() if d.is_dir()]
-            self._commit_version(cur, None, keep=stored, batch_id=batch_id)
+            self._commit_version(
+                cur, None, keep=stored, ledger=applied | {batch_id}
+            )
             return True
 
     def _adopt_layout(self) -> Path | None:
@@ -440,7 +458,7 @@ class PointTable:
         self,
         cur: Path | None,
         delta: DataFrame,
-        batch_id: str | None,
+        ledger: set[str] | None,
         discover: bool,
     ) -> None:
         stored = {} if cur is None else {
@@ -459,19 +477,27 @@ class PointTable:
             # layout whose key→bucket map no longer matches the stored one
             touched = list(stored)
         existing = [stored[b] for b in touched if b in stored]
-        tgt = self._read_buckets(cur, existing) if existing else None
+        frame, fold = delta, False
         if discover and not touched and cur is not None:
             # an empty delta leaves stored state as it is (on a fresh
             # table it is written below, so its schema is recorded)
-            merged = None
-        else:
-            merged = delta if tgt is None else self._merge_frames(tgt, delta)
+            frame = None
+        elif existing:
+            # the stored rows as run 0 and the delta, in the stored
+            # dtypes, as run 1: the commit folds them by key inside its
+            # own bucket exchange, so state and delta shuffle once
+            tgt = self._read_buckets(cur, existing)
+            src = delta.select([F.col(c).cast(t).alias(c) for c, t in tgt.dtypes])
+            frame = tgt.withColumn("run", F.lit(0)).union(
+                src.withColumn("run", F.lit(1))
+            )
+            fold = True
         self._commit_version(
             cur,
-            merged,
-            schema=merged.schema.json() if merged is not None else None,
+            frame,
+            fold=fold,
             keep=[b for b in stored if b not in touched],
-            batch_id=batch_id,
+            ledger=ledger,
         )
 
     def _read_buckets(self, cur: Path, buckets: list[Path]) -> DataFrame:
@@ -479,93 +505,14 @@ class PointTable:
         its commit recorded in meta.json: a pinned schema skips Spark's
         schema-inference job (one job per merge). A version whose meta
         has no schema (written before the key existed) falls back to
-        inference. Merged buckets are cast back to the stored dtypes
-        (:meth:`_merge_frames`), so the recorded schema stays the files'."""
+        inference. The fold casts merged columns back to the stored
+        dtypes (:meth:`_fold_expr`), so the recorded schema stays the
+        files'."""
         reader = self.spark.read
         schema = self._recorded_schema(cur)
         if schema is not None:
             reader = reader.schema(schema)
         return reader.parquet(*[str(p) for p in buckets])
-
-    def _merge_frames(self, tgt: DataFrame, src: DataFrame) -> DataFrame:
-        t = tgt.select([F.col(c).alias(f"_t_{c}") for c in tgt.columns])
-        s = src.select([F.col(c).alias(f"_s_{c}") for c in src.columns])
-        cond = None
-        for k in self.key:
-            eq = t[f"_t_{k}"].eqNullSafe(s[f"_s_{k}"])
-            cond = eq if cond is None else (cond & eq)
-        joined = t.join(s, cond, "full_outer")
-
-        out = []
-        in_src = F.col(f"_s_{self.key[0]}").isNotNull()
-        in_tgt = F.col(f"_t_{self.key[0]}").isNotNull()
-        tgt_dtypes = dict(tgt.dtypes)
-        for c in tgt.columns:
-            tc, sc = F.col(f"_t_{c}"), F.col(f"_s_{c}")
-            if c in self.key:
-                out.append(F.coalesce(tc, sc).alias(c))
-                continue
-            policy = self.policies.get(c, MergePolicy.ADD)
-            if policy in (MergePolicy.ADD, MergePolicy.ADD_NULLSAFE):
-                # ADD: NULL + x = NULL, matching MySQL (crunch_global.sql:69).
-                # Doubles add through DECIMAL(28,6) so accumulated state is
-                # bit-exact and order-independent (the reference instead
-                # accumulates float rounding error — a deliberate upgrade).
-                # ADD_NULLSAFE (the view-maintenance fold) deliberately does
-                # NOT take that detour: decimal(28,6) rounds a sub-1e-6
-                # double partial to zero and NULLs on >1e22 overflow, which
-                # would break maintained==recompute; plain double addition
-                # matches SQL SUM over DOUBLE exactly (callers wanting exact
-                # accumulation cast their measure expression to DECIMAL,
-                # which flows through the integer branch untouched).
-                dtype = tgt_dtypes[c]
-                if policy == MergePolicy.ADD and dtype in ("double", "float"):
-                    merged_val = (
-                        tc.cast("decimal(28,6)") + sc.cast("decimal(28,6)")
-                    ).cast(dtype)
-                else:
-                    merged_val = tc + sc
-                if policy == MergePolicy.ADD_NULLSAFE:
-                    # SUM-merge: a NULL partial is the identity
-                    merged_val = (
-                        F.when(sc.isNull(), tc)
-                        .when(tc.isNull(), sc)
-                        .otherwise(merged_val)
-                    )
-            elif policy == MergePolicy.MAX:
-                merged_val = F.when(sc > tc, sc).otherwise(tc)
-            elif policy == MergePolicy.LEAST:
-                merged_val = (
-                    F.when(sc.isNull(), tc)
-                    .when(tc.isNull(), sc)
-                    .when(sc < tc, sc)
-                    .otherwise(tc)
-                )
-            elif policy == MergePolicy.GREATEST:
-                merged_val = (
-                    F.when(sc.isNull(), tc)
-                    .when(tc.isNull(), sc)
-                    .when(sc > tc, sc)
-                    .otherwise(tc)
-                )
-            elif policy == MergePolicy.KEEP:
-                merged_val = tc
-            else:  # OVERWRITE
-                merged_val = sc
-            # Pin the stored dtype: Spark widens DECIMAL arithmetic by one
-            # digit of precision per merge (decimal(18,6)+decimal(18,6) →
-            # decimal(19,6)); without this cast, a merge touching a subset of
-            # buckets would leave the version with mixed parquet decimal
-            # schemas (untouched buckets are hard links at the old precision)
-            # and the next read fails with PARQUET_COLUMN_DATA_TYPE_MISMATCH.
-            out.append(
-                F.when(in_src & in_tgt, merged_val)
-                .when(in_src, sc)
-                .otherwise(tc)
-                .cast(tgt_dtypes[c])
-                .alias(c)
-            )
-        return joined.select(out)
 
     # -- LSM (append + compact) merge mode -----------------------------------
     #
@@ -576,9 +523,12 @@ class PointTable:
     # every prior run (zero data movement) through the one commit path
     # (_commit_version). Reads fold runs through per-column POLICY
     # AGGREGATES ordered by run seq, reproducing the pairwise merge
-    # semantics exactly (incl. MySQL NULL quirks — see _fold_expr).
+    # semantics exactly (incl. MySQL NULL quirks — see _fold_expr); the
+    # bucketed merge folds through the same _fold_runs, its stored rows
+    # and delta being a two-run history.
     # Compaction folds the newest two ADJACENT runs while the older is
-    # < LSM_FOLD_FACTOR x the newer (the binary-counter invariant):
+    # < LSM_FOLD_FACTOR x the newer (the binary-counter invariant),
+    # inside the write's bucket exchange like the bucketed merge:
     # adjacency preserves order-sensitive policies (KEEP/OVERWRITE/MAX),
     # the geometric size ladder bounds live runs at O(log(state/delta))
     # and amortized write amplification at O(log) — per-batch merge cost
@@ -596,7 +546,7 @@ class PointTable:
         return sum(f.stat().st_size for f in d.rglob("*.parquet"))
 
     def _append_run(
-        self, cur: Path | None, delta: DataFrame, batch_id: str | None
+        self, cur: Path | None, delta: DataFrame, ledger: set[str] | None
     ) -> None:
         """Append the delta as a new run: O(delta) regardless of state
         size — the delta is shuffled once into its bucket layout and
@@ -608,10 +558,9 @@ class PointTable:
         self._commit_version(
             cur,
             delta,
-            schema=delta.schema.json(),
             run=f"run={seq:06d}",
             keep=[r.name for r in runs],
-            batch_id=batch_id,
+            ledger=ledger,
         )
         self._lsm_auto_compact()
 
@@ -643,7 +592,10 @@ class PointTable:
         )
         self._commit_version(
             cur,
-            self._fold_runs(df),
+            df,
+            fold=True,
+            # a fold writes no new rows: it keeps the recorded schema
+            schema=self._meta(cur).get("schema"),
             # the folded run takes the OLDER seq so it stays ordered
             # before any still-live older runs and after nothing it
             # absorbed — adjacency is what makes this legal
@@ -651,69 +603,113 @@ class PointTable:
             keep=[r.name for r in runs[:-2]],
         )
 
-    def _fold_runs(self, df: DataFrame) -> DataFrame:
-        """Collapse a multi-run frame (data cols + ``run``/bucket
-        partition cols) to one row per key via policy aggregates."""
+    def _fold_runs(self, df: DataFrame, two_runs: bool = False) -> DataFrame:
+        """Collapse a multi-run frame (data cols + ``run``, and any bucket
+        partition col) to one row per key via policy aggregates. Every
+        fold goes through here: the LSM read, and with ``two_runs`` (at
+        most two rows per key) the LSM compaction and the bucketed merge
+        (stored rows as run 0, the delta as run 1)."""
         out_cols = [c for c in df.columns if c not in ("run", _BUCKET_COL)]
         dtypes = dict(df.dtypes)
         aggs = [
-            self._fold_expr(c, dtypes[c])
+            self._fold_expr(c, dtypes[c], two_runs)
             for c in out_cols
             if c not in self.key
         ]
         return df.groupBy(*self.key).agg(*aggs).select(out_cols)
 
-    def _fold_expr(self, c: str, dtype: str) -> F.Column:
+    def _fold_expr(self, c: str, dtype: str, two_runs: bool) -> Column:
         """The aggregate form of one column's pairwise merge policy.
 
-        Pairwise-equivalence notes (pinned by the property test in
-        tests/test_merge_streaming.py):
+        Pairwise-equivalence notes (pinned against the full-outer-join
+        SELECT of :mod:`cruncher_spark.merge.merge_into` on DuckDB, and
+        between the two modes, in tests/test_merge_streaming.py):
 
         - ADD (MySQL ``col + VALUES(col)``, NULL-propagating): any NULL
           among the key's rows → NULL; otherwise sum — identical to any
-          pairwise order. The double→DECIMAL(28,6) detour applies only
-          when >= 2 rows fold (a key present in a single run passes
-          through UNquantized, exactly like a pairwise merge where the
-          other side is absent).
+          pairwise order. Doubles add through DECIMAL(28,6) so
+          accumulated state is bit-exact and order-independent (the
+          reference instead accumulates float rounding error — a
+          deliberate upgrade). A key in a single run passes through
+          unquantized, exactly like a pairwise merge where the other
+          side is absent.
+        - ADD_NULLSAFE (the view-maintenance fold): SQL SUM — a NULL
+          partial is the identity, NULL iff all NULL. It deliberately
+          skips the DECIMAL detour: decimal(28,6) rounds a sub-1e-6
+          double partial to zero and NULLs on >1e22 overflow, which
+          would break maintained==recompute (callers wanting exact
+          accumulation cast their measure to DECIMAL).
+        - A lone double never goes through ``sum``, which starts from
+          0.0 (``0.0 + -0.0`` is ``0.0``): it passes through ``max``, and
+          an ADD_NULLSAFE sum of values that are all ``-0.0`` stays
+          ``-0.0``, as ``-0.0 + -0.0`` does.
         - MAX (MySQL CASE, NULL keeps OLD): a NULL FIRST value absorbs
           everything (new > NULL is never true); otherwise later NULLs
           are ignored and the max of non-NULL values wins — i.e.
           ``first IS NULL ? NULL : max(values)``.
+        - LEAST / GREATEST: plain MIN / MAX (NULL is the identity).
         - KEEP / OVERWRITE: first / last row's value BY RUN SEQ, even
-          when that value is NULL — the struct wrapper stops min_by/
-          max_by from skipping NULL payloads.
-        - ADD_NULLSAFE / LEAST / GREATEST: plain SUM / MIN / MAX (NULL
-          is the identity; NULL iff all NULL) — SQL aggregate semantics
-          by construction.
+          when that value is NULL (``min_by``/``max_by`` keep a NULL
+          value).
+
+        Only the order-dependent picks use ``min_by``/``max_by``; every
+        other policy folds with ``sum``/``count``/``min``/``max``, whose
+        buffers keep the fold a hash aggregate. With ``two_runs`` a
+        double sum is ``max + min`` of the key's two values, so the
+        DECIMAL cast runs once per merged key, not once per row (most
+        rows of a bucketed merge are a lone stored value).
         """
         v = F.col(c)
-        run = F.col("run")
-        first_v = F.min_by(F.struct(v.alias("v")), run)["v"]
-        last_v = F.max_by(F.struct(v.alias("v")), run)["v"]
+        rows, values = F.count(F.lit(1)), F.count(v)
         policy = self.policies.get(c, MergePolicy.ADD)
+        floating = dtype in ("double", "float")
         if policy == MergePolicy.ADD:
-            any_null = F.max(F.when(v.isNull(), F.lit(1)).otherwise(F.lit(0)))
-            if dtype in ("double", "float"):
-                total = F.sum(v.cast("decimal(28,6)"))
+            expr = F.when(values < rows, F.lit(None))
+            if not floating:
+                expr = expr.otherwise(F.sum(v))
             else:
-                total = F.sum(v)
-            expr = (
-                F.when(any_null == 1, F.lit(None))
-                .when(F.count(F.lit(1)) == 1, first_v)
-                .otherwise(total)
-            )
+                total = (
+                    F.max(v).cast(_EXACT) + F.min(v).cast(_EXACT)
+                    if two_runs
+                    else F.sum(v.cast(_EXACT))
+                )
+                expr = expr.when(rows == 1, F.max(v)).otherwise(total)
         elif policy == MergePolicy.ADD_NULLSAFE:
-            expr = F.sum(v)
+            if not floating:
+                expr = F.sum(v)
+            elif two_runs:
+                expr = F.when(values == 1, F.max(v)).otherwise(
+                    F.max(v) + F.min(v)
+                )
+            else:
+                # every value is a zero, and 1/v is -inf for each
+                all_neg_zero = (
+                    (F.min(v) == 0)
+                    & (F.max(v) == 0)
+                    & (F.max(F.pow(v, F.lit(-1.0))) < 0)
+                )
+                expr = (
+                    F.when(values == 1, F.max(v))
+                    .when(all_neg_zero, F.lit(-0.0))
+                    .otherwise(F.sum(v))
+                )
         elif policy == MergePolicy.MAX:
-            expr = F.when(first_v.isNull(), F.lit(None)).otherwise(F.max(v))
+            first = F.min_by(v, F.col("run"))
+            expr = F.when(first.isNull(), F.lit(None)).otherwise(F.max(v))
         elif policy == MergePolicy.LEAST:
             expr = F.min(v)
         elif policy == MergePolicy.GREATEST:
             expr = F.max(v)
         elif policy == MergePolicy.KEEP:
-            expr = first_v
+            expr = F.min_by(v, F.col("run"))
         else:  # OVERWRITE
-            expr = last_v
+            expr = F.max_by(v, F.col("run"))
+        # Pin the stored dtype: Spark widens DECIMAL arithmetic (sum adds
+        # ten digits of precision); without this cast, a merge touching a
+        # subset of buckets would leave the version with mixed parquet
+        # decimal schemas (untouched buckets are hard links at the old
+        # precision) and the next read fails with
+        # PARQUET_COLUMN_DATA_TYPE_MISMATCH.
         return expr.cast(dtype).alias(c)
 
     # -- commit -------------------------------------------------------------
@@ -723,21 +719,25 @@ class PointTable:
         cur: Path | None,
         frame: DataFrame | None,
         *,
+        fold: bool = False,
         schema: str | None = None,
         run: str | None = None,
         keep: Sequence[str] = (),
-        batch_id: str | None = None,
+        ledger: set[str] | None = None,
     ) -> None:
         """Write version ``cur + 1`` complete, then flip CURRENT to it.
 
         ``frame`` (if any) is written bucket-partitioned into ``data/``
         or, for an LSM run, ``data/<run>``, one write task and one file
-        per bucket; ``keep`` names the dirs of ``cur/data`` (buckets or
-        runs) hard-linked in unchanged; the ledger is ``cur``'s plus
-        ``batch_id``; ``meta.json`` records the layout and the row
-        ``schema`` (None: ``cur``'s, carried forward), which keeps a
-        table with no rows readable. Any leftover dir of a crashed
-        earlier attempt at the same version number is replaced.
+        per bucket, each file sorted by key. With ``fold`` it is a
+        union of two ``run``-tagged runs, folded by key
+        (:meth:`_fold_runs`) in the write's own exchange. ``keep`` names the dirs of ``cur/data``
+        (buckets or runs) hard-linked in unchanged; ``ledger`` is the
+        new set of applied batch ids (None: ``cur``'s, linked forward);
+        ``meta.json`` records the layout and the row ``schema`` (None:
+        the written rows', or ``cur``'s when nothing is written), which
+        keeps a table with no rows readable. Any leftover dir of a
+        crashed earlier attempt at the same version number is replaced.
         """
         self.path.mkdir(parents=True, exist_ok=True)
         cur_n = int(cur.name.split("_")[1]) if cur is not None else 0
@@ -745,18 +745,27 @@ class PointTable:
         if new.exists():
             shutil.rmtree(new)
         (new / "data").mkdir(parents=True)
-        if schema is None and cur is not None:
-            schema = self._meta(cur).get("schema")
 
         if frame is not None:
             out = new / "data" / run if run else new / "data"
             # hash-partitioning the key over num_buckets puts bucket b in
             # partition b (both are pmod(murmur3(key), num_buckets)), so
             # no two buckets share a write task; partitioning on the
-            # bucket column would hash bucket ids again and collide
+            # bucket column would hash bucket ids again and collide. The
+            # fold's grouping is already met by that partitioning, so it
+            # runs in the write stage, with the sort and the write.
+            rows = frame.repartition(
+                self.num_buckets, *[F.col(k) for k in self.key]
+            )
+            if fold:
+                rows = self._fold_runs(rows, two_runs=True)
+            if schema is None:
+                schema = rows.schema.json()
+            # the fold's hash aggregate emits keys in hash order: sorted
+            # by key, a bucket file's key columns encode much smaller
             (
-                frame.withColumn(_BUCKET_COL, self._bucket_expr())
-                .repartition(self.num_buckets, *[F.col(k) for k in self.key])
+                rows.withColumn(_BUCKET_COL, self._bucket_expr())
+                .sortWithinPartitions(_BUCKET_COL, *self.key)
                 .write.mode("append")
                 .partitionBy(_BUCKET_COL)
                 .parquet(str(out))
@@ -766,6 +775,8 @@ class PointTable:
                 # no parquet-less run dirs — they would pile past the fold
                 # invariant (0-byte runs never trigger it)
                 shutil.rmtree(out)
+        elif schema is None and cur is not None:
+            schema = self._meta(cur).get("schema")
         for name in keep:  # zero data movement
             for f_ in (cur / "data" / name).rglob("*"):
                 if f_.is_file():
@@ -773,17 +784,16 @@ class PointTable:
                     dst.parent.mkdir(parents=True, exist_ok=True)
                     os.link(f_, dst)
 
-        if batch_id is not None:
+        if ledger is not None:
             # driver-side pyarrow write (see applied_batches: a Spark job
             # for a few driver-local strings costs seconds of fixed
             # overhead per merge); same parquet format either way
             import pyarrow as pa
             import pyarrow.parquet as pq
 
-            ledger = sorted(self.applied_batches() | {batch_id})
             (new / "ledger").mkdir()
             pq.write_table(
-                pa.table({"batch_id": pa.array(ledger, pa.string())}),
+                pa.table({"batch_id": pa.array(sorted(ledger), pa.string())}),
                 new / "ledger" / "ledger.parquet",
             )
         elif cur is not None and (cur / "ledger").exists():
@@ -882,7 +892,6 @@ class PointTable:
                 self._commit_version(
                     cur,
                     state,
-                    schema=state.schema.json(),
                     run="run=000000" if self.mode == "lsm" else None,
                 )
             finally:

@@ -917,6 +917,35 @@ def test_one_bucket_merge_skips_bucket_discovery(spark, tmp_path):
     assert 0 < jobs[1] < jobs[2], jobs
 
 
+def test_one_bucket_merge_is_one_exchange_and_the_write(spark, tmp_path):
+    """A merge into a stored one-bucket table folds the stored rows and
+    the delta inside the bucket write's own exchange: exactly two Spark
+    jobs, that exchange and the write. The fold's hash aggregate leaves
+    keys in hash order, so the write sorts them: the bucket file's keys
+    come out in order even when neither input was."""
+    import random
+
+    import pyarrow.parquet as pq
+
+    schema = "k int, n long"
+    seed = [(i, 1) for i in range(200)]
+    delta = [(i, 2) for i in range(0, 300, 3)]
+    random.Random(0).shuffle(seed)
+    random.Random(1).shuffle(delta)
+    pt = PointTable(spark, str(tmp_path / "pt"), key=["k"])
+    pt.merge(spark.createDataFrame(seed, schema), batch_id="seed")
+    jobs = _jobs_in_group(
+        spark, f"fold-{tmp_path.name}",
+        lambda: pt.merge(spark.createDataFrame(delta, schema), batch_id="delta"),
+    )
+    assert jobs == 2
+    files = list((pt._current_version() / "data").rglob("*.parquet"))
+    assert len(files) == 1
+    keys = pq.read_table(files[0], columns=["k"])["k"].to_pylist()
+    assert keys == sorted(_fold(seed, delta))
+    assert {r.k: r.n for r in pt.read().collect()} == _fold(seed, delta)
+
+
 @pytest.mark.parametrize("buckets", [1, 4])
 def test_empty_delta_into_fresh_or_populated_table(spark, tmp_path, buckets):
     """An empty delta into a fresh or a populated table commits its
@@ -1307,6 +1336,104 @@ def test_lsm_exhaustive_policy_matrix(spark, tmp_path):
     rb, rl = _rows(b), _rows(l)
     assert len(rb) == len(keys)
     assert rb == rl
+
+
+_ORACLE_POLICIES = {
+    **_LSM_POLICIES,
+    "add_z": MergePolicy.ADD,
+    "ansafe_z": MergePolicy.ADD_NULLSAFE,
+}
+_ORACLE_SCHEMA = _LSM_SCHEMA + ", add_z double, ansafe_z double"
+_ORACLE_DDL = (
+    "id BIGINT, add_d DOUBLE, add_i BIGINT, ansafe DOUBLE, mx BIGINT,"
+    " lst BIGINT, grt BIGINT, keep VARCHAR, ovw VARCHAR, add_z DOUBLE,"
+    " ansafe_z DOUBLE"
+)
+
+
+def _oracle_batches():
+    """The policy matrix's three batches: key ``present*10 + nulls`` is in
+    batch b iff bit b of ``present`` is set, with every measure NULL iff
+    bit b of ``nulls`` is — 7 presence patterns x 8 NULL masks = 56 keys.
+    ``add_d`` carries a 7th fractional digit (kept by a lone value, cut
+    by the DECIMAL(28,6) add) and ``add_z``/``ansafe_z`` are ``-0.0``
+    whenever non-NULL."""
+    batches = [[], [], []]
+    for present in range(1, 8):
+        for nulls in range(8):
+            kid = present * 10 + nulls
+            for b in range(3):
+                if not (present >> b) & 1:
+                    continue
+                if (nulls >> b) & 1:
+                    batches[b].append((kid,) + (None,) * 10)
+                    continue
+                v = kid + 100 * (b + 1)
+                batches[b].append(
+                    (kid, v + 0.1234567, v + 1, v + 2.25, v + 3, v + 4, v + 5,
+                     f"k{kid}b{b}", f"o{kid}b{b}", -0.0, -0.0)
+                )
+    return batches
+
+
+def test_policy_matrix_matches_duckdb_select_oracle(spark, tmp_path):
+    """Both merge modes fold through one ``_fold_runs``, so comparing them
+    checks that fold against itself. This checks each against an
+    independent oracle instead: DuckDB running the full-outer-join SELECT
+    of ``merge_as_select_sql``, batch by batch, over the 56-key x
+    7-policy matrix. Doubles compare by ``repr``: every digit, and the
+    sign of a zero."""
+    import duckdb
+
+    from cruncher_spark.merge.merge_into import merge_as_select_sql
+
+    cols = list(_ORACLE_POLICIES)
+    dtypes = {c: "double" for c in ("add_d", "ansafe", "add_z", "ansafe_z")}
+    sel = merge_as_select_sql(
+        "state", "delta", ["id"], cols, _ORACLE_POLICIES, dtypes
+    )
+    con = duckdb.connect()
+    for name in ("state", "delta"):
+        con.execute(f"CREATE TABLE {name} ({_ORACLE_DDL})")
+    tables = {
+        name: PointTable(
+            spark, str(tmp_path / name), key=["id"], policies=_ORACLE_POLICIES,
+            num_buckets=4, mode=mode,
+        )
+        for name, mode in (
+            ("bucketed", "bucketed"), ("lsm", "lsm"), ("lsm-unfolded", "lsm")
+        )
+    }
+    # never compacts: its reads fold every run, not just two
+    tables["lsm-unfolded"].LSM_FOLD_FACTOR = 0.0
+
+    def exact(rows):
+        return sorted(
+            (tuple(repr(x) if isinstance(x, float) else x for x in r) for r in rows),
+            key=lambda r: r[0],
+        )
+
+    for b, rows in enumerate(_oracle_batches()):
+        con.execute("DELETE FROM delta")
+        con.executemany(f"INSERT INTO delta VALUES ({', '.join('?' * 11)})", rows)
+        con.execute(f"CREATE TABLE merged AS {sel}")
+        con.execute("DROP TABLE state; ALTER TABLE merged RENAME TO state")
+        want = exact(con.execute(f"SELECT id, {', '.join(cols)} FROM state").fetchall())
+        df = spark.createDataFrame(rows, _ORACLE_SCHEMA)
+        for name, pt in tables.items():
+            pt.merge(df, batch_id=f"m{b}")
+            got = exact(
+                tuple(r) for r in pt.read().select("id", *cols).collect()
+            )
+            assert got == want, f"{name} diverged from DuckDB after batch {b}"
+    unfolded = tables["lsm-unfolded"]
+    assert len(unfolded._run_dirs(unfolded._current_version())) == 3
+    # the edge cases really occurred: a lone 7-digit double and a lone
+    # -0.0 passed through, and a -0.0 ADD of two values came out 0.0
+    final = {r[0]: r for r in want}
+    assert final[10][1] == repr(110 + 0.1234567)
+    assert (final[10][9], final[10][10]) == ("-0.0", "-0.0")
+    assert (final[30][9], final[30][10]) == ("0.0", "-0.0")
 
 
 def _layout(pt):

@@ -682,7 +682,10 @@ def dedup_recall_curve(spark) -> dict:
 def measure(spark, qmap, names, scales, extra=None):
     """{name: {tag: (wall, shuffle_bytes, rows)}} over (tag, dir) scales.
     Shuffle bytes are the status store's for the run's job group, so the
-    eager jobs a query runs while it builds count too."""
+    eager jobs a query runs while it builds count too. The sink is
+    tools/query_audit.py's, ``queryExecution().toRdd().count()``: every
+    column of the query's own plan is computed, no row reaches the
+    driver, so the wall column compares with METRICS.md's."""
     from cruncher_spark import observe
 
     fns = {n: qmap[n] for n in names}
@@ -695,7 +698,7 @@ def measure(spark, qmap, names, scales, extra=None):
             group = f"stress:{name}@{sf_dir}"
             with observe.job_group(spark, group):
                 t0 = time.monotonic()
-                rows = len(fn(spark, sf_dir).collect())
+                rows = fn(spark, sf_dir)._jdf.queryExecution().toRdd().count()
                 wall = time.monotonic() - t0
             sh = int(observe.group_totals(spark, group)["shuffle_bytes"])
             results[name][tag] = (wall, sh, rows)
@@ -740,7 +743,8 @@ def render(repl, uniq, stale=None, recall=None) -> str:
         "# STRESS — measured x10 / x100 scale blow-up (derived data)\n\n",
         "Generated by `tools/scale_stress.py` in two shapes (module\n",
         "docstring has the full rationale). Shuffle bytes are the\n",
-        "jitter-free signal; wall clock is local[32].\n",
+        "jitter-free signal; wall clock is local[32], timed over\n",
+        "`queryExecution().toRdd().count()` like METRICS.md.\n",
     ]
     n_super = 0
     if repl:
