@@ -62,7 +62,7 @@ def _check_ident(name: str) -> str:
 def _matched_expr(c: str, policy: MergePolicy, dtype: str | None) -> str | None:
     """WHEN MATCHED value for measure column ``c``; None = leave untouched.
 
-    Mirrors ``upsert.PointTable._fold_expr`` policy-by-policy.
+    Mirrors ``upsert.PointTable._pair_expr`` policy-by-policy.
     """
     _check_ident(c)
     if policy == MergePolicy.KEEP:

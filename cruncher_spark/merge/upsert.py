@@ -21,12 +21,13 @@ is hard-linked into the new state version (zero data movement,
 byte-identical files). The rewrite is one fold and one exchange: the
 stored rows of those buckets and the delta, tagged as runs 0 and 1, are
 unioned and hash-partitioned over the buckets, and each write task
-folds its keys with the per-column policy aggregates of the LSM mode
-below, sorts them by key and writes its bucket's file. On a one-bucket
-table a merge is two Spark jobs, that exchange and the write. On a
-production deployment the same role is played by Delta/Iceberg
-``MERGE INTO`` with data skipping on the merge key; this module gives
-the same semantics over plain parquet.
+sorts its rows by key and run (the sort the write needs anyway), pairs
+a key's delta row with its stored row through a window ``lag``,
+applies the per-column policies to the pair and writes its bucket's
+file. On a one-bucket table a merge is two Spark jobs, that exchange
+and the write. On a production deployment the same role is played by
+Delta/Iceberg ``MERGE INTO`` with data skipping on the merge key; this
+module gives the same semantics over plain parquet.
 
 The bucket count is sized to the state, not fixed: a table starts at
 ``num_buckets`` (default 1) and a merge doubles it while the stored
@@ -80,7 +81,7 @@ from collections.abc import Mapping, Sequence
 from enum import Enum
 from pathlib import Path
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 # NB: must not start with "_" or "." — Hadoop file listing hides such paths,
@@ -89,6 +90,11 @@ _BUCKET_COL = "pt_bucket"
 
 #: the exact type double ADD columns accumulate through
 _EXACT = "decimal(28,6)"
+
+
+def _q(name: str) -> str:
+    """``name`` quoted as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 class MergePolicy(str, Enum):
@@ -115,8 +121,8 @@ class PointTable:
 
     ``key`` is the grouping-key tuple (merge identity — the reference's
     PRIMARY KEY on the point table; like a PRIMARY KEY, key columns are
-    contractually non-NULL — a NULL key row is treated as absent by the
-    merge presence checks); ``policies`` maps measure column →
+    contractually non-NULL — NULL keys are outside the contract, and a
+    merge folds them as one key); ``policies`` maps measure column →
     MergePolicy, defaulting to ADD (the dominant reference policy).
     ``num_buckets`` is the hash-bucket count a new table starts at (a
     floor: bucketed merges double it as the state grows, see
@@ -487,10 +493,11 @@ class PointTable:
             # dtypes, as run 1: the commit folds them by key inside its
             # own bucket exchange, so state and delta shuffle once
             tgt = self._read_buckets(cur, existing)
-            src = delta.select([F.col(c).cast(t).alias(c) for c, t in tgt.dtypes])
-            frame = tgt.withColumn("run", F.lit(0)).union(
-                src.withColumn("run", F.lit(1))
+            src = delta.selectExpr(
+                *[f"CAST({_q(c)} AS {t}) AS {_q(c)}" for c, t in tgt.dtypes],
+                "1 AS run",
             )
+            frame = tgt.selectExpr("*", "0 AS run").union(src)
             fold = True
         self._commit_version(
             cur,
@@ -506,7 +513,7 @@ class PointTable:
         schema-inference job (one job per merge). A version whose meta
         has no schema (written before the key existed) falls back to
         inference. The fold casts merged columns back to the stored
-        dtypes (:meth:`_fold_expr`), so the recorded schema stays the
+        dtypes (:meth:`_fold_pairs`), so the recorded schema stays the
         files'."""
         reader = self.spark.read
         schema = self._recorded_schema(cur)
@@ -523,12 +530,11 @@ class PointTable:
     # every prior run (zero data movement) through the one commit path
     # (_commit_version). Reads fold runs through per-column POLICY
     # AGGREGATES ordered by run seq, reproducing the pairwise merge
-    # semantics exactly (incl. MySQL NULL quirks — see _fold_expr); the
-    # bucketed merge folds through the same _fold_runs, its stored rows
-    # and delta being a two-run history.
+    # semantics exactly (incl. MySQL NULL quirks — see _fold_expr).
     # Compaction folds the newest two ADJACENT runs while the older is
     # < LSM_FOLD_FACTOR x the newer (the binary-counter invariant),
-    # inside the write's bucket exchange like the bucketed merge:
+    # pairwise inside the write's bucket exchange like the bucketed
+    # merge (_fold_pairs):
     # adjacency preserves order-sensitive policies (KEEP/OVERWRITE/MAX),
     # the geometric size ladder bounds live runs at O(log(state/delta))
     # and amortized write amplification at O(log) — per-batch merge cost
@@ -603,46 +609,119 @@ class PointTable:
             keep=[r.name for r in runs[:-2]],
         )
 
-    def _fold_runs(self, df: DataFrame, two_runs: bool = False) -> DataFrame:
-        """Collapse a multi-run frame (data cols + ``run``, and any bucket
-        partition col) to one row per key via policy aggregates. Every
-        fold goes through here: the LSM read, and with ``two_runs`` (at
-        most two rows per key) the LSM compaction and the bucketed merge
-        (stored rows as run 0, the delta as run 1)."""
+    def _fold_pairs(self, rows: DataFrame) -> DataFrame:
+        """Fold a two-run frame (data cols, ``run`` and the bucket col,
+        at most one row per key and run) to one row per key with the
+        pairwise policies of :meth:`_pair_expr`: the bucketed merge
+        (stored rows as run 0, the delta as run 1) and the LSM
+        compaction. The window needs its rows clustered by key, which
+        the write's bucket exchange already does, and sorted by
+        (bucket, key, run), which is the write's own sort: a key's newer
+        row sees the older one through ``lag`` and is the one kept.
+        Merged values are cast back to the stored dtype, for the reason
+        :meth:`_fold_expr` gives.
+
+        The expressions are SQL text, one ``selectExpr`` per step: built
+        column by column they cost a py4j round trip per function call,
+        ~10k per merge of a 61-column table, over a second of driver
+        time."""
+        w = "OVER (PARTITION BY {} ORDER BY run)".format(
+            ", ".join(_q(c) for c in (_BUCKET_COL, *self.key))
+        )
+        dtypes = rows.dtypes
+        measures = {
+            c for c, _ in dtypes if c not in (*self.key, "run", _BUCKET_COL)
+        }
+        paired = rows.selectExpr(
+            "*",
+            f"lag(run) {w} IS NOT NULL AS _older",
+            f"lead(run) {w} IS NULL AS _newest",
+            *[
+                f"lag({_q(c)}) {w} AS {_q('_old_' + c)}"
+                for c, _ in dtypes
+                if c in measures
+            ],
+        )
+        out = [
+            f"CAST(CASE WHEN _older THEN "
+            f"{self._pair_expr(c, _q('_old_' + c), _q(c), t)} "
+            f"ELSE {_q(c)} END AS {t}) AS {_q(c)}"
+            if c in measures
+            else _q(c)
+            for c, t in dtypes
+            if c != "run"
+        ]
+        return paired.where("_newest").selectExpr(*out)
+
+    def _pair_expr(self, c: str, old: str, new: str, dtype: str) -> str:
+        """One column's merge policy applied to a key's stored (``old``)
+        and incoming (``new``) values, as SQL — ``ON DUPLICATE KEY
+        UPDATE``. The caller casts the result back to ``dtype``."""
+        policy = self.policies.get(c, MergePolicy.ADD)
+        if policy == MergePolicy.ADD:
+            # NULL + x = NULL, matching MySQL (crunch_global.sql:69).
+            # Doubles add through DECIMAL(28,6) so accumulated state is
+            # bit-exact and order-independent (the reference instead
+            # accumulates float rounding error — a deliberate upgrade).
+            if dtype in ("double", "float"):
+                return f"CAST({old} AS {_EXACT}) + CAST({new} AS {_EXACT})"
+            return f"{old} + {new}"
+        if policy == MergePolicy.ADD_NULLSAFE:
+            # SUM-merge: a NULL partial is the identity. Deliberately no
+            # DECIMAL detour: decimal(28,6) rounds a sub-1e-6 double
+            # partial to zero and NULLs on >1e22 overflow, which would
+            # break maintained==recompute; plain double addition matches
+            # SQL SUM over DOUBLE exactly (callers wanting exact
+            # accumulation cast their measure expression to DECIMAL).
+            return (
+                f"CASE WHEN {new} IS NULL THEN {old} "
+                f"WHEN {old} IS NULL THEN {new} ELSE {old} + {new} END"
+            )
+        if policy == MergePolicy.MAX:
+            # MySQL CASE: NULL on either side keeps the old value
+            return f"CASE WHEN {new} > {old} THEN {new} ELSE {old} END"
+        if policy in (MergePolicy.LEAST, MergePolicy.GREATEST):
+            cmp = "<" if policy == MergePolicy.LEAST else ">"
+            return (
+                f"CASE WHEN {new} IS NULL THEN {old} WHEN {old} IS NULL "
+                f"THEN {new} WHEN {new} {cmp} {old} THEN {new} ELSE {old} END"
+            )
+        if policy == MergePolicy.KEEP:
+            return old
+        return new  # OVERWRITE
+
+    def _fold_runs(self, df: DataFrame) -> DataFrame:
+        """Collapse a multi-run frame (data cols + ``run``/bucket
+        partition cols) to one row per key via policy aggregates: the
+        read of an LSM table with more than one live run."""
         out_cols = [c for c in df.columns if c not in ("run", _BUCKET_COL)]
         dtypes = dict(df.dtypes)
         aggs = [
-            self._fold_expr(c, dtypes[c], two_runs)
+            self._fold_expr(c, dtypes[c])
             for c in out_cols
             if c not in self.key
         ]
         return df.groupBy(*self.key).agg(*aggs).select(out_cols)
 
-    def _fold_expr(self, c: str, dtype: str, two_runs: bool) -> Column:
-        """The aggregate form of one column's pairwise merge policy.
+    def _fold_expr(self, c: str, dtype: str) -> Column:
+        """The aggregate form of one column's pairwise merge policy
+        (:meth:`_pair_expr`) over any number of runs.
 
         Pairwise-equivalence notes (pinned against the full-outer-join
         SELECT of :mod:`cruncher_spark.merge.merge_into` on DuckDB, and
-        between the two modes, in tests/test_merge_streaming.py):
+        against the bucketed merge, in tests/test_merge_streaming.py):
 
-        - ADD (MySQL ``col + VALUES(col)``, NULL-propagating): any NULL
-          among the key's rows → NULL; otherwise sum — identical to any
-          pairwise order. Doubles add through DECIMAL(28,6) so
-          accumulated state is bit-exact and order-independent (the
-          reference instead accumulates float rounding error — a
-          deliberate upgrade). A key in a single run passes through
+        - ADD (NULL-propagating): any NULL among the key's rows → NULL;
+          otherwise sum — identical to any pairwise order. Doubles add
+          through DECIMAL(28,6); a key in a single run passes through
           unquantized, exactly like a pairwise merge where the other
           side is absent.
-        - ADD_NULLSAFE (the view-maintenance fold): SQL SUM — a NULL
-          partial is the identity, NULL iff all NULL. It deliberately
-          skips the DECIMAL detour: decimal(28,6) rounds a sub-1e-6
-          double partial to zero and NULLs on >1e22 overflow, which
-          would break maintained==recompute (callers wanting exact
-          accumulation cast their measure to DECIMAL).
-        - A lone double never goes through ``sum``, which starts from
-          0.0 (``0.0 + -0.0`` is ``0.0``): it passes through ``max``, and
-          an ADD_NULLSAFE sum of values that are all ``-0.0`` stays
-          ``-0.0``, as ``-0.0 + -0.0`` does.
+        - ADD_NULLSAFE: SQL SUM — a NULL partial is the identity, NULL
+          iff all NULL; no DECIMAL detour (see :meth:`_pair_expr`). A
+          double never goes through ``sum``, which starts from 0.0
+          (``0.0 + -0.0`` is ``0.0``), when the pairwise sum keeps a
+          ``-0.0``: a lone value passes through ``max``, and values that
+          are all ``-0.0`` give ``-0.0``.
         - MAX (MySQL CASE, NULL keeps OLD): a NULL FIRST value absorbs
           everything (new > NULL is never true); otherwise later NULLs
           are ignored and the max of non-NULL values wins — i.e.
@@ -654,10 +733,7 @@ class PointTable:
 
         Only the order-dependent picks use ``min_by``/``max_by``; every
         other policy folds with ``sum``/``count``/``min``/``max``, whose
-        buffers keep the fold a hash aggregate. With ``two_runs`` a
-        double sum is ``max + min`` of the key's two values, so the
-        DECIMAL cast runs once per merged key, not once per row (most
-        rows of a bucketed merge are a lone stored value).
+        buffers keep the fold a hash aggregate.
         """
         v = F.col(c)
         rows, values = F.count(F.lit(1)), F.count(v)
@@ -665,34 +741,26 @@ class PointTable:
         floating = dtype in ("double", "float")
         if policy == MergePolicy.ADD:
             expr = F.when(values < rows, F.lit(None))
-            if not floating:
+            if floating:
+                expr = expr.when(rows == 1, F.max(v)).otherwise(
+                    F.sum(v.cast(_EXACT))
+                )
+            else:
                 expr = expr.otherwise(F.sum(v))
-            else:
-                total = (
-                    F.max(v).cast(_EXACT) + F.min(v).cast(_EXACT)
-                    if two_runs
-                    else F.sum(v.cast(_EXACT))
-                )
-                expr = expr.when(rows == 1, F.max(v)).otherwise(total)
+        elif policy == MergePolicy.ADD_NULLSAFE and not floating:
+            expr = F.sum(v)
         elif policy == MergePolicy.ADD_NULLSAFE:
-            if not floating:
-                expr = F.sum(v)
-            elif two_runs:
-                expr = F.when(values == 1, F.max(v)).otherwise(
-                    F.max(v) + F.min(v)
-                )
-            else:
-                # every value is a zero, and 1/v is -inf for each
-                all_neg_zero = (
-                    (F.min(v) == 0)
-                    & (F.max(v) == 0)
-                    & (F.max(F.pow(v, F.lit(-1.0))) < 0)
-                )
-                expr = (
-                    F.when(values == 1, F.max(v))
-                    .when(all_neg_zero, F.lit(-0.0))
-                    .otherwise(F.sum(v))
-                )
+            # every value is a zero, and 1/v is -inf for each
+            all_neg_zero = (
+                (F.min(v) == 0)
+                & (F.max(v) == 0)
+                & (F.max(F.pow(v, F.lit(-1.0))) < 0)
+            )
+            expr = (
+                F.when(values == 1, F.max(v))
+                .when(all_neg_zero, F.lit(-0.0))
+                .otherwise(F.sum(v))
+            )
         elif policy == MergePolicy.MAX:
             first = F.min_by(v, F.col("run"))
             expr = F.when(first.isNull(), F.lit(None)).otherwise(F.max(v))
@@ -731,8 +799,9 @@ class PointTable:
         or, for an LSM run, ``data/<run>``, one write task and one file
         per bucket, each file sorted by key. With ``fold`` it is a
         union of two ``run``-tagged runs, folded by key
-        (:meth:`_fold_runs`) in the write's own exchange. ``keep`` names the dirs of ``cur/data``
-        (buckets or runs) hard-linked in unchanged; ``ledger`` is the
+        (:meth:`_fold_pairs`) in the write's own exchange. ``keep``
+        names the dirs of ``cur/data`` (buckets or runs) hard-linked in
+        unchanged; ``ledger`` is the
         new set of applied batch ids (None: ``cur``'s, linked forward);
         ``meta.json`` records the layout and the row ``schema`` (None:
         the written rows', or ``cur``'s when nothing is written), which
@@ -752,20 +821,19 @@ class PointTable:
             # partition b (both are pmod(murmur3(key), num_buckets)), so
             # no two buckets share a write task; partitioning on the
             # bucket column would hash bucket ids again and collide. The
-            # fold's grouping is already met by that partitioning, so it
-            # runs in the write stage, with the sort and the write.
+            # fold's window is clustered by that partitioning, so it runs
+            # in the write stage, on the write's sort.
             rows = frame.repartition(
                 self.num_buckets, *[F.col(k) for k in self.key]
-            )
+            ).withColumn(_BUCKET_COL, self._bucket_expr())
             if fold:
-                rows = self._fold_runs(rows, two_runs=True)
+                rows = self._fold_pairs(rows)
             if schema is None:
-                schema = rows.schema.json()
-            # the fold's hash aggregate emits keys in hash order: sorted
-            # by key, a bucket file's key columns encode much smaller
+                schema = rows.drop(_BUCKET_COL).schema.json()
+            # after a fold the window has sorted each bucket by key and
+            # run already, and Spark drops this sort: one sort per write
             (
-                rows.withColumn(_BUCKET_COL, self._bucket_expr())
-                .sortWithinPartitions(_BUCKET_COL, *self.key)
+                rows.sortWithinPartitions(_BUCKET_COL, *self.key)
                 .write.mode("append")
                 .partitionBy(_BUCKET_COL)
                 .parquet(str(out))

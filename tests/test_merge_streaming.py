@@ -920,9 +920,9 @@ def test_one_bucket_merge_skips_bucket_discovery(spark, tmp_path):
 def test_one_bucket_merge_is_one_exchange_and_the_write(spark, tmp_path):
     """A merge into a stored one-bucket table folds the stored rows and
     the delta inside the bucket write's own exchange: exactly two Spark
-    jobs, that exchange and the write. The fold's hash aggregate leaves
-    keys in hash order, so the write sorts them: the bucket file's keys
-    come out in order even when neither input was."""
+    jobs, that exchange and the write. The fold and the write share one
+    sort by key: the bucket file's keys come out in order even when
+    neither input was."""
     import random
 
     import pyarrow.parquet as pq
@@ -944,6 +944,25 @@ def test_one_bucket_merge_is_one_exchange_and_the_write(spark, tmp_path):
     keys = pq.read_table(files[0], columns=["k"])["k"].to_pylist()
     assert keys == sorted(_fold(seed, delta))
     assert {r.k: r.n for r in pt.read().collect()} == _fold(seed, delta)
+
+
+def test_merge_keeps_column_order_with_key_last(spark, tmp_path):
+    """A rewritten bucket keeps the table's column order when the key is
+    not the first column, so it reads back beside the buckets the merge
+    hard-linked unchanged."""
+    import pyarrow.parquet as pq
+
+    pt = PointTable(spark, str(tmp_path / "pt"), key=["k"], num_buckets=4)
+    pt.merge(spark.createDataFrame([(1, i) for i in range(40)], "n long, k int"))
+    pt.merge(spark.createDataFrame([(5, 0)], "n long, k int"), batch_id="one")
+    cur = pt._current_version()
+    assert pt._recorded_schema(cur).fieldNames() == ["n", "k"]
+    for f in (cur / "data").rglob("*.parquet"):
+        assert pq.read_schema(f).names == ["n", "k"]
+    rows = pt.read()
+    assert {r.k: r.n for r in rows.collect()} == {
+        i: 6 if i == 0 else 1 for i in range(40)
+    }
 
 
 @pytest.mark.parametrize("buckets", [1, 4])
@@ -1377,12 +1396,13 @@ def _oracle_batches():
 
 
 def test_policy_matrix_matches_duckdb_select_oracle(spark, tmp_path):
-    """Both merge modes fold through one ``_fold_runs``, so comparing them
-    checks that fold against itself. This checks each against an
-    independent oracle instead: DuckDB running the full-outer-join SELECT
-    of ``merge_as_select_sql``, batch by batch, over the 56-key x
-    7-policy matrix. Doubles compare by ``repr``: every digit, and the
-    sign of a zero."""
+    """The bucketed merge and the LSM compaction fold pairwise
+    (``_fold_pairs``), a many-run LSM read through policy aggregates
+    (``_fold_runs``). Besides checking the two against each other, this
+    checks each against an independent oracle: DuckDB running the
+    full-outer-join SELECT of ``merge_as_select_sql``, batch by batch,
+    over the 56-key x 7-policy matrix. Doubles compare by ``repr``:
+    every digit, and the sign of a zero."""
     import duckdb
 
     from cruncher_spark.merge.merge_into import merge_as_select_sql
