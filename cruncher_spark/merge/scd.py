@@ -55,62 +55,3 @@ def scd2_history(
         F.lead(ts).over(w).isNull().alias("is_current"),
     )
 
-
-def scd2_apply(
-    history: DataFrame,
-    changes: DataFrame,
-    key: str,
-    attr: str,
-    ts: str,
-    tiebreak: str,
-) -> DataFrame:
-    """Fold NEW observations into an existing SCD2 history incrementally —
-    the nightly warehouse job shape, costing O(changes + affected open
-    versions) instead of a full-feed rebuild.
-
-    Contract: every change's ``ts`` is at or after its key's current
-    version start (changes arrive after the history horizon — the same
-    append-only assumption the full build makes about its feed order).
-
-    Mechanics: for each changed key, the OPEN version is re-seeded as an
-    observation at its original ``valid_from`` (so a change that repeats
-    the current attribute is absorbed into the current run, not a new
-    version), run-detection re-runs over seed+changes only, and version
-    numbers continue from the open version's number. Closed versions and
-    untouched keys pass through byte-identical. Equivalence with the full
-    rebuild is property-tested (tests/test_graph_scd.py).
-
-    Shuffle shape: everything hashes on ``key`` — the pass-through split,
-    the seed union, the windows inside :func:`scd2_history`, and the
-    offset join — so the whole apply is one logical co-partitioning.
-    """
-    open_v = history.where(F.col("is_current"))
-    touched_keys = changes.select(key).distinct()
-    open_touched = open_v.join(touched_keys, key, "left_semi")
-    # the open version re-enters as the seed observation; a NULL tiebreak
-    # sorts first under Spark's default nulls-first ascending order, so
-    # the seed wins any same-instant tie against a change row
-    tb_type = dict(changes.dtypes)[tiebreak]
-    seed = open_touched.select(
-        key,
-        attr,
-        F.col("valid_from").alias(ts),
-        F.lit(None).cast(tb_type).alias(tiebreak),
-    )
-    feed = seed.unionByName(changes.select(key, attr, ts, tiebreak))
-    recomputed = scd2_history(feed, key, attr, ts, tiebreak)
-    # continue numbering from the open version (new keys offset by 0)
-    offsets = open_touched.select(key, (F.col("version") - 1).alias("_off"))
-    renumbered = (
-        recomputed.join(offsets, key, "left")
-        .withColumn(
-            "version",
-            (F.col("version") + F.coalesce(F.col("_off"), F.lit(0))).cast("int"),
-        )
-        .drop("_off")
-    )
-    untouched = history.join(touched_keys, key, "left_anti")
-    closed_touched = history.where(~F.col("is_current")).join(
-        touched_keys, key, "left_semi"
-    )
-    return untouched.unionByName(closed_touched).unionByName(renumbered)

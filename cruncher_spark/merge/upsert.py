@@ -184,10 +184,6 @@ class PointTable:
 
     # -- writer serialization ------------------------------------------------
 
-    @property
-    def _lock_depth(self) -> int:
-        return getattr(self._lock_state, "depth", 0)
-
     def writer_lock(self):
         """RE-ENTRANT advisory writer lock (``WRITER.lock`` flock).
 
@@ -898,24 +894,6 @@ class PointTable:
         for v in self.path.glob("v_*"):
             if v.name not in keep:
                 shutil.rmtree(v, ignore_errors=True)
-
-    # -- lakehouse interop ---------------------------------------------------
-
-    def to_merge_into_sql(self, target: str, source: str) -> str:
-        """This table's merge spec as a Delta/Iceberg ``MERGE INTO``
-        statement (column list + SQL types taken from the live state).
-
-        For a deployment whose state lives in a lakehouse table instead of
-        this parquet layout: run the returned statement with the delta
-        registered as ``source`` — identical per-column policy semantics
-        (see :mod:`cruncher_spark.merge.merge_into`)."""
-        from cruncher_spark.merge.merge_into import merge_into_sql
-
-        schema = self.read().dtypes  # [(name, spark_sql_type)]
-        cols = [c for c, _ in schema if c not in self.key]
-        return merge_into_sql(
-            target, source, self.key, cols, self.policies, dict(schema)
-        )
 
     # -- maintenance ---------------------------------------------------------
 

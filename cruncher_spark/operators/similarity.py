@@ -2116,7 +2116,10 @@ def pq_topk(
         coded.join(F.broadcast(q))
         .where(F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
-            "score", F.expr(f"round(({num}) / (qnorm * nhat), {round_digits})")
+            "score",
+            # an all-zero reconstruction (nhat 0) scores NULL, as DuckDB's
+            # division by zero does, instead of raising under ANSI mode
+            F.expr(f"round(try_divide({num}, qnorm * nhat), {round_digits})"),
         )
     )
     from pyspark.sql import Window
@@ -2216,7 +2219,10 @@ def ann_ivfpq_topk(
         coded.join(F.broadcast(q), "cell")
         .where(F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
-            "score", F.expr(f"round(({num}) / (qnorm * nhat), {round_digits})")
+            "score",
+            # an all-zero reconstruction (nhat 0) scores NULL, as DuckDB's
+            # division by zero does, instead of raising under ANSI mode
+            F.expr(f"round(try_divide({num}, qnorm * nhat), {round_digits})"),
         )
     )
     rn = F.row_number().over(

@@ -1349,15 +1349,19 @@ def _quantizer_sample(
     sample: list[tuple[int, list[float]]],
 ) -> list[tuple[int, list[float]]]:
     """The sample the IVF centroids and PQ codebooks are fitted on, as the
-    Spark plans and the oracles both take it. An empty embeddings table
-    samples no vector; it gets the ``EMB_DIM`` unit vectors instead, so
-    the fits still seed their 16 centroids (codewords) and both engines'
-    SQL stays well-formed. With no row to assign, every IVF/PQ query over
-    an empty table is empty whatever the centroids are, which is DuckDB's
-    answer."""
-    if sample:
+    Spark plans and the oracles both take it. A sample of fewer vectors
+    than the fits seed (``_IVF_K`` centroids, ``_PQ_KW`` codewords) gets
+    the ``EMB_DIM`` unit vectors appended after its own: a tiny table
+    seeds its first centroids from its own vectors and the rest from unit
+    vectors, an empty one from unit vectors alone. Both engines' SQL stays
+    well-formed and both assign rows to the same fitted centroids; with
+    no row to assign, every IVF/PQ query over an empty table is empty,
+    which is DuckDB's answer."""
+    if len(sample) >= max(_IVF_K, _PQ_KW):
         return sample
-    return [(i, [float(i == j) for j in range(EMB_DIM)]) for i in range(EMB_DIM)]
+    return sample + [
+        (i, [float(i == j) for j in range(EMB_DIM)]) for i in range(EMB_DIM)
+    ]
 
 
 def _ivf_fitted_centroids_duckdb(sf_dir: str) -> list[list[float]]:

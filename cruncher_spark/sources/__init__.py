@@ -1,8 +1,3 @@
-from cruncher_spark.sources.layout import (
-    read_date_range,
-    write_bucketed,
-    write_date_partitioned,
-)
 from cruncher_spark.sources.tables import Star, fan_out, load_table
 from cruncher_spark.sources.warc import read_warc, warc_documents
 
@@ -10,9 +5,6 @@ __all__ = [
     "Star",
     "fan_out",
     "load_table",
-    "read_date_range",
     "read_warc",
     "warc_documents",
-    "write_bucketed",
-    "write_date_partitioned",
 ]

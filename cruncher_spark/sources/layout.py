@@ -1,95 +1,21 @@
-"""Physical table layout for scale: date partitioning and hash bucketing.
+"""Physical table layout for data skipping: Z-order clustering.
 
 The reference's facts live in InnoDB with secondary indexes; its per-batch
 ``IN (:ids)`` predicate is served by index lookups (crunch_global.sql:63).
-The columnar analogs that keep a 100 TB fact scan cheap are:
+The columnar analog here is **Z-order** (``zorder_key``,
+``write_zordered``): rows sorted on the Morton interleave of several
+columns, so parquet footer min/max statistics prune scans filtered on any
+of them. ``binned_zcell_stats`` measures that clustering and backs the
+registered ``zorder_cells`` query.
 
-- **date partitioning** (``write_date_partitioned``): facts laid out as
-  ``p_date=YYYY-MM-DD/`` directories. A time-window filter then prunes at
-  the *metadata* level — non-matching partitions are never listed, let
-  alone read (``PartitionFilters`` in the scan node). This is the layout
-  the sliding 7-day team-fame filter (P3, crunch_team.sql:35) and the
-  series interval joins want: a week-window query over a year of data
-  touches 7/365ths of the files.
-
-- **hash bucketing** (``write_bucketed``): both sides of a recurring
-  equi-join pre-hashed into the same bucket layout on the join key. The
-  join then needs NO shuffle of either side — each task zips matching
-  buckets (SortMergeJoin with zero Exchange). At 100 TB the shuffle is
-  usually the whole cost of a fact-fact join; bucketing pays it once at
-  write time and amortizes it over every subsequent join, exactly like
-  the co-located ``participant ⋈ participant_stats`` joins the reference
-  gets for free from its shared primary key (J1).
-
-Both layouts are verified by plan assertion in tests/test_layout.py, not
-just by results.
+The layout is verified by parquet footer-statistics assertions in
+tests/test_layout.py, not just by results.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-#: partition directory column written by write_date_partitioned
-DATE_COL = "p_date"
-
-
-def write_date_partitioned(
-    df: DataFrame, path: str, ts_col: str | Column, mode: str = "overwrite"
-) -> None:
-    """Write a fact table partitioned by the date of ``ts_col``.
-
-    Partition count scales with the covered time range, not data volume —
-    at 100 TB/year that is 365 partitions of ~280 GB, each further split
-    into ``maxPartitionBytes`` tasks; a bounded directory fan-out that
-    HDFS/S3 listings handle comfortably. (Do NOT partition by a
-    high-cardinality key — millions of tiny directories kill the
-    metastore; that's what bucketing is for.)
-    """
-    c = F.col(ts_col) if isinstance(ts_col, str) else ts_col
-    (
-        df.withColumn(DATE_COL, F.to_date(c))
-        .write.mode(mode)
-        .partitionBy(DATE_COL)
-        .parquet(path)
-    )
-
-
-def read_date_range(
-    spark: SparkSession, path: str, start: str, end: str
-) -> DataFrame:
-    """Scan a date-partitioned table restricted to ``[start, end]`` —
-    expressed as a plain filter so Catalyst turns it into partition
-    pruning (verify: ``PartitionFilters`` in the scan, pruned file count).
-    """
-    return spark.read.parquet(path).where(
-        F.col(DATE_COL).between(F.lit(start), F.lit(end))
-    )
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str | list[str],
-    num_buckets: int,
-    path: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` hash-bucketed (and sorted) on the join key.
-
-    Uses the session catalog (``saveAsTable`` — bucket metadata lives in
-    the catalog, which is what lets the planner elide the shuffle). With
-    ``path`` the table is external; data outlives ``DROP TABLE``.
-
-    Both join sides must use the SAME bucket count (or a multiple, with
-    ``spark.sql.bucketing.coalesceBucketsInJoin.enabled``) for the
-    shuffle-free plan to kick in.
-    """
-    keys = [key] if isinstance(key, str) else list(key)
-    w = df.write.mode(mode).bucketBy(num_buckets, *keys).sortBy(*keys)
-    if path is not None:
-        w = w.option("path", path)
-    w.saveAsTable(table)
 
 
 def zorder_key(cols: list[str | Column], bits: int = 16) -> Column:

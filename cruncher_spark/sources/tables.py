@@ -3,9 +3,8 @@
 Reference analog: every ``FROM``/``JOIN`` in the crunch scripts is a JDBC
 table scan executed by MySQL (SURVEY.md S2). Here sources are columnar
 parquet scans — Catalyst pushes filters and prunes columns into the scan,
-which the reference's row-store could not do. ``spark.read.format("jdbc")``
-remains available for parity deployments; the fixtures and the driver
-test data are parquet.
+which the reference's row-store could not do. The fixtures, the test
+data and the worker's ``DATABASE_URI`` are parquet directories.
 """
 
 from __future__ import annotations
@@ -181,57 +180,6 @@ def load_evolving(
     for c, v in (defaults or {}).items():
         df = df.withColumn(c, F.coalesce(F.col(c), F.lit(v)))
     return df
-
-
-def jdbc_reader(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    *,
-    driver: str | None = None,
-    partition_column: str | None = None,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    num_partitions: int | None = None,
-    fetchsize: int = 1000,
-) -> DataFrame:
-    """Read one table over JDBC — the parity path to the reference's
-    MySQL reads (worker.js:61-64, Sequelize pool).
-
-    ``partition_column``/bounds/``num_partitions`` split the scan into
-    parallel range queries — the distributed analog of the reference's
-    MAXCONNS=3 connection pool (worker.js:26-27); ``fetchsize`` bounds
-    per-round-trip rows like the reference's 1000-id batches. Catalyst
-    pushes filters into the generated WHERE clause (``PushedFilters`` in
-    ``.explain``), so the same plans narrow their scans on a row store
-    too. Tested against the Derby jars Spark bundles —
-    tests/test_jdbc_source.py.
-    """
-    reader = (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("fetchsize", fetchsize)
-    )
-    if driver is not None:
-        reader = reader.option("driver", driver)
-    if partition_column is not None:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("lowerBound", lower_bound)
-            .option("upperBound", upper_bound)
-            .option("numPartitions", num_partitions)
-        )
-    return reader.load()
-
-
-def load_tables_jdbc(
-    spark: SparkSession, url: str, names=STAR_TABLES, **kw
-) -> dict[str, DataFrame]:
-    """All named tables from one JDBC endpoint (keyword args forwarded to
-    :func:`jdbc_reader`) — drop-in replacement for the parquet Star when
-    the data lives in a row store, as in the reference deployment."""
-    return {n: jdbc_reader(spark, url, n, **kw) for n in names}
 
 
 #: scan partition counts memoized per (canonicalized-plan semanticHash,

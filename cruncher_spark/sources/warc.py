@@ -25,8 +25,8 @@ Scale shape — file-level parallelism, the Common Crawl contract:
   place Python is the right tool (binary wire-format parsing, Arrow
   batch in/out), mirroring the codec boundary in
   ``operators/multimodal.py``. Everything downstream is JVM-side.
-- malformed content NEVER kills the job (a FAILFAST 90% into a 100 TB
-  scan is the failure ``sources/ingest.py`` documents): a record that
+- malformed content NEVER kills the job (a FAILFAST parse would abort
+  a 100 TB scan 90% of the way in): a record that
   cannot be parsed becomes a row with ``parse_error`` set and the
   remaining bytes of that FILE are skipped (framing is lost once a
   Content-Length cannot be trusted); clean records before the damage

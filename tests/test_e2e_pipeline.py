@@ -5,7 +5,7 @@ they COMPOSE into the pipeline a real training-data run executes —
 raw JSONL in, packed + partitioned training shards out — with row
 accounting asserted at every boundary:
 
-  JSONL ingest (corrupt-record quarantine)
+  JSONL read (explicit schema)
     -> quality gate -> exact dedup -> near-dup dedup (MinHash+LSH)
     -> benchmark decontamination -> deterministic split (train only)
     -> sequence packing -> partitioned parquet -> read-back audit
@@ -30,7 +30,6 @@ from cruncher_spark.operators.dedup import (
     minhash_dedup_pairs,
     shingle_arrays,
 )
-from cruncher_spark.sources.ingest import read_jsonl
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -48,18 +47,15 @@ SCHEMA = T.StructType(
 def pipeline(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("e2e")
 
-    # --- stage 0: raw JSONL with two corrupt lines -----------------------
+    # --- stage 0: raw JSONL ----------------------------------------------
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text", "lang", "source"
     )
     raw_lines = [json.dumps(r.asDict()) for r in docs.collect()]
-    raw_lines.insert(3, '{"doc_id": "broken')
-    raw_lines.insert(7, "not json at all")
     src = root / "raw.jsonl"
     src.write_text("\n".join(raw_lines) + "\n")
-    dlq = str(root / "dlq")
 
-    ingested = read_jsonl(spark, str(src), SCHEMA, quarantine_path=dlq)
+    ingested = spark.read.schema(SCHEMA).json(str(src))
     n_raw = docs.count()
 
     # --- stage 1: quality gate -------------------------------------------
@@ -118,7 +114,6 @@ def pipeline(spark, tmp_path_factory):
     return {
         "spark": spark,
         "root": root,
-        "dlq": dlq,
         "counts": counts,
         "out": out,
         "eval_set": eval_set,
@@ -128,10 +123,8 @@ def pipeline(spark, tmp_path_factory):
 
 def test_accounting_is_monotone_and_explained(pipeline):
     c = pipeline["counts"]
-    # both corrupt lines quarantined, every valid line ingested
+    # every line ingested
     assert c["ingested"] == c["raw"]
-    dlq = pipeline["spark"].read.parquet(pipeline["dlq"])
-    assert dlq.count() == 2
     # each stage only removes rows, and the final corpus is non-trivial
     order = ["ingested", "quality", "exact", "neardup", "clean", "train"]
     for a, b in zip(order, order[1:]):

@@ -75,51 +75,6 @@ def test_pagerank_mass_and_hub(spark):
     assert all(hub > pr[i] for i in range(1, 9))
 
 
-def test_scd2_apply_equals_full_rebuild(spark, change_feed):
-    """Folding a tail of new observations into the history built from the
-    head produces EXACTLY the history of a full rebuild over the whole
-    feed — versions, intervals, and current flags identical."""
-    from cruncher_spark.merge.scd import scd2_apply
-
-    # split the feed at a time horizon: head builds, tail applies
-    head = change_feed.where(F.col("ts") < 60)
-    tail = change_feed.where(F.col("ts") >= 60)
-    hist = scd2_history(head, "k", "attr", "ts", "seq")
-    applied = scd2_apply(hist, tail, "k", "attr", "ts", "seq")
-    want = scd2_history(change_feed, "k", "attr", "ts", "seq")
-
-    key = lambda r: (r.k, r.version)  # noqa: E731
-    got_map = {key(r): r for r in applied.collect()}
-    want_map = {key(r): r for r in want.collect()}
-    assert set(got_map) == set(want_map)
-    for k_, w in want_map.items():
-        g = got_map[k_]
-        assert (g.attr, g.valid_from, g.valid_to, g.is_current) == (
-            w.attr, w.valid_from, w.valid_to, w.is_current
-        ), k_
-
-
-def test_scd2_apply_new_key_and_absorbed_repeat(spark):
-    """A brand-new key starts at version 1; a change repeating the current
-    attribute is absorbed (no new version)."""
-    from cruncher_spark.merge.scd import scd2_apply
-
-    feed = spark.createDataFrame(
-        [(1, "a", 10, 0), (1, "b", 20, 1)], "k long, attr string, ts long, seq int"
-    )
-    hist = scd2_history(feed, "k", "attr", "ts", "seq")
-    tail = spark.createDataFrame(
-        [(1, "b", 30, 2),   # repeat of current attr -> absorbed
-         (2, "x", 30, 3)],  # new key -> version 1
-        "k long, attr string, ts long, seq int",
-    )
-    out = {(r.k, r.version): r for r in scd2_apply(hist, tail, "k", "attr", "ts", "seq").collect()}
-    assert set(out) == {(1, 1), (1, 2), (2, 1)}
-    assert out[(1, 2)].attr == "b" and out[(1, 2)].is_current
-    assert out[(1, 2)].valid_from == 20  # absorbed repeat kept the run start
-    assert out[(2, 1)].attr == "x" and out[(2, 1)].is_current
-
-
 def test_star_cc_equals_propagation_cc(spark):
     """connected_components_star (large-star/small-star, the adversarial-
     shape fallback) must produce EXACTLY the min-label propagation

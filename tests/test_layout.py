@@ -1,109 +1,10 @@
-"""Physical-layout tests: these assert on the PLAN, not just results —
-partition pruning must show up as PartitionFilters with a pruned file
-count, and bucketed joins must run with zero Exchange nodes."""
+"""Z-order layout tests: these assert on per-file footer statistics and
+per-cell ranges, not just results — a Z-ordered layout must narrow every
+interleaved column's min/max range."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
-
-from cruncher_spark.sources import (
-    read_date_range,
-    write_bucketed,
-    write_date_partitioned,
-)
-from cruncher_spark.sources.tables import load_table
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def _executed_plan(df) -> str:
-    df.collect()  # run THIS plan so AQE's final form is inspected
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-@pytest.fixture(scope="module")
-def part_dir(spark, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("layout") / "events_by_date")
-    events = load_table(spark, SF_DIR, "events")
-    write_date_partitioned(events, out, "ts")
-    return out
-
-
-def test_date_partition_prunes_files(spark, part_dir):
-    full = spark.read.parquet(part_dir)
-    n_dates = full.select("p_date").distinct().count()
-    assert n_dates > 3  # fixture must actually span dates
-
-    row = full.select(F.min("p_date"), F.max("p_date")).collect()[0]
-    lo, hi = str(row[0]), str(row[1])
-    narrow = read_date_range(spark, part_dir, lo, lo)  # single-day window
-    plan = _executed_plan(narrow)
-    assert "PartitionFilters: [" in plan and "p_date" in plan
-
-    # the one-day scan must read strictly fewer partitions than exist
-    scanned = {str(r[0]) for r in narrow.select("p_date").distinct().collect()}
-    assert scanned == {lo}
-    # row-level check: pruned read ≡ post-hoc filter of the full table
-    assert (
-        narrow.count()
-        == full.where(F.col("p_date") == F.lit(lo)).count()
-        > 0
-    )
-    assert hi not in scanned
-
-
-def test_bucketed_join_has_no_shuffle(spark, tmp_path_factory):
-    wh = tmp_path_factory.mktemp("bucketed")
-    li = load_table(spark, SF_DIR, "lineitem").select(
-        "l_orderkey", "l_quantity", "l_extendedprice"
-    )
-    orders = load_table(spark, SF_DIR, "orders").select(
-        "o_orderkey", "o_orderpriority"
-    ).withColumnRenamed("o_orderkey", "l_orderkey")
-
-    write_bucketed(li, "li_b", "l_orderkey", 8, path=str(wh / "li"))
-    write_bucketed(orders, "ord_b", "l_orderkey", 8, path=str(wh / "ord"))
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("li_b").join(spark.table("ord_b"), "l_orderkey")
-        plan = _executed_plan(joined)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS li_b")
-        spark.sql("DROP TABLE IF EXISTS ord_b")
-
-    assert "SortMergeJoin" in plan
-    assert "Exchange" not in plan  # co-located: neither side shuffles
-    assert "SelectedBucketsCount" in plan
-
-    # and the result is the plain join's result
-    expected = li.join(orders, "l_orderkey").count()
-    n = spark.read.parquet(str(wh / "li")).join(
-        spark.read.parquet(str(wh / "ord")), "l_orderkey"
-    ).count()
-    assert n == expected
-
-
-def test_bucketed_groupby_has_no_shuffle(spark, tmp_path_factory):
-    """Aggregation on the bucket key also skips its shuffle — the layout
-    pays off for recurring rollups, not only joins."""
-    wh = tmp_path_factory.mktemp("bucketed_agg")
-    li = load_table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_quantity")
-    write_bucketed(li, "li_agg_b", "l_orderkey", 8, path=str(wh / "li"))
-    try:
-        agg = (
-            spark.table("li_agg_b")
-            .groupBy("l_orderkey")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        plan = _executed_plan(agg)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS li_agg_b")
-    assert "Exchange" not in plan
-    assert agg.count() == li.select("l_orderkey").distinct().count()
 
 
 def _file_ranges(path, cols):

@@ -1,15 +1,11 @@
-"""MERGE INTO emitter (VERDICT r3 #6).
+"""SQL merge oracle (``merge/merge_into.py``).
 
-Two layers of checking:
-
-- string-level: the ``MERGE INTO`` rendering contains exactly the
-  reference's ON-DUPLICATE-KEY-UPDATE semantics per policy
-  (crunch_global.sql:68-87 add, crunch_player.sql:49 max,
-  crunch_team.sql:41-42 overwrite, keep = column absent).
-- execution-level: the portable SELECT rendering (same expression builder)
-  runs on DuckDB over the same data ``PointTable.merge`` folds, and the
-  post-merge states must be value-identical — the policy expressions are
-  proven by execution, with the MERGE statement sharing the same builder.
+The portable SELECT rendering runs on DuckDB over the same data
+``PointTable.merge`` folds, and the post-merge states must be
+value-identical: the per-policy expressions (the reference's
+ON-DUPLICATE-KEY-UPDATE semantics — crunch_global.sql:68-87 add,
+crunch_player.sql:49 max, crunch_team.sql:41-42 overwrite, keep = column
+absent) are proven by execution.
 """
 
 from __future__ import annotations
@@ -21,7 +17,6 @@ from cruncher_spark.merge import (
     MergePolicy,
     PointTable,
     merge_as_select_sql,
-    merge_into_sql,
 )
 
 KEY = ["series", "hero"]
@@ -42,47 +37,11 @@ DTYPES = {
 COLUMNS = ["played", "kda_max", "title", "created_at", "dmg"]
 
 
-def test_merge_into_statement_renders_each_policy():
-    sql = merge_into_sql("stats", "delta", KEY, COLUMNS, POLICIES, DTYPES)
-    assert sql.startswith("MERGE INTO stats AS t")
-    assert "USING delta AS s" in sql
-    # null-safe key equality, both key columns
-    assert "t.series IS NOT DISTINCT FROM s.series" in sql
-    assert "t.hero IS NOT DISTINCT FROM s.hero" in sql
-    # add (NULL-propagating, like MySQL c + VALUES(c))
-    assert "t.played = t.played + s.played" in sql
-    # double add goes through exact DECIMAL accumulation
-    assert (
-        "t.dmg = CAST(CAST(t.dmg AS DECIMAL(28,6)) + "
-        "CAST(s.dmg AS DECIMAL(28,6)) AS DOUBLE)" in sql
-    )
-    # max keeps old on NULL source, like the reference CASE
-    assert "t.kda_max = CASE WHEN s.kda_max > t.kda_max THEN s.kda_max ELSE t.kda_max END" in sql
-    # overwrite
-    assert "t.title = s.title" in sql
-    # keep: column must NOT appear in the UPDATE SET list
-    update_clause = sql.split("WHEN MATCHED")[1].split("WHEN NOT MATCHED")[0]
-    assert "created_at" not in update_clause
-    # but inserts include every column
-    assert (
-        "INSERT (series, hero, played, kda_max, title, created_at, dmg)" in sql
-    )
-    assert "VALUES (s.series, s.hero, s.played, s.kda_max, s.title, s.created_at, s.dmg)" in sql
-
-
-def test_all_keep_policies_drop_matched_clause():
-    sql = merge_into_sql(
-        "t1", "s1", ["k"], ["a"], {"a": MergePolicy.KEEP}, {"a": "bigint"}
-    )
-    assert "WHEN MATCHED" not in sql
-    assert "WHEN NOT MATCHED THEN INSERT" in sql
-
-
 def test_identifiers_with_quotes_rejected():
     with pytest.raises(ValueError):
-        merge_into_sql("t`x", "s", ["k"], ["a"])
+        merge_as_select_sql("t`x", "s", ["k"], ["a"])
     with pytest.raises(ValueError):
-        merge_into_sql("t", "s", ['k"'], ["a"])
+        merge_as_select_sql("t", "s", ['k"'], ["a"])
 
 
 def test_select_form_matches_point_table_merge(spark, tmp_path):
@@ -134,173 +93,3 @@ def test_select_form_matches_point_table_merge(spark, tmp_path):
     assert got[("s1", "h1")] == (5, 7, "new", 100, 2.0)
     assert got[("s1", "h2")] == (None, None, "new2", 200, None)
     assert got[("s3", "h9")] == (1, 1, "ins", 400, 3.0)
-
-
-def test_point_table_emits_its_own_merge_sql(spark, tmp_path):
-    schema = "series string, hero string, played long, dmg double"
-    pt = PointTable(
-        spark,
-        str(tmp_path / "pt2"),
-        KEY,
-        {"played": MergePolicy.ADD, "dmg": MergePolicy.ADD},
-        num_buckets=2,
-    )
-    pt.merge(
-        spark.createDataFrame([("s1", "h1", 1, 0.5)], schema), batch_id="b0"
-    )
-    sql = pt.to_merge_into_sql("lake.stats", "delta_view")
-    # dotted target names are common in lakehouses — must be accepted
-    assert sql.startswith("MERGE INTO lake.stats AS t")
-    assert "t.played = t.played + s.played" in sql
-    assert "DECIMAL(28,6)" in sql  # dmg is double → exact add
-
-
-# ---------------------------------------------------------------------------
-# EXECUTING the emitted MERGE INTO through Spark itself (VERDICT r4 item 5)
-# ---------------------------------------------------------------------------
-
-_SPARK_MERGE_DRIVER = r'''
-import sys
-from pyspark.sql import SparkSession
-
-jar = sys.argv[1]
-spark = (
-    SparkSession.builder.master("local[4]")
-    .config("spark.jars", jar)
-    .config("spark.sql.catalog.memcat", "MemoryRowLevelCatalog")
-    .config("spark.sql.shuffle.partitions", "4")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
-
-from cruncher_spark.merge.merge_into import merge_into_sql
-from cruncher_spark.merge.upsert import MergePolicy, PointTable
-
-schema = (
-    "k bigint, n bigint, ns bigint, hi bigint, lo bigint, gr bigint, "
-    "v double, tag string, first string"
-)
-policies = {
-    "n": MergePolicy.ADD,
-    "ns": MergePolicy.ADD_NULLSAFE,
-    "hi": MergePolicy.MAX,
-    "lo": MergePolicy.LEAST,
-    "gr": MergePolicy.GREATEST,
-    "v": MergePolicy.ADD,          # double -> exact DECIMAL(28,6) add
-    "tag": MergePolicy.OVERWRITE,
-    "first": MergePolicy.KEEP,
-}
-# NULLs on each side of each policy + a carryover row + a pure insert
-seed = [
-    (1, 10, 10, 5, 5, 5, 1.5, "a", "A"),
-    (2, None, None, None, None, None, 2.5, "b", "B"),
-    (3, 7, 7, 9, 9, 9, None, None, None),
-    (4, 1, 1, 1, 1, 1, 0.25, "d", "D"),   # carryover: absent from delta
-]
-delta = [
-    (1, 3, 3, 9, 2, 2, 0.25, "a2", "A2"),
-    (2, 5, 5, 6, 6, 6, None, None, None),
-    (3, None, None, None, None, None, 0.5, "c2", "C2"),
-    (9, 8, 8, 8, 8, 8, 8.0, "i", "I"),    # pure insert
-]
-
-# k NOT NULL: Spark's delta-based rewrite refuses nullable row-id
-# attributes (NULLABLE_ROW_ID_ATTRIBUTES); merge keys are non-null by
-# PointTable contract anyway
-ddl = (
-    "(k BIGINT NOT NULL, n BIGINT, ns BIGINT, hi BIGINT, lo BIGINT, "
-    "gr BIGINT, v DOUBLE, tag STRING, first STRING)"
-)
-# both row-level rewrite modes Spark supports: group-based
-# (copy-on-write, ReplaceData) is the catalog default; delta-based
-# (merge-on-read, WriteDelta -- Iceberg MoR's production mode) is
-# opted into per table via TBLPROPERTIES
-spark.sql(f"CREATE TABLE memcat.ns.pt {ddl}")
-spark.sql(
-    f"CREATE TABLE memcat.ns.ptd {ddl} "
-    "TBLPROPERTIES('rewrite'='delta','rowid'='k')"
-)
-spark.createDataFrame(seed, schema).createOrReplaceTempView("seed")
-spark.createDataFrame(delta, schema).createOrReplaceTempView("delta")
-
-cols = [f.name for f in spark.table("delta").schema.fields if f.name != "k"]
-rewrite_nodes = {}
-for tbl, node in [("memcat.ns.pt", "ReplaceData"),
-                  ("memcat.ns.ptd", "WriteDelta")]:
-    spark.sql(f"INSERT INTO {tbl} SELECT * FROM seed")
-    stmt = merge_into_sql(
-        tbl, "delta", key=["k"], columns=cols,
-        policies=policies, dtypes={"v": "double"},
-    )
-    plan = spark.sql(f"EXPLAIN EXTENDED {stmt}").collect()[0][0]
-    if node not in plan:
-        print(f"REWRITE_MODE_MISSING {tbl}: expected {node}")
-        sys.exit(1)
-    rewrite_nodes[tbl] = node
-    spark.sql(stmt)
-
-got = sorted(map(tuple, spark.sql("SELECT * FROM memcat.ns.pt").collect()))
-got_d = sorted(map(tuple, spark.sql("SELECT * FROM memcat.ns.ptd").collect()))
-
-pt = PointTable(spark, sys.argv[2], key=["k"], policies=policies, num_buckets=2)
-pt.merge(spark.createDataFrame(seed, schema), batch_id="seed")
-pt.merge(spark.createDataFrame(delta, schema), batch_id="delta")
-want = sorted(map(tuple, pt.read().collect()))
-
-if got != want or got_d != want:
-    for label, g_all in [("group", got), ("delta", got_d)]:
-        for g, w in zip(g_all, want):
-            if g != w:
-                print("MISMATCH", label, g, w)
-    sys.exit(1)
-print(f"MERGE_OK rows={len(got)} modes={sorted(rewrite_nodes.values())}")
-'''
-
-
-@pytest.fixture(scope="session")
-def rowlevel_catalog_jar(tmp_path_factory):
-    """Compile tools/testcat/MemoryRowLevelCatalog.java (an in-memory DSv2
-    catalog with group-based row-level operations) against the installed
-    pyspark jars — no external connector needed."""
-    import shutil
-    import subprocess
-    from pathlib import Path
-
-    import pyspark
-
-    if shutil.which("javac") is None or shutil.which("jar") is None:
-        pytest.skip("JDK not available")
-    jars = sorted(Path(pyspark.__file__).parent.glob("jars/*.jar"))
-    build = tmp_path_factory.mktemp("testcat")
-    src = Path(__file__).parent.parent / "tools/testcat/MemoryRowLevelCatalog.java"
-    subprocess.run(
-        ["javac", "--release", "17", "-cp", ":".join(map(str, jars)),
-         "-d", str(build), str(src)],
-        check=True, capture_output=True,
-    )
-    jar = build / "testcat.jar"
-    subprocess.run(
-        ["jar", "cf", str(jar), "-C", str(build), "."],
-        check=True, capture_output=True,
-    )
-    return jar
-
-
-def test_emitted_merge_executes_on_spark_v2_catalog(
-    rowlevel_catalog_jar, tmp_path
-):
-    """Run the EMITTED MERGE INTO through Spark's own MERGE execution
-    (group-based row-level rewrite) and assert the resulting table equals
-    PointTable.merge on the same seed+delta — every policy, NULLs on both
-    sides. A subprocess because spark.jars only applies at JVM launch."""
-    import subprocess
-    import sys
-
-    proc = subprocess.run(
-        [sys.executable, "-c", _SPARK_MERGE_DRIVER,
-         str(rowlevel_catalog_jar), str(tmp_path / "pt_expected")],
-        capture_output=True, text=True, timeout=600, cwd="/root/repo",
-    )
-    assert proc.returncode == 0, (proc.stdout[-2000:], proc.stderr[-2000:])
-    # both rewrite modes executed and matched PointTable.merge
-    assert "MERGE_OK rows=5 modes=['ReplaceData', 'WriteDelta']" in proc.stdout

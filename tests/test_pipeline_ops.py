@@ -2049,14 +2049,15 @@ def test_quality_pr_curve_invariants(spark):
         assert b.n_pred <= a.n_pred and b.tp <= a.tp
 
 
-@pytest.fixture(scope="module")
-def empty_emb_dir(tmp_path_factory):
-    """sf0.001's embeddings table with zero rows, schema kept."""
+@pytest.fixture(scope="module", params=[0, 3], ids=["empty", "3rows"])
+def empty_emb_dir(request, tmp_path_factory):
+    """sf0.001's embeddings table cut to its first 0 or 3 rows, schema
+    kept: fewer vectors than the fits seed centroids (codewords)."""
     import pyarrow.parquet as pq
 
     out = tmp_path_factory.mktemp("empty_emb")
-    empty = pq.read_table(f"{SF_DIR}/embeddings.parquet").slice(0, 0)
-    pq.write_table(empty, out / "embeddings.parquet")
+    tiny = pq.read_table(f"{SF_DIR}/embeddings.parquet").slice(0, request.param)
+    pq.write_table(tiny, out / "embeddings.parquet")
     return str(out)
 
 
@@ -2073,19 +2074,28 @@ def empty_emb_dir(tmp_path_factory):
 )
 def test_ivf_pq_queries_answer_empty_embeddings(spark, empty_emb_dir, name):
     """The IVF/PQ gates fit their centroids and codebooks on a sample of
-    the embeddings; on an empty table they return DuckDB's empty answer,
-    with the oracle's columns, instead of raising."""
+    the embeddings; on an empty or 3-row table they return DuckDB's
+    answer, with the oracle's columns and values, instead of raising."""
+    import sys
+    from pathlib import Path
+
     import duckdb
 
     from cruncher_spark.plans import QUERIES, query_map
 
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+    from oracle_check import normalize
+
     got = query_map()[name](spark, empty_emb_dir)
-    assert got.collect() == []
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW embeddings AS SELECT * FROM "
         f"read_parquet('{empty_emb_dir}/embeddings.parquet')"
     )
     res = con.execute(QUERIES[name].oracle(empty_emb_dir))
-    assert res.fetchall() == []
-    assert sorted(got.columns) == sorted(d[0] for d in res.description)
+    want = res.fetchall()
+    cols = [d[0] for d in res.description]
+    assert sorted(got.columns) == sorted(cols)
+    assert normalize([tuple(r) for r in got.collect()], got.columns) == (
+        normalize(want, cols)
+    )

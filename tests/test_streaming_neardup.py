@@ -409,8 +409,8 @@ def test_writer_lock_is_reentrant(spark, tmp_path):
     with pt.writer_lock():
         with pt.writer_lock():  # nested no-op
             assert pt.merge(d, batch_id="b0") is True  # takes it again
-        assert pt._lock_depth == 1
-    assert pt._lock_depth == 0
+        assert pt._lock_state.depth == 1
+    assert pt._lock_state.depth == 0
     assert pt.merge(d, batch_id="b0") is False  # ledger replay no-op
     rows = {r.k: r.v for r in pt.read().collect()}
     assert rows == {1: 10, 2: 20}
