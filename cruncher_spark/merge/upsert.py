@@ -24,10 +24,13 @@ unioned and hash-partitioned over the buckets, and each write task
 sorts its rows by key and run (the sort the write needs anyway), pairs
 a key's delta row with its stored row through a window ``lag``,
 applies the per-column policies to the pair and writes its bucket's
-file. On a one-bucket table a merge is two Spark jobs, that exchange
-and the write. On a production deployment the same role is played by
-Delta/Iceberg ``MERGE INTO`` with data skipping on the merge key; this
-module gives the same semantics over plain parquet.
+file. A one-bucket table has nothing to route, so it skips the
+exchange: the rows are gathered into the one write task, and a merge
+is one Spark job, the write, whose last stage finishes the delta and
+scans, folds and writes the stored bucket. On a production deployment
+the same role is played by Delta/Iceberg ``MERGE INTO`` with data
+skipping on the merge key; this module gives the same semantics over
+plain parquet.
 
 The bucket count is sized to the state, not fixed: a table starts at
 ``num_buckets`` (default 1) and a merge doubles it while the stored
@@ -486,8 +489,8 @@ class PointTable:
             frame = None
         elif existing:
             # the stored rows as run 0 and the delta, in the stored
-            # dtypes, as run 1: the commit folds them by key inside its
-            # own bucket exchange, so state and delta shuffle once
+            # dtypes, as run 1: the commit folds them by key in its write
+            # stage, so state and delta shuffle at most once
             tgt = self._read_buckets(cur, existing)
             src = delta.selectExpr(
                 *[f"CAST({_q(c)} AS {t}) AS {_q(c)}" for c, t in tgt.dtypes],
@@ -529,8 +532,8 @@ class PointTable:
     # semantics exactly (incl. MySQL NULL quirks — see _fold_expr).
     # Compaction folds the newest two ADJACENT runs while the older is
     # < LSM_FOLD_FACTOR x the newer (the binary-counter invariant),
-    # pairwise inside the write's bucket exchange like the bucketed
-    # merge (_fold_pairs):
+    # pairwise in the write's own stage like the bucketed merge
+    # (_fold_pairs):
     # adjacency preserves order-sensitive policies (KEEP/OVERWRITE/MAX),
     # the geometric size ladder bounds live runs at O(log(state/delta))
     # and amortized write amplification at O(log) — per-batch merge cost
@@ -611,7 +614,7 @@ class PointTable:
         pairwise policies of :meth:`_pair_expr`: the bucketed merge
         (stored rows as run 0, the delta as run 1) and the LSM
         compaction. The window needs its rows clustered by key, which
-        the write's bucket exchange already does, and sorted by
+        the write's partitioning already does, and sorted by
         (bucket, key, run), which is the write's own sort: a key's newer
         row sees the older one through ``lag`` and is the one kept.
         Merged values are cast back to the stored dtype, for the reason
@@ -795,7 +798,7 @@ class PointTable:
         or, for an LSM run, ``data/<run>``, one write task and one file
         per bucket, each file sorted by key. With ``fold`` it is a
         union of two ``run``-tagged runs, folded by key
-        (:meth:`_fold_pairs`) in the write's own exchange. ``keep``
+        (:meth:`_fold_pairs`) in the write's own stage. ``keep``
         names the dirs of ``cur/data`` (buckets or runs) hard-linked in
         unchanged; ``ledger`` is the
         new set of applied batch ids (None: ``cur``'s, linked forward);
@@ -816,12 +819,19 @@ class PointTable:
             # hash-partitioning the key over num_buckets puts bucket b in
             # partition b (both are pmod(murmur3(key), num_buckets)), so
             # no two buckets share a write task; partitioning on the
-            # bucket column would hash bucket ids again and collide. The
-            # fold's window is clustered by that partitioning, so it runs
-            # in the write stage, on the write's sort.
-            rows = frame.repartition(
-                self.num_buckets, *[F.col(k) for k in self.key]
-            ).withColumn(_BUCKET_COL, self._bucket_expr())
+            # bucket column would hash bucket ids again and collide. One
+            # bucket has nothing to route: coalesce gathers every row into
+            # the one write task without an exchange, and the stored
+            # scan, the fold and the write run in the stage that finishes
+            # the frame. Either partitioning clusters the fold's window,
+            # so it runs in the write stage, on the write's sort.
+            if self.num_buckets == 1:
+                rows = frame.coalesce(1)
+            else:
+                rows = frame.repartition(
+                    self.num_buckets, *[F.col(k) for k in self.key]
+                )
+            rows = rows.withColumn(_BUCKET_COL, self._bucket_expr())
             if fold:
                 rows = self._fold_pairs(rows)
             if schema is None:

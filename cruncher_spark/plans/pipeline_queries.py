@@ -4312,11 +4312,17 @@ def quality_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
                 6,
             ).alias("prec"),
-            F.round(F.col("tp").cast("double") / F.col("n_pos"), 6).alias(
-                "rec"
-            ),
+            # try_divide: a corpus with no positive document has NULL
+            # recall (and F1, when nothing is predicted either), as in
+            # DuckDB, where plain division raises under ANSI mode
             F.round(
-                2.0 * F.col("tp") / (F.col("n_pred") + F.col("n_pos")), 6
+                F.try_divide(F.col("tp").cast("double"), F.col("n_pos")), 6
+            ).alias("rec"),
+            F.round(
+                F.try_divide(
+                    2.0 * F.col("tp"), F.col("n_pred") + F.col("n_pos")
+                ),
+                6,
             ).alias("f1"),
         )
     )

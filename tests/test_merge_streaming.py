@@ -917,12 +917,12 @@ def test_one_bucket_merge_skips_bucket_discovery(spark, tmp_path):
     assert 0 < jobs[1] < jobs[2], jobs
 
 
-def test_one_bucket_merge_is_one_exchange_and_the_write(spark, tmp_path):
-    """A merge into a stored one-bucket table folds the stored rows and
-    the delta inside the bucket write's own exchange: exactly two Spark
-    jobs, that exchange and the write. The fold and the write share one
-    sort by key: the bucket file's keys come out in order even when
-    neither input was."""
+def test_one_bucket_merge_is_one_job_the_write(spark, tmp_path):
+    """A merge into a stored one-bucket table has no bucket to route
+    rows to, so it runs no exchange: exactly one Spark job, the write,
+    which scans the stored bucket, folds it with the delta and writes.
+    The fold and the write share one sort by key: the bucket file's keys
+    come out in order even when neither input was."""
     import random
 
     import pyarrow.parquet as pq
@@ -938,11 +938,70 @@ def test_one_bucket_merge_is_one_exchange_and_the_write(spark, tmp_path):
         spark, f"fold-{tmp_path.name}",
         lambda: pt.merge(spark.createDataFrame(delta, schema), batch_id="delta"),
     )
-    assert jobs == 2
+    assert jobs == 1
     files = list((pt._current_version() / "data").rglob("*.parquet"))
     assert len(files) == 1
     keys = pq.read_table(files[0], columns=["k"])["k"].to_pylist()
     assert keys == sorted(_fold(seed, delta))
+    assert {r.k: r.n for r in pt.read().collect()} == _fold(seed, delta)
+
+
+def test_one_bucket_table_gathers_a_many_partition_delta_into_one_file(
+    spark, tmp_path
+):
+    """A fresh one-bucket table fed a delta spread over several
+    partitions, then a second such delta, writes one sorted file per
+    merge: the gather puts every partition's rows in the one write
+    task."""
+    import random
+
+    import pyarrow.parquet as pq
+
+    schema = "k int, n long"
+    d0 = [(i, 1) for i in range(500)]
+    d1 = [(i, 3) for i in range(0, 800, 4)]
+    random.Random(2).shuffle(d0)
+    random.Random(3).shuffle(d1)
+    pt = PointTable(spark, str(tmp_path / "pt"), key=["k"])
+    for n, d in enumerate((d0, d1)):
+        pt.merge(spark.createDataFrame(d, schema).repartition(4), batch_id=f"d{n}")
+        assert pt.num_buckets == 1
+        files = list((pt._current_version() / "data").rglob("*.parquet"))
+        assert len(files) == 1
+        keys = pq.read_table(files[0], columns=["k"])["k"].to_pylist()
+        assert keys == sorted(_fold(*(d0, d1)[: n + 1]))
+    assert {r.k: r.n for r in pt.read().collect()} == _fold(d0, d1)
+
+
+def test_two_bucket_merge_routes_each_key_through_its_exchange(spark, tmp_path):
+    """With two buckets the merge still discovers the delta's buckets and
+    hash-partitions state and delta over them before the write, five
+    jobs in all, and each key lands in its ``pmod(hash(key), 2)``
+    bucket."""
+    import pyarrow.parquet as pq
+
+    schema = "k int, n long"
+    seed = [(i, 1) for i in range(200)]
+    delta = [(i, 2) for i in range(0, 300, 3)]
+    pt = PointTable(spark, str(tmp_path / "pt"), key=["k"], num_buckets=2)
+    pt.merge(spark.createDataFrame(seed, schema), batch_id="seed")
+    jobs = _jobs_in_group(
+        spark, f"route-{tmp_path.name}",
+        lambda: pt.merge(spark.createDataFrame(delta, schema), batch_id="delta"),
+    )
+    assert jobs == 5
+    want = {
+        r.k: r.b
+        for r in spark.createDataFrame([(k,) for k in _fold(seed, delta)], "k int")
+        .selectExpr("k", "pmod(hash(k), 2) AS b")
+        .collect()
+    }
+    got = {}
+    for f in (pt._current_version() / "data").rglob("*.parquet"):
+        b = int(f.parent.name.split("=")[1])
+        got.update((k, b) for k in pq.read_table(f, columns=["k"])["k"].to_pylist())
+    assert got == want
+    assert set(want.values()) == {0, 1}
     assert {r.k: r.n for r in pt.read().collect()} == _fold(seed, delta)
 
 

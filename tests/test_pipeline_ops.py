@@ -2050,15 +2050,56 @@ def test_quality_pr_curve_invariants(spark):
 
 
 @pytest.fixture(scope="module", params=[0, 3], ids=["empty", "3rows"])
-def empty_emb_dir(request, tmp_path_factory):
-    """sf0.001's embeddings table cut to its first 0 or 3 rows, schema
-    kept: fewer vectors than the fits seed centroids (codewords)."""
+def tiny_dir(request, tmp_path_factory):
+    """sf0.001's embeddings and documents tables cut to their first 0 or
+    3 rows, schema kept: fewer vectors than the fits seed centroids
+    (codewords), and no positive document (``lang = 'en'``)."""
     import pyarrow.parquet as pq
 
-    out = tmp_path_factory.mktemp("empty_emb")
-    tiny = pq.read_table(f"{SF_DIR}/embeddings.parquet").slice(0, request.param)
-    pq.write_table(tiny, out / "embeddings.parquet")
+    out = tmp_path_factory.mktemp("tiny")
+    for table in ("embeddings", "documents"):
+        tiny = pq.read_table(f"{SF_DIR}/{table}.parquet").slice(0, request.param)
+        pq.write_table(tiny, out / f"{table}.parquet")
     return str(out)
+
+
+def _assert_answers_like_the_oracle(spark, sf_dir, name):
+    """Query ``name`` over ``sf_dir``'s embeddings and documents returns
+    its DuckDB oracle's columns and values."""
+    import sys
+    from pathlib import Path
+
+    import duckdb
+
+    from cruncher_spark.plans import oracle_map, query_map
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+    from oracle_check import normalize
+
+    got = query_map()[name](spark, sf_dir)
+    con = duckdb.connect()
+    for table in ("embeddings", "documents"):
+        con.execute(
+            f"CREATE VIEW {table} AS SELECT * FROM "
+            f"read_parquet('{sf_dir}/{table}.parquet')"
+        )
+    res = con.execute(oracle_map(sf_dir)[name])
+    want = res.fetchall()
+    cols = [d[0] for d in res.description]
+    assert sorted(got.columns) == sorted(cols)
+    assert normalize([tuple(r) for r in got.collect()], got.columns) == (
+        normalize(want, cols)
+    )
+
+
+def test_quality_pr_curve_answers_a_corpus_without_positives(spark, tiny_dir):
+    """With no positive document, recall and F1 divide by zero: the gate
+    returns DuckDB's NULLs instead of raising on collect."""
+    import pyarrow.parquet as pq
+
+    docs = pq.read_table(f"{tiny_dir}/documents.parquet", columns=["lang"])
+    assert "en" not in docs["lang"].to_pylist()
+    _assert_answers_like_the_oracle(spark, tiny_dir, "quality_pr_curve")
 
 
 @pytest.mark.parametrize(
@@ -2072,30 +2113,8 @@ def empty_emb_dir(request, tmp_path_factory):
         "ann_ivfpq_refine",
     ],
 )
-def test_ivf_pq_queries_answer_empty_embeddings(spark, empty_emb_dir, name):
+def test_ivf_pq_queries_answer_empty_embeddings(spark, tiny_dir, name):
     """The IVF/PQ gates fit their centroids and codebooks on a sample of
     the embeddings; on an empty or 3-row table they return DuckDB's
     answer, with the oracle's columns and values, instead of raising."""
-    import sys
-    from pathlib import Path
-
-    import duckdb
-
-    from cruncher_spark.plans import QUERIES, query_map
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-    from oracle_check import normalize
-
-    got = query_map()[name](spark, empty_emb_dir)
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{empty_emb_dir}/embeddings.parquet')"
-    )
-    res = con.execute(QUERIES[name].oracle(empty_emb_dir))
-    want = res.fetchall()
-    cols = [d[0] for d in res.description]
-    assert sorted(got.columns) == sorted(cols)
-    assert normalize([tuple(r) for r in got.collect()], got.columns) == (
-        normalize(want, cols)
-    )
+    _assert_answers_like_the_oracle(spark, tiny_dir, name)

@@ -4,10 +4,14 @@ Round 3 shipped with a gate that failed *analysis* (TIMESTAMP_NTZ drift in
 regenerated testdata reached ``unix_micros`` unnormalized) because nothing
 cheap re-validated the full query surface after the environment changed.
 This tool is that validation: for every ``query_map()`` entry it builds the
-plan (catches AnalysisException) and forces execution with ``.count()``
-(catches runtime errors) at the smallest scale factor — seconds, not
-minutes. Run it before ending any round; a red row here means a red driver
-gate later.
+plan (catches AnalysisException) and forces execution into Spark's
+``noop`` sink (catches runtime errors) at the smallest scale factor —
+seconds, not minutes. The sink computes every output column, as
+``collect()`` does; ``.count()`` would let the optimizer prune columns
+and skip the expressions that raise (a division by zero in a ratio
+column passes a count). The row count is read from an observed metric
+of the same run. Run it before ending any round; a red row here means a
+red driver gate later.
 
 Usage: python tools/preflight.py [sf_dir] [query ...]
 Exit code: 0 iff every query analyzed and executed.
@@ -20,6 +24,9 @@ import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+from pyspark.sql import Observation
+from pyspark.sql import functions as F
 
 from cruncher_spark.plans import oracle_map, query_map
 from cruncher_spark.session import get_spark
@@ -55,7 +62,14 @@ def main() -> int:
         try:
             df = fn(spark, sf_dir)
             schema = df.schema.simpleString()  # forces analysis
-            n = df.count()  # forces execution
+            obs = Observation(f"preflight_{name}")
+            (
+                df.observe(obs, F.count(F.lit(1)).alias("rows"))
+                .write.format("noop")
+                .mode("overwrite")
+                .save()
+            )  # forces execution of every column
+            n = obs.get["rows"]
         except Exception as exc:  # noqa: BLE001 - report every failure
             failures.append(name)
             msg = f"{type(exc).__name__}: {exc}".splitlines()[0][:160]
