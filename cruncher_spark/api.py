@@ -223,16 +223,27 @@ class CruncherAPI:
         if view not in CRUNCH_VIEWS:
             self._error(h, 404, "unknown_view", f"unknown view {view!r}")
             return
-        length = int(h.headers.get("Content-Length", "0"))
+        length = h.headers.get("Content-Length", "0")
+        if not length.isdecimal():  # isdigit() passes '²', which int() refuses
+            self._error(
+                h, 400, "bad_request", "Content-Length must be an integer >= 0"
+            )
+            return
         try:
-            payload = json.loads(h.rfile.read(length) or b"{}")
+            payload = json.loads(h.rfile.read(int(length)) or b"{}")
         except json.JSONDecodeError as e:
             self._error(h, 400, "bad_json", f"invalid JSON body: {e}")
             return
-        ids = payload.get("ids", [])
-        if not ids:
+        # ids reach the plan as a list (a string would be crunched one
+        # character per id) and batch_id lands in a string ledger column
+        ids = payload.get("ids") if isinstance(payload, dict) else None
+        if not (
+            isinstance(ids, list) and ids and all(isinstance(i, str) for i in ids)
+            and isinstance(payload.get("batch_id", ""), str)
+        ):
             self._error(
-                h, 400, "bad_request", "body must carry non-empty 'ids'"
+                h, 400, "bad_request", "body must be an object with non-empty"
+                " 'ids', a list of strings, and an optional string 'batch_id'",
             )
             return
         builder, key, policies = CRUNCH_VIEWS[view]

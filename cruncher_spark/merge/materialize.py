@@ -25,7 +25,10 @@ fixed-histogram quantiles, count-min) are the scale path for those.
 Each ``refresh`` aggregates ONLY the new rows (partial aggregate, one
 shuffle of the batch) and folds the result into a ``PointTable`` — so
 view freshness costs O(batch · touched-buckets), never O(history), and
-the batch-id ledger makes replayed refreshes idempotent end-to-end.
+the batch-id ledger makes replayed refreshes idempotent end-to-end. The
+view's table sizes its own layout: it starts at one bucket, so a small
+view's refresh runs no bucket discovery and no bucket exchange, and grows
+with the state (``PointTable._grow_layout``).
 """
 
 from __future__ import annotations
@@ -89,7 +92,6 @@ class IncrementalView:
         path: str,
         keys: Sequence[str],
         measures: Mapping[str, Measure],
-        num_buckets: int = 16,
     ):
         self.keys = list(keys)
         self.measures = dict(measures)
@@ -100,10 +102,7 @@ class IncrementalView:
                 policies[f"__{name}_cnt"] = MergePolicy.ADD_NULLSAFE
             else:
                 policies[name] = _DISTRIBUTIVE[m.agg]
-        self.point = PointTable(
-            spark, path, key=self.keys, policies=policies,
-            num_buckets=num_buckets,
-        )
+        self.point = PointTable(spark, path, key=self.keys, policies=policies)
 
     def delta(self, batch: DataFrame) -> DataFrame:
         """Partial aggregate of ONE batch of new rows (a single shuffle

@@ -14,10 +14,10 @@ merge policies seen in the reference:
                    insert wins (updated_at in crunch_global.sql:68-87;
                    wins in crunch_phases.sql:95-156)
 
-Cost model: state is laid out in ``num_buckets`` hash buckets of the
-merge key (``pt_bucket=N`` parquet partitions). A merge reads and
-rewrites the buckets the delta's keys hash into; every untouched bucket
-is hard-linked into the new state version (zero data movement,
+Cost model: state is laid out in hash buckets of the merge key
+(``pt_bucket=N`` parquet partitions). A merge reads and rewrites the
+buckets the delta's keys hash into; every untouched bucket is
+hard-linked into the new state version (zero data movement,
 byte-identical files). The rewrite is one fold and one exchange: the
 stored rows of those buckets and the delta, tagged as runs 0 and 1, are
 unioned and hash-partitioned over the buckets, and each write task
@@ -32,11 +32,11 @@ the same role is played by Delta/Iceberg ``MERGE INTO`` with data
 skipping on the merge key; this module gives the same semantics over
 plain parquet.
 
-The bucket count is sized to the state, not fixed: a table starts at
-``num_buckets`` (default 1) and a merge doubles it while the stored
-bytes exceed ``spark.sql.files.openCostInBytes`` (4 MiB) per bucket
-(:meth:`PointTable._grow_layout`). A 1000-id crunch batch carries ~1e4
-keys and lands in every bucket, so for the worker's batches the count
+The bucket count is sized to the state, and no caller sets it: a new
+table starts at one bucket and a merge doubles the count while the
+stored bytes exceed ``spark.sql.files.openCostInBytes`` (4 MiB) per
+bucket (:meth:`PointTable._grow_layout`). A 1000-id crunch batch carries
+~1e4 keys and lands in every bucket, so for the worker's batches the count
 decides how many files and write tasks a merge pays for, not how many
 bytes it rewrites: state under 4 MiB is one file, larger state is
 written by one task per bucket, in parallel. A narrow delta (a
@@ -45,14 +45,16 @@ at most ~4 MiB per key; under 4 MiB of state that is all of it.
 Against the old fixed 32 buckets (MIGRATION.md, "Point-table layout"),
 measured on four cores: worker batches merge faster up to ~15 MB of
 state and ~25% slower at ~140 MB; one-id deltas slower at ~15 MB.
+:meth:`PointTable.rebucket` is the one explicit re-layout.
 
 When a delta's keys are UNIFORM over the key space (streaming ingest
 survivors), every bucket is touched and the bucketed rewrite degrades to
 O(state) per batch — for that shape ``mode="lsm"`` appends each delta as
 an immutable run instead (O(delta) per batch forever) and folds runs at
 read/compaction time with policy aggregates that reproduce the pairwise
-merge semantics exactly; see the "LSM (append + compact) merge mode"
-section below.
+merge semantics exactly. LSM runs are sized per write from the same
+rule: an append is one bucket, a fold takes the count its two runs'
+bytes need; see the "LSM (append + compact) merge mode" section below.
 
 Commit protocol — every writer (bucketed merge, LSM run append, LSM
 run fold and ``rebucket``'s whole-state rewrite) goes through one
@@ -127,11 +129,12 @@ class PointTable:
     contractually non-NULL — NULL keys are outside the contract, and a
     merge folds them as one key); ``policies`` maps measure column →
     MergePolicy, defaulting to ADD (the dominant reference policy).
-    ``num_buckets`` is the hash-bucket count a new table starts at (a
-    floor: bucketed merges double it as the state grows, see
-    :meth:`_grow_layout`). An existing table's persisted count always
-    wins over the handle's, and only a merge that rewrites every bucket
-    (a growth step, or :meth:`rebucket`) changes the key→bucket mapping.
+    The layout has no setting, like a MySQL table's storage: a new table
+    starts at one hash bucket and bucketed merges double the count as the
+    state grows (:meth:`_grow_layout`). An existing table's persisted
+    count always wins over the handle's, and only a merge that rewrites
+    every bucket (a growth step, or :meth:`rebucket`) changes the
+    key→bucket mapping.
     """
 
     #: LSM size-tiered compaction: fold the newest two runs while the
@@ -146,7 +149,6 @@ class PointTable:
         path: str,
         key: Sequence[str],
         policies: Mapping[str, MergePolicy] | None = None,
-        num_buckets: int = 1,
         retain_versions: int = 1,
         mode: str = "bucketed",
     ):
@@ -154,9 +156,11 @@ class PointTable:
         self.path = Path(path)
         self.key = list(key)
         self.policies = dict(policies or {})
-        self.num_buckets = num_buckets
+        #: the layout's hash-bucket count (the persisted one once stored)
+        self.num_buckets = 1
         if mode not in ("bucketed", "lsm"):
             raise ValueError(f"unknown merge mode: {mode!r}")
+        self._check_lsm(mode)
         #: merge layout (r7 VERDICT #1 — the survivor-merge growth fix).
         #: "bucketed": every merge rewrites the hash buckets the delta's
         #: keys land in — read-optimal (state is always key-unique on
@@ -432,30 +436,43 @@ class PointTable:
             meta = self._meta(cur)
             self.num_buckets = int(meta["num_buckets"])
             self.mode = meta.get("mode", "bucketed")
+            self._check_lsm(self.mode)
         return cur
 
-    def _grow_layout(self, cur: Path | None) -> bool:
-        """Double ``num_buckets`` while ``cur``'s stored bytes exceed
-        ``spark.sql.files.openCostInBytes`` (4 MiB) per bucket; True if
-        the count grew.
+    def _check_lsm(self, mode: str) -> None:
+        """Refuse LSM mode for a MAX column. MySQL's MAX (a NULL on
+        either side keeps the old value) is not associative: a compaction
+        folding two newer runs that hold NULL then x for a key stores
+        NULL, and the read then keeps an older run's smaller value over
+        x, where the bucketed merge answers x."""
+        if mode == "lsm" and MergePolicy.MAX in self.policies.values():
+            raise ValueError(
+                "mode='lsm' cannot fold a MergePolicy.MAX column exactly;"
+                " use mode='bucketed'"
+            )
 
-        That conf is Spark's estimate of a file's fixed cost in scanned
-        bytes, and the smallest split a file scan gives its own task. A
-        merge pays one write task and one file per bucket it rewrites,
-        so state under 4 MiB stays one file, and larger state is written
-        by one task per 2-4 MiB, in parallel. A delta of K keys touches at
-        most K buckets, so a narrow delta rewrites at most ~K x 4 MiB. The
-        bytes are summed on the driver from the file sizes, so sizing
-        runs no Spark job. The count never shrinks: a smaller layout
-        needs :meth:`rebucket`."""
+    def _buckets_for(self, nbytes: int, floor: int = 1) -> int:
+        """``floor`` doubled while ``nbytes`` of parquet exceed
+        ``spark.sql.files.openCostInBytes`` (4 MiB) per bucket: Spark's
+        estimate of a file's fixed cost, and the smallest split a scan
+        gives its own task. A write pays one task and one file per
+        bucket, so under 4 MiB is one file. The bytes are file sizes
+        summed on the driver: sizing runs no Spark job."""
+        conf = self.spark._jsparkSession.sessionState().conf()
+        n = floor
+        while nbytes > n * conf.filesOpenCostInBytes():
+            n *= 2
+        return n
+
+    def _grow_layout(self, cur: Path | None) -> bool:
+        """Size the layout to ``cur``'s stored bytes, from the current
+        count up; True if it grew. A delta of K keys rewrites at most
+        ~K x 4 MiB. The count never shrinks: that needs :meth:`rebucket`."""
         if cur is None:
             return False
-        state_bytes = self._parquet_bytes(cur / "data")
-        conf = self.spark._jsparkSession.sessionState().conf()
-        bucket_bytes = conf.filesOpenCostInBytes()
-        n = self.num_buckets
-        while state_bytes > n * bucket_bytes:
-            n *= 2
+        n = self._buckets_for(
+            self._parquet_bytes(cur / "data"), self.num_buckets
+        )
         grew, self.num_buckets = n != self.num_buckets, n
         return grew
 
@@ -524,7 +541,10 @@ class PointTable:
     #
     # Layout: ``v_N/data/run=SSSSSS/pt_bucket=B/part-*.parquet`` — each
     # run is one immutable, key-unique delta (or a fold of adjacent
-    # deltas), bucket-partitioned like the bucketed layout. A version is
+    # deltas), bucket-partitioned but sized per write: an append is one
+    # bucket, a fold takes the count its two runs' bytes need
+    # (_buckets_for). Reads and folds group by key, so runs of one
+    # version may differ in count. A version is
     # the SET of its runs; append = write one new run dir + hard-link
     # every prior run (zero data movement) through the one commit path
     # (_commit_version). Reads fold runs through per-column POLICY
@@ -534,7 +554,8 @@ class PointTable:
     # < LSM_FOLD_FACTOR x the newer (the binary-counter invariant),
     # pairwise in the write's own stage like the bucketed merge
     # (_fold_pairs):
-    # adjacency preserves order-sensitive policies (KEEP/OVERWRITE/MAX),
+    # adjacency preserves order-sensitive policies (KEEP/OVERWRITE; MAX
+    # is not associative, so an LSM table takes none: _check_lsm),
     # the geometric size ladder bounds live runs at O(log(state/delta))
     # and amortized write amplification at O(log) — per-batch merge cost
     # no longer tracks total state size (r7 VERDICT #1).
@@ -554,12 +575,14 @@ class PointTable:
         self, cur: Path | None, delta: DataFrame, ledger: set[str] | None
     ) -> None:
         """Append the delta as a new run: O(delta) regardless of state
-        size — the delta is shuffled once into its bucket layout and
-        written; no existing bucket is read or rewritten. Then run the
-        size-tiered compaction loop (each fold is its own committed
-        version, so a crash at any point leaves consistent state)."""
+        size — the delta is gathered into one bucket, without an
+        exchange, and written; no existing run is read or rewritten.
+        Then run the size-tiered compaction loop (each fold is its own
+        committed version, so a crash at any point leaves consistent
+        state)."""
         runs = self._run_dirs(cur) if cur is not None else []
         seq = self._run_seq(runs[-1]) + 1 if runs else 0
+        self.num_buckets = 1
         self._commit_version(
             cur,
             delta,
@@ -592,6 +615,9 @@ class PointTable:
 
     def _fold_newest_two(self, cur: Path, runs: list[Path]) -> None:
         a, b = runs[-2], runs[-1]
+        self.num_buckets = self._buckets_for(
+            self._parquet_bytes(a) + self._parquet_bytes(b)
+        )
         df = self.spark.read.option("basePath", str(cur / "data")).parquet(
             *[str(d) for d in (a, b) if any(d.rglob("*.parquet"))]
         )
@@ -693,6 +719,7 @@ class PointTable:
         """Collapse a multi-run frame (data cols + ``run``/bucket
         partition cols) to one row per key via policy aggregates: the
         read of an LSM table with more than one live run."""
+        self._check_lsm("lsm")
         out_cols = [c for c in df.columns if c not in ("run", _BUCKET_COL)]
         dtypes = dict(df.dtypes)
         aggs = [
@@ -721,10 +748,6 @@ class PointTable:
           (``0.0 + -0.0`` is ``0.0``), when the pairwise sum keeps a
           ``-0.0``: a lone value passes through ``max``, and values that
           are all ``-0.0`` give ``-0.0``.
-        - MAX (MySQL CASE, NULL keeps OLD): a NULL FIRST value absorbs
-          everything (new > NULL is never true); otherwise later NULLs
-          are ignored and the max of non-NULL values wins — i.e.
-          ``first IS NULL ? NULL : max(values)``.
         - LEAST / GREATEST: plain MIN / MAX (NULL is the identity).
         - KEEP / OVERWRITE: first / last row's value BY RUN SEQ, even
           when that value is NULL (``min_by``/``max_by`` keep a NULL
@@ -760,9 +783,6 @@ class PointTable:
                 .when(all_neg_zero, F.lit(-0.0))
                 .otherwise(F.sum(v))
             )
-        elif policy == MergePolicy.MAX:
-            first = F.min_by(v, F.col("run"))
-            expr = F.when(first.isNull(), F.lit(None)).otherwise(F.max(v))
         elif policy == MergePolicy.LEAST:
             expr = F.min(v)
         elif policy == MergePolicy.GREATEST:
@@ -802,7 +822,8 @@ class PointTable:
         names the dirs of ``cur/data`` (buckets or runs) hard-linked in
         unchanged; ``ledger`` is the
         new set of applied batch ids (None: ``cur``'s, linked forward);
-        ``meta.json`` records the layout and the row ``schema`` (None:
+        ``meta.json`` records the layout (an LSM table's bucket count is
+        its newest write's) and the row ``schema`` (None:
         the written rows', or ``cur``'s when nothing is written), which
         keeps a table with no rows readable. Any leftover dir of a
         crashed earlier attempt at the same version number is replaced.
@@ -908,19 +929,18 @@ class PointTable:
     # -- maintenance ---------------------------------------------------------
 
     def rebucket(self, num_buckets: int) -> None:
-        """Rewrite the table into a new hash-bucket layout, atomically.
+        """Rewrite the table into a new hash-bucket layout, atomically:
+        the one way to set a bucket count.
 
-        A merge rewrites ``state/num_buckets`` bytes per affected bucket,
-        and a delta of K distinct keys touches ``min(K, num_buckets)``
-        buckets. Bucketed merges already grow the count on their own
-        (doubling past ``spark.sql.files.openCostInBytes`` of state per
-        bucket, :meth:`_grow_layout`) and never shrink it, so this is
-        for an explicit re-layout: shrinking a table written with more
-        buckets than its state needs (``rebucket(1)`` on a table written
-        at the old fixed 32 lets growth take over from one bucket), or
-        jumping ahead of growth before a known bulk load — the same
-        operation as HBase region splitting or Delta/Iceberg
-        ``OPTIMIZE``-with-repartition.
+        Merges grow a bucketed table's count on their own
+        (:meth:`_grow_layout`) and never shrink it, and LSM runs are
+        sized per write, so this is for an explicit re-layout: shrinking
+        a table an older build wrote at a fixed count (``rebucket(1)``
+        lets growth take over from one bucket), or jumping ahead of
+        growth before a known bulk load — like HBase region splitting or
+        Delta/Iceberg ``OPTIMIZE``. An LSM table gets one run at
+        ``num_buckets``, kept until a compaction folds that run and sizes
+        the result from its bytes.
 
         Cost: one full read + partitioned rewrite of the state (run it
         off the merge path). The ledger is carried forward unchanged, so

@@ -1377,11 +1377,10 @@ def incremental_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             "hi": Measure("max", "value"),
             "mean": Measure("avg", "dv"),
         },
-        num_buckets=4,
     )
     # both batch slices project the same scan; persist it so the second
-    # refresh (and each refresh's bucket-discovery + write passes) read
-    # the cached projection instead of rescanning the fact table
+    # refresh reads the cached projection instead of rescanning the fact
+    # table
     events = events.persist()
     try:
         view.refresh(events.where(F.col("event_id") % 2 == 0), batch_id="even")

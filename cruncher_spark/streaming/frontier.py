@@ -25,7 +25,8 @@ State is a :class:`~cruncher_spark.merge.upsert.PointTable` in LSM mode —
 appends are O(batch) regardless of how many URLs the frontier has ever
 seen, the property a 100 TB crawl's seen-set (billions of rows, hot
 append path) actually needs — under the batch-id ledger, so the merge
-itself is replay-idempotent too.
+itself is replay-idempotent too. Each batch's run is one file; the
+table's compaction sizes the larger runs it folds from their bytes.
 """
 
 from __future__ import annotations
@@ -62,7 +63,6 @@ class UrlFrontier:
         state_dir: str,
         *,
         id_col: str = "doc_id",
-        num_buckets: int = 32,
     ):
         self.spark = spark
         self.id_col = id_col
@@ -74,7 +74,6 @@ class UrlFrontier:
                 "first_doc": MergePolicy.KEEP,
                 "first_batch": MergePolicy.KEEP,
             },
-            num_buckets=num_buckets,
             mode="lsm",
         )
 

@@ -101,8 +101,9 @@ class DedupIngest:
     #: per-batch cost tracked TOTAL survivor-table size once uniform keys
     #: touched every bucket (STREAMSCALE measured x3.39 shuffle growth
     #: over a x4 index growth); appending each batch as an immutable run
-    #: is O(batch) forever, and KEEP-policy folding is a first-by-run
-    SURVIVOR_BUCKETS = 8
+    #: is O(batch) forever, and KEEP-policy folding keeps the first
+    #: run's row. A batch's run is one file; compaction sizes the runs
+    #: it folds from their bytes
     SURVIVOR_MODE = "lsm"
 
     def __init__(
@@ -127,7 +128,6 @@ class DedupIngest:
             str(self.state / "survivors"),
             key=[self.ID],
             policies={c: MergePolicy.KEEP for c in self.KEEP},
-            num_buckets=self.SURVIVOR_BUCKETS,
             mode=self.SURVIVOR_MODE,
         )
         self.index_dir = self.state / "band_index"

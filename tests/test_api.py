@@ -101,6 +101,54 @@ def test_errors_are_structured_json(api):
     assert s == 404 and body["code"] == "not_found"
 
 
+def _post_raw(api, path, body: bytes, length: str | None = None):
+    """POST ``body`` as sent, with ``length`` as its Content-Length
+    header (default: the true length); return (status, parsed body)."""
+    import http.client
+
+    conn = http.client.HTTPConnection("127.0.0.1", api.port, timeout=120)
+    try:
+        conn.putrequest("POST", path)
+        conn.putheader("Content-Type", "application/json")
+        conn.putheader("Content-Length", str(len(body)) if length is None else length)
+        conn.endheaders(body)
+        r = conn.getresponse()
+        return r.status, json.loads(r.read())
+    finally:
+        conn.close()
+
+
+@pytest.mark.parametrize(
+    "body, length",
+    [
+        # a string is not a list: crunching it would merge one id per
+        # character ('p', '-', '1') and record the batch
+        ({"ids": "p-1", "batch_id": "bad-ids-str"}, None),
+        ({"ids": [1, 2], "batch_id": "bad-ids-int"}, None),
+        (["p-1", "p-2"], None),
+        ({"ids": ["p-1"], "batch_id": 7}, None),
+        ({"ids": ["p-1"], "batch_id": "bad-length"}, "ten"),
+        ({"ids": ["p-1"], "batch_id": "bad-length-sup"}, "\u00b2"),
+    ],
+    ids=[
+        "ids-string", "ids-not-strings", "array-body", "batch-id-int",
+        "length-not-int", "length-superscript",
+    ],
+)
+def test_crunch_rejects_malformed_body(api, body, length):
+    """A ``POST /crunch`` body that is not an object with a non-empty
+    list of string ``ids`` (and a string ``batch_id``, when given), or
+    a non-integer Content-Length, answers 400 ``bad_request`` and
+    leaves the view's ledger as it was."""
+    from cruncher_spark.merge import PointTable
+
+    table = PointTable(api.spark, f"{api.state_dir}/global", key=[])
+    before = table.applied_batches()
+    s, r = _post_raw(api, "/crunch/global", json.dumps(body).encode(), length)
+    assert (s, r["code"]) == (400, "bad_request"), r
+    assert table.applied_batches() == before
+
+
 def test_limit_over_cap_rejected(api):
     """An over-cap ?limit= is REJECTED, not silently clamped (ADVICE
     r7): a truncated row set would read as the complete result. The

@@ -50,12 +50,11 @@ def _batches(spark, seed=11, n_batches=4, rows_per=60):
 
 def test_maintained_equals_recompute(spark, tmp_path):
     batches = _batches(spark)
-    view = IncrementalView(
-        spark, str(tmp_path / "mv"), keys=["k"], measures=MEASURES,
-        num_buckets=4,
-    )
+    view = IncrementalView(spark, str(tmp_path / "mv"), keys=["k"], measures=MEASURES)
     for i, b in enumerate(batches):
         assert view.refresh(b, batch_id=f"b{i}") is True
+        if i == 0:  # the later refreshes fold into four buckets
+            view.point.rebucket(4)
 
     union = batches[0]
     for b in batches[1:]:
@@ -82,14 +81,36 @@ def test_maintained_equals_recompute(spark, tmp_path):
 
 def test_refresh_replay_is_idempotent(spark, tmp_path):
     batches = _batches(spark, n_batches=2)
-    view = IncrementalView(
-        spark, str(tmp_path / "mv"), keys=["k"], measures=MEASURES,
-        num_buckets=2,
-    )
+    view = IncrementalView(spark, str(tmp_path / "mv"), keys=["k"], measures=MEASURES)
     view.refresh(batches[0], batch_id="b0")
     before = sorted(map(tuple, view.read().collect()))
     assert view.refresh(batches[0], batch_id="b0") is False  # redelivery
     assert sorted(map(tuple, view.read().collect())) == before
+
+
+def test_new_view_is_one_bucket_and_refreshes_without_discovery(spark, tmp_path):
+    """A new view's table starts at one bucket, like every point table:
+    its second refresh folds the batch into the stored bucket without
+    first collecting which buckets the batch touches, so it runs fewer
+    jobs than the same refresh of a view rebucketed to two."""
+    from cruncher_spark import observe
+
+    batches = _batches(spark, seed=5, n_batches=2)
+    jobs = {}
+    for n in (1, 2):
+        view = IncrementalView(
+            spark, str(tmp_path / f"mv{n}"), keys=["k"], measures=MEASURES
+        )
+        view.refresh(batches[0], batch_id="b0")
+        assert view.point.num_buckets == 1
+        if n > 1:
+            view.point.rebucket(n)
+        group = f"refresh-{n}-{tmp_path.name}"
+        with observe.job_group(spark, group):
+            view.refresh(batches[1], batch_id="b1")
+        jobs[n] = observe.group_totals(spark, group)["jobs"]
+        assert view.point.num_buckets == n
+    assert 0 < jobs[1] < jobs[2], jobs
 
 
 def test_holistic_aggregate_rejected():
@@ -101,7 +122,6 @@ def test_null_partial_never_shadows_extreme(spark, tmp_path):
     view = IncrementalView(
         spark, str(tmp_path / "mv"), keys=["k"],
         measures={"lo": Measure("min", "v"), "hi": Measure("max", "v")},
-        num_buckets=1,
     )
     view.refresh(
         spark.createDataFrame([(1, None)], "k int, v int"), batch_id="a"
@@ -160,7 +180,6 @@ def test_streaming_continuous_aggregate(spark, tmp_path):
     view = IncrementalView(
         spark, str(tmp_path / "cagg"), keys=["bucket", "d"],
         measures={"n": Measure("count", "v"), "total": Measure("sum", "v")},
-        num_buckets=2,
     )
     q = start_stream_refresh(
         view, stream, str(tmp_path / "ckpt"), available_now=True
@@ -193,10 +212,7 @@ def test_retract_equals_recompute_of_remainder(spark, tmp_path):
         "mean": Measure("avg", "v"),
     }
     batches = _batches(spark, seed=23, n_batches=2)
-    view = IncrementalView(
-        spark, str(tmp_path / "mv"), keys=["k"], measures=measures,
-        num_buckets=2,
-    )
+    view = IncrementalView(spark, str(tmp_path / "mv"), keys=["k"], measures=measures)
     view.refresh(batches[0], batch_id="b0")
     view.refresh(batches[1], batch_id="b1")
     view.retract(batches[0], batch_id="r0")
@@ -221,7 +237,7 @@ def test_retract_equals_recompute_of_remainder(spark, tmp_path):
 def test_retract_refuses_non_invertible_extremes(spark, tmp_path):
     view = IncrementalView(
         spark, str(tmp_path / "mv"), keys=["k"],
-        measures={"lo": Measure("min", "v")}, num_buckets=1,
+        measures={"lo": Measure("min", "v")},
     )
     df = spark.createDataFrame([(1, 2)], "k int, v int")
     view.refresh(df, batch_id="a")
@@ -234,7 +250,7 @@ def test_double_sum_survives_sub_microscale_values(spark, tmp_path):
     1e-9-scale doubles has to accumulate like SQL SUM over DOUBLE."""
     view = IncrementalView(
         spark, str(tmp_path / "mv"), keys=["k"],
-        measures={"total": Measure("sum", "v")}, num_buckets=1,
+        measures={"total": Measure("sum", "v")},
     )
     for i in range(3):
         view.refresh(
@@ -256,7 +272,7 @@ def test_decimal_sum_schema_stable_across_partial_merges(spark, tmp_path):
 
     view = IncrementalView(
         spark, str(tmp_path / "mv"), keys=["k"],
-        measures={"total": Measure("sum", "dv")}, num_buckets=4,
+        measures={"total": Measure("sum", "dv")},
     )
     full = spark.createDataFrame(
         [(k, Decimal(f"{k}.25")) for k in range(8)],
@@ -266,6 +282,7 @@ def test_decimal_sum_schema_stable_across_partial_merges(spark, tmp_path):
         [(3, Decimal("1.5"))], "k int, dv decimal(18,6)"
     )
     view.refresh(full, batch_id="b0")
+    view.point.rebucket(4)
     dtype0 = dict(view.point.read().dtypes)["total"]
     view.refresh(one, batch_id="b1")   # touches a single bucket
     # pre-fix this read (mixed bucket schemas) or the next merge crashed
@@ -294,7 +311,7 @@ def test_recreated_checkpoint_gets_fresh_ledger_scope(spark, tmp_path):
     (src / "f0.json").write_text(json.dumps({"k": 1, "v": 10}))
     view = IncrementalView(
         spark, str(tmp_path / "mv"), keys=["k"],
-        measures={"total": Measure("sum", "v")}, num_buckets=1,
+        measures={"total": Measure("sum", "v")},
     )
 
     def run():

@@ -63,9 +63,7 @@ def test_select_form_matches_point_table_merge(spark, tmp_path):
         ("s3", "h9", 1, 1, "ins", 400, 3.0),    # not matched: plain insert
     ]
 
-    pt = PointTable(
-        spark, str(tmp_path / "pt"), KEY, POLICIES, num_buckets=4
-    )
+    pt = PointTable(spark, str(tmp_path / "pt"), KEY, POLICIES)
     pt.merge(spark.createDataFrame(state_rows, schema), batch_id="b0")
     pt.merge(spark.createDataFrame(delta_rows, schema), batch_id="b1")
     got = {

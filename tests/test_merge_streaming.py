@@ -29,7 +29,6 @@ def _global_point(spark, tmp_path, name="gp"):
         str(tmp_path / name),
         key=GLOBAL_POINT_KEY,
         policies=GLOBAL_POLICIES,
-        num_buckets=4,
     )
 
 
@@ -82,7 +81,8 @@ def test_incremental_merge_equals_batch_fold(spark, crunch_tables, tmp_path):
     """Three sequential merges == the ON-DUPLICATE fold of the three
     deltas (crunch_global.sql:68-87) — including the reference's
     NULL-poisoning add (a cell touched by an all-NULL-winner batch stays
-    NULL) and per-batch impact_score rounding."""
+    NULL) and per-batch impact_score rounding. The last two merge into
+    four buckets."""
     ids = _ids(crunch_tables, 60)
     point = _global_point(spark, tmp_path)
     deltas = [
@@ -91,6 +91,8 @@ def test_incremental_merge_equals_batch_fold(spark, crunch_tables, tmp_path):
     ]
     for i, d in enumerate(deltas):
         point.merge(d, batch_id=f"b{i}")
+        if i == 0:
+            point.rebucket(4)
     expected = _mysql_add_fold(deltas, list(GLOBAL_POINT_KEY))
     _assert_frames_equal(point.read(), expected)
 
@@ -118,6 +120,36 @@ def test_replay_double_counts_without_ledger(spark, crunch_tables, tmp_path):
     assert point.read().agg(F.sum("played")).collect()[0][0] == 2 * before
 
 
+def _file_digests(pt):
+    """Each data sub-dir of ``pt``'s current version → the sorted md5s
+    of its parquet files (file names carry a per-write uuid)."""
+    import hashlib
+
+    data = pt._current_version() / "data"
+    out = {}
+    for f in data.rglob("*.parquet"):
+        key = str(f.parent.relative_to(data))
+        out.setdefault(key, []).append(hashlib.md5(f.read_bytes()).hexdigest())
+    return {k: sorted(v) for k, v in out.items()}
+
+
+def test_same_batches_write_byte_identical_tables(spark, crunch_tables, tmp_path):
+    """Two fresh global-view tables fed the same ``crunch_global_delta``
+    batches, with ``now`` pinned, store the same bytes, file for file:
+    the merge adds no order-dependent value (a double summed in a
+    different order, a row written in a different order). Unpinned,
+    ``updated_at`` is ``current_timestamp()`` under KEEP, and its value
+    alone changes the files."""
+    ids = _ids(crunch_tables, 60)
+    tables = [_global_point(spark, tmp_path, name) for name in ("a", "b")]
+    for pt in tables:
+        for i, lo in enumerate(range(0, 60, 20)):
+            delta = crunch_global_delta(crunch_tables, ids[lo : lo + 20], now=_now())
+            pt.merge(delta, batch_id=f"b{i}")
+    a, b = (_file_digests(pt) for pt in tables)
+    assert a and a == b
+
+
 def test_max_and_overwrite_policies(spark, tmp_path):
     point = PointTable(
         spark,
@@ -125,7 +157,6 @@ def test_max_and_overwrite_policies(spark, tmp_path):
         key=["k"],
         policies={"seen": MergePolicy.MAX, "fame": MergePolicy.OVERWRITE,
                   "label": MergePolicy.KEEP},
-        num_buckets=1,
     )
     df1 = spark.createDataFrame(
         [(1, 10, 5.0, "first"), (2, 20, 6.0, "first")],
@@ -150,7 +181,6 @@ def test_team_fame_overwrite_merge(spark, crunch_tables, tmp_path):
         str(tmp_path / "fame"),
         key=["tm_id"],
         policies={"fame": MergePolicy.OVERWRITE},
-        num_buckets=1,
     )
     fame1 = crunch_team_fame(crunch_tables, 1, today=F.lit("2026-08-10"))
     point.merge(fame1, batch_id="t1-run1")
@@ -168,13 +198,12 @@ def test_merge_rewrites_only_affected_buckets(spark, tmp_path):
     the same atomic pointer flip (no applied-but-unrecorded window)."""
     import os
 
-    point = PointTable(
-        spark, str(tmp_path / "pt"), key=["k"], num_buckets=8,
-    )
+    point = PointTable(spark, str(tmp_path / "pt"), key=["k"])
     base = spark.createDataFrame(
         [(i, 1) for i in range(64)], "k int, n int"
     )
     point.merge(base, batch_id="seed")
+    point.rebucket(8)
 
     def bucket_inodes():
         cur = point._current_version()
@@ -215,7 +244,7 @@ def test_rebucket_rescales_layout_preserving_state(spark, tmp_path):
     """rebucket() changes the hash layout behind one atomic pointer flip:
     state and ledger survive byte-for-value, merges keep working at the
     new bucket count, and replay idempotence is preserved."""
-    point = PointTable(spark, str(tmp_path / "pt"), key=["k"], num_buckets=4)
+    point = PointTable(spark, str(tmp_path / "pt"), key=["k"])
     point.merge(
         spark.createDataFrame([(i, i * 10) for i in range(40)], "k int, n int"),
         batch_id="seed",
@@ -253,7 +282,7 @@ def test_rebucket_rescales_layout_preserving_state(spark, tmp_path):
 def test_merge_without_recorded_schema_falls_back_to_inference(spark, tmp_path):
     """A version whose meta.json has no ``schema`` key (written before the
     key existed) is read by schema inference; the merge still folds."""
-    point = PointTable(spark, str(tmp_path / "pt"), key=["k"], num_buckets=4)
+    point = PointTable(spark, str(tmp_path / "pt"), key=["k"])
     point.merge(
         spark.createDataFrame([(i, i) for i in range(16)], "k int, n long"),
         batch_id="seed",
@@ -277,18 +306,20 @@ def test_merge_keeps_stored_decimal_precision(spark, tmp_path):
     """ADD on DECIMAL widens the sum (decimal(18,6) + decimal(18,6) is
     decimal(19,6)); the merge casts it back, so every file keeps the
     precision meta.json records, which is the schema the next merge's
-    bucket read is pinned to."""
+    bucket read is pinned to. Four buckets: a merge rewrites some and
+    hard-links the others."""
     from decimal import Decimal
 
     import pyarrow.parquet as pq
     from pyspark.sql.types import DecimalType, StructType
 
     schema = "k int, d decimal(18,6)"
-    point = PointTable(spark, str(tmp_path / "pt"), key=["k"], num_buckets=4)
+    point = PointTable(spark, str(tmp_path / "pt"), key=["k"])
     point.merge(
         spark.createDataFrame([(i, Decimal("1.000001")) for i in range(16)], schema),
         batch_id="seed",
     )
+    point.rebucket(4)
     for b in range(3):
         point.merge(
             spark.createDataFrame(
@@ -663,9 +694,7 @@ def test_crash_before_pointer_flip_leaves_table_consistent(
     reclaimed), landing exactly the once-applied state."""
     from cruncher_spark.merge.upsert import PointTable
 
-    pt = PointTable(
-        spark, str(tmp_path / "pt"), key=["k"], num_buckets=2
-    )
+    pt = PointTable(spark, str(tmp_path / "pt"), key=["k"])
     pt.merge(spark.createDataFrame([(1, 10)], "k int, n int"), batch_id="b0")
     before = sorted(map(tuple, pt.read().collect()))
 
@@ -697,9 +726,7 @@ def test_concurrent_merges_serialize_without_losing_deltas(spark, tmp_path):
 
     from cruncher_spark.merge.upsert import PointTable
 
-    pt = PointTable(
-        spark, str(tmp_path / "ptc"), key=["k"], num_buckets=2
-    )
+    pt = PointTable(spark, str(tmp_path / "ptc"), key=["k"])
     pt.merge(spark.createDataFrame([(0, 1)], "k int, n int"), batch_id="seed")
 
     results = {}
@@ -758,13 +785,14 @@ def test_rebucket_online_with_concurrent_merge(spark, tmp_path):
     batch id."""
     import threading
 
-    pt = PointTable(spark, str(tmp_path / "pt"), key=["k"], num_buckets=8)
+    pt = PointTable(spark, str(tmp_path / "pt"), key=["k"])
     pt.merge(
         spark.createDataFrame(
             [(i, i * 10) for i in range(200)], "k int, n int"
         ),
         batch_id="seed",
     )
+    pt.rebucket(8)
     before = {r.k: r.n for r in pt.read().collect()}
 
     # separate handles, as two writers would have
@@ -824,8 +852,8 @@ def test_bucket_layout_grows_with_state_in_one_commit(spark, tmp_path):
     exceed ``spark.sql.files.openCostInBytes`` per bucket. The growing
     merge is one version that rewrites every row into the new layout, one
     file per bucket, and carries the ledger forward; the version before it
-    still reads, a reopened handle adopts the new count, and an explicit
-    floor above what the state needs is kept."""
+    still reads, a reopened handle adopts the new count, and a count
+    that ``rebucket`` set above what the state needs is kept."""
     from pyspark.sql import functions as SF
 
     conf = "spark.sql.files.openCostInBytes"
@@ -869,9 +897,10 @@ def test_bucket_layout_grows_with_state_in_one_commit(spark, tmp_path):
         old = pt.read(version=int(before.name[2:]))
         assert {r.k: r.n for r in old.collect()} == _fold(d0)
 
-        # an explicit floor of 4 over tiny state stays 4
-        small = PointTable(spark, str(tmp_path / "small"), key=["k"], num_buckets=4)
+        # a rebucket to 4 over tiny state stays 4
+        small = PointTable(spark, str(tmp_path / "small"), key=["k"])
         small.merge(spark.createDataFrame([(1, 1), (2, 2)], schema), batch_id="s0")
+        small.rebucket(4)
         small.merge(spark.createDataFrame([(1, 1), (3, 3)], schema), batch_id="s1")
         assert small.num_buckets == 4
         meta = json.loads((small._current_version() / "meta.json").read_text())
@@ -907,8 +936,10 @@ def test_one_bucket_merge_skips_bucket_discovery(spark, tmp_path):
     delta = [(i, 2) for i in range(0, 300, 3)]
     jobs = {}
     for n in (1, 2):
-        pt = PointTable(spark, str(tmp_path / f"pt{n}"), key=["k"], num_buckets=n)
+        pt = PointTable(spark, str(tmp_path / f"pt{n}"), key=["k"])
         pt.merge(spark.createDataFrame(seed, schema), batch_id="seed")
+        if n > 1:
+            pt.rebucket(n)
         jobs[n] = _jobs_in_group(
             spark, f"discovery-{n}-{tmp_path.name}",
             lambda: pt.merge(spark.createDataFrame(delta, schema), batch_id="delta"),
@@ -983,8 +1014,9 @@ def test_two_bucket_merge_routes_each_key_through_its_exchange(spark, tmp_path):
     schema = "k int, n long"
     seed = [(i, 1) for i in range(200)]
     delta = [(i, 2) for i in range(0, 300, 3)]
-    pt = PointTable(spark, str(tmp_path / "pt"), key=["k"], num_buckets=2)
+    pt = PointTable(spark, str(tmp_path / "pt"), key=["k"])
     pt.merge(spark.createDataFrame(seed, schema), batch_id="seed")
+    pt.rebucket(2)
     jobs = _jobs_in_group(
         spark, f"route-{tmp_path.name}",
         lambda: pt.merge(spark.createDataFrame(delta, schema), batch_id="delta"),
@@ -1011,8 +1043,9 @@ def test_merge_keeps_column_order_with_key_last(spark, tmp_path):
     hard-linked unchanged."""
     import pyarrow.parquet as pq
 
-    pt = PointTable(spark, str(tmp_path / "pt"), key=["k"], num_buckets=4)
+    pt = PointTable(spark, str(tmp_path / "pt"), key=["k"])
     pt.merge(spark.createDataFrame([(1, i) for i in range(40)], "n long, k int"))
+    pt.rebucket(4)
     pt.merge(spark.createDataFrame([(5, 0)], "n long, k int"), batch_id="one")
     cur = pt._current_version()
     assert pt._recorded_schema(cur).fieldNames() == ["n", "k"]
@@ -1029,26 +1062,26 @@ def test_empty_delta_into_fresh_or_populated_table(spark, tmp_path, buckets):
     """An empty delta into a fresh or a populated table commits its
     ledger id and leaves readable state (the recorded-schema empty frame,
     or the unchanged rows); the next merge folds normally. One bucket
-    skips bucket discovery, four run it and find no bucket."""
+    skips bucket discovery, four run it and find no bucket. A fresh
+    table is always one bucket, so only ``[1]`` has a fresh half."""
     schema = "k int, n long"
     empty = spark.createDataFrame([], schema)
 
-    fresh = PointTable(
-        spark, str(tmp_path / "fresh"), key=["k"], num_buckets=buckets
-    )
-    assert fresh.merge(empty, batch_id="e0") is True
-    assert fresh.applied_batches() == {"e0"}
-    got = fresh.read()
-    assert got.dtypes == [("k", "int"), ("n", "bigint")]
-    assert got.count() == 0
-    fresh.merge(spark.createDataFrame([(1, 3), (2, 4)], schema), batch_id="d1")
-    assert {r.k: r.n for r in fresh.read().collect()} == {1: 3, 2: 4}
-    assert fresh.applied_batches() == {"e0", "d1"}
+    if buckets == 1:
+        fresh = PointTable(spark, str(tmp_path / "fresh"), key=["k"])
+        assert fresh.merge(empty, batch_id="e0") is True
+        assert fresh.applied_batches() == {"e0"}
+        got = fresh.read()
+        assert got.dtypes == [("k", "int"), ("n", "bigint")]
+        assert got.count() == 0
+        fresh.merge(spark.createDataFrame([(1, 3), (2, 4)], schema), batch_id="d1")
+        assert {r.k: r.n for r in fresh.read().collect()} == {1: 3, 2: 4}
+        assert fresh.applied_batches() == {"e0", "d1"}
 
-    full = PointTable(
-        spark, str(tmp_path / "full"), key=["k"], num_buckets=buckets
-    )
+    full = PointTable(spark, str(tmp_path / "full"), key=["k"])
     full.merge(spark.createDataFrame([(1, 1), (2, 2)], schema), batch_id="d0")
+    if buckets > 1:
+        full.rebucket(buckets)
     assert full.merge(empty, batch_id="e1") is True
     assert full.applied_batches() == {"d0", "e1"}
     assert {r.k: r.n for r in full.read().collect()} == {1: 1, 2: 2}
@@ -1072,8 +1105,9 @@ def test_record_batch_keeps_every_stored_file(spark, tmp_path, mode):
     the persisted layout wins over the handle's."""
     schema = "k int, n long"
     path = str(tmp_path / "pt")
-    pt = PointTable(spark, path, key=["k"], num_buckets=4, mode=mode)
+    pt = PointTable(spark, path, key=["k"], mode=mode)
     pt.merge(spark.createDataFrame([(i, i) for i in range(50)], schema), "d0")
+    pt.rebucket(4)
     before = _data_inodes(pt)
     handle = PointTable(spark, path, key=["k"])  # default layout: 1 bucket
     jobs = _jobs_in_group(
@@ -1133,13 +1167,12 @@ def test_worker_batch_without_ids_rewrites_nothing(spark, crunch_tables, tmp_pat
 
 _LSM_SCHEMA = (
     "id long, add_d double, add_i long, ansafe double,"
-    " mx long, lst long, grt long, keep string, ovw string"
+    " lst long, grt long, keep string, ovw string"
 )
 _LSM_POLICIES = {
     "add_d": MergePolicy.ADD,
     "add_i": MergePolicy.ADD,
     "ansafe": MergePolicy.ADD_NULLSAFE,
-    "mx": MergePolicy.MAX,
     "lst": MergePolicy.LEAST,
     "grt": MergePolicy.GREATEST,
     "keep": MergePolicy.KEEP,
@@ -1153,18 +1186,18 @@ def _lsm_batches():
     pass-through case: 7-digit fraction must survive un-rounded)."""
     return [
         [
-            (1, 1.5, 10, 1.0, 5, 5, 5, "first", "v1"),
-            (2, None, None, None, None, None, None, None, None),
-            (3, 0.1234567, 7, 0.25, 9, 9, 9, "three", "t1"),
+            (1, 1.5, 10, 1.0, 5, 5, "first", "v1"),
+            (2, None, None, None, None, None, None, None),
+            (3, 0.1234567, 7, 0.25, 9, 9, "three", "t1"),
         ],
         [
-            (1, 2.5, 4, None, None, 3, 9, "second", None),
-            (2, 1.0, 1, 1.0, 1, 1, 1, "late", "l1"),
-            (4, -1.25, -2, -0.5, 0, 0, 0, "four", "f1"),
+            (1, 2.5, 4, None, 3, 9, "second", None),
+            (2, 1.0, 1, 1.0, 1, 1, "late", "l1"),
+            (4, -1.25, -2, -0.5, 0, 0, "four", "f1"),
         ],
         [
-            (1, 0.5, 1, 2.0, 7, 8, 2, "third", "v3"),
-            (2, 1.0, 1, None, None, None, None, "later", "l2"),
+            (1, 0.5, 1, 2.0, 8, 2, "third", "v3"),
+            (2, 1.0, 1, None, None, None, "later", "l2"),
         ],
     ]
 
@@ -1173,12 +1206,11 @@ def _mk_pair(spark, tmp_path, **lsm_kwargs):
     from cruncher_spark.merge.upsert import PointTable
 
     b = PointTable(
-        spark, str(tmp_path / "bucketed"), key=["id"],
-        policies=_LSM_POLICIES, num_buckets=4,
+        spark, str(tmp_path / "bucketed"), key=["id"], policies=_LSM_POLICIES,
     )
     l = PointTable(
         spark, str(tmp_path / "lsm"), key=["id"],
-        policies=_LSM_POLICIES, num_buckets=4, mode="lsm", **lsm_kwargs,
+        policies=_LSM_POLICIES, mode="lsm", **lsm_kwargs,
     )
     return b, l
 
@@ -1192,7 +1224,7 @@ def _rows(pt):
 def test_lsm_fold_equals_bucketed_pairwise_all_policies(spark, tmp_path):
     """The LSM read-side policy fold must reproduce the bucketed
     pairwise merge EXACTLY — including MySQL ADD's NULL-propagation,
-    MAX's NULL-keeps-old, KEEP/OVERWRITE's even-when-NULL row pick,
+    KEEP/OVERWRITE's even-when-NULL row pick,
     and ADD's no-quantize pass-through for single-appearance keys."""
     b, l = _mk_pair(spark, tmp_path)
     for i, batch in enumerate(_lsm_batches()):
@@ -1210,8 +1242,8 @@ def test_lsm_fold_on_read_with_live_runs(spark, tmp_path):
     by a small append that the size invariant does NOT fold) and check
     it against bucketed state."""
     b, l = _mk_pair(spark, tmp_path)
-    big = [(i, float(i), i, 1.0, i, i, i, f"k{i}", f"o{i}") for i in range(400)]
-    small = [(1, 1.0, 1, 1.0, 99, 0, 99, "later", "new"), (2, None, 1, 1.0, 1, 1, 1, "x", "y")]
+    big = [(i, float(i), i, 1.0, i, i, f"k{i}", f"o{i}") for i in range(400)]
+    small = [(1, 1.0, 1, 1.0, 0, 99, "later", "new"), (2, None, 1, 1.0, 1, 1, "x", "y")]
     for i, batch in enumerate([big, small]):
         df = spark.createDataFrame(batch, _LSM_SCHEMA)
         b.merge(df, batch_id=f"b{i}")
@@ -1223,18 +1255,29 @@ def test_lsm_fold_on_read_with_live_runs(spark, tmp_path):
 
 def test_lsm_compaction_keeps_run_count_logarithmic(spark, tmp_path):
     """Equal-sized appends cascade like a binary counter: after N
-    batches the live run count tracks popcount(N), never N — the
-    bounded-read-cost half of the LSM contract."""
+    batches at most log2(N) + 1 runs are live, never N — the
+    bounded-read-cost half of the LSM contract. Each batch's values are
+    its own, so a run's bytes grow with its rows (a batch of repeated
+    values compresses into the fixed parquet overhead, and every append
+    then folds the whole state), and some fold merges the newest two
+    runs while an older run stays live."""
     _, l = _mk_pair(spark, tmp_path)
+    folds = []
+    fold = l._fold_newest_two
+    l._fold_newest_two = lambda cur, runs: (
+        folds.append([r.name for r in runs]), fold(cur, runs)
+    )
     for i in range(10):
+        ids = range(1000 * i, 1000 * i + 300)
         df = spark.createDataFrame(
-            [(100 * i + j, 1.0, 1, 1.0, 1, 1, 1, "a", "b") for j in range(20)],
+            [(k, k * 0.618034, 7919 * k, 1.0, 31 * k, 17 * k, f"a{k}", "b") for k in ids],
             _LSM_SCHEMA,
         )
         l.merge(df, batch_id=f"b{i}")
         runs = l._run_dirs(l._current_version())
-        assert len(runs) <= 4, f"run count {len(runs)} after batch {i}"
-    assert l.read().count() == 10 * 20
+        assert len(runs) <= (i + 1).bit_length(), f"{len(runs)} runs after batch {i}"
+    assert any(len(names) > 2 for names in folds)  # an older run stayed live
+    assert l.read().count() == 10 * 300
 
 
 def test_lsm_ledger_replay_and_time_travel(spark, tmp_path):
@@ -1242,8 +1285,7 @@ def test_lsm_ledger_replay_and_time_travel(spark, tmp_path):
 
     l = PointTable(
         spark, str(tmp_path / "lsm"), key=["id"],
-        policies={"n": MergePolicy.ADD}, num_buckets=2, mode="lsm",
-        retain_versions=10,
+        policies={"n": MergePolicy.ADD}, mode="lsm", retain_versions=10,
     )
     d1 = spark.createDataFrame([(1, 10), (2, 20)], "id long, n long")
     d2 = spark.createDataFrame([(1, 5), (3, 30)], "id long, n long")
@@ -1265,7 +1307,7 @@ def test_lsm_crash_mid_compaction_recovers(spark, tmp_path, monkeypatch):
 
     l = PointTable(
         spark, str(tmp_path / "lsm"), key=["id"],
-        policies={"n": MergePolicy.ADD}, num_buckets=2, mode="lsm",
+        policies={"n": MergePolicy.ADD}, mode="lsm",
     )
     l.merge(spark.createDataFrame([(1, 1)], "id long, n long"), batch_id="c0")
 
@@ -1289,10 +1331,11 @@ def test_lsm_crash_mid_compaction_recovers(spark, tmp_path, monkeypatch):
 def test_lsm_rebucket_consolidates_then_merge_folds(spark, tmp_path):
     """rebucket on an LSM table rewrites the folded state as one run in
     the new layout with the ledger carried forward; a later merge appends
-    onto that run and the size-tiered compaction folds the two."""
+    onto that run and the size-tiered compaction folds the two, sizing
+    the folded run from its bytes again."""
     l = PointTable(
         spark, str(tmp_path / "lsm"), key=["id"],
-        policies={"n": MergePolicy.ADD}, num_buckets=2, mode="lsm",
+        policies={"n": MergePolicy.ADD}, mode="lsm",
     )
     l.merge(spark.range(400).selectExpr("id", "id AS n"), batch_id="m0")
     l.merge(spark.createDataFrame([(1, 1), (500, 5)], "id long, n long"), batch_id="m1")
@@ -1301,27 +1344,33 @@ def test_lsm_rebucket_consolidates_then_merge_folds(spark, tmp_path):
     ]
     before = {r.id: r.n for r in l.read().collect()}
 
-    l.rebucket(1)
-    assert [r.name for r in l._run_dirs(l._current_version())] == ["run=000000"]
-    assert (l.mode, l.num_buckets) == ("lsm", 1)
+    l.rebucket(2)
+    runs = l._run_dirs(l._current_version())
+    assert [r.name for r in runs] == ["run=000000"]
+    assert sorted(d.name for d in runs[0].glob("pt_bucket=*")) == [
+        "pt_bucket=0", "pt_bucket=1",
+    ]
+    assert (l.mode, l.num_buckets) == ("lsm", 2)
     assert {r.id: r.n for r in l.read().collect()} == before
     assert l.applied_batches() == {"m0", "m1"}
     assert l.merge(
         spark.createDataFrame([(1, 1)], "id long, n long"), batch_id="m1"
     ) is False
 
-    # a same-sized delta breaks the size invariant: the appended run is
-    # folded into the consolidated one
-    l.merge(spark.range(400).selectExpr("id", "1 AS n"), batch_id="m2")
-    assert [r.name for r in l._run_dirs(l._current_version())] == ["run=000000"]
+    # a delta of the same keys and values breaks the size invariant: the
+    # appended run is folded into the consolidated one
+    l.merge(spark.range(400).selectExpr("id", "id AS n"), batch_id="m2")
+    runs = l._run_dirs(l._current_version())
+    assert [r.name for r in runs] == ["run=000000"]
+    assert [d.name for d in runs[0].glob("pt_bucket=*")] == ["pt_bucket=0"]
     after = {r.id: r.n for r in l.read().collect()}
-    assert after == {k: v + (1 if k < 400 else 0) for k, v in before.items()}
+    assert after == {k: v + (k if k < 400 else 0) for k, v in before.items()}
 
 
 def test_lsm_persisted_mode_wins(spark, tmp_path):
     """Reopening an LSM table with default (bucketed) constructor args
     must keep appending runs, not corrupt the layout — the persisted
-    mode wins exactly like num_buckets."""
+    mode wins exactly like its bucket count."""
     from cruncher_spark.merge.upsert import PointTable
 
     l = PointTable(
@@ -1346,7 +1395,7 @@ def test_lsm_empty_delta_ledger_only(spark, tmp_path):
 
     l = PointTable(
         spark, str(tmp_path / "lsm"), key=["id"],
-        policies={"n": MergePolicy.ADD}, num_buckets=2, mode="lsm",
+        policies={"n": MergePolicy.ADD}, mode="lsm",
     )
     empty = spark.createDataFrame([], "id long, n long")
     assert l.merge(empty, batch_id="e0") is True
@@ -1359,11 +1408,105 @@ def test_lsm_empty_delta_ledger_only(spark, tmp_path):
     assert {r.id: r.n for r in l.read().collect()} == {1: 1}
 
 
+def test_lsm_append_of_a_batch_is_one_file(spark, tmp_path):
+    """An LSM append is one bucket whatever the delta's size or
+    partitioning: each batch-sized run of a many-partition delta is one
+    key-sorted file, written by one Spark job with no exchange."""
+    import pyarrow.parquet as pq
+
+    schema = "k long, n long"
+    d0 = [(i, 1) for i in range(0, 9000, 3)]
+    d1 = [(i, 2) for i in range(0, 200, 2)]
+    pt = PointTable(spark, str(tmp_path / "lsm"), key=["k"], mode="lsm")
+    df0, df1 = (spark.createDataFrame(d, schema) for d in (d0, d1))
+    assert df0.rdd.getNumPartitions() > 1 and df1.rdd.getNumPartitions() > 1
+    pt.merge(df0, batch_id="d0")
+    # d1 is under half of d0's bytes: appended, not folded
+    jobs = _jobs_in_group(
+        spark, f"append-{tmp_path.name}", lambda: pt.merge(df1, batch_id="d1")
+    )
+    runs = pt._run_dirs(pt._current_version())
+    assert [r.name for r in runs] == ["run=000000", "run=000001"]
+    for run, d in zip(runs, (d0, d1)):
+        files = list(run.rglob("*.parquet"))
+        assert [f.parent.name for f in files] == ["pt_bucket=0"]
+        assert pq.read_table(files[0], columns=["k"])["k"].to_pylist() == sorted(
+            k for k, _ in d
+        )
+    assert jobs == 1
+    assert pt.num_buckets == 1
+    assert {r.k: r.n for r in pt.read().collect()} == _fold(d0, d1)
+
+
+def test_lsm_fold_sizes_its_run_from_the_bytes_it_folds(spark, tmp_path):
+    """A compaction fold sizes its run like a bucketed table's growth,
+    from the parquet bytes of the two runs it folds: with
+    ``spark.sql.files.openCostInBytes`` at a third of those bytes the
+    folded run has four buckets, one file each, every key in its
+    ``pmod(hash(key), 4)`` bucket, and reads back as the fold of the
+    deltas."""
+    from pyspark.sql import functions as SF
+
+    conf = "spark.sql.files.openCostInBytes"
+    old_cost = spark.conf.get(conf)
+    schema = "k long, n long"
+    d0 = [(i, 1) for i in range(3000)]
+    d1 = [(i, 2) for i in range(1500, 4500)]
+    pt = PointTable(
+        spark, str(tmp_path / "lsm"), key=["k"], mode="lsm", retain_versions=3
+    )
+    pt.merge(spark.createDataFrame(d0, schema), batch_id="d0")
+    run0_bytes = PointTable._parquet_bytes(pt._current_version() / "data")
+    try:
+        # two runs of about run0's bytes over a third of their sum
+        spark.conf.set(conf, str(2 * run0_bytes // 3))
+        pt.merge(spark.createDataFrame(d1, schema), batch_id="d1")
+        appended, folded = pt.versions()[-2:]
+        both = PointTable._parquet_bytes(pt.path / f"v_{appended:06d}" / "data")
+        assert pt._buckets_for(both) == 4
+    finally:
+        spark.conf.set(conf, old_cost)
+    runs = pt._run_dirs(pt.path / f"v_{folded:06d}")
+    assert [r.name for r in runs] == ["run=000000"]
+    files = [list(d.glob("*.parquet")) for d in runs[0].glob("pt_bucket=*")]
+    assert len(files) == 4 and all(len(f) == 1 for f in files)
+    stored = spark.read.parquet(str(runs[0]))
+    misplaced = stored.where(SF.col("pt_bucket") != SF.pmod(SF.hash("k"), SF.lit(4)))
+    assert misplaced.count() == 0
+    assert (pt.num_buckets, pt._meta(runs[0].parent.parent)["num_buckets"]) == (4, 4)
+    assert {r.k: r.n for r in pt.read().collect()} == _fold(d0, d1)
+
+
+def test_lsm_refuses_a_max_column(spark, tmp_path):
+    """MySQL MAX keeps the old value beside a NULL, so it is not
+    associative: a compaction folding a key's (NULL, 99) in two newer
+    runs would store NULL, and the read would keep an older run's 10
+    where the bucketed merge answers 99. So an LSM table takes no MAX
+    column: the constructor refuses one, and a MAX handle on a table
+    stored in LSM mode refuses to write before it commits anything, and
+    to fold its runs on a read."""
+    s = "id long, mx long"
+    mx = {"mx": MergePolicy.MAX}
+    with pytest.raises(ValueError, match="MAX"):
+        PointTable(spark, str(tmp_path / "a"), key=["id"], policies=mx, mode="lsm")
+    stored = PointTable(spark, str(tmp_path / "lsm"), key=["id"], mode="lsm")
+    stored.LSM_FOLD_FACTOR = 0.0  # never compacts: two live runs
+    for i in range(2):
+        stored.merge(spark.createDataFrame([(i, 10)], s), batch_id=f"b{i}")
+    pt = PointTable(spark, str(tmp_path / "lsm"), key=["id"], policies=mx)
+    with pytest.raises(ValueError, match="MAX"):
+        pt.merge(spark.createDataFrame([(1, 99)], s), batch_id="b2")
+    with pytest.raises(ValueError, match="MAX"):
+        pt.read()
+    assert stored.versions() == [2] and stored.applied_batches() == {"b0", "b1"}
+    assert {r.id: r.mx for r in stored.read().collect()} == {0: 10, 1: 10}
+
+
 def test_lsm_exhaustive_policy_matrix(spark, tmp_path):
     """EXHAUSTIVE pairwise-vs-fold equivalence: every combination of
     (presence pattern over 3 batches) x (per-batch NULL pattern) rides
-    as its own KEY through one bucketed and one LSM table, for all
-    seven policies at once — 7 non-empty presence patterns x 8 null
+    as its own KEY through one bucketed and one LSM table, for the six
+    policies an LSM table takes, at once — 7 non-empty presence patterns x 8 null
     masks = 56 keys covering every ordering a 3-batch history can
     produce (NULL-start, NULL-middle, NULL-end, single-appearance,
     gaps). One run, every case."""
@@ -1394,15 +1537,14 @@ def test_lsm_exhaustive_policy_matrix(spark, tmp_path):
                     {
                         c: kid + 100 * (b + 1) + i
                         for i, c in enumerate(cols)
-                        if c in ("add_i", "mx", "lst", "grt")
+                        if c in ("add_i", "lst", "grt")
                     }
                 )
                 vals["keep"] = f"k{kid}b{b}"
                 vals["ovw"] = f"o{kid}b{b}"
             rows.append(
                 (kid, vals["add_d"], vals["add_i"], vals["ansafe"],
-                 vals["mx"], vals["lst"], vals["grt"], vals["keep"],
-                 vals["ovw"])
+                 vals["lst"], vals["grt"], vals["keep"], vals["ovw"])
             )
         return rows
 
@@ -1418,13 +1560,14 @@ def test_lsm_exhaustive_policy_matrix(spark, tmp_path):
 
 _ORACLE_POLICIES = {
     **_LSM_POLICIES,
+    "mx": MergePolicy.MAX,
     "add_z": MergePolicy.ADD,
     "ansafe_z": MergePolicy.ADD_NULLSAFE,
 }
-_ORACLE_SCHEMA = _LSM_SCHEMA + ", add_z double, ansafe_z double"
+_ORACLE_SCHEMA = _LSM_SCHEMA + ", mx long, add_z double, ansafe_z double"
 _ORACLE_DDL = (
-    "id BIGINT, add_d DOUBLE, add_i BIGINT, ansafe DOUBLE, mx BIGINT,"
-    " lst BIGINT, grt BIGINT, keep VARCHAR, ovw VARCHAR, add_z DOUBLE,"
+    "id BIGINT, add_d DOUBLE, add_i BIGINT, ansafe DOUBLE, lst BIGINT,"
+    " grt BIGINT, keep VARCHAR, ovw VARCHAR, mx BIGINT, add_z DOUBLE,"
     " ansafe_z DOUBLE"
 )
 
@@ -1448,8 +1591,8 @@ def _oracle_batches():
                     continue
                 v = kid + 100 * (b + 1)
                 batches[b].append(
-                    (kid, v + 0.1234567, v + 1, v + 2.25, v + 3, v + 4, v + 5,
-                     f"k{kid}b{b}", f"o{kid}b{b}", -0.0, -0.0)
+                    (kid, v + 0.1234567, v + 1, v + 2.25, v + 4, v + 5,
+                     f"k{kid}b{b}", f"o{kid}b{b}", v + 3, -0.0, -0.0)
                 )
     return batches
 
@@ -1460,8 +1603,11 @@ def test_policy_matrix_matches_duckdb_select_oracle(spark, tmp_path):
     (``_fold_runs``). Besides checking the two against each other, this
     checks each against an independent oracle: DuckDB running the
     full-outer-join SELECT of ``merge_as_select_sql``, batch by batch,
-    over the 56-key x 7-policy matrix. Doubles compare by ``repr``:
-    every digit, and the sign of a zero."""
+    over the 56-key x 7-policy matrix; the LSM tables, which take no
+    MAX column, get every column but ``mx``. Doubles compare by
+    ``repr``: every digit, and the sign of a zero. After the first batch
+    each table is rebucketed to four buckets, so the LSM tables fold and
+    read a four-bucket run beside one-bucket appends."""
     import duckdb
 
     from cruncher_spark.merge.merge_into import merge_as_select_sql
@@ -1474,10 +1620,11 @@ def test_policy_matrix_matches_duckdb_select_oracle(spark, tmp_path):
     con = duckdb.connect()
     for name in ("state", "delta"):
         con.execute(f"CREATE TABLE {name} ({_ORACLE_DDL})")
+    lsm_policies = {c: p for c, p in _ORACLE_POLICIES.items() if c != "mx"}
     tables = {
         name: PointTable(
-            spark, str(tmp_path / name), key=["id"], policies=_ORACLE_POLICIES,
-            num_buckets=4, mode=mode,
+            spark, str(tmp_path / name), key=["id"], mode=mode,
+            policies=_ORACLE_POLICIES if mode == "bucketed" else lsm_policies,
         )
         for name, mode in (
             ("bucketed", "bucketed"), ("lsm", "lsm"), ("lsm-unfolded", "lsm")
@@ -1500,11 +1647,17 @@ def test_policy_matrix_matches_duckdb_select_oracle(spark, tmp_path):
         want = exact(con.execute(f"SELECT id, {', '.join(cols)} FROM state").fetchall())
         df = spark.createDataFrame(rows, _ORACLE_SCHEMA)
         for name, pt in tables.items():
-            pt.merge(df, batch_id=f"m{b}")
+            tcols = [c for c in cols if c in pt.policies]
+            pt.merge(df.select("id", *tcols), batch_id=f"m{b}")
+            if b == 0:
+                pt.rebucket(4)
             got = exact(
-                tuple(r) for r in pt.read().select("id", *cols).collect()
+                tuple(r) for r in pt.read().select("id", *tcols).collect()
             )
-            assert got == want, f"{name} diverged from DuckDB after batch {b}"
+            idx = [0] + [1 + cols.index(c) for c in tcols]
+            assert got == [tuple(r[i] for i in idx) for r in want], (
+                f"{name} diverged from DuckDB after batch {b}"
+            )
     unfolded = tables["lsm-unfolded"]
     assert len(unfolded._run_dirs(unfolded._current_version())) == 3
     # the edge cases really occurred: a lone 7-digit double and a lone
@@ -1544,28 +1697,36 @@ def _meta(num_buckets, mode, nullable):
 
 
 def test_on_disk_layout_is_pinned(spark, tmp_path):
-    """Every writer's on-disk output, literally: bucketed merge and
-    rebucket; LSM append, size-tiered fold and rebucket. A state dir
-    written by one build of this module must be readable and resumable
-    by the next, so the version names, dir tree, meta.json (including
-    which schema each writer records) and ledger may not drift."""
+    """Every writer's on-disk output, literally: bucketed merge into a
+    fresh and a stored table, and rebucket; LSM append, size-tiered fold
+    and rebucket. A state dir written by one build of this module must
+    be readable and resumable by the next, so the version names, dir
+    tree, meta.json (including which schema and bucket count each
+    writer records) and ledger may not drift."""
     s = "id long, n long"
 
     b = PointTable(
-        spark, str(tmp_path / "b"), key=["id"],
-        policies={"n": MergePolicy.ADD}, num_buckets=4,
+        spark, str(tmp_path / "b"), key=["id"], policies={"n": MergePolicy.ADD},
     )
     b.merge(spark.range(1, 5).selectExpr("id", "id AS n"), batch_id="m1")
     assert _layout(b) == (
         "v_000001",
+        {"data": 0, "data/pt_bucket=0": 1, "ledger": 1},
+        _meta(1, "bucketed", nullable=False),
+        ["m1"],
+    )
+    # rebucket records the schema its read of the files gives: nullable
+    b.rebucket(4)
+    assert _layout(b) == (
+        "v_000002",
         {"data": 0, "data/pt_bucket=0": 1, "data/pt_bucket=1": 1,
          "data/pt_bucket=3": 1, "ledger": 1},
-        _meta(4, "bucketed", nullable=False),
+        _meta(4, "bucketed", nullable=True),
         ["m1"],
     )
     b.merge(spark.createDataFrame([(1, 10), (9, 9)], s), batch_id="m2")
     assert _layout(b) == (
-        "v_000002",
+        "v_000003",
         {"data": 0, "data/pt_bucket=0": 1, "data/pt_bucket=1": 1,
          "data/pt_bucket=3": 1, "ledger": 1},
         _meta(4, "bucketed", nullable=True),
@@ -1573,7 +1734,7 @@ def test_on_disk_layout_is_pinned(spark, tmp_path):
     )
     b.rebucket(2)
     assert _layout(b) == (
-        "v_000003",
+        "v_000004",
         {"data": 0, "data/pt_bucket=0": 1, "data/pt_bucket=1": 1, "ledger": 1},
         _meta(2, "bucketed", nullable=True),
         ["m1", "m2"],
@@ -1581,15 +1742,15 @@ def test_on_disk_layout_is_pinned(spark, tmp_path):
 
     l = PointTable(
         spark, str(tmp_path / "l"), key=["id"],
-        policies={"n": MergePolicy.ADD}, num_buckets=2, mode="lsm",
+        policies={"n": MergePolicy.ADD}, mode="lsm",
     )
-    run0 = {"data/run=000000": 0, "data/run=000000/pt_bucket=0": 1,
-            "data/run=000000/pt_bucket=1": 1}
+    run0 = {"data/run=000000": 0, "data/run=000000/pt_bucket=0": 1}
+    # an append is one bucket whatever its size
     l.merge(spark.range(400).selectExpr("id", "id AS n"), batch_id="a1")
     assert _layout(l) == (
         "v_000001",
         {"data": 0, **run0, "ledger": 1},
-        _meta(2, "lsm", nullable=False),
+        _meta(1, "lsm", nullable=False),
         ["a1"],
     )
     # 400 rows vs 2: the size invariant holds, no fold
@@ -1597,30 +1758,41 @@ def test_on_disk_layout_is_pinned(spark, tmp_path):
     assert _layout(l) == (
         "v_000002",
         {"data": 0, **run0, "data/run=000001": 0,
-         "data/run=000001/pt_bucket=1": 1, "ledger": 1},
-        _meta(2, "lsm", nullable=True),
+         "data/run=000001/pt_bucket=0": 1, "ledger": 1},
+        _meta(1, "lsm", nullable=True),
         ["a1", "a2"],
     )
     # two equal small runs: v_000003 appends, v_000004 folds them into
-    # the older seq and carries v_000003's recorded schema forward
+    # the older seq, sized to one bucket by their bytes, and carries
+    # v_000003's recorded schema forward
     l.merge(spark.range(501, 503).selectExpr("id", "id AS n"), batch_id="a3")
     assert _layout(l) == (
         "v_000004",
         {"data": 0, **run0, "data/run=000001": 0,
-         "data/run=000001/pt_bucket=0": 1, "data/run=000001/pt_bucket=1": 1,
-         "ledger": 1},
-        _meta(2, "lsm", nullable=False),
+         "data/run=000001/pt_bucket=0": 1, "ledger": 1},
+        _meta(1, "lsm", nullable=False),
         ["a1", "a2", "a3"],
     )
     # rebucket: the folded state rewritten as one run in the new layout,
     # ledger carried forward unchanged
-    l.rebucket(1)
+    l.rebucket(2)
+    run0_2 = {"data/run=000000": 0, "data/run=000000/pt_bucket=0": 1,
+              "data/run=000000/pt_bucket=1": 1}
     assert _layout(l) == (
         "v_000005",
-        {"data": 0, "data/run=000000": 0, "data/run=000000/pt_bucket=0": 1,
-         "ledger": 1},
-        _meta(1, "lsm", nullable=True),
+        {"data": 0, **run0_2, "ledger": 1},
+        _meta(2, "lsm", nullable=True),
         ["a1", "a2", "a3"],
+    )
+    # the next append is one bucket beside the two-bucket run, and
+    # meta.json records the newest write's count
+    l.merge(spark.createDataFrame([(2, 2)], s), batch_id="a4")
+    assert _layout(l) == (
+        "v_000006",
+        {"data": 0, **run0_2, "data/run=000001": 0,
+         "data/run=000001/pt_bucket=0": 1, "ledger": 1},
+        _meta(1, "lsm", nullable=True),
+        ["a1", "a2", "a3", "a4"],
     )
 
 
@@ -1634,7 +1806,7 @@ def test_time_travel_retention(spark, tmp_path):
     pt = PointTable(
         spark, str(tmp_path / "tt"), key=["k"],
         policies={"n": MergePolicy.ADD, "tag": MergePolicy.OVERWRITE},
-        num_buckets=4, retain_versions=2,
+        retain_versions=2,
     )
     pt.merge(spark.createDataFrame([(1, 10, "a")], "k long, n long, tag string"))
     pt.merge(spark.createDataFrame([(1, 5, "a")], "k long, n long, tag string"))

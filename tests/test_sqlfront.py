@@ -278,7 +278,6 @@ def test_literal_team_update_join_merges(spark, crunch_tables, tmp_path):
         str(tmp_path / "tm_point"),
         key=["id"],
         policies=stmt.policies,
-        num_buckets=4,
     )
     seed = crunch_tables["team_membership"].select("id", "fame")
     pt.merge(seed, batch_id="seed")
@@ -334,7 +333,7 @@ def test_literal_player_merge_is_additive(spark, crunch_tables, tmp_path):
     def merged_state(batches, root):
         pt = PointTable(
             spark, str(tmp_path / root), key=key,
-            policies=stmt.policies, num_buckets=4,
+            policies=stmt.policies,
         )
         for i, batch in enumerate(batches):
             _, delta = run(batch)
@@ -476,7 +475,7 @@ def test_script_worker_streams_literal_sql(spark, crunch_tables, tmp_path):
     )
     point = PointTable(
         spark, str(tmp_path / "bans_point"), key=key,
-        policies=policies, num_buckets=4,
+        policies=policies,
     )
     worker = CrunchWorker(spark, dict(crunch_tables), plan, point)
 
@@ -499,7 +498,7 @@ def test_script_worker_streams_literal_sql(spark, crunch_tables, tmp_path):
 
     expected = PointTable(
         spark, str(tmp_path / "expected"), key=key,
-        policies=policies, num_buckets=4,
+        policies=policies,
     )
     for i, batch in enumerate((ph_ids[:20], ph_ids[20:])):
         stmt = sqlfront.translate_script(

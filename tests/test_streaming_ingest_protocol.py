@@ -157,3 +157,16 @@ def test_decisions_keep_their_declared_columns_once_state_lands(
     dec = ingest.decisions()
     assert dec.columns == declared
     assert dec.count() > 0
+
+
+def test_survivor_run_of_a_batch_is_one_file(spark, tmp_path):
+    """The survivor table sets no bucket count: a batch's survivors
+    append as a run of one file, and a compaction fold of small runs
+    writes one file too."""
+    cls, feed, b0, b1 = _embedding_case(spark)
+    ingest = cls(spark, str(tmp_path / "state"))
+    for bid, rows in enumerate((b0, b1)):
+        feed(ingest, rows, bid)
+        pt = ingest.survivors
+        for run in pt._run_dirs(pt._current_version()):
+            assert len(list(run.rglob("*.parquet"))) == 1, run
