@@ -138,7 +138,7 @@ class PointTable:
     """
 
     #: LSM size-tiered compaction: fold the newest two runs while the
-    #: older is < LSM_FOLD_FACTOR x the newer; LSM_MAX_RUNS is a hard
+    #: older has < LSM_FOLD_FACTOR x the newer's rows; LSM_MAX_RUNS is a hard
     #: ceiling for pathological size distributions
     LSM_FOLD_FACTOR = 2.0
     LSM_MAX_RUNS = 32
@@ -550,8 +550,8 @@ class PointTable:
     # (_commit_version). Reads fold runs through per-column POLICY
     # AGGREGATES ordered by run seq, reproducing the pairwise merge
     # semantics exactly (incl. MySQL NULL quirks — see _fold_expr).
-    # Compaction folds the newest two ADJACENT runs while the older is
-    # < LSM_FOLD_FACTOR x the newer (the binary-counter invariant),
+    # Compaction folds the newest two ADJACENT runs while the older has
+    # < LSM_FOLD_FACTOR x the newer's rows (the binary-counter invariant),
     # pairwise in the write's own stage like the bucketed merge
     # (_fold_pairs):
     # adjacency preserves order-sensitive policies (KEEP/OVERWRITE; MAX
@@ -570,6 +570,15 @@ class PointTable:
     @staticmethod
     def _parquet_bytes(d: Path) -> int:
         return sum(f.stat().st_size for f in d.rglob("*.parquet"))
+
+    @staticmethod
+    def _parquet_rows(d: Path) -> int:
+        """Rows under ``d``, read from the parquet footers on the driver
+        (no Spark job). Unlike bytes, a row count carries no per-file
+        overhead, so it compares a run's size with another's."""
+        import pyarrow.parquet as pq
+
+        return sum(pq.read_metadata(f).num_rows for f in d.rglob("*.parquet"))
 
     def _append_run(
         self, cur: Path | None, delta: DataFrame, ledger: set[str] | None
@@ -594,7 +603,9 @@ class PointTable:
 
     def _lsm_auto_compact(self) -> None:
         """Restore the run-size invariant: newest-first, every run must
-        be >= ``LSM_FOLD_FACTOR`` x the run after it (sizes in bytes).
+        be >= ``LSM_FOLD_FACTOR`` x the run after it (sizes in rows: a
+        parquet file's fixed bytes would make every small run look the
+        size of the whole state, and every append would refold it).
         Violations fold the newest two adjacent runs and cascade — the
         same amortization as a binary counter (run sizes ~ delta x
         factor^i), so a 50-batch ingest folds mostly batch-sized runs
@@ -605,8 +616,8 @@ class PointTable:
             if len(runs) < 2:
                 return
             need = (
-                self._parquet_bytes(runs[-2])
-                < self.LSM_FOLD_FACTOR * self._parquet_bytes(runs[-1])
+                self._parquet_rows(runs[-2])
+                < self.LSM_FOLD_FACTOR * self._parquet_rows(runs[-1])
                 or len(runs) > self.LSM_MAX_RUNS
             )
             if not need:

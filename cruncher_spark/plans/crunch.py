@@ -10,9 +10,9 @@ Architecture vs the reference (SURVEY.md §2.3 J3/J4): the reference fans
 out every fact row through OR-'all' dimension joins — a 4-dim fan-out
 multiplies the stream 16x *before* the aggregate. Here:
 
-- 1:1 dims (hero, role, region, game_mode) become GROUPING SETS axes — the
-  fan-out happens inside the aggregate (map-side partial), nothing is
-  multiplied before the shuffle;
+- 1:1 dims (hero, role, region, game_mode) become GROUPING SETS axes — each
+  row is emitted once per set directly under the partial aggregate
+  (:func:`_grouping_sets_agg`), so the fan-out is never materialized;
 - genuinely multi-match dims (series intervals, the filter bridge, skill
   bands, regex-matched builds) stay fan-outs, against literal snapshots
   of the dims, in explicit specific/'all' union arms — multiplier ~8x
@@ -23,8 +23,15 @@ multiplies the stream 16x *before* the aggregate. Here:
   crosses hero x role, crunch_player.sql:39) become per-stratum grouping
   sets, unioned.
 
-At 100 TB the only shuffles are the final aggregates (and the hero-vs-hero
-self-join on match key); no dimension table is read by a batch at all.
+No dimension table is read by a batch at all. The global, player and
+hero_vs_hero deltas shuffle nothing: their fact base is one partition
+(:func:`_fact_base`), the arms over it are unions, ``inline``s and
+broadcast joins, which keep that partitioning, and the grouping sets are
+expanded by a ``Generate``, not Spark's ``Expand`` (which would force an
+exchange), so partial and final aggregate run in the same task. The phases
+and bans views, which read ``participant_phases`` in parallel, shuffle
+once, into their final aggregate; hero_vs_hero's pair side may shuffle
+when ``participant`` is too large to broadcast.
 
 Per-batch cost model (global, player, hero_vs_hero). The reference serves
 each batch with one ``INSERT … SELECT … WHERE p.api_id IN (:ids)`` through
@@ -32,13 +39,13 @@ index lookups, O(batch) (crunch_global.sql:63). Here the worker hands the
 builders the batch as a driver-side id list, and every fact table
 (participant, participant_stats, participant_items) is restricted by one
 parsed ``key IN (…)`` predicate and joined once, in :func:`_fact_base`,
-which returns an eager ``localCheckpoint``: the facts are read once per
-batch, and every fan-out arm reads the small checkpointed base, not the
-fact tables. The dimension tables are read once per worker, on the first
-batch (:func:`_dim_cached`), and enter every later plan as literal
-expressions: the multi-match dims (series intervals, skill bands, specific
-filters, builds) as an ``inline`` of a literal array, the 1:1 dims as
-``IN`` lists and maps. A dimension change therefore takes effect at worker
+which returns an eager ``localCheckpoint`` as one partition: the facts
+are read once per batch, and every fan-out arm reads the small
+checkpointed base, not the fact tables. The dimension tables are read
+once per worker, on the first batch (:func:`_dim_cached`), and enter
+every later plan as literal expressions: the multi-match dims (series
+intervals, skill bands, specific filters, builds) as an ``inline`` of a
+literal array, the 1:1 dims as ``IN`` lists and maps. A dimension change therefore takes effect at worker
 restart (MIGRATION.md). What a batch still reads beyond its own facts is
 the ``global_point_filters`` bridge (broadcast, restricted to the view's
 specific filters, semi-joined on ``(match_api_id, filter_id)``), and for
@@ -214,22 +221,41 @@ def _grouping_sets_agg(
     aggs: Sequence[Column],
 ) -> DataFrame:
     """GROUPING SETS over ``fixed + set`` for each set, with per-axis rolled
-    flags ``_g_<axis>`` in the output (true = this axis is the 'all' cell)."""
-    all_cols = list(fixed) + list(axes)
-    gsets = [list(fixed) + list(s) for s in sets]
-    grouped = df.groupingSets(gsets, *[F.col(c) for c in all_cols])
-    # no-arg grouping_id covers all grouping cols; ``fixed`` are in every
-    # set so their bits are always 0 and the low bits are exactly the axes
-    out = grouped.agg(F.grouping_id().alias("_gid"), *aggs)
+    flags ``_g_<axis>`` in the output (true = this axis is the 'all' cell).
+
+    The sets are expanded here, not by ``DataFrame.groupingSets``: Spark
+    plans that as ``Expand``, whose output partitioning is unknown, so an
+    exchange always separates the partial from the final aggregate, even
+    over one partition. Each row is instead emitted once per set by one
+    ``inline`` of a literal-shaped array (a ``Generate``, which keeps its
+    child's partitioning), its grouping key ``_gk<i>`` holding the axis
+    value or a typed NULL, and ``_gid`` the bits ``grouping_id()`` gives
+    (bit ``n-1-i`` set when axis ``i`` is rolled up). Over a
+    one-partition input (:func:`_fact_base`) the whole aggregate is one
+    task. The aggregates still read the original axis columns."""
     n = len(axes)
-    flags = [
-        (F.col("_gid").bitwiseAND(F.lit(1 << (n - 1 - i))) != 0).alias(f"_g_{a}")
-        for i, a in enumerate(axes)
-    ]
-    agg_names = [
-        c for c in out.columns if c != "_gid" and c not in all_cols
-    ]
-    return out.select(*all_cols, *flags, *[F.col(c) for c in agg_names])
+    types = dict(df.dtypes)
+    keys = [f"_gk{i}" for i in range(n)]
+
+    def elem(s: Sequence[str]) -> str:
+        vals = [
+            f"'{k}', " + (f"`{a}`" if a in s else f"CAST(NULL AS {types[a]})")
+            for k, a in zip(keys, axes)
+        ]
+        gid = sum(1 << (n - 1 - i) for i, a in enumerate(axes) if a not in s)
+        return f"named_struct({', '.join(vals)}, '_gid', {gid})"
+
+    out = (
+        df.selectExpr("*", f"inline(array({', '.join(map(elem, sets))}))")
+        .groupBy(*fixed, *keys, "_gid")
+        .agg(*aggs)
+    )
+    return out.selectExpr(
+        *[f"`{c}`" for c in fixed],
+        *[f"{k} AS `{a}`" for k, a in zip(keys, axes)],
+        *[f"(_gid & {1 << (n - 1 - i)}) != 0 AS `_g_{a}`" for i, a in enumerate(axes)],
+        *[f"`{c}`" for c in out.columns[len(fixed) + n + 1:]],
+    )
 
 
 def _axis_id(
@@ -494,7 +520,13 @@ def _fact_base(tables: Tables, batch_ids) -> DataFrame:
     crunch_global.sql:36-38), checkpointed so the fan-out arms downstream
     read it instead of re-planning the fact joins (module docstring).
     Restricting stats and items to the batch too keeps the same rows:
-    both joins are on ``api_id`` equality."""
+    both joins are on ``api_id`` equality.
+
+    The checkpoint job keeps the scans' parallelism; the base it returns
+    is its blocks coalesced to one partition, so the arms' unions,
+    broadcast joins and the grouping-set expansion above it keep a single
+    partition, and the delta's partial and final aggregate run in one
+    task with no exchange (:func:`_grouping_sets_agg`)."""
     p = _batch_join(tables["participant"], "api_id", batch_ids)
     p_s = _batch_join(
         tables["participant_stats"], "participant_api_id", batch_ids
@@ -508,7 +540,7 @@ def _fact_base(tables: Tables, batch_ids) -> DataFrame:
         .join(items, F.col("pi_api_id") == F.col("api_id"), "left")
         .drop("pi_api_id")
     )
-    return base.localCheckpoint()
+    return base.localCheckpoint().coalesce(1)
 
 
 def crunch_player_delta(
@@ -581,11 +613,13 @@ def crunch_hero_vs_hero_delta(
 ) -> DataFrame:
     """crunch_hero_vs_hero.sql as a Spark plan: pairwise co-occurrence.
 
-    J10: self-join on match_api_id (the one genuinely fact-sized shuffle
-    besides the aggregate — co-partitioned by repartitioning both sides on
-    the match key). hero/role of both pair sides join *exactly* (no 'all',
-    crunch_hero_vs_hero.sql:44-47); only region/game_mode roll up, and
-    series is visible-only (no daily, crunch_hero_vs_hero.sql:43).
+    J10: self-join on match_api_id against the whole ``participant``
+    table (the one genuinely fact-sized input: broadcast while it is
+    small, the one-partition batch side streaming through it; a
+    sort-merge join shuffles both sides). hero/role of both pair sides
+    join *exactly* (no 'all', crunch_hero_vs_hero.sql:44-47); only
+    region/game_mode roll up, and series is visible-only (no daily,
+    crunch_hero_vs_hero.sql:43).
     """
     now = now if now is not None else F.current_timestamp()
     item_ids = activable_item_ids(tables)

@@ -1253,31 +1253,45 @@ def test_lsm_fold_on_read_with_live_runs(spark, tmp_path):
     assert _rows(b) == _rows(l)
 
 
-def test_lsm_compaction_keeps_run_count_logarithmic(spark, tmp_path):
-    """Equal-sized appends cascade like a binary counter: after N
-    batches at most log2(N) + 1 runs are live, never N — the
-    bounded-read-cost half of the LSM contract. Each batch's values are
-    its own, so a run's bytes grow with its rows (a batch of repeated
-    values compresses into the fixed parquet overhead, and every append
-    then folds the whole state), and some fold merges the newest two
-    runs while an older run stays live."""
+def _check_run_ladder(spark, tmp_path, batch_rows):
+    """Ten LSM appends of ``batch_rows(i)``: after batch i at most
+    ``(i + 1).bit_length()`` runs are live, some fold merges the newest
+    two runs while an older run stays live, and every row reads back."""
     _, l = _mk_pair(spark, tmp_path)
     folds = []
     fold = l._fold_newest_two
     l._fold_newest_two = lambda cur, runs: (
         folds.append([r.name for r in runs]), fold(cur, runs)
     )
+    total = 0
     for i in range(10):
-        ids = range(1000 * i, 1000 * i + 300)
-        df = spark.createDataFrame(
-            [(k, k * 0.618034, 7919 * k, 1.0, 31 * k, 17 * k, f"a{k}", "b") for k in ids],
-            _LSM_SCHEMA,
-        )
-        l.merge(df, batch_id=f"b{i}")
+        rows = batch_rows(i)
+        total += len(rows)
+        l.merge(spark.createDataFrame(rows, _LSM_SCHEMA), batch_id=f"b{i}")
         runs = l._run_dirs(l._current_version())
         assert len(runs) <= (i + 1).bit_length(), f"{len(runs)} runs after batch {i}"
     assert any(len(names) > 2 for names in folds)  # an older run stayed live
-    assert l.read().count() == 10 * 300
+    assert l.read().count() == total
+
+
+def test_lsm_compaction_keeps_run_count_logarithmic(spark, tmp_path):
+    """Equal-sized appends cascade like a binary counter: after N
+    batches at most log2(N) + 1 runs are live, never N — the
+    bounded-read-cost half of the LSM contract."""
+    _check_run_ladder(spark, tmp_path, lambda i: [
+        (k, k * 0.618034, 7919 * k, 1.0, 31 * k, 17 * k, f"a{k}", "b")
+        for k in range(1000 * i, 1000 * i + 300)
+    ])
+
+
+def test_lsm_compaction_compares_runs_by_rows(spark, tmp_path):
+    """Small appends of repeated values cascade the same way: runs are
+    compared by their rows, not by parquet bytes, whose fixed per-file
+    overhead makes a 20-row run about as large as the whole state (every
+    append would then refold all of it)."""
+    _check_run_ladder(spark, tmp_path, lambda i: [
+        (20 * i + k, 1.0, 1, 1.0, 1, 1, "a", "b") for k in range(20)
+    ])
 
 
 def test_lsm_ledger_replay_and_time_travel(spark, tmp_path):
